@@ -226,28 +226,7 @@ object Bench {
     val loadWarning =
       if (startLoad > 1.0) s""","warning":"loadavg1m ${f"$startLoad%.2f"} > 1.0 at start after ${waited}s wait - timings not comparable to idle baselines""""
       else ""
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.codegen.maxFields", "256")
-      .config("spark.sql.parquet.aggregatePushdown", "true")
-      .config("spark.ui.enabled", "false")
-      // AQE is a SCALE feature (runtime coalescing, skew-join splits,
-      // join-strategy rewrites keyed on runtime sizes) — parameterised
-      // here with a bench-local default of OFF (r15, measured on the
-      // ten hottest iterative/small-shuffle rows: AQE re-plans every
-      // Exchange as its own query stage + job, and at sf0.1 that
-      // per-stage replanning overhead is 10-30% of the row's wall with
-      // zero benefit, since nothing is skewed and 32-partition shuffles
-      // of KB-sized frames need no coalescing: pagerank 2.42→1.75 s,
-      // ts_simsearch 1.58→1.24 s, ccnet 1.61→1.22 s at equal results).
-      // A production 100 TB deployment sets SPARK_GRAFT_AQE=true — the
-      // operators are planned for AQE (broadcast hints are explicit
-      // where required, nothing depends on AQE firing).
-      .config("spark.sql.adaptive.enabled", knob("SPARK_GRAFT_AQE", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Standing instrumentation (r13 verdict #1: the r12 "regression"
     // was adjudicated by hand-reading GC/heap after the fact, and the
     // r13 artifact STILL could not attribute a 4.5× best-of-reps on an
@@ -481,7 +460,7 @@ object Bench {
       val parJson = {
         val cpusJson = scala.util.Try(cpus.trim.toInt).map(_.toString)
           .getOrElse("\"" + cpus + "\"")
-        s""","cpus":$cpusJson,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(-1)},"aqe":"${knob("SPARK_GRAFT_AQE", "false")}""""
+        s""","cpus":$cpusJson,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(-1)},"aqe":"${spark.conf.get("spark.sql.adaptive.enabled")}""""
       }
       val budgetJson = s""","reps_completed":${passes.size},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"},"warm_pass_s":${f"$warmPassS%.1f"}$parJson"""
       val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",$warmRunsJson"queries":$qs,"sf":"$sfDir","warm_pass":$warm,"reps":$reps$budgetJson,"noisy_first_runs":$noisyFirstRuns,"loadavg1m_start":$startLoad,"loadavg1m":$load$fpJson$passStatsJson$runsJson$triageJson$memoJson$attribJson$loadWarning}"""

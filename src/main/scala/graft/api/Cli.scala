@@ -267,10 +267,7 @@ object Cli {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.service()
     spark.sparkContext.setLogLevel("ERROR")
     // demo catalog = the deterministic fixtures; a deployment loads via MetaStore
     val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),

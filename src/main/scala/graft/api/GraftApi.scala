@@ -3,6 +3,7 @@ package graft.api
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit}
 
 import graft.GraftConfig
 import graft.functions.Retry
@@ -132,7 +133,7 @@ final class GraftApi(
     }
     if (reconciled.schedule.isEmpty)
       prev.flatMap(_.scheduler_tracking_id).foreach(cronProvider.deleteCronJob)
-    val others = edges.where(org.apache.spark.sql.functions.col("pipeline_uuid") =!= d.pipeline_uuid)
+    val others = edges.where(col("pipeline_uuid") =!= d.pipeline_uuid)
     edges = others.unionByName(
       spark.createDataset(triggers)(Encoders.product[PipelineTrigger]))
   }
@@ -141,7 +142,7 @@ final class GraftApi(
   def deletePipeline(uuid: String, safeDelete: Boolean = true): Unit = {
     val tracking = catalog.describe(uuid).collect().headOption.flatMap(_.scheduler_tracking_id)
     catalog = catalog.delete(uuid, edges, safeDelete)
-    edges = edges.where(org.apache.spark.sql.functions.col("pipeline_uuid") =!= uuid)
+    edges = edges.where(col("pipeline_uuid") =!= uuid)
     tracking.foreach(cronProvider.deleteCronJob)
   }
 
@@ -169,14 +170,33 @@ final class GraftApi(
   // --- events & history (facade.py:100-116) ----------------------------
   /** POST /pipeline/dispatcher/event + the run_by_pipeline_uuid variant
     * (synthesizes an origination event, facade.py:72-78). One batch
-    * step of the dispatcher; returns its outputs. */
+    * step of the dispatcher; returns its outputs.
+    *
+    * A success or failure report for exec X means X has stopped, even
+    * when the running snapshot still lists it: the snapshot is
+    * refreshed after each step, and a run's callback fires inside its
+    * still-running closure. Gated against that row, the retry of a
+    * `concurrency = false` pipeline would incubate behind its own
+    * finished attempt for the whole debounce. The batch is a
+    * driver-side Seq, so the literal filter adds no Spark job. Neither
+    * ingress requires `exec_uuid`: a report without one names no exec,
+    * and a running row without one is kept, as before the filter (a
+    * NULL in `isin` would otherwise drop every row). */
   def dispatch(events: Seq[LifecycleEvent],
                running: Dataset[RunningJob],
                incubating: Dataset[IncubRow],
-               now: Timestamp): Dispatcher.StepResult =
-    Dispatcher.step(spark, catalog.defs, edges, running, incubating,
+               now: Timestamp): Dispatcher.StepResult = {
+    val finished = events.collect {
+      case e if e.event_type == "job_exec_update" && e.exec_uuid != null &&
+          (e.event_subtype == "success" || e.event_subtype == "failure") => e.exec_uuid
+    }.distinct
+    val live =
+      if (finished.isEmpty) running
+      else running.where(!coalesce(col("exec_uuid").isin(finished: _*), lit(false)))
+    Dispatcher.step(spark, catalog.defs, edges, live, incubating,
       spark.createDataset(events)(Encoders.product[LifecycleEvent]), now,
       cfg.concurrencyDebounceSeconds, cfg.incubatingJobAgeOutSeconds)
+  }
 
   /** The synthesized manual-run origination — one definition so the
     * HTTP facade can log the SAME event it dispatches (manual runs
@@ -246,7 +266,6 @@ final class GraftApi(
     * existence probe is a bounded lookup, the rewrite is distributed. */
   def updateIncubating(incubating: Dataset[IncubRow], objId: String,
                        updates: Map[String, String]): Dataset[IncubRow] = {
-    import org.apache.spark.sql.functions.col
     require(incubating.where(col("obj_id") === objId).limit(1).count() == 1,
       s"Could not update entry for id=$objId") // facade.py:113
     incubating.map(r =>
@@ -256,7 +275,7 @@ final class GraftApi(
 
   /** DELETE /pipeline/incubation/delete (D16, `facade.py:116-118`). */
   def deleteIncubating(incubating: Dataset[IncubRow], objId: String): Dataset[IncubRow] =
-    incubating.where(org.apache.spark.sql.functions.col("obj_id") =!= objId)
+    incubating.where(col("obj_id") =!= objId)
 
   /** DELETE /pipeline_incubation/flush (D17, `facade.py:120-122`). */
   def flushIncubating(): Dataset[IncubRow] =

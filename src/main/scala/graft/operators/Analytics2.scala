@@ -241,8 +241,8 @@ object Analytics2 {
   }
 
   /** The as-of window core over a tagged `(user_id, ts, side, id)`
-    * union — also driven standalone by the weak-scaling probe
-    * ([[graft.tools.ScaleProbeR4]]). */
+    * union. Scaling numbers: BASELINE.md "Round 4", round-5
+    * weak-scaling + skew tables. */
   private[graft] def asofCore(tagged: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts", "side", "id")

@@ -99,8 +99,8 @@ object Curation {
     * left joins plus one final aggregate. */
   /** Corpus doc ids sharing ≥ 1 hashed 8-gram with the eval (probe)
     * set, over an injected `(doc_id, sh)` frame (probe split: ids ≡ 0
-    * mod 10) — the funnel's contamination stage, also weak-scaled
-    * standalone by [[graft.tools.ScaleProbeR4]].
+    * mod 10) — the funnel's contamination stage. Scaling numbers:
+    * BASELINE.md "Round 4", round-4 weak-scaling table.
     *
     * Same Bloom-prefilter shape as `ns_dedup_decontam_bloom` (round-4
     * verdict #4): the probe side's distinct gram hashes are collected

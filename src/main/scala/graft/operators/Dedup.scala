@@ -449,8 +449,8 @@ object Dedup {
     // pairDocs is pair-set-sized — broadcast it so the corpus scan is
     // never exchanged/sorted for a sort-merge semi-join (r15: the
     // planner picked SMJ here, paying a corpus Exchange + Sort per run).
-    // ADAPTIVE (r15, HotProbe-measured): on this corpus the emitted
-    // pairs touch 3458 of 5000 docs, and building + broadcasting the
+    // ADAPTIVE (r15, BASELINE.md "Round 15 — optimization round 1"):
+    // on this corpus the emitted pairs touch 3458 of 5000 docs, and building + broadcasting the
     // distinct pair-doc set cost MORE (1.0 s + a slower probed scan:
     // 2.5 s) than recomputing signatures for the whole corpus (1.2 s).
     // A prune that prunes nothing is pure overhead (guide §1.1
@@ -589,8 +589,8 @@ object Dedup {
     ngramDecontamCore(decontamDocs(spark, dir, w))
 
   /** Exact-decontamination core over an injected `(doc_id, sh)` frame
-    * (probe split: ids ≡ 0 mod 10) — also driven standalone by the
-    * weak-scaling probe ([[graft.tools.ScaleProbeR4]]). */
+    * (probe split: ids ≡ 0 mod 10). Scaling numbers: BASELINE.md
+    * "Round 4", round-4 weak-scaling table. */
   private[graft] def ngramDecontamCore(docs: DataFrame): DataFrame = {
     val corpusGrams = docs.where(col("doc_id") % 10 =!= 0)
       .select(explode(col("sh")).as("g")).distinct()
@@ -734,9 +734,9 @@ object Dedup {
     * never C(1M,2) pairs, the trap a pairwise span formulation hits —
     * which is what makes removal-style span dedup viable at 100 TB.
     * Deliberately groupBy+join rather than `count over (partition by g)`:
-    * window partitions cannot be AQE-skew-split (ScaleProbeR5's skew
-    * section measures exactly that), while the join back CAN, and the
-    * partial agg already collapses the hot key before its shuffle. The
+    * window partitions cannot be AQE-skew-split (the `spans` skew rows
+    * in BASELINE.md "Round 4", round-5 weak-scaling + skew tables,
+    * measure exactly that), while the join back CAN, and the partial agg already collapses the hot key before its shuffle. The
     * only window is per-doc (step 3), bounded by document length. */
   /** Shared by the Spark plans AND interpolated into the oracle SQL
     * below, so a constant change cannot desynchronize them (the
@@ -757,19 +757,13 @@ object Dedup {
       dupPositionsOf(Tables.documents(spark, dir).select(col("doc_id"), col("text")), w)
     }
 
-  /** [[duplicatedSpans]] over an injected `(doc_id, text)` frame — also
-    * weak-scaled standalone (corpus 10×, whale-gram) by
-    * [[graft.tools.ScaleProbeR5]]. Positional gram hashes come from the
-    * native one-pass kernel ([[graft.functions.PositionalShingleHashesExpr]]):
+  /** Stages 1–2: positional gram hashes → global occurrence counts →
+    * the duplicated positions `(doc_id, pos, occ)`. The hashes come from
+    * the native one-pass kernel ([[graft.functions.PositionalShingleHashesExpr]]):
     * the equivalent `transform + concat_ws + xxhash64` column algebra
     * allocates a string PER POSITION per pass — measured superlinear at
-    * probe 10× scale purely from allocation pressure. */
-  private[graft] def duplicatedSpansCore(docs: DataFrame, w: Int = 8,
-                                         minTokens: Int = 12): DataFrame =
-    islandsOf(dupPositionsOf(docs, w), w, minTokens)
-
-  /** Stages 1–2: positional gram hashes → global occurrence counts →
-    * the duplicated positions `(doc_id, pos, occ)`. */
+    * 10× corpus scale purely from allocation pressure (BASELINE.md,
+    * "Round 4", round-5 weak-scaling table). */
   private def dupPositionsOf(docs: DataFrame, w: Int): DataFrame = {
     import graft.functions.TextExpressions.positionalShingleHashes
     val grams = docs
@@ -887,10 +881,10 @@ object Dedup {
     }
 
   /** Distributed connected components over an undirected edge list
-    * `(doc_a, doc_b)` — the generic core of [[dedupClusters]], also
-    * weak-scaled standalone on synthetic graphs by
-    * [[graft.tools.PackScaleProbe]]. Returns `(doc_id, cluster_id)`
-    * for every node appearing in an edge, cluster id = min member. */
+    * `(doc_a, doc_b)` — the generic core of [[dedupClusters]].
+    * Scaling numbers: BASELINE.md "Measured (round 2 final…)",
+    * connected-components weak scaling.
+    * Returns `(doc_id, cluster_id)` for every node appearing in an edge, cluster id = min member. */
   def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
     val und = edges.unionByName(
       edges.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b"))).cache()

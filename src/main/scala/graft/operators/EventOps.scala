@@ -34,8 +34,8 @@ object EventOps {
     * frame advances two monotone pointers per partition — each row
     * enters and leaves the frame exactly once — so a whale user costs
     * O(n log n) (the sort), with no pair-count growth term; the
-    * 10%-of-rows whale probe ([[graft.tools.ScaleProbeR4]]) measures
-    * exactly this. The 1-hour bound is what keeps frame state finite —
+    * 10%-of-rows whale weak-scaling run measures exactly this
+    * (BASELINE.md "Round 4", round-5 weak-scaling + skew tables). The 1-hour bound is what keeps frame state finite —
     * the same bound the streaming twin turns into a watermark.
     *
     * Zero-touch purchases keep their row with count 0 (COUNT of a
@@ -71,8 +71,8 @@ object EventOps {
 
   /** The attribution window core over a tagged
     * `(user_id, ts, side, id, is_click)` union (side 1 = purchase,
-    * 0 = touch) — also driven standalone by the whale-user skew probe
-    * ([[graft.tools.ScaleProbeR4]]). */
+    * 0 = touch). Scaling and whale-user skew numbers: BASELINE.md
+    * "Round 4", round-5 weak-scaling + skew tables. */
   private[graft] def attributionCore(tagged: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts_us")
@@ -226,7 +226,7 @@ object EventOps {
 
   /** The bucketized interval-overlap core over `(user_id,
     * session_start, session_end, n_events)` × `(hot_id, w_start,
-    * w_end)` — also driven standalone by the scale probe. */
+    * w_end)`. */
   private[graft] def intervalJoinCore(sess: DataFrame, hot: DataFrame): DataFrame = {
     val bin = (c: Column) => floor(unix_micros(c).cast("double") / BinUs).cast("long")
     val s = sess.withColumn("bin", explode(sequence(bin(col("session_start")), bin(col("session_end"))))).as("s")
@@ -352,9 +352,9 @@ object EventOps {
       .select(col("user_id"), col("event_type"), unix_micros(col("ts")).as("ts_us")))
   }
 
-  /** The funnel window chain over `(user_id, event_type, ts_us)` —
-    * also driven standalone by the whale-user skew probe
-    * ([[graft.tools.ScaleProbeR5]]), like [[attributionCore]]. */
+  /** The funnel window chain over `(user_id, event_type, ts_us)`.
+    * Scaling and whale-user skew numbers: BASELINE.md "Round 4",
+    * round-5 weak-scaling + skew tables. */
   private[graft] def funnelStepsCore(ev0: DataFrame): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("user_id").orderBy("ts_us")
@@ -564,7 +564,6 @@ object EventOps {
            ROUND(CAST(cents - prev_cents AS DOUBLE) / 100.0, 4) AS wow_delta
     FROM j
     ORDER BY day""") { (spark, dir) =>
-    import org.apache.spark.sql.expressions.Window
     val daily = Tables.events(spark, dir)
       .where(col("event_type") === "purchase")
       .groupBy(to_date(col("ts")).as("day"))

@@ -304,8 +304,9 @@ object MetaQueries {
     dagClosureCore(dagEdges(spark), maxDepth, cacheInput = false)
 
   /** The generic semi-naive closure core over a `(src, dst)` edge list
-    * — any id type; also weak-scaled standalone on synthetic layered
-    * DAGs by [[graft.tools.ScaleProbeR5]]. `cacheInput = false` when
+    * — any id type. Scaling numbers on synthetic layered DAGs:
+    * BASELINE.md "Round 4", round-5 weak-scaling + skew tables, `dag`
+    * section. `cacheInput = false` when
     * the caller passes an already-cached/memoized frame. */
   private[graft] def dagClosureCore(edges0: DataFrame, maxDepth: Int = 32,
                                     cacheInput: Boolean = true): DataFrame = {
@@ -505,9 +506,9 @@ object MetaQueries {
   }
 
   /** The generic power-method core over a `(src, dst)` edge list —
-    * any id type; also weak-scaled standalone on synthetic layered
-    * graphs by [[graft.tools.ScaleProbeR5]] (the [[dagClosureCore]]
-    * convention). */
+    * any id type. Scaling numbers on synthetic hub-skewed graphs:
+    * BASELINE.md "Round 4", round-5 weak-scaling + skew tables,
+    * PageRank weak scaling. */
   private[graft] def pageRankCore(edges0: DataFrame): DataFrame = {
     val edges = edges0.cache()
     val nodes = edges.select(col("src").as("node"))

@@ -672,7 +672,7 @@ object Multimodal {
     * WHALE-BAND GUARD (r9 verdict weak #1): real web media corpora are
     * full of low-entropy content (blank thumbnails, solid-color
     * placeholders, silence) whose hashes collide by the million on a
-    * 16-bit band — the published MmScaleProbe degenerate is n²/2
+    * 16-bit band — the degenerate in BASELINE.md "Round 8" is n²/2
     * candidates on a constant-color corpus. Band buckets larger than
     * `whaleBandCap` are therefore DROPPED before the self-join (the
     * [[VectorsKmeans]] semdedup whale-cluster convention, here drop
@@ -684,8 +684,9 @@ object Multimodal {
     * so the guard adds no extra shuffle. Recall contract: a true
     * near-dup pair is missed only if EVERY band it agrees on is a
     * whale — on the dup fixtures max bucket ≪ cap (oracle hashes
-    * unchanged, asserted by the gate), and MmScaleProbe publishes the
-    * adversarial-corpus candidate counts with and without the guard.
+    * unchanged, asserted by the gate), and BASELINE.md "Round 8 —
+    * rewrite receipts" holds the adversarial-corpus candidate counts
+    * with and without the guard.
     *
     * STRUCTURAL RECALL WINDOW (r9 ADVICE, Multimodal.scala:574): 4
     * disjoint 16-bit bands guarantee a zero-flip band only for
@@ -754,8 +755,8 @@ object Multimodal {
     * NO precondition (exact dedup included) can remove — guaranteed
     * ≤ 7 recall through 8-bit bands is intrinsically quadratic-class
     * past n ≈ tens of thousands (sf0.1 already shows a 74-deep
-    * bucket; MmScaleProbe publishes the measured SUPERLINEAR candidate
-    * growth for this layout, asserting growth, not flatness). The
+    * bucket; BASELINE.md "The honest g7 scale contract" holds the
+    * measured SUPERLINEAR candidate growth for this layout). The
     * structural bound is therefore a CORPUS-SIZE guard: the call
     * counts `h` (cheap — production passes the memoized [[dupPhash]]
     * frame, specs pass literal fixtures) and refuses past

@@ -203,7 +203,8 @@ object TextBpe {
     * at the `maxVocab` most frequent words (deterministic tie-break:
     * freq DESC, word ASC — a distributed TakeOrdered, so the driver
     * transfer is ≤ maxVocab rows REGARDLESS of corpus entropy;
-    * BpeTimeProbe publishes the adversarial all-unique-token number).
+    * BASELINE.md "Round 8 — rewrite receipts" holds the adversarial
+    * all-unique-token number).
     * Merges learned from sub-minCount tail words are statistically
     * noise — the pair counts a floor of 2 drops are by definition
     * singletons. Fixture safety: the gated `ns_text_bpe*` rows train

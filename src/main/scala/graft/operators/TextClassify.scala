@@ -54,19 +54,12 @@ object TextClassify {
   def nbClassify(spark: SparkSession, dir: String): DataFrame =
     nbClassifyCore(Tables.documents(spark, dir))
 
-  /** Core on any (doc_id, lang, text) frame, split `doc_id % 5`. */
-  def nbClassifyCore(docs: DataFrame): DataFrame =
-    nbClassifySplit(docs.where(col("doc_id") % 5 =!= 0),
-      docs.where(col("doc_id") % 5 === 0))
-
-  /** Train/eval passed SEPARATELY — the weak-scaling probe grows ONLY
-    * the scoring corpus against a genuinely fixed training frame
-    * (replicating the whole frame through [[nbClassifyCore]] would
-    * grow the training shuffle 10× too and conflate the two costs —
-    * r6 advice on ScaleProbeR6b). */
-  def nbClassifySplit(trainDocs: DataFrame, evalDocs: DataFrame): DataFrame = {
-    val train = tokens(trainDocs)
-    val eval = tokens(evalDocs)
+  /** Core on any (doc_id, lang, text) frame: train on `doc_id % 5 != 0`,
+    * score `doc_id % 5 = 0` (scaling numbers: BASELINE.md "Round-6b
+    * additions"). */
+  def nbClassifyCore(docs: DataFrame): DataFrame = {
+    val train = tokens(docs.where(col("doc_id") % 5 =!= 0))
+    val eval = tokens(docs.where(col("doc_id") % 5 === 0))
 
     val model = train.groupBy("w").agg(
       sum(when(col("pos"), 1L).otherwise(0L)).as("c_pos"),
@@ -246,7 +239,7 @@ object TextClassify {
     val dv = OpMemo.cached(spark, dir, "perceptron-docvec") {
       docVectors(Tables.documents(spark, dir)).coalesce(dvParts)
     }
-    var w = Array.fill(256)(0L)
+    val w = Array.fill(256)(0L)
     val curve = Seq.newBuilder[(Int, Long, Long)]
     for (t <- 1 to PerceptronIters) {
       // ONE array literal, not array(256 lit(...)) — a CreateArray of

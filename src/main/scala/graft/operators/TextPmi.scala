@@ -92,8 +92,7 @@ object TextPmi {
   }
 
   /** The broadcast-vocab pair core over `(doc_id, toks)` × the V-row
-    * `(tok, df)` vocabulary — also driven standalone by the scale
-    * probe. `nDocs` is the corpus size for the independence baseline
+    * `(tok, df)` vocabulary. `nDocs` is the corpus size for the independence baseline
     * (a count the caller already has; recomputing it here would add a
     * second action). */
   private[graft] def pmiCore(toks: DataFrame, vocab: DataFrame, nDocs: Long): DataFrame = {

@@ -19,8 +19,8 @@ import graft.sources.Tables
   * simultaneously — O(bytes) per row regardless of blocklist size
   * (bitset accumulator since r9; the old single-Long form capped at
   * 64 terms), where per-term `contains` re-scans the document |terms|
-  * times and a regex alternation backtracks. Probe (BlocklistProbe,
-  * sf0.1): the walk reads 0.15–0.38 s FLAT from 4 to 10⁴ terms while
+  * times and a regex alternation backtracks. Measured (BASELINE.md
+  * "Round 8 — rewrite receipts", sf0.1): the walk reads 0.15–0.38 s FLAT from 4 to 10⁴ terms while
   * the contains-chain grows linearly (42× slower at 1024 terms) and
   * at 10⁴ terms is not even expressible — the generated chain blows
   * the JVM's 64 KB method limit. The automaton ships inside the

@@ -77,7 +77,7 @@ object TextSelection {
     *     second count/offset frame per (lang,bin,lkey,band) and
     *     row_number only within each band. A tied-logp whale thus
     *     sorts ≤ ~bin_n/256 rows per task instead of the whole bin
-    *     (probe: SelectionScaleProbe whale section).
+    *     (BASELINE.md "Round 7 probes", selection weak-scaling).
     *  5. integer `div`, no double rounding at bucket boundaries; exact
     *     for row_number-ranked NTILE.
     * Exposed for the window-equivalence spec (which also pins the
@@ -384,7 +384,8 @@ object TextSelection {
     * into any `readStream` unchanged (watermarks, triggers and sinks
     * are the caller's). HOFs evaluate interpreted (outside codegen),
     * but moving ZERO rows beats the explode + doc-keyed exchange the
-    * batch form pays: measured 0.70× at sf0.1 (SelectionScaleProbe),
+    * batch form pays: measured 0.70× at sf0.1 (BASELINE.md "Round 8 —
+    * rewrite receipts"),
     * which is why r8 made this the registered `ns_text_dsir` scoring
     * path too. Equality of the two scorers is spec-pinned. */
   def dsirScoreRowwise(docs: DataFrame, model: Map[Int, Long]): DataFrame =

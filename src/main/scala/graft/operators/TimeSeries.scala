@@ -107,9 +107,10 @@ object TimeSeries {
   }
 
   /** The two-stage search over an INJECTED series frame — the
-    * *Core convention of this file family (r12 review: TsScaleProbe
-    * carried a verbatim copy of both stages that could silently drift
-    * from the operator it claims to measure; it now drives this).
+    * *Core convention of this file family (r12 review: a weak-scaling
+    * run that carried its own copy of both stages could silently drift
+    * from the operator it claims to measure; BASELINE.md "r13 verdict
+    * #3: ns_ts_simsearch tightened" drives this).
     *
     * r14 shape (verdict #3 asked the τ-expansion tightened below the
     * `lb ≤ 5·τ` cut): the query side is NQueries-bounded BY CONTRACT,
@@ -260,12 +261,8 @@ object TimeSeries {
           distOf(qs).as("dist"))
     }.reduce(_ unionByName _)
 
-  /** Probe hooks (TsPhaseProbe): per-phase timing + the tau-cut health
-    * signal (expansion-set size per query). */
-  private[graft] def debugTau(series: DataFrame, refine: Int = Refine): Map[Long, Long] = {
-    val qRows = collectQueries(series)
-    if (qRows.isEmpty) Map.empty else tauPhase(series, qRows, refine)
-  }
+  /** Test hook (TimeSeriesSpec): the tau-cut health signal
+    * (expansion-set size per query). */
   private[graft] def debugExpansionSizes(series: DataFrame,
                                          refine: Int = Refine): Map[Long, Long] = {
     val qRows = collectQueries(series)

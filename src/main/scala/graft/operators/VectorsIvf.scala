@@ -68,8 +68,9 @@ object VectorsIvf {
     * ([[ScaleOps.writeBucketed]] with `cell` as the key): the index
     * writer appends each new vector to its cell (exactly the `cell`
     * column [[ivfIncremental]] emits), and a probe job prunes to the
-    * ≤ NumCells probed cells at the scan. IvfIngestProbe publishes
-    * warm-vs-cold per-ingest wall-time at 1× and 10× index size. */
+    * ≤ NumCells probed cells at the scan. BASELINE.md "Round-11
+    * measurements" holds warm-vs-cold per-ingest wall-time at 1× and
+    * 10× index size. */
   private[graft] def ivfIndex(spark: SparkSession, dir: String): DataFrame =
     OpMemo.cached(spark, dir, "vec_ivf_index") {
       val cents = centroids(spark, dir)
@@ -131,10 +132,12 @@ object VectorsIvf {
     SELECT query_id, neighbor_id, sim_r FROM ranked WHERE rn <= 5
     ORDER BY query_id, sim_r DESC, neighbor_id""")((s, d) => ivfTopK(s, d))
 
-  /** The new×index candidate frame (batch membership parametrized so
-    * IvfIngestProbe can measure candidates ∝ |batch| directly). */
-  private[graft] def candidates(spark: SparkSession, dir: String, isNew: Column,
-      nProbe: Int = NumProbes): DataFrame = {
+  /** The ingest slice: vectors with `vec_id % 10 = 7` are the NEW batch. */
+  private def isNew: Column = col("vec_id") % 10 === 7
+
+  /** The new×index candidate frame; candidates ∝ |batch| (BASELINE.md
+    * "Round 8 — rewrite receipts"). */
+  private def candidates(spark: SparkSession, dir: String, nProbe: Int): DataFrame = {
     val cents = centroids(spark, dir)
     // index side: a FILTER over the memoized cell-assigned frame — no
     // re-scan, no re-cell-assign (r10 weak #1); the batch side pays
@@ -168,17 +171,17 @@ object VectorsIvf {
     * BATCH side broadcasts (ingest batches are small by definition),
     * so per-ingest cost is the batch's own probe scoring plus
     * |batch|·nProbe/K of the index — candidates ∝ |batch| and warm
-    * wall-time ∝ |batch|, both measured by IvfIngestProbe. */
+    * wall-time ∝ |batch| (BASELINE.md "Round 8 — rewrite receipts" and
+    * "Round-11 measurements"). */
   def ivfIncremental(spark: SparkSession, dir: String,
       nProbe: Int = NumProbes): DataFrame = {
-    val isNew = col("vec_id") % 10 === 7
     // EVERY new vector emits its cell-append row, candidates or not
     // (r10 review #1: the inner-join shape silently dropped a batch
     // vector whose probed cells were all empty in the warm index -
     // tiny or skewed indexes - losing the append record; the oracle
     // mirrored the drop, so only the contract text caught it)
     val newAssign = ivfIndex(spark, dir).where(isNew).select("vec_id", "cell")
-    val cand = candidates(spark, dir, isNew, nProbe)
+    val cand = candidates(spark, dir, nProbe)
     // top-1 + count in ONE hash aggregation (max over a (sim, -id)
     // struct ≡ the window's sim DESC, id ASC tie-break) — the two
     // query_id-windows this replaces needed a shuffle + per-partition

@@ -356,7 +356,7 @@ object VectorsKmeans {
     * equi-join buckets, so the pair generation is ONE shuffle on
     * cluster id (no crossJoin). Two guardrails make that hold at
     * 100 TB: you raise K so E[|cluster|] stays bounded (pairs then grow
-    * linearly with the corpus — measured by the scale probe), and any
+    * linearly with the corpus — BASELINE.md "Round 4"), and any
     * cluster that still exceeds [[MaxClusterRows]] is salt-split by
     * [[semDedupCore]] into bounded shard-pair join tasks — a LOSSLESS
     * skew decomposition (every within-cluster pair lands in exactly one
@@ -393,8 +393,8 @@ object VectorsKmeans {
 
   /** Within-cluster pair scan over an injected
     * `(cluster_id, vec_id, embedding)` frame, with oversized clusters
-    * salt-split into bounded tasks — also driven standalone by the
-    * whale-cluster probe ([[graft.tools.ScaleProbeR5]]).
+    * salt-split into bounded tasks. Scaling and whale-cluster skew
+    * numbers: BASELINE.md "Round 4", round-5 weak-scaling + skew tables.
     *
     * Decomposition (lossless): a cluster with n > maxClusterRows rows
     * gets S = ⌈n / maxClusterRows⌉ shards; each row salts to shard

@@ -82,7 +82,7 @@ object VectorsPca {
   private[graft] val Dim = 64
 
   /** The zero-join gram core over a quantized `(q: array<bigint>)`
-    * frame — also driven standalone by the scale probe. Emits 1-based
+    * frame. Emits 1-based
     * (dim_i ≤ dim_j) to match the oracle's `generate_subscripts`. */
   private[graft] def gramCore(q: DataFrame): DataFrame = {
     val gram = q

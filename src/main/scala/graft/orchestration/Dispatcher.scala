@@ -72,14 +72,6 @@ object Dispatcher {
   final case class DepSat(pipeline_uuid: String, dep: String, exec_uuid: String,
       event_id: Long, event_time: Timestamp)
 
-  /** [[StateMachine.Meta]] as a join-able row — the catalog-scale path
-    * carries each key's meta ON the cogrouped rows instead of in a
-    * driver-collected broadcast map. */
-  final case class MetaRow(triggers_op: Option[String], deps: Seq[String],
-      retry_max: Int, concurrency: Boolean) {
-    def toMeta: Meta = Meta(triggers_op, deps, retry_max, concurrency)
-  }
-
   /** Assemble per-pipeline Meta from defs + edges (small, collected to
     * a broadcast map — the catalog is operational metadata, never data-
     * plane sized). */
@@ -110,44 +102,6 @@ object Dispatcher {
       else None
     }
 
-  /** The P2 fan-out routing columns — `run_now` ([[StateMachine.runnableNow]]
-    * as relational algebra) and `known` — via DATASET JOINS instead of
-    * the collected meta map: `runnableNow(meta)` depends only on
-    * (triggers_op, |deps|), so a groupBy-count on edges joined to defs
-    * reproduces it without the catalog ever visiting the driver. This
-    * is the ≥10⁵-pipeline catalog path (the collected map stays the
-    * default: sub-ms vs a join stage for the reference's ~10²-pipeline
-    * regime). Property-tested equal to the map path in
-    * OrchestrationSpec; weak-scaled at 10⁶ defs in the r6 probe. */
-  private[orchestration] def childRoutingJoined(
-      children: DataFrame, defs: Dataset[PipelineDef],
-      edges: Dataset[PipelineTrigger]): DataFrame = {
-    val depCounts = edges.groupBy(col("pipeline_uuid")).agg(count(lit(1)).as("n_deps"))
-    val meta = defs.select(col("pipeline_uuid"), col("triggers_op"))
-      .join(depCounts, Seq("pipeline_uuid"), "left")
-      .select(col("pipeline_uuid").as("child"),
-        (col("triggers_op").isNull || col("triggers_op") === "any" ||
-          coalesce(col("n_deps"), lit(0L)) === 1L).as("run_now"),
-        lit(true).as("known"))
-    children.join(meta, Seq("child"), "left")
-      .na.fill(false, Seq("run_now", "known"))
-  }
-
-  /** The per-pipeline meta relation `(pipeline_uuid, meta: MetaRow)` as
-    * a Dataset — [[metaMap]] without the collect: defs ⋈ (edges
-    * groupBy child, sorted dep list). Shared by the catalog-scale
-    * routing and cogroup paths. */
-  private[orchestration] def metaDf(defs: Dataset[PipelineDef],
-                                    edges: Dataset[PipelineTrigger]): DataFrame =
-    defs.select(col("pipeline_uuid"), col("triggers_op"), col("retry_max"), col("concurrency"))
-      .join(edges.groupBy(col("pipeline_uuid"))
-        .agg(sort_array(collect_list(col("trigger_uuid"))).as("deps")),
-        Seq("pipeline_uuid"), "left")
-      .select(col("pipeline_uuid"),
-        struct(col("triggers_op"),
-          coalesce(col("deps"), array().cast("array<string>")).as("deps"),
-          col("retry_max"), col("concurrency")).as("meta"))
-
   def step(spark: SparkSession,
            defs: Dataset[PipelineDef],
            edges: Dataset[PipelineTrigger],
@@ -156,19 +110,12 @@ object Dispatcher {
            events: Dataset[LifecycleEvent],
            now: Timestamp,
            debounceSeconds: Long = 300L,
-           ageOutSeconds: Long = 86400L,
-           catalogJoin: Boolean = false): StepResult = {
+           ageOutSeconds: Long = 86400L): StepResult = {
     import spark.implicits._
 
-    // catalogJoin = false (default): defs+edges collect into a broadcast
-    // meta map — sub-ms lookups, right for the reference's catalog
-    // regime (10²–10⁴ pipelines). catalogJoin = true: the catalog NEVER
-    // visits the driver — routing and cogroup meta arrive via joins —
-    // the ≥10⁵-pipeline path (r5 verdict #6), property-tested equal in
-    // OrchestrationSpec and weak-scaled at 10⁶ defs in the r6 probe.
-    val bMetas =
-      if (catalogJoin) null
-      else spark.sparkContext.broadcast(metaMap(defs, edges))
+    // defs+edges collect into a broadcast meta map — sub-ms lookups,
+    // right for the reference's catalog regime (10²–10⁴ pipelines)
+    val bMetas = spark.sparkContext.broadcast(metaMap(defs, edges))
 
     val evs = events.where(col("event_type") === "job_exec_update").cache()
 
@@ -207,22 +154,11 @@ object Dispatcher {
     // D5 upsert validates edges against defs, but flush (D7) bypasses
     // that guard — so an edge can reference a child with no def. Route
     // such children to warnings instead of failing the whole step.
-    // Two equivalent routing paths (spec-pinned equal): the broadcast
-    // meta-map lookup (default — the catalog-sized regime) and the
-    // Dataset join (catalogJoin = true, for ≥10⁵-pipeline catalogs
-    // where collecting defs+edges to the driver stops being free).
-    val childMeta =
-      if (catalogJoin)
-        childRoutingJoined(
-          children.toDF("child", "dep", "exec_uuid", "event_id", "event_time"),
-          defs, edges)
-          .select(col("child"), col("dep"), col("exec_uuid"), col("event_id"),
-            col("event_time"), col("run_now"), col("known"))
-      else children.as[(String, String, String, Long, Timestamp)].map {
-        case (child, dep, exec, eventId, eventTime) =>
-          val m = bMetas.value.get(child)
-          (child, dep, exec, eventId, eventTime, m.exists(runnableNow), m.isDefined)
-      }.toDF("child", "dep", "exec_uuid", "event_id", "event_time", "run_now", "known")
+    val childMeta = children.as[(String, String, String, Long, Timestamp)].map {
+      case (child, dep, exec, eventId, eventTime) =>
+        val m = bMetas.value.get(child)
+        (child, dep, exec, eventId, eventTime, m.exists(runnableNow), m.isDefined)
+    }.toDF("child", "dep", "exec_uuid", "event_id", "event_time", "run_now", "known")
     val fanoutCandidates = childMeta.where(col("known") && col("run_now"))
       .select(col("child").as("pipeline_uuid"), lit("fanout").as("origin"),
         lit(0).as("retry_count"),
@@ -241,48 +177,24 @@ object Dispatcher {
     // -- D13/D14/S2: incubation state via cogroup --------------------------
     val debounce = debounceSeconds
     val ageOut = ageOutSeconds
-    // the shared per-key fold; meta resolution differs per path
-    def foldKey(key: String, meta: Meta, stateIt: Iterator[IncubRow],
-                evIt: Iterator[DepSat]): Iterator[(String, IncubRow, Long)] = {
-      val st = PipelineState(stateIt.map(r =>
-        WaitRow(r.obj_id, r.create_time, r.created_by_uuid, r.retry_count, r.reason, r.triggers)).toList)
-      val evsHere = evIt.map(d => DepSatisfied(d.dep, d.exec_uuid, d.event_id, d.event_time)).toSeq
-      val (st2, releases, dropped) = stepKey(st, meta, evsHere, now, debounce, ageOut, key)
-      val keptRows = st2.rows.map(r => ("kept", IncubRow(key, r.objId, r.createTime,
-        r.createdByUuid, r.reason, r.retryCount, r.triggers), 0L))
-      val rel = releases.zipWithIndex.map { case (r, i) =>
-        // obj_id keeps the released row's stable identity (ADVICE r1:
-        // a per-step counter collides across step() invocations)
-        ("release", IncubRow(key, r.objId, now, r.createdByUuid, r.reason, r.retryCount, r.sources), i.toLong)
-      }
-      val drops = dropped.map(id => ("dropped", IncubRow(key, id, now, None, "", 0, Map.empty), 0L))
-      (keptRows ++ rel ++ drops).iterator
-    }
     val noMeta = Meta(None, Nil, 0, concurrency = false)
-    val stepped = (if (catalogJoin) {
-      // meta rides ON the rows via a left join against the meta
-      // relation — whichever side of the cogroup is non-empty carries
-      // it, so the catalog stays distributed end to end
-      val metas = metaDf(defs, edges)
-      val stateM = incubating.join(metas, Seq("pipeline_uuid"), "left")
-        .select(struct(incubating.columns.map(col).toIndexedSeq: _*).as("_1"), col("meta").as("_2"))
-        .as[(IncubRow, Option[MetaRow])]
-      val depSatM = depSats.join(metas, Seq("pipeline_uuid"), "left")
-        .select(struct(depSats.columns.map(col).toIndexedSeq: _*).as("_1"), col("meta").as("_2"))
-        .as[(DepSat, Option[MetaRow])]
-      stateM.groupByKey(_._1.pipeline_uuid).cogroup(depSatM.groupByKey(_._1.pipeline_uuid)) {
-        (key, stateIt, evIt) =>
-          val (sBuf, eBuf) = (stateIt.toSeq, evIt.toSeq)
-          val meta = (sBuf.iterator.map(_._2) ++ eBuf.iterator.map(_._2))
-            .flatten.nextOption().map(_.toMeta).getOrElse(noMeta)
-          foldKey(key, meta, sBuf.iterator.map(_._1), eBuf.iterator.map(_._1))
-      }
-    } else {
-      incubating.groupByKey(_.pipeline_uuid).cogroup(depSats.groupByKey(_.pipeline_uuid)) {
-        (key, stateIt, evIt) =>
-          foldKey(key, bMetas.value.getOrElse(key, noMeta), stateIt, evIt)
-      }
-    }).cache()
+    val stepped = incubating.groupByKey(_.pipeline_uuid).cogroup(depSats.groupByKey(_.pipeline_uuid)) {
+      (key, stateIt, evIt) =>
+        val st = PipelineState(stateIt.map(r =>
+          WaitRow(r.obj_id, r.create_time, r.created_by_uuid, r.retry_count, r.reason, r.triggers)).toList)
+        val evsHere = evIt.map(d => DepSatisfied(d.dep, d.exec_uuid, d.event_id, d.event_time)).toSeq
+        val (st2, releases, dropped) =
+          stepKey(st, bMetas.value.getOrElse(key, noMeta), evsHere, now, debounce, ageOut, key)
+        val keptRows = st2.rows.map(r => ("kept", IncubRow(key, r.objId, r.createTime,
+          r.createdByUuid, r.reason, r.retryCount, r.triggers), 0L))
+        val rel = releases.zipWithIndex.map { case (r, i) =>
+          // obj_id keeps the released row's stable identity (ADVICE r1:
+          // a per-step counter collides across step() invocations)
+          ("release", IncubRow(key, r.objId, now, r.createdByUuid, r.reason, r.retryCount, r.sources), i.toLong)
+        }
+        val drops = dropped.map(id => ("dropped", IncubRow(key, id, now, None, "", 0, Map.empty), 0L))
+        (keptRows ++ rel ++ drops).iterator
+    }.cache()
 
     val newIncubating = stepped.filter(_._1 == "kept").map(_._2)
     val releaseCandidates = stepped.filter(_._1 == "release").map { case (_, r, _) =>
@@ -360,7 +272,7 @@ object Dispatcher {
         // while unpersist re-ships from the driver on demand and the
         // ContextCleaner reclaims the driver copy once the state plan
         // stops referencing it.
-        if (bMetas != null) bMetas.unpersist()
+        bMetas.unpersist()
         ()
       })
   }

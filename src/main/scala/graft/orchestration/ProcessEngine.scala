@@ -1,7 +1,6 @@
 package graft.orchestration
 
 import java.sql.Timestamp
-import java.util.concurrent.ConcurrentHashMap
 
 import scala.concurrent.{ExecutionContext, Future}
 

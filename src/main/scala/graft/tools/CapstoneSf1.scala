@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** sf1 scale probe for the three COMPOSED capstones (r12 verdict #8):
@@ -87,13 +87,7 @@ object CapstoneSf1 {
     val srcSf = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val shift = 6000000L // multiple of 60: preserves %3 %15 %10 %4
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {
       val reps = spark.range(factor).toDF("rep")
       val docs = spark.read.parquet(s"$srcSf/documents.parquet")

@@ -62,13 +62,7 @@ object DagSf1 {
 
   def main(args: Array[String]): Unit = {
     val r = args.headOption.map(_.toLong).getOrElse(100000L)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     spark.range(1000).count() // scheduler warm-up
     val nEdges = directed(spark, r).count()
     val nUnd = undirected(spark, r).count()

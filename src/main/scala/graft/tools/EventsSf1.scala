@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-scale probe for the EVENTS plane (r14; the [[DagSf1]] /
@@ -37,13 +36,7 @@ object EventsSf1 {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1_events")
     val r = args.lift(1).map(_.toInt).getOrElse(100)
     val srcSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     if (!new java.io.File(s"$dir/events.parquet").exists()) {
       val src = spark.read.parquet(s"$srcSf/events.parquet")
       // Replica id-space strides DERIVED from the source (r14 ADVICE:

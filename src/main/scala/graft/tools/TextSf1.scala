@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** sf1-scale probe for the TEXT/CLASSIFIER plane (r14 verdict #5; the
@@ -41,13 +40,7 @@ object TextSf1 {
     val dir = args.headOption.getOrElse("/tmp/graft_sf1_text")
     val r = args.lift(1).map(_.toInt).getOrElse(100)
     val srcSf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {
       val src = spark.read.parquet(s"$srcSf/documents.parquet")
       val maxId = src.agg(max("doc_id")).head().getLong(0)

@@ -54,6 +54,45 @@ class ApiSpec extends AnyFunSuite {
     assert(r.submissions.count() == 0)
   }
 
+  test("a failure report drops its own exec from the concurrency gate: the retry submits in the same step") {
+    // flaky-export: concurrency = false, retry_max = 3. The running
+    // snapshot still lists exec-x (its callback fires inside the
+    // closure, before the engine marks it done); gating the retry
+    // against that row incubated it for the whole debounce.
+    def job(exec: String) = RunningJob(exec, "flaky-export", "spark-local", s"t-$exec",
+      "running", Some(Fixtures.NOW), None)
+    val failure = LifecycleEvent(950L, "job_exec_update", "failure", "flaky-export", "exec-x",
+      Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
+    val r = api.dispatch(Seq(failure), Seq(job("exec-x")).toDS(),
+      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
+    assert(r.submissions.collect().map(s => (s.pipeline_uuid, s.retry_count)).toSeq ==
+      Seq(("flaky-export", 1)))
+    assert(r.deferred.collect().filter(_.reason == "concurrency").isEmpty,
+      "the retry incubated behind its own finished attempt")
+    // a DIFFERENT live exec of the pipeline still gates the retry
+    val gated = api.dispatch(Seq(failure), Seq(job("exec-x"), job("exec-y")).toDS(),
+      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
+    assert(gated.submissions.count() == 0)
+    assert(gated.deferred.collect().map(_.reason).toSeq == Seq("concurrency"))
+  }
+
+  test("a success/failure report without an exec_uuid leaves the concurrency gate whole") {
+    // Neither ingress requires exec_uuid. A NULL among the finished ids
+    // must not empty the running set: solo-maintenance (concurrency =
+    // false) still has a live run, so its origination stays deferred.
+    val live = RunningJob("exec-s", "solo-maintenance", "spark-local", "t-exec-s",
+      "running", Some(Fixtures.NOW), None)
+    val failure = LifecycleEvent(951L, "job_exec_update", "failure", "flaky-export", null,
+      Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
+    val origination = LifecycleEvent(952L, "job_exec_update", "origination", "solo-maintenance",
+      "orig-s", Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
+    val r = api.dispatch(Seq(failure, origination), Seq(live).toDS(),
+      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
+    assert(!r.submissions.collect().exists(_.pipeline_uuid == "solo-maintenance"))
+    assert(r.deferred.collect().map(d => (d.pipeline_uuid, d.reason)).toSeq
+      .contains(("solo-maintenance", "concurrency")))
+  }
+
   test("shingles() yields empty array for docs shorter than w (ADVICE r1)") {
     val out = Seq("one two", "one two three four", "")
       .toDF("text")

@@ -728,7 +728,7 @@ class MediaCodecSpec extends AnyFunSuite {
   test("whale-band guard: constant-hash corpus yields zero candidates; real dups survive") {
     val spark = SparkSuite.spark
     import spark.implicits._
-    // the published MmScaleProbe degenerate: every hash identical →
+    // the degenerate in BASELINE.md "Round 8": every hash identical →
     // every band bucket one n-sized whale → unguarded candidates n²/2.
     // The r10 guard drops whale buckets, so the production path emits
     // NOTHING for a constant-color corpus (r9 verdict weak #1)

@@ -39,47 +39,6 @@ class OrchestrationSpec extends AnyFunSuite {
       spark.createDataset(events)(Encoders.product[LifecycleEvent]),
       now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
 
-  private def stepJoined(events: Seq[LifecycleEvent],
-                         incub: Seq[IncubRow] = Nil,
-                         running: Seq[RunningJob] = Nil) =
-    Dispatcher.step(spark,
-      Fixtures.defsDS(spark), Fixtures.edgesDS(spark),
-      spark.createDataset(running)(Encoders.product[RunningJob]),
-      spark.createDataset(incub)(Encoders.product[IncubRow]),
-      spark.createDataset(events)(Encoders.product[LifecycleEvent]),
-      now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds, catalogJoin = true)
-
-  test("catalog-join path ≡ broadcast-map path across every step output") {
-    // the ≥10⁵-catalog variant (r5 verdict #6) must be a pure plan
-    // substitution: same submissions, incubation transitions, dead
-    // letters, warnings and drops on a scenario touching every branch —
-    // origination (known+unknown), fan-out (any/all/unknown child),
-    // failure (retry+dead-letter), culler (release+age-out), and the
-    // concurrency gate
-    val events = Seq(
-      mkEvent(41, "origination", "ingest-orders"),
-      mkEvent(42, "origination", "no-such-pipeline"),
-      mkEvent(43, "success", "report-daily"),
-      mkEvent(44, "failure", "flaky-export", retry = 0),
-      mkEvent(45, "failure", "flaky-export", retry = 99),
-      mkEvent(46, "success", "clean-orders"))
-    val incub = incubRows(Fixtures.incubating, Fixtures.incubatingTriggers)
-    val running = Seq(RunningJob("exec-r1", "ingest-orders", "spark-local", "t1",
-      "running", Some(now), None))
-    val a = step(events, incub, running)
-    val b = stepJoined(events, incub, running)
-    def subs(r: Dispatcher.StepResult) =
-      r.submissions.collect().map(s => (s.pipeline_uuid, s.exec_uuid, s.source_uuids, s.retry_count)).toSet
-    def rows(d: org.apache.spark.sql.Dataset[IncubRow]) =
-      d.collect().map(r => (r.pipeline_uuid, r.obj_id, r.reason, r.retry_count, r.triggers)).toSet
-    assert(subs(a) == subs(b), "submissions diverged")
-    assert(rows(a.newIncubating) == rows(b.newIncubating), "kept incubation diverged")
-    assert(rows(a.deferred) == rows(b.deferred), "concurrency deferrals diverged")
-    assert(a.deadLetters.collect().map(_.toSeq).toSet == b.deadLetters.collect().map(_.toSeq).toSet)
-    assert(a.warnings.collect().map(_.toSeq).toSet == b.warnings.collect().map(_.toSeq).toSet)
-    assert(a.droppedObjIds.collect().map(_.toSeq).toSet == b.droppedObjIds.collect().map(_.toSeq).toSet)
-  }
-
   test("origination of a known pipeline submits it") {
     val r = step(Seq(mkEvent(1, "origination", "ingest-orders")))
     val subs = r.submissions.collect()

@@ -1,8 +1,7 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
-
-import graft.tools.RecallProbe
 
 /** Hard recall floors on the CLUSTERED fixture (r6 verdict #6): the
   * uniform embeddings table is the documented worst case for
@@ -11,7 +10,7 @@ import graft.tools.RecallProbe
   * mixture-of-Gaussians fixture is the design regime — floors here are
   * meaningfully above noise and pin the bucketing/codebook logic.
   *
-  * Measured (seed=42, n=2000, dim=64, 16 centers; RecallProbe r7):
+  * Measured (seed=42, n=2000, dim=64, 16 centers; r7):
   * lsh 1.00, ivf 1.00, ivf_kmeans 1.00, trunc16 0.68, rp 0.56,
   * int8 0.64, pq 0.52, ivfpq 0.52. Floors leave slack for fixture
   * regeneration, not for design regressions. The quantization families
@@ -24,8 +23,8 @@ class RecallFloorsSpec extends AnyFunSuite {
 
   private lazy val recalls: Map[String, (Double, Int)] = {
     val dir = SparkSuite.tempDir("recall-clustered")
-    RecallProbe.writeClusteredFixture(spark, dir)
-    RecallProbe.recalls(spark, dir)
+    RecallFloorsSpec.writeClusteredFixture(spark, dir)
+    RecallFloorsSpec.recalls(spark, dir)
   }
 
   private val floors = Map(
@@ -95,5 +94,56 @@ class RecallFloorsSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(whaleGot.contains((0L, 1L)),
       s"whale-crowded flip-free band must not lose the guaranteed pair; got ${whaleGot.toSeq}")
+  }
+}
+
+object RecallFloorsSpec {
+
+  /** Deterministic mixture-of-Gaussians embeddings fixture, same
+    * schema as the driver's table (vec_id BIGINT, embedding
+    * ARRAY<FLOAT>, label INT): `centers` unit-sphere centroids,
+    * per-point Gaussian noise σ=0.12, L2-normalized. Driver-side
+    * generation (n·dim floats, MBs) so the bytes are seed-stable
+    * regardless of partitioning. */
+  def writeClusteredFixture(spark: SparkSession, path: String, n: Int = 2000,
+                            dim: Int = 64, centers: Int = 16, seed: Long = 42L): Unit = {
+    val rnd = new java.util.Random(seed)
+    def normalize(v: Array[Float]): Array[Float] = {
+      val s = math.sqrt(v.map(x => x.toDouble * x).sum).toFloat
+      v.map(_ / s)
+    }
+    val ctrs = Array.fill(centers)(normalize(Array.fill(dim)(rnd.nextGaussian().toFloat)))
+    val rows = (0 until n).map { i =>
+      val c = ctrs(i % centers)
+      val v = normalize(Array.tabulate(dim)(d => c(d) + 0.12f * rnd.nextGaussian().toFloat))
+      (i.toLong, v.toSeq, i % centers)
+    }
+    spark.createDataFrame(rows).toDF("vec_id", "embedding", "label")
+      .selectExpr("vec_id", "CAST(embedding AS ARRAY<FLOAT>) AS embedding",
+        "CAST(label AS INT) AS label")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/embeddings.parquet")
+  }
+
+  val families: Seq[(String, String)] = Seq(
+    "lsh" -> "ns_vec_topk_lsh",
+    "ivf" -> "ns_vec_topk_ivf",
+    "ivf_kmeans" -> "ns_vec_topk_ivf_kmeans",
+    "int8" -> "ns_vec_topk_quant",
+    "trunc16" -> "ns_vec_topk_trunc",
+    "rp" -> "ns_vec_topk_rp",
+    "pq" -> "ns_vec_topk_pq",
+    "ivfpq" -> "ns_vec_topk_ivfpq")
+
+  /** recall@5 per family against `ns_vec_topk` on the given dir. */
+  def recalls(spark: SparkSession, dir: String): Map[String, (Double, Int)] = {
+    def pairs(name: String): Set[(Long, Long)] =
+      graft.SparkEntry.queries(name)(spark, dir)
+        .select("query_id", "neighbor_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairs("ns_vec_topk")
+    families.map { case (label, q) =>
+      val approx = pairs(q)
+      label -> (((approx intersect exact).size.toDouble / exact.size, approx.size))
+    }.toMap
   }
 }
