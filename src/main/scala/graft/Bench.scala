@@ -37,6 +37,22 @@ object Bench {
     else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
   }
 
+  /** Fixed-point JSON number: `digits` decimals under `Locale.ROOT`, so
+    * a host locale with a decimal comma can never emit `1,5` into the
+    * artifact. */
+  private[graft] def num(x: Double, digits: Int): String =
+    String.format(java.util.Locale.ROOT, s"%.${digits}f", Double.box(x))
+
+  /** JSON string literal body: quotes, backslashes and control
+    * characters escaped (error messages carry all three). */
+  private[graft] def jsonStr(s: String): String =
+    s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }
+
   /** Cumulative GC milliseconds across all collector beans — deltas
     * around each measured pass go into the artifact (r13 verdict #1:
     * the r12 8g-heap thrash was diagnosed by exactly this counter,
@@ -224,7 +240,7 @@ object Bench {
     }
     val startLoad = loadavg1m
     val loadWarning =
-      if (startLoad > 1.0) s""","warning":"loadavg1m ${f"$startLoad%.2f"} > 1.0 at start after ${waited}s wait - timings not comparable to idle baselines""""
+      if (startLoad > 1.0) s""","warning":"loadavg1m ${num(startLoad, 2)} > 1.0 at start after ${waited}s wait - timings not comparable to idle baselines""""
       else ""
     val spark = GraftSession.local(cpus)
     // Standing instrumentation (r13 verdict #1: the r12 "regression"
@@ -279,11 +295,22 @@ object Bench {
       graft.meta.Fixtures.defsDS(spark).count()
       graft.sources.Tables.names.foreach(n =>
         graft.sources.Tables(spark, sfDir, n).count())
-    } catch { case _: Throwable => () }
-    def runOnce(name: String): Double = {
+    } catch { case scala.util.control.NonFatal(_) => () }
+    // A failing row is an ERROR, never a wall: a time-to-throw would
+    // read as a fast row. Its first message goes under `errors`, and the
+    // row leaves `queries`, `runs` and the total. Fatal errors (OOM,
+    // linkage) propagate and end the run.
+    val errors = scala.collection.concurrent.TrieMap.empty[String, String]
+    def runOnce(name: String): Option[Double] = {
       val t0 = System.nanoTime()
-      try { SparkEntry.queries(name)(spark, sfDir).count() } catch { case _: Throwable => -1L }
-      (System.nanoTime() - t0) / 1e9
+      try {
+        SparkEntry.queries(name)(spark, sfDir).count()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          errors.putIfAbsent(name, s"${e.getClass.getName}: ${e.getMessage}")
+          None
+      }
     }
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
     // Triage bands load BEFORE the first incremental flush below — the
@@ -317,16 +344,30 @@ object Bench {
     val warmT0 = System.nanoTime()
     if (warm) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
-      names.foreach { name =>
+      val lanes = names.map { name =>
         pool.submit(new Runnable {
           override def run(): Unit = {
             spark.sparkContext.setJobDescription(s"warm:$name") // thread-local
-            warmRuns(name) = graft.operators.OpMemo.withBuildTag(name)(runOnce(name))
+            graft.operators.OpMemo.withBuildTag(name)(runOnce(name))
+              .foreach(w => warmRuns(name) = w)
           }
         })
       }
       pool.shutdown()
-      pool.awaitTermination(7, java.util.concurrent.TimeUnit.DAYS)
+      // every lane is joined: get() rethrows what a lane threw (runOnce
+      // keeps only non-fatal errors), and the whole warm pass is bounded
+      // by the run's wall budget — past it the bench fails loudly rather
+      // than wait on a hung lane
+      try lanes.foreach { f =>
+        val leftS = math.max(0.0, budgetS - elapsedS)
+        try f.get((leftS * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
+        catch {
+          case _: java.util.concurrent.TimeoutException =>
+            throw new IllegalStateException(
+              s"[bench] warm pass still running at the ${budgetS}s budget (SPARK_GRAFT_BENCH_BUDGET_S)")
+          case e: java.util.concurrent.ExecutionException => throw e.getCause
+        }
+      } finally pool.shutdownNow()
       spark.sparkContext.setJobDescription(null)
     }
     val memoPaid: Map[String, Seq[String]] =
@@ -356,7 +397,7 @@ object Bench {
     // (host steal / IO); wall ≫ task_ms/32 → driver planning +
     // scheduler delay.
     val attrib = scala.collection.mutable.Map.empty[String, (Long, Long, Long, Double)]
-    def runMeasured(name: String): Double =
+    def runMeasured(name: String): Option[Double] =
       if (only.isEmpty) runOnce(name)
       else {
         val r0 = taskRunMs.get(); val g0 = taskGcMs.get(); val c0 = taskCpuNs.get()
@@ -364,7 +405,7 @@ object Bench {
         settle()
         val (t, g, c, pw) = attrib.getOrElse(name, (0L, 0L, 0L, 0.0))
         attrib(name) = (t + (taskRunMs.get() - r0), g + (taskGcMs.get() - g0),
-          c + (taskCpuNs.get() - c0) / 1000000L, pw + w)
+          c + (taskCpuNs.get() - c0) / 1000000L, pw + w.getOrElse(0.0))
         w
       }
     // Per-pass counter deltas (r13 verdict #1): GC millis, steal ticks,
@@ -374,7 +415,7 @@ object Bench {
     // accumulators already exist), so a loud pass is attributable
     // without a focused re-run.
     val passStats = scala.collection.mutable.ArrayBuffer.empty[String]
-    val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Double]]
+    val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Option[Double]]]
     // artifact dir knob: lets the integration spec exercise the real
     // emit path without clobbering the committed cwd artifacts
     val artifactDir = knob("SPARK_GRAFT_BENCH_DIR", ".")
@@ -394,7 +435,7 @@ object Bench {
     // number of record to a kill at ~95%.
     def emit(): Unit = {
       val allRuns: Map[String, Seq[Double]] =
-        names.map(n => n -> passes.toSeq.map(_(n))).toMap
+        names.filterNot(errors.contains).map(n => n -> passes.toSeq.flatMap(_(n))).toMap
       // In-artifact regression triage (r7 verdict #4; thresholds r9;
       // r13 semantics): a row is TRIAGED when its BEST recorded rep sits
       // above the previous band (1.5× AND +0.3 s absolute; NEW rows with
@@ -431,11 +472,14 @@ object Bench {
       val warmRunsJson =
         if (warmRuns.isEmpty) ""
         else warmRuns.toSeq.sortBy(_._1)
-          .map { case (n, w) => s"""\"$n\":${f"$w%.3f"}""" }
+          .map { case (n, w) => s"""\"$n\":${num(w, 3)}""" }
           .mkString(s""""warm_parallelism":$warmThreads,"warm_runs":{""", ",", "},")
       val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.values.sum else 0.0
+      val errorsJson = errors.toSeq.sortBy(_._1)
+        .map { case (n, msg) => s"""\"$n\":\"${jsonStr(msg)}\"""" }
+        .mkString(""","errors":{""", ",", "}")
       // Load context in the artifact (r5 verdict #4, r6 verdict #1):
       // loadavg1m_start is the idle-discipline reading (taken BEFORE any
       // Spark work — the number to compare against the <1.0 bar);
@@ -462,8 +506,8 @@ object Bench {
           .getOrElse("\"" + cpus + "\"")
         s""","cpus":$cpusJson,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(-1)},"aqe":"${spark.conf.get("spark.sql.adaptive.enabled")}""""
       }
-      val budgetJson = s""","reps_completed":${passes.size},"budget_s":$budgetS,"elapsed_s":${f"$elapsedS%.1f"},"warm_pass_s":${f"$warmPassS%.1f"}$parJson"""
-      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",$warmRunsJson"queries":$qs,"sf":"$sfDir","warm_pass":$warm,"reps":$reps$budgetJson,"noisy_first_runs":$noisyFirstRuns,"loadavg1m_start":$startLoad,"loadavg1m":$load$fpJson$passStatsJson$runsJson$triageJson$memoJson$attribJson$loadWarning}"""
+      val budgetJson = s""","reps_completed":${passes.size},"budget_s":$budgetS,"elapsed_s":${num(elapsedS, 1)},"warm_pass_s":${num(warmPassS, 1)}$parJson"""
+      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",$warmRunsJson"queries":$qs,"sf":"$sfDir","warm_pass":$warm,"reps":$reps$budgetJson,"noisy_first_runs":$noisyFirstRuns,"loadavg1m_start":$startLoad,"loadavg1m":$load$fpJson$passStatsJson$runsJson$errorsJson$triageJson$memoJson$attribJson$loadWarning}"""
       // best-effort: a read-only cwd / full disk must not cost the round
       // its stdout artifact line after minutes of measured work (r10
       // review #3) — the println below is unconditional. A filtered
@@ -483,7 +527,7 @@ object Bench {
       // triage verdict + the slowest rows only, plus a pointer to the
       // actual artifact written (BENCH_FOCUS.json for filtered runs —
       // r14 ADVICE: the summary used to hardcode BENCH_SELF.json).
-      println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","queries":$slowest,"n_queries":${results.size},"queries_file":"$artifactName","triaged":${triage.size},"regressed":$regressed,"noisy_first_runs":$noisyFirstRuns,"warm_pass":$warm,"reps":$reps$budgetJson,"sf":"$sfDir","loadavg1m_start":$startLoad,"loadavg1m":$load,"jvm_max_heap_mb":$maxHeapMb$fpJson${passStats.mkString(""","pass_stats":[""", ",", "]")}$attribJson$loadWarning}""")
+      println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"queries_file":"$artifactName","triaged":${triage.size},"regressed":$regressed,"noisy_first_runs":$noisyFirstRuns,"warm_pass":$warm,"reps":$reps$budgetJson,"sf":"$sfDir","loadavg1m_start":$startLoad,"loadavg1m":$load,"jvm_max_heap_mb":$maxHeapMb$fpJson${passStats.mkString(""","pass_stats":[""", ",", "]")}$attribJson$loadWarning}""")
     }
     var lastPassWall = 0.0
     var stopped = false
@@ -503,11 +547,13 @@ object Bench {
         lastPassWall = (System.nanoTime() - pt0) / 1e9
         passStats += s"""{"gc_ms":${gcMillis() - gc0},"steal_ticks":${
           if (st0 < 0 || st1 < 0) -1 else st1 - st0},"evicted_blocks":${
-          evictedBlocks.get() - ev0},"heap_used_mb":$heapUsedMb,"storage_used_mb":$storageUsedMb,"pass_wall_s":${f"$lastPassWall%.2f"},"task_ms":${taskRunMs.get() - tr0},"task_cpu_ms":${(taskCpuNs.get() - tc0) / 1000000L}}"""
+          evictedBlocks.get() - ev0},"heap_used_mb":$heapUsedMb,"storage_used_mb":$storageUsedMb,"pass_wall_s":${num(lastPassWall, 2)},"task_ms":${taskRunMs.get() - tr0},"task_cpu_ms":${(taskCpuNs.get() - tc0) / 1000000L}}"""
         passes += m
         emit()
       }
     }
+    if (errors.nonEmpty)
+      System.err.println(s"[bench] ${errors.size} row(s) FAILED and are left out of the total: ${errors.keys.toSeq.sorted.mkString(", ")}")
     if (only.nonEmpty)
       System.err.println(s"[bench] BENCH_ONLY filter active (${names.size} rows) — wrote $artifactPath, BENCH_SELF.json untouched")
     if (knob("SPARK_GRAFT_BENCH_KEEP_SESSION", "0") != "1") spark.stop()

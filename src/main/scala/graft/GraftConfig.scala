@@ -1,24 +1,19 @@
 package graft
 
-/** Engine configuration — the ~24 keys the reference scatters across
-  * its codebase (SURVEY §2.a "Utilities": `utils/config.py` is a 2-line
-  * stub but `env_name`, `db_provider`, `mongo_db_addr`,
-  * `coll_lock_timeout`, `incubating_job_culling_interval`,
-  * `concurrency_debounce_seconds`, `incubating_job_age_out_seconds`,
-  * `operation_retry_count`, engine/cron settings etc. are referenced
-  * throughout). Collected into one typed object; storage- and
-  * K8s-specific keys map to their Spark-native equivalents.
+/** Engine configuration — the keys the reference scatters across its
+  * codebase (SURVEY §2.a "Utilities": `utils/config.py` is a 2-line
+  * stub but `db_provider`, `mongo_db_addr`,
+  * `incubating_job_culling_interval`, `concurrency_debounce_seconds`,
+  * `incubating_job_age_out_seconds`, engine settings etc. are
+  * referenced throughout) that some code here reads. Collected into one
+  * typed object; storage keys map to their Spark-native equivalents.
+  * `GET /sys/config` lists every field.
   */
 final case class GraftConfig(
-    envName: String = "local",
-    buildVersion: String = "0.1.0",
-
     // storage (replaces mongo_db_addr / db_provider)
     metaProvider: String = "parquet", // see MetaStore.forConfig
     catalogPath: String = "graft-meta/pipeline_defs",
     edgesPath: String = "graft-meta/pipeline_triggers",
-    eventHistoryPath: String = "graft-meta/event_history",
-    incubationCheckpointPath: String = "graft-meta/incubation-ckpt",
 
     // dispatcher / culler timing (job_culler.py:12-43)
     cullingIntervalSeconds: Long = 10L,
@@ -32,19 +27,12 @@ final case class GraftConfig(
     // replay, never to loss.
     mqDedupHorizonDays: Long = 7L,
 
-    // retry (retry.py:9)
-    operationRetryCount: Int = 3,
-
-    // engine (engine.py:24,90-148 analogs)
+    // engine (engine.py:24 analog)
     defaultEngine: String = "spark-local",
-    defaultCpuCount: Int = 2,
-    defaultMemoryGi: Int = 4,
 
-    // API paging defaults (facade.py:86-107)
-    jobListLimit: Int = 10,
+    // event-history paging defaults (facade.py:86-107)
     historyMaxRecords: Int = 20,
-    historySinceSeconds: Long = 1000L,
-    logFetchMaxKb: Int = 10)
+    historySinceSeconds: Long = 1000L)
 
 object GraftConfig {
   val default: GraftConfig = GraftConfig()

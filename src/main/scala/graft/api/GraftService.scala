@@ -359,11 +359,10 @@ final class GraftService(
           val events = parsed.events.collect().toSeq
             .filter(e => batchIds.add(e.event_id)) // keep FIRST copy, preserve arrival order
             // SINK-STAMP received_time (the reference stamps at the
-            // data provider, `data_provider.py:130`; GraftStream's
-            // history sink does the same): producer-supplied times can
-            // be null or arbitrarily old, which would both hide rows
-            // from history queries AND make the dedup horizon below
-            // never match a replayed id (r8 review #2.1). Stamping at
+            // data provider, `data_provider.py:130`): producer-supplied
+            // times can be null or arbitrarily old, which would both
+            // hide rows from history queries AND make the dedup horizon
+            // below never match a replayed id (r8 review #2.1). Stamping at
             // first ingest also makes received_time rise monotonically
             // across appended log files, which is what lets parquet
             // row-group stats skip old history in the probe.
@@ -714,14 +713,6 @@ final class GraftService(
 }
 
 object GraftService {
-
-  /** No-op run body: the orchestration plane is fully observable
-    * (submit → running → success) without a deployment-specific
-    * payload. Since r8 the service's DEFAULT factory is
-    * [[GraftService.dataPlaneJob]], which falls back to this shape for
-    * defs without a `graft-query` command. */
-  def defaultJob(d: Option[PipelineDef], sub: Submission): EngineJob =
-    EngineJob.SparkClosure(_ => ())
 
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every

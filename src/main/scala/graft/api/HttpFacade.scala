@@ -304,16 +304,16 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp): Seq[Submission] =
     mutate.synchronized {
       val res = api.dispatch(events, running.get(), incubating.get(), now)
-      // IN-MEMORY log union BEFORE applyStep (the service's persistence
-      // hook rides the submissionSink inside it and must see a log that
-      // already contains this batch) — but the DURABLE append happens
-      // AFTER applyStep succeeds, so presence-in-the-durable-log ⇒
-      // effects applied & persisted. With the MQ replay dedup keyed on
-      // the durable log, the old durable-append-first order turned a
-      // crash between append and apply into PERMANENT event loss (the
-      // replay matched the log and no-op'd; r8 review #1) — append-last
-      // restores at-least-once for that window, which the dedup then
-      // bounds to exactly that window.
+      // IN-MEMORY log union: the standalone facade's only history (its
+      // default eventSink keeps nothing), rolled back below if applyStep
+      // throws so an un-applied batch never satisfies the dedup probe.
+      // The DURABLE append happens AFTER applyStep succeeds, so
+      // presence-in-the-durable-log ⇒ effects applied & persisted.
+      // With the MQ replay dedup keyed on the durable log, the old
+      // durable-append-first order turned a crash between append and
+      // apply into PERMANENT event loss (the replay matched the log and
+      // no-op'd; r8 review #1) — append-last restores at-least-once for
+      // that window, which the dedup then bounds to exactly that window.
       val prevLog = eventLog.get()
       if (events.nonEmpty)
         eventLog.set(prevLog.unionByName(

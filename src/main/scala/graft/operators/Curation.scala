@@ -12,11 +12,10 @@ import graft.sources.Tables
   *   quality gate → PII redaction → content fingerprint → exact dedup
   *
   * — expressed ONCE as a composable column pipeline and reused by both
-  * the batch query (`ns_curation`, oracle-checked) and the streaming
-  * ingest ([[graft.streaming.GraftStream]]-style `readStream` +
-  * `dropDuplicatesWithinWatermark`, spec'd equivalent to the batch
-  * keep-first semantics). Every stage is codegen'd column algebra that
-  * pipelines into the scan; the only shuffle is the dedup (hash on
+  * the batch query (`ns_curation`, oracle-checked) and a streaming
+  * ingest (`readStream` + `dropDuplicatesWithinWatermark`, spec'd
+  * equivalent to the batch keep-first semantics). Every stage is
+  * codegen'd column algebra that pipelines into the scan; the only shuffle is the dedup (hash on
   * fingerprint), so at 100 TB the pipeline is one pass + one
   * fingerprint-partitioned exchange.
   */

@@ -11,27 +11,17 @@ import graft.model.LifecycleEvent
   * collection (D9–D11, `/root/reference/src/kalytical/core/
   * data_provider.py:128-155`).
   *
-  * Batch form appends partitioned parquet (partitioned by event date so
-  * the D10 time-range scan prunes partitions at scale); the streaming
-  * form is the history sink in [[graft.streaming.IncubationStream]].
+  * D9 (save) is the service's flat, unpartitioned parquet append under
+  * `service-state/events`, one batch per dispatch, with `received_time`
+  * stamped at ingest (`GraftService`'s eventSink); this object holds
+  * the read (D10) and truncate (D11) sides.
   */
 object EventLog {
 
-  /** D9 — append with ingest timestamp. `received_time` is stamped at
-    * the sink (`data_provider.py:130`); for deterministic tests pass
-    * `now`, production uses `current_timestamp()`. */
-  def stamp(events: DataFrame, now: Option[Timestamp] = None): DataFrame =
-    events.withColumn("received_time",
-      now.map(lit(_)).getOrElse(current_timestamp()))
-
-  def append(events: DataFrame, path: String): Unit =
-    events
-      .withColumn("event_date", to_date(col("received_time")))
-      .write.mode("append").partitionBy("event_date").parquet(path)
-
   /** D10 — history query: time-range + optional equality filters +
-    * sort-desc + limit. All filters and the date-partition prune push
-    * into the scan; the sort+limit plans as TakeOrderedAndProject. */
+    * sort-desc + limit. The filters push into the scan (parquet
+    * row-group stats skip old files, since `received_time` rises across
+    * appends); the sort+limit plans as TakeOrderedAndProject. */
   def history(events: Dataset[LifecycleEvent],
               now: Timestamp,
               sinceSeconds: Long = 1000L,
@@ -42,14 +32,6 @@ object EventLog {
               maxRecords: Int = 20): DataFrame = {
     val cutoff = new Timestamp(now.getTime - sinceSeconds * 1000L)
     var q = events.toDF().where(col("received_time") >= lit(cutoff))
-    // make the advertised date-partition prune REAL (r12 review: the
-    // filter above is on a DATA column, so an [[append]]-written log
-    // listed and read every date partition regardless of the window).
-    // The partition column only exists on files-backed frames read
-    // from an append() layout — the facade's in-memory union has no
-    // event_date, so the prune is applied exactly where it can be.
-    if (q.columns.contains("event_date"))
-      q = q.where(col("event_date") >= to_date(lit(cutoff)))
     pipelineUuid.foreach(v => q = q.where(col("pipeline_uuid") === v))
     execUuid.foreach(v => q = q.where(col("exec_uuid") === v))
     eventType.foreach(v => q = q.where(col("event_type") === v))

@@ -9,12 +9,11 @@ import java.sql.Timestamp
   * transparent state machine.
   *
   * One instance of [[PipelineState]] is the per-`pipeline_uuid` keyed
-  * state; the SAME transition functions drive both the batch dispatcher
-  * ([[Dispatcher]], via cogroup) and the Structured Streaming operator
-  * ([[graft.streaming.IncubationStream]], via flatMapGroupsWithState) —
-  * so batch/streaming replay equivalence is by construction, and the
-  * reference's Mongo document mutex (`data_provider.py:157-198`) is
-  * unnecessary: per-key serialization is inherent to keyed state.
+  * state; the transition functions run inside [[Dispatcher.step]]'s
+  * cogroup, the one dispatcher every ingress (HTTP, MQ, culler tick)
+  * reaches. The reference's Mongo document mutex
+  * (`data_provider.py:157-198`) is unnecessary: per-key serialization
+  * is inherent to keyed state.
   *
   * `now` is always an explicit parameter (SURVEY §7 risk 2 —
   * deterministic tests).
@@ -157,8 +156,7 @@ object StateMachine {
   }
 
   /** Fold a batch of ordered dep-satisfied events into the state, then
-    * cull once at `now` — the batch-step formulation shared with the
-    * streaming operator's per-trigger processing. */
+    * cull once at `now` — one key's share of a [[Dispatcher.step]]. */
   def stepKey(state: PipelineState, meta: Meta, events: Seq[DepSatisfied], now: Timestamp,
               debounceSeconds: Long, ageOutSeconds: Long,
               key: String = "p"): (PipelineState, List[Release], List[String]) = {

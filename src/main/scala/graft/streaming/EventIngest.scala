@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -17,8 +17,8 @@ import graft.model.LifecycleEvent
   * most one message per poll and even on failure — §8.17; intended
   * at-least-once semantics come free from checkpointed source offsets).
   *
-  * Any streaming source works (Kafka in production); the file/json
-  * source here is what tests and local runs use.
+  * Any streaming source of JSON strings works: the service parses each
+  * `http-mq` micro-batch with [[parse]] (a Kafka topic in production).
   */
 object EventIngest {
 
@@ -82,15 +82,4 @@ object EventIngest {
       .select(col("_raw"))
     Parsed(good, bad)
   }
-
-  /** Raw JSON-lines file stream — the ONE definition of the file-based
-    * source ([[GraftStream.start]] used to hand-build an identical
-    * copy inline; r12 review). */
-  def rawJsonDir(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(StructType(Seq(StructField("value", StringType))))
-      .text(dir).toDF("value")
-
-  /** File-based streaming source of JSON-lines event files. */
-  def fromJsonDir(spark: SparkSession, dir: String): Parsed =
-    parse(rawJsonDir(spark, dir))
 }

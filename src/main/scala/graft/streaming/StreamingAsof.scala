@@ -18,8 +18,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * emit the carried view. With an in-order source (the replay spec
   * drives one `AvailableNow` batch) this is bit-equal to the batch
   * as-of; an out-of-order production feed would buffer behind a
-  * watermark before the fold, exactly as [[IncubationStream]] does for
-  * its state machine — the fold itself is unchanged.
+  * watermark before the fold — the fold itself is unchanged.
   */
 object StreamingAsof {
 

@@ -26,9 +26,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * no matter which side of the view it lands in the sorted slice. With
   * an in-order source (the replay spec drives one `AvailableNow`
   * batch) this is bit-equal to the batch funnel; an out-of-order
-  * production feed would buffer behind a watermark before the fold,
-  * exactly as [[IncubationStream]] does — the fold itself is
-  * unchanged. The deadline constant is shared with the batch plan
+  * production feed would buffer behind a watermark before the fold —
+  * the fold itself is unchanged. The deadline constant is shared with the batch plan
   * (`EventOps.FunnelUs`), the same single-constant contract the
   * oracle SQL rides.
   */

@@ -32,8 +32,8 @@ import graft.operators.Dedup
   * watermark passes `maxSeenEventTime + horizon`. Event-time timers
   * (not processing-time): they advance with the data, so a drain run
   * (`Trigger.AvailableNow`) still reaches quiescence — processing-time
-  * timers would re-schedule batches forever (the IncubationStream r6
-  * fix) — and an idle stream holds its buckets until real data moves
+  * timers make every batch schedule another, so the drain never
+  * ends — and an idle stream holds its buckets until real data moves
   * the watermark, which is the semantics a dedup horizon wants.
   */
 object StreamingNearDup {

@@ -25,8 +25,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * identical tiebreak the batch window and the oracle use — and folds
   * left-to-right, carrying the open interval across micro-batch
   * boundaries. An out-of-order production feed would buffer behind a
-  * watermark before the fold (the [[IncubationStream]] pattern); the
-  * fold is unchanged.
+  * watermark before the fold; the fold is unchanged.
   */
 object StreamingScd2 {
 

@@ -21,8 +21,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * the last event across micro-batch boundaries in state. With an
   * in-order source (the replay spec drives one `AvailableNow` batch)
   * this is bit-equal to the batch lag; an out-of-order production
-  * feed would buffer behind a watermark before the fold, exactly as
-  * [[IncubationStream]] does — the fold itself is unchanged.
+  * feed would buffer behind a watermark before the fold — the fold
+  * itself is unchanged.
   */
 object StreamingTransitions {
 

@@ -209,9 +209,10 @@ class ApiSpec extends AnyFunSuite {
     assert(a.deleteIncubating(inc, "obj-2").collect().map(_.obj_id).toSeq == Seq("obj-1"))
     assert(a.flushIncubating().count() == 0)
 
-    // sys config surfaces every config key
+    // sys config surfaces exactly the config's keys
     val cfgMap = a.sysConfig
-    assert(cfgMap("metaProvider") == "parquet" && cfgMap.size >= 15)
+    assert(cfgMap("metaProvider") == "parquet")
+    assert(cfgMap.keySet == graft.GraftConfig.default.productElementNames.toSet)
   }
 
   test("cron provider: schedule lifecycle reconciles external registrations (ext_sched.py)") {

@@ -304,6 +304,43 @@ class BenchTriageSpec extends AnyFunSuite {
       "warm_runs must precede the queries map")
   }
 
+  test("main(): a failing row is recorded under errors, never as a wall in the total") {
+    // an empty SF dir: every table read throws, so k01_table_counts fails
+    val out = SparkSuite.tempDir("bencherr")
+    val emptySf = SparkSuite.tempDir("bench-empty-sf")
+    val props = Map(
+      "SPARK_GRAFT_SF_DIR" -> emptySf,
+      "SPARK_GRAFT_BENCH_ONLY" -> "k01_table_counts",
+      "SPARK_GRAFT_BENCH_REPS" -> "1",
+      "SPARK_GRAFT_BENCH_WARM" -> "1",
+      "SPARK_GRAFT_BENCH_WARM_THREADS" -> "1",
+      "SPARK_GRAFT_BENCH_IDLE_WAIT_S" -> "0",
+      "SPARK_GRAFT_BENCH_BUDGET_S" -> "100000",
+      "SPARK_GRAFT_BENCH_DIR" -> out,
+      "SPARK_GRAFT_BENCH_KEEP_SESSION" -> "1")
+    SparkSuite.spark
+    props.foreach { case (k, v) => sys.props(k) = v }
+    val buf = new java.io.ByteArrayOutputStream()
+    try Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
+      Bench.main(Array.empty)
+    } finally {
+      props.keySet.foreach(sys.props.remove)
+      SparkSuite.spark.sparkContext.setLogLevel("ERROR")
+    }
+    val a = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "BENCH_FOCUS.json")), "UTF-8")
+    assert("\"errors\":\\{\"k01_table_counts\":\"[^\"]+".r.findFirstIn(a).isDefined,
+      s"the failing row must be recorded under errors: ${a.take(400)}")
+    assert(a.contains("\"value\":0.0,") && a.contains("\"queries\":{}"),
+      s"a failing row must stay out of the total: ${a.take(400)}")
+    assert(!a.contains("\"k01_table_counts\":["), "no runs array for a failing row")
+    assert(!("\"warm_runs\":\\{[^}]*k01_table_counts").r.findFirstIn(a).isDefined,
+      "no warm wall for a failing row")
+    val summary = buf.toString("UTF-8")
+    assert(summary.contains("\"n_errors\":1") && summary.contains("\"n_queries\":0"),
+      s"the stdout summary must count the failure: $summary")
+  }
+
   test("cwd integration: the committed self artifact carries full bands") {
     // BENCH_SELF.json is committed every round (r9 verdict #1's 'done'
     // bar: triage has bands to gate the next round even when the

@@ -3,15 +3,10 @@ package graft
 import java.nio.charset.StandardCharsets
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.meta.Fixtures
-import graft.model.RunningJob
-import graft.orchestration.Dispatcher
 import graft.sources.mq.{HttpMQ, HttpMQPartition, HttpMQStream, SpoolMQ, SpoolOffset}
-import graft.streaming.GraftStream
 
 /** Drives the NETWORK MQ source ([[graft.sources.mq.HttpMQ]]) against an
   * in-process JDK HttpServer speaking its wire protocol — a real loopback
@@ -86,56 +81,6 @@ class HttpMQSpec extends AnyFunSuite {
       assert(consumed() ==
         Seq((0L, "m0"), (1L, "m1"), (2L, "m2"), (3L, "m3"), (4L, "m4")),
         "each offset must be consumed exactly once across restarts")
-    } finally b.stop()
-  }
-
-  test("full GraftStream over http-mq: the third MQ flavor swaps in by format string (S1 network parity)") {
-    import spark.implicits._
-    def ev(id: Long, subtype: String, pipeline: String, retry: Int = 0): String =
-      s"""{"event_id": $id, "event_type": "job_exec_update", "event_subtype": "$subtype",
-          "pipeline_uuid": "$pipeline", "exec_uuid": "exec-$id",
-          "event_time": "2024-01-31T23:0${id % 10}:00Z", "received_time": "2024-01-31T23:0${id % 10}:05Z",
-          "retry_count": $retry, "disable_downstream": false}""".replaceAll("\n\\s*", " ")
-
-    val b = new MQBroker
-    val subs = SparkSuite.tempDir("hmq-subs")
-    val hist = SparkSuite.tempDir("hmq-hist")
-    val ckpt = SparkSuite.tempDir("hmq-gs-ckpt")
-    try {
-      Seq(
-        ev(1, "origination", "ingest-orders"),
-        ev(2, "origination", "report-daily"),        // gated: running
-        ev(3, "failure", "flaky-export", retry = 1), // retry_max=3 -> retry
-        ev(4, "success", "clean-orders"),            // 'all' dep 1/2
-        "not json at all").foreach(b.publish(_))
-
-      val metas = Dispatcher.metaMap(Fixtures.defsDS(spark), Fixtures.edgesDS(spark))
-      val running = Seq(RunningJob("live-1", "report-daily", "spark-local", "t", "running", None, None))
-      def runOnce(): Unit = {
-        val raw = spark.readStream.format("http-mq").option("endpoint", b.endpoint).load()
-          .select(col("value").cast("string").as("value"))
-        val sinks = GraftStream.startFromRaw(spark, raw,
-          Fixtures.defsDS(spark), Fixtures.edgesDS(spark), metas,
-          subs, hist, ckpt,
-          () => spark.createDataset(running)(Encoders.product[RunningJob]),
-          fixedNow = Some(Fixtures.NOW))
-        assert(sinks.submissions.awaitTermination(120000),
-          "streaming query did not finish in 120s")
-        assert(sinks.history.awaitTermination(120000),
-          "streaming query did not finish in 120s")
-        sinks.submissions.stop(); sinks.history.stop()
-      }
-      runOnce()
-      val got1 = spark.read.parquet(subs).select("pipeline_uuid").as[String].collect().sorted.toSeq
-      assert(got1 == Seq("flaky-export", "ingest-orders"))
-
-      // the release event arrives over the network; offsets resume
-      b.publish(ev(5, "success", "clean-customer"))
-      runOnce()
-      val got2 = spark.read.parquet(subs).select("pipeline_uuid").as[String].collect().sorted.toSeq
-      assert(got2 == Seq("flaky-export", "ingest-orders", "join-orders-customer"),
-        s"http-mq replay should match the file/spool-source runs exactly: $got2")
-      assert(spark.read.parquet(hist).count() == 5)
     } finally b.stop()
   }
 }

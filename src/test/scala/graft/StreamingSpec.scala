@@ -1,129 +1,19 @@
 package graft
 
-import java.nio.file.Files
-
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.meta.Fixtures
-import graft.orchestration.Dispatcher
-import graft.streaming.IncubationStream
-import graft.streaming.IncubationStream.KeyedDepSat
 
-/** Streaming replay equivalence (SURVEY §5.3): the event log run
-  * through the Structured Streaming incubation operator must emit the
-  * same release set as the batch formulation on the same fixture.
-  *
-  * The stream is driven as two `Trigger.AvailableNow` runs over a file
-  * source sharing one checkpoint — so keyed state must survive a query
-  * RESTART (checkpoint recovery), a strictly stronger property than
-  * surviving a micro-batch boundary.
+/** Streaming replay equivalence (SURVEY §5.3): each Structured
+  * Streaming operator run over a fixture must emit the same result as
+  * its batch formulation on the same data.
   */
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
 
   private def ts(s: String) = Fixtures.ts(s)
-  private val now = Fixtures.NOW
-
-  private def mkSuccess(id: Long, pipeline: String): graft.model.LifecycleEvent =
-    graft.model.LifecycleEvent(id, "job_exec_update", "success", pipeline, s"exec-$id",
-      ts("2024-01-31 23:00:00"), ts("2024-01-31 23:00:00"), 0, disable_downstream = false)
-
-  test("streaming incubation == batch replay on the same events") {
-    import spark.implicits._
-
-    val events = Seq(
-      mkSuccess(1, "clean-orders"), mkSuccess(2, "clean-customer"),       // -> join-orders-customer
-      mkSuccess(3, "clean-lineitem"),                                     // partial
-      mkSuccess(4, "join-orders-customer"), mkSuccess(5, "join-lineitem-part"), // -> agg-revenue
-      mkSuccess(6, "report-daily"))                                       // ghost-child partial
-
-    val metas = Dispatcher.metaMap(Fixtures.defsDS(spark), Fixtures.edgesDS(spark))
-
-    // batch replay
-    val batchSubs = IncubationStream.replayBatch(
-      spark.createDataset(events), Fixtures.edgesDS(spark), metas, now)
-      .collect().map(s => (s.pipeline_uuid, s.source_uuids)).toSet
-
-    // streaming path: file source, two AvailableNow runs over one checkpoint
-    val srcDir = SparkSuite.tempDir("graft-stream-src")
-    val ckpt = SparkSuite.tempDir("graft-stream-ckpt")
-    val outDir = SparkSuite.tempDir("graft-stream-out")
-
-    val staticDepSats = IncubationStream.depSatisfactions(
-      spark.createDataset(events), Fixtures.edgesDS(spark), metas).collect()
-    val (chunk1, chunk2) = staticDepSats.sortBy(_.event_id).splitAt(2)
-    val schema = Encoders.product[KeyedDepSat].schema
-
-    def runOnce(chunk: Seq[KeyedDepSat]): Unit = {
-      spark.createDataset(chunk.toSeq).write.mode("append").parquet(srcDir)
-      val stream = spark.readStream.schema(schema).parquet(srcDir).as[KeyedDepSat]
-      // drain run: cull timers OFF (cullIntervalMs = 0) so AvailableNow
-      // reaches quiescence — armed processing-time timers re-schedule
-      // batches forever (see IncubationStream.submissions doc)
-      val q = IncubationStream.submissions(stream, metas, Some(now), cullIntervalMs = 0L)
-        .writeStream.format("parquet")
-        .option("path", outDir).option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow()).start()
-      assert(q.awaitTermination(120000),
-        "streaming query did not finish in 120s")
-      q.stop()
-    }
-    runOnce(chunk1.toSeq)
-    runOnce(chunk2.toSeq)
-
-    val streamSubs = spark.read.schema(Encoders.product[graft.model.Submission].schema)
-      .parquet(outDir).as[graft.model.Submission]
-      .collect().map(s => (s.pipeline_uuid, s.source_uuids)).toSet
-
-    assert(streamSubs == batchSubs)
-    assert(batchSubs.map(_._1) == Set("join-orders-customer", "agg-revenue"))
-  }
-
-  test("production timer path: engine timers cull an idle partial key, no new events needed") {
-    // The reference's culler LOOP (`job_culler.py:17-44`) as engine
-    // timers: a key holding a partial dep set is aged out by the
-    // re-armed ProcessingTimeTimeout while the source is idle. Wall
-    // clock (fixedNow = None) because timers only make sense where time
-    // advances; a continuous trigger because drain runs switch timers
-    // off (see the replay test above).
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val metas = Dispatcher.metaMap(Fixtures.defsDS(spark), Fixtures.edgesDS(spark))
-    val input = MemoryStream[KeyedDepSat]
-    val q = IncubationStream.submissions(input.toDS(), metas, fixedNow = None,
-        debounceSeconds = 3600L, ageOutSeconds = 2L, cullIntervalMs = 500L)
-      .writeStream.format("memory").queryName("cull_probe")
-      .outputMode("append")
-      .trigger(Trigger.ProcessingTime(500L)).start()
-    try {
-      def nowTs = new java.sql.Timestamp(System.currentTimeMillis())
-      // NOTE: never processAllAvailable() here — with processing-time
-      // timers firing empty batches, noNewData never latches and it
-      // blocks forever (the same mechanism that makes AvailableNow
-      // non-quiescent). Poll progress metrics instead.
-      def stateRows: Long = Option(q.lastProgress).toSeq
-        .flatMap(_.stateOperators.toSeq).map(_.numRowsTotal).sum
-      def inputRows: Long = q.recentProgress.map(_.numInputRows).sum
-      def poll(what: String)(ok: => Boolean): Unit = {
-        val deadline = System.currentTimeMillis() + 30000
-        while (!ok && System.currentTimeMillis() < deadline) Thread.sleep(100)
-        assert(ok, s"timed out waiting for: $what")
-      }
-      // dep 1 of 2 for the 'all'-triggered child arrives, then the source idles
-      input.addData(KeyedDepSat("join-orders-customer", "clean-orders", "exec-1", 1L, nowTs))
-      poll("dep 1 held as keyed state")(stateRows == 1)
-      // source idle: only the re-armed timer can advance the key now
-      poll("timer cull of the idle partial key")(stateRows == 0)
-      // the late second dep meets an EMPTY state: no release may happen
-      input.addData(KeyedDepSat("join-orders-customer", "clean-customer", "exec-2", 2L, nowTs))
-      poll("dep 2 processed")(inputRows >= 2)
-      assert(spark.table("cull_probe").isEmpty,
-        "a culled dep must not contribute to a later release")
-    } finally q.stop()
-  }
 
   test("streaming curation pipeline == batch curate on fingerprint set") {
     import org.apache.spark.sql.functions._
