@@ -235,7 +235,7 @@ object Bench {
     val idleWaitMaxS = knob("SPARK_GRAFT_BENCH_IDLE_WAIT_S", "120").toInt
     var waited = 0
     while (loadavg1m > 1.0 && waited < idleWaitMaxS) {
-      System.err.println(f"[bench] loadavg1m=${loadavg1m}%.2f > 1.0 — waiting for idle (${waited}s)")
+      System.err.println(f"[bench] loadavg1m=${loadavg1m}%.2f > 1.0 - waiting for idle (${waited}s)")
       Thread.sleep(10000); waited += 10
     }
     val startLoad = loadavg1m
@@ -555,7 +555,7 @@ object Bench {
     if (errors.nonEmpty)
       System.err.println(s"[bench] ${errors.size} row(s) FAILED and are left out of the total: ${errors.keys.toSeq.sorted.mkString(", ")}")
     if (only.nonEmpty)
-      System.err.println(s"[bench] BENCH_ONLY filter active (${names.size} rows) — wrote $artifactPath, BENCH_SELF.json untouched")
+      System.err.println(s"[bench] BENCH_ONLY filter active (${names.size} rows) - wrote $artifactPath, BENCH_SELF.json untouched")
     if (knob("SPARK_GRAFT_BENCH_KEEP_SESSION", "0") != "1") spark.stop()
   }
 }

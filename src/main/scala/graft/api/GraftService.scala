@@ -7,13 +7,14 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftConfig
-import graft.model.{LifecycleEvent, PipelineDef, Submission}
+import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
 import graft.orchestration.{Cron, EngineJob, EngineManager, LocalSparkEngine}
+import graft.orchestration.Dispatcher.IncubRow
 import graft.streaming.EventIngest
 
 /** THE deployable process — the reference's service wiring
@@ -79,6 +80,8 @@ final class GraftService(
     cronCheckInterval: FiniteDuration = 5.seconds, // fires once per due minute
     nowProvider: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
 
+  import GraftService.{EventEnc, IncubEnc}
+
   private val api = secured.api
   val facade = new HttpFacade(secured, spark, nowProvider,
     () => Map("mq_ingest_health" -> mqIngestUnhealthy.getOrElse("ok")),
@@ -105,9 +108,9 @@ final class GraftService(
     // HTTP-posted event, an MQ message, a culler release and a cron
     // firing all submit through here. persistState after every
     // mutation = the reference's Mongo durability (every dispatch
-    // leaves restartable state on disk) AND the lineage collapse a
-    // long-running AtomicReference design needs (each persisted state
-    // is re-read, so the union-chain never outlives one dispatch).
+    // leaves restartable state on disk); the state it keeps is the
+    // written rows as a local relation, so no plan chain outlives one
+    // dispatch.
     facade.submissionSink.set { subs =>
       submitAll(subs)
       facade.refreshRunning()
@@ -117,17 +120,16 @@ final class GraftService(
     // persist too — a restart must not resurrect deleted rows
     facade.mutationHook.set(() => persistState())
     // catalog mutations persist through the MetaStore when configured.
-    // The in-memory catalog is LAZY over the store's own parquet, so
-    // saving it directly would overwrite the files mid-read
-    // (FAILED_READ_FILE) — localize the catalog-sized rows first, then
-    // swap the files-backed reload in (the incubating-state pattern)
+    // A mutated catalog is a plan over the previous one, so saving it
+    // lazily could overwrite files it still reads (FAILED_READ_FILE) —
+    // localize the catalog-sized rows first, save them, and keep them
+    // as the catalog (the incubating-state pattern)
     metaStore.foreach { store =>
       facade.catalogHook.set { () =>
-        import org.apache.spark.sql.Encoders
         val defsLocal = spark.createDataset(api.catalog.defs.collect().toSeq)(
           Encoders.product[PipelineDef])
         val edgesLocal = spark.createDataset(api.edges.collect().toSeq)(
-          Encoders.product[graft.model.PipelineTrigger])
+          Encoders.product[PipelineTrigger])
         store.saveDefs(defsLocal)
         store.saveEdges(edgesLocal)
         // swap in the LOCALIZED datasets, not a files-backed reload
@@ -146,11 +148,8 @@ final class GraftService(
     // I/O; the in-memory log swaps to the files-backed view after each
     // append, so its lineage stays flat too
     facade.eventSink.set { events =>
-      import org.apache.spark.sql.Encoders
-      spark.createDataset(events)(Encoders.product[LifecycleEvent])
-        .write.mode("append").parquet(eventsDir)
-      facade.eventLog.set(spark.read.parquet(eventsDir)
-        .as[LifecycleEvent](Encoders.product[LifecycleEvent]))
+      spark.createDataset(events)(EventEnc).write.mode("append").parquet(eventsDir)
+      facade.eventLog.set(readEvents())
     }
     val addr = facade.start(port)
 
@@ -391,13 +390,14 @@ final class GraftService(
   // its process restarts resume mid-lifecycle (an incubating child's
   // first satisfied dep survives). The Spark analog, shaped by growth
   // class:
-  //  - INCUBATING (catalog-bounded): after every mutation the snapshot
-  //    is written to ping-pong parquet dirs (A/B with an atomically-
-  //    moved _CURRENT marker — a crash mid-write leaves the previous
-  //    generation intact) and the freshly-written files are read BACK
-  //    as the new state. The read-back doubles as lineage collapse:
-  //    without it the AtomicReference union-chain grows one plan layer
-  //    per dispatch forever.
+  //  - INCUBATING (catalog-bounded): after every mutation the state's
+  //    rows are collected, written to ping-pong parquet dirs (A/B with
+  //    an atomically-moved _CURRENT marker — a crash mid-write leaves
+  //    the previous generation intact) and kept in memory as a local
+  //    relation, which is the new state. Nothing lazy points at the
+  //    files, so the next overwrite of a generation cannot pull them
+  //    from under a reader, and the state's plan stays one relation
+  //    instead of growing a union layer per dispatch.
   //  - EVENT HISTORY (unbounded append-only): each accepted batch
   //    APPENDS to one parquet dir via the facade's eventSink —
   //    rewriting the full log per dispatch would be quadratic lifetime
@@ -455,29 +455,27 @@ final class GraftService(
   }
 
   private[graft] def persistState(): Unit = {
-    import org.apache.spark.sql.Encoders
     ensureStateRoot()
     val next = if (currentGen.contains("a")) "b" else "a"
-    val incPath = s"$stateRoot/$next/incubating"
-    facade.incubating.get().write.mode("overwrite").parquet(incPath)
+    val state = spark.createDataset(facade.incubating.get().collect().toSeq)(IncubEnc)
+    state.write.mode("overwrite").parquet(s"$stateRoot/$next/incubating")
     writeAtomic(markerPath, next)
-    // swap in the flat, files-backed state (lineage collapse)
-    facade.incubating.set(spark.read.parquet(incPath)
-      .as[graft.orchestration.Dispatcher.IncubRow](
-        Encoders.product[graft.orchestration.Dispatcher.IncubRow]))
+    facade.incubating.set(state)
   }
 
+  /** The durable event log, read with the encoder's schema: inferring
+    * it would start a footer-reading Spark job on every append. */
+  private def readEvents(): org.apache.spark.sql.Dataset[LifecycleEvent] =
+    spark.read.schema(EventEnc.schema).parquet(eventsDir).as[LifecycleEvent](EventEnc)
+
   private[graft] def restoreState(): Unit = {
-    import org.apache.spark.sql.Encoders
     currentGen.foreach { gen =>
-      facade.incubating.set(spark.read.parquet(s"$stateRoot/$gen/incubating")
-        .as[graft.orchestration.Dispatcher.IncubRow](
-          Encoders.product[graft.orchestration.Dispatcher.IncubRow]))
+      val rows = spark.read.schema(IncubEnc.schema).parquet(s"$stateRoot/$gen/incubating")
+        .as[IncubRow](IncubEnc).collect().toSeq
+      facade.incubating.set(spark.createDataset(rows)(IncubEnc))
     }
     val ev = new org.apache.hadoop.fs.Path(eventsDir)
-    if (hadoopFs(ev).exists(ev))
-      facade.eventLog.set(spark.read.parquet(eventsDir)
-        .as[LifecycleEvent](Encoders.product[LifecycleEvent]))
+    if (hadoopFs(ev).exists(ev)) facade.eventLog.set(readEvents())
     readMarker(cronMarkerPath).foreach(m => lastCronMinute = m.toLong)
     // engine state is intentionally NOT restored: LocalSparkEngine /
     // ProcessEngine runs die with the process (unlike the reference's
@@ -497,10 +495,9 @@ final class GraftService(
     * SUBMIT), aged-out rows drop (`job_culler.py:17-44`). */
   private[graft] def cullTick(): Unit =
     // the empty-state pre-check and the cull step run under ONE
-    // facade-lock acquisition: checked outside the lock, the files-
-    // backed snapshot could be overwritten by two interleaved
-    // persistState generations mid-scan (FAILED_READ_FILE, a skipped
-    // cull pass — r7 advice)
+    // facade-lock acquisition, so the check always sees the state the
+    // step folds (r7 advice: checked outside the lock, a files-backed
+    // snapshot could be overwritten mid-scan — a skipped cull pass)
     facade.cullStep(nowProvider())
 
   /** Cron scheduler tick: fires at most once per wall-clock minute
@@ -530,18 +527,15 @@ final class GraftService(
     ()
   }
 
-  /** Submit each run to its def's engine. Catalog point lookups for the
-    * engine names — submission sets are catalog-bounded (the
-    * dispatcher's own output regime). */
+  /** Submit each run to its def's engine, looked up in the collected
+    * catalog rows — the catalog is the dispatcher's own input, and a
+    * local one collects without a Spark job. */
   private def submitAll(subs: Seq[Submission]): Unit =
     if (subs.nonEmpty) {
+      val wanted = subs.map(_.pipeline_uuid).toSet
       val defsByUuid: Map[String, PipelineDef] =
-        api.catalog.defs
-          .join(spark.createDataset(subs.map(_.pipeline_uuid).distinct)(
-            org.apache.spark.sql.Encoders.STRING).toDF("pipeline_uuid"),
-            Seq("pipeline_uuid"), "left_semi")
-          .as[PipelineDef](org.apache.spark.sql.Encoders.product[PipelineDef])
-          .collect().map(d => d.pipeline_uuid -> d).toMap
+        api.catalog.defs.collect().iterator.filter(d => wanted(d.pipeline_uuid))
+          .map(d => d.pipeline_uuid -> d).toMap
       subs.foreach { sub =>
         // per-run isolation: one submission whose def names an
         // unregistered engine must not abort the rest of the batch —
@@ -714,6 +708,9 @@ final class GraftService(
 
 object GraftService {
 
+  private val EventEnc = Encoders.product[LifecycleEvent]
+  private val IncubEnc = Encoders.product[IncubRow]
+
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every
     * non-negative id (enforced at the MQ ingress — see EventIngest
@@ -810,8 +807,12 @@ object GraftService {
       case None => GraftConfig.default
     }
     val store = sys.env.get("GRAFT_META_DIR").map(_ => MetaStore.forConfig(cfg))
+    // localized once, as catalogHook does after a mutation: a files-
+    // backed catalog would be rescanned by every dispatch step
     val (defs, edges) = store match {
-      case Some(s) => (s.loadDefs(spark), s.loadEdges(spark))
+      case Some(s) =>
+        (spark.createDataset(s.loadDefs(spark).collect().toSeq)(Encoders.product[PipelineDef]),
+          spark.createDataset(s.loadEdges(spark).collect().toSeq)(Encoders.product[PipelineTrigger]))
       case None =>
         (graft.meta.Fixtures.defsDS(spark), graft.meta.Fixtures.edgesDS(spark))
     }

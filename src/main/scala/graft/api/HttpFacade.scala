@@ -46,9 +46,10 @@ import graft.orchestration.Dispatcher.IncubRow
   * lock serializes mutating verbs — metadata-plane traffic (catalog-
   * sized, the reference's own regime); read verbs hit immutable
   * snapshots and run unlocked. Scale note: the data plane never flows
-  * through this surface — dispatch outputs are catalog-bounded, and at
-  * 10⁶-pipeline catalogs the same routes serve Dataset-backed state
-  * unchanged ([[graft.orchestration.Dispatcher.runnableNow]] path).
+  * through this surface — dispatch inputs and outputs are bounded by
+  * the catalog (10²–10⁴ pipelines, the reference's regime), the live
+  * state and the batch, and [[graft.orchestration.Dispatcher.step]]
+  * folds them on the driver.
   */
 final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
                        nowProvider: () => Timestamp =
@@ -357,8 +358,8 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 
   /** One culler pass IF anything is incubating — the emptiness check
     * and the step run under ONE lock acquisition. Checked outside the
-    * lock (the old [[GraftService.cullTick]] shape), the files-backed
-    * snapshot could be invalidated mid-scan by two interleaved
+    * lock (the old [[GraftService.cullTick]] shape), the then files-
+    * backed snapshot could be invalidated mid-scan by two interleaved
     * persistState generations overwriting its ping-pong dir
     * (FAILED_READ_FILE → a silently skipped cull pass; r7 advice). */
   private[graft] def cullStep(now: Timestamp): Unit =
@@ -379,24 +380,22 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 
   /** The event-loop state contract (see class doc): `newIncubating`
     * IS the complete post-step state — every old row flows through the
-    * step's cogroup (kept, released, or dropped), so the fold is a
+    * step's per-key fold (kept, released, or dropped), so the fold is a
     * replacement, not a merge. The previous merge formulation
     * (`(incubating − droppedObjIds) ∪ newIncubating ∪ deferred`) left
     * RELEASED rows behind (droppedObjIds only carries age-outs) and
     * duplicated kept rows — caught by GraftServiceSpec's
     * slot-consumed assertion (r7).
     *
-    * Submissions collect ONCE here (catalog-bounded) and are returned
-    * for the caller's response — collecting again in the route would
-    * re-execute the whole dispatch plan (r7 review #4). The step's
-    * internal caches are released after the sink has run (a durable
-    * deployment has persisted the state by then; a standalone facade's
-    * lazy state recomputes from source if touched again). */
+    * The step's outputs are local relations: the new state is their
+    * rows concatenated on the driver (a Spark union of two local
+    * relations would start a job when read), and the submissions are
+    * returned for the caller's response. */
   private def applyStep(res: Dispatcher.StepResult): Seq[Submission] = {
-    incubating.set(res.newIncubating.unionByName(res.deferred))
+    incubating.set(spark.createDataset(
+      (res.newIncubating.collect() ++ res.deferred.collect()).toSeq)(Encoders.product[IncubRow]))
     val subs = res.submissions.collect().toSeq
     submissionSink.get()(subs)
-    res.cleanup()
     subs
   }
 

@@ -2,7 +2,7 @@ package graft.orchestration
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 import graft.model.LifecycleEvent
@@ -14,7 +14,7 @@ import graft.model.LifecycleEvent
   * D9 (save) is the service's flat, unpartitioned parquet append under
   * `service-state/events`, one batch per dispatch, with `received_time`
   * stamped at ingest (`GraftService`'s eventSink); this object holds
-  * the read (D10) and truncate (D11) sides.
+  * the read side (D10). The reference's flush (D11) is not served.
   */
 object EventLog {
 
@@ -37,18 +37,5 @@ object EventLog {
     eventType.foreach(v => q = q.where(col("event_type") === v))
     eventSubtype.foreach(v => q = q.where(col("event_subtype") === v))
     q.orderBy(col("received_time").desc, col("event_id").desc).limit(maxRecords)
-  }
-
-  /** D11 — truncate. The filesystem comes from the PATH, not the
-    * default FS (r12 review: `FileSystem.get(conf)` returned
-    * fs.defaultFS, so an event log on any other scheme — s3a:// under
-    * an hdfs:// default — made every truncate throw "Wrong FS"; this
-    * was the one deviation from the repo-wide
-    * `path.getFileSystem(conf)` convention). */
-  def flush(spark: SparkSession, path: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, true)
   }
 }

@@ -10,8 +10,8 @@ import java.sql.Timestamp
   *
   * One instance of [[PipelineState]] is the per-`pipeline_uuid` keyed
   * state; the transition functions run inside [[Dispatcher.step]]'s
-  * cogroup, the one dispatcher every ingress (HTTP, MQ, culler tick)
-  * reaches. The reference's Mongo document mutex
+  * per-key fold, the one dispatcher every ingress (HTTP, MQ, culler
+  * tick) reaches. The reference's Mongo document mutex
   * (`data_provider.py:157-198`) is unnecessary: per-key serialization
   * is inherent to keyed state.
   *
