@@ -1,8 +1,17 @@
 package graft
-import java.nio.file.{Files, Paths}
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails leaves no output dir and one `name<TAB>error` row in
+  * `_failed.tsv`, so an earlier run's output is never graded. */
 object Verify {
+  /** The failure manifest's file name under the output dir. */
+  val FailedFile = "_failed.tsv"
+
   def main(args: Array[String]): Unit = {
     // optional 3rd arg: comma-separated query names (local iteration
     // via tools/selfcheck.py); the driver always passes exactly two
@@ -12,15 +21,12 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
+    // a query that failed in an earlier run has no output dir, so it
+    // still fails if this run skips it
+    Files.deleteIfExists(Paths.get(outDir, FailedFile))
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-      }
+      .foreach { case (name, fn) => writeOne(spark, sfDir, outDir, name, fn) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -39,4 +45,22 @@ object Verify {
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }
+
+  /** Write one query's result to `$outDir/<name>`; true on success. On
+    * failure delete that dir (it may hold an earlier run's output) and
+    * append `name<TAB>error` to `$outDir/_failed.tsv`. */
+  def writeOne(spark: SparkSession, sfDir: String, outDir: String, name: String,
+               fn: (SparkSession, String) => DataFrame): Boolean =
+    try {
+      fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+      true
+    } catch { case e: Throwable =>
+      val msg = Option(e.getMessage).getOrElse(e.toString)
+      System.err.println(s"[verify] $name failed: $msg")
+      org.apache.commons.io.FileUtils.deleteDirectory(Paths.get(outDir, name).toFile)
+      Files.writeString(Paths.get(outDir, FailedFile),
+        s"$name\t${msg.replaceAll("\\s+", " ").trim}\n", StandardCharsets.UTF_8,
+        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      false
+    }
 }

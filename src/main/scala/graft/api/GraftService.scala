@@ -108,9 +108,9 @@ final class GraftService(
     // HTTP-posted event, an MQ message, a culler release and a cron
     // firing all submit through here. persistState after every
     // mutation = the reference's Mongo durability (every dispatch
-    // leaves restartable state on disk); the state it keeps is the
-    // written rows as a local relation, so no plan chain outlives one
-    // dispatch.
+    // leaves restartable state on disk; a step that left the rows as
+    // they were writes nothing); the state it keeps is the rows as a
+    // local relation, so no plan chain outlives one dispatch.
     facade.submissionSink.set { subs =>
       submitAll(subs)
       facade.refreshRunning()
@@ -391,10 +391,11 @@ final class GraftService(
   // first satisfied dep survives). The Spark analog, shaped by growth
   // class:
   //  - INCUBATING (catalog-bounded): after every mutation the state's
-  //    rows are collected, written to ping-pong parquet dirs (A/B with
-  //    an atomically-moved _CURRENT marker — a crash mid-write leaves
-  //    the previous generation intact) and kept in memory as a local
-  //    relation, which is the new state. Nothing lazy points at the
+  //    rows are collected and kept in memory as a local relation, which
+  //    is the new state; when they differ from the committed generation
+  //    they are written to ping-pong parquet dirs (A/B with an
+  //    atomically-moved _CURRENT marker — a crash mid-write leaves the
+  //    previous generation intact). Nothing lazy points at the
   //    files, so the next overwrite of a generation cannot pull them
   //    from under a reader, and the state's plan stays one relation
   //    instead of growing a union layer per dispatch.
@@ -454,12 +455,21 @@ final class GraftService(
     ()
   }
 
+  // the rows of the committed generation (empty before the first
+  // one): persistState writes a new generation only when they change,
+  // compared as a multiset (the per-key fold may reorder kept rows)
+  @volatile private var persistedRows: Seq[IncubRow] = Seq.empty
+
   private[graft] def persistState(): Unit = {
-    ensureStateRoot()
-    val next = if (currentGen.contains("a")) "b" else "a"
-    val state = spark.createDataset(facade.incubating.get().collect().toSeq)(IncubEnc)
-    state.write.mode("overwrite").parquet(s"$stateRoot/$next/incubating")
-    writeAtomic(markerPath, next)
+    val rows = facade.incubating.get().collect().toSeq
+    val state = spark.createDataset(rows)(IncubEnc)
+    if (rows.size != persistedRows.size || rows.diff(persistedRows).nonEmpty) {
+      ensureStateRoot()
+      val next = if (currentGen.contains("a")) "b" else "a"
+      state.write.mode("overwrite").parquet(s"$stateRoot/$next/incubating")
+      writeAtomic(markerPath, next)
+      persistedRows = rows
+    }
     facade.incubating.set(state)
   }
 
@@ -473,6 +483,7 @@ final class GraftService(
       val rows = spark.read.schema(IncubEnc.schema).parquet(s"$stateRoot/$gen/incubating")
         .as[IncubRow](IncubEnc).collect().toSeq
       facade.incubating.set(spark.createDataset(rows)(IncubEnc))
+      persistedRows = rows
     }
     val ev = new org.apache.hadoop.fs.Path(eventsDir)
     if (hadoopFs(ev).exists(ev)) facade.eventLog.set(readEvents())

@@ -110,14 +110,8 @@ object Dedup {
     exploded.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** The one-pass 64-MinHash signature of a hashed-shingle column —
-    * the column expression behind [[minhashSignatures]], shared with
-    * the streaming twin so batch ≡ streaming holds by construction. */
-  def minhashSigCol(sh: Column): Column =
-    graft.functions.SketchExpressions.minhashSig(sh, as, bs, P)
-
   /** The 16 band hashes of a signature column as one array expression
-    * — shared by [[minhashBands]] and the streaming twin. */
+    * (used by [[minhashBands]]). */
   def bandHashArray(sig: Column): Column =
     array((0 until Bands).map { b =>
       xxhash64((0 until RowsPerBand).map(r =>

@@ -35,8 +35,7 @@ object EventOps {
     * enters and leaves the frame exactly once — so a whale user costs
     * O(n log n) (the sort), with no pair-count growth term; the
     * 10%-of-rows whale weak-scaling run measures exactly this
-    * (BASELINE.md "Round 4", round-5 weak-scaling + skew tables). The 1-hour bound is what keeps frame state finite —
-    * the same bound the streaming twin turns into a watermark.
+    * (BASELINE.md "Round 4", round-5 weak-scaling + skew tables). The 1-hour bound is what keeps frame state finite.
     *
     * Zero-touch purchases keep their row with count 0 (COUNT of a
     * conditional marker over an empty frame), matching the oracle's

@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * and cron ticks) reaches `GraftApi.dispatch` → `Dispatcher.step`, and
   * only `Dispatcher.step` folds the incubation state machine per key.
   * A second caller of either is a second dispatcher whose routing and
-  * concurrency gate drift from the real one, so it fails here. */
+  * concurrency gate drift from the real one, so it fails here. The
+  * same holds for streaming: MQ ingest in `GraftService` is the one
+  * streaming query main code starts. */
 class DispatcherGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src", "main", "scala")
 
@@ -36,5 +38,10 @@ class DispatcherGuardSpec extends AnyFunSuite {
   test("Dispatcher.step is called only from GraftApi.scala") {
     assert(callers("""\bDispatcher\.step\(""".r) ==
       Seq(Paths.get("graft", "api", "GraftApi.scala").toString))
+  }
+
+  test("writeStream is started only from GraftService.scala (MQ ingest)") {
+    assert(callers("""\.writeStream\b""".r) ==
+      Seq(Paths.get("graft", "api", "GraftService.scala").toString))
   }
 }

@@ -271,6 +271,56 @@ class GraftServiceSpec extends AnyFunSuite {
     } finally b.shutdown()
   }
 
+  test("durable state: a step that leaves the incubation rows unchanged writes no generation; a deferral does") {
+    import org.apache.spark.sql.functions.col
+    val ckpt = SparkSuite.tempDir("svc-persist-ckpt")
+    val marker = java.nio.file.Paths.get(ckpt, "service-state", "_CURRENT")
+    def generation(): Option[(String, java.nio.file.attribute.FileTime)] =
+      if (!java.nio.file.Files.exists(marker)) None
+      else Some((new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim,
+        java.nio.file.Files.getLastModifiedTime(marker)))
+    def origination(id: Long, pipeline: String): LifecycleEvent =
+      success(id, pipeline).copy(event_subtype = "origination", exec_uuid = s"manual-$pipeline-$id")
+    def batch(evs: LifecycleEvent*): String = evs.map(asJson).mkString("[", ",", "]")
+    val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+      GraftConfig.default)
+    val policy = new Auth.Policy(
+      new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
+    // no culler or cron tick inside the test: only the posted steps persist
+    val service = new GraftService(new SecuredGraftApi(api, policy), spark,
+      mqEndpoint = None, checkpointRoot = ckpt,
+      jobFactory = Some((_, sub) => { ran.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }),
+      cfg = GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
+      cronCheckInterval = 1.hour)
+    try {
+      val base = s"http://127.0.0.1:${service.start(0).getPort}"
+      // 1. two same-batch originations of a concurrency=false pipeline:
+      //    the first submits, the second defers -> a new generation
+      assert(call(base, "POST", "/pipeline/dispatcher/event",
+        batch(origination(51, "report-weekly"), origination(52, "report-weekly"))).statusCode() == 200)
+      assert(service.facade.incubating.get()
+        .where(col("pipeline_uuid") === "report-weekly" && col("reason") === "concurrency").count() == 1)
+      val g1 = generation()
+      assert(g1.isDefined, "a deferral must commit a generation")
+      // 2. a direct-submit origination leaves the rows as they were:
+      //    _CURRENT keeps its generation and is not rewritten
+      Thread.sleep(20) // a rewrite would move the marker's mtime
+      assert(call(base, "POST", "/pipeline/dispatcher/event",
+        asJson(origination(53, "solo-maintenance"))).statusCode() == 200)
+      assert(ran.contains("solo-maintenance"))
+      assert(service.facade.incubating.get().count() == 1)
+      assert(generation() == g1, "an unchanged state must not commit a new generation")
+      // 3. another deferral flips the generation
+      assert(call(base, "POST", "/pipeline/dispatcher/event",
+        batch(origination(54, "report-monthly"), origination(55, "report-monthly"))).statusCode() == 200)
+      assert(service.facade.incubating.get().count() == 2)
+      assert(generation().map(_._1).exists(g => !g1.map(_._1).contains(g)),
+        s"a deferral must flip _CURRENT: ${g1} -> ${generation()}")
+    } finally service.shutdown()
+  }
+
   test("culler tick: an incubating partial ages out with no release, no new events needed") {
     import org.apache.spark.sql.functions.col
     val submitted = new java.util.concurrent.atomic.AtomicInteger(0)

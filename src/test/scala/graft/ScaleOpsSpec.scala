@@ -4,10 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
 import graft.operators.{ScaleOps, Vectors, VectorsIvf}
-import graft.streaming.WindowedAgg
 import graft.sources.Tables
 
-/** Scale utilities, IVF ANN, and the streaming windowed aggregation. */
+/** Scale utilities, IVF ANN, and the Misra-Gries heavy-hitter sketch. */
 class ScaleOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -331,31 +330,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     rows.foreach { case (a, b, z) =>
       assert(deinterleave(z) == (a, b), s"z=$z must reconstruct ($a,$b)")
     }
-  }
-
-  test("streaming windowed agg with watermark == batch daily totals") {
-    val batch = graft.operators.Analytics.eventsDaily.run(spark, dir)
-      .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2), r.getDouble(3))).toSet
-
-    val srcDir = SparkSuite.tempDir("wagg-src")
-    val ckpt = SparkSuite.tempDir("wagg-ckpt")
-    val ev = Tables.events(spark, dir).select("ts", "event_type", "value")
-    ev.write.mode("overwrite").parquet(srcDir)
-    val stream = spark.readStream.schema(ev.schema).parquet(srcDir)
-    val q = WindowedAgg.dailyTotals(stream)
-      .writeStream.format("memory").queryName("wagg_out")
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000),
-      "streaming query did not finish in 120s")
-    q.stop()
-    // append mode emits only windows closed by the watermark; the last
-    // event day stays open, so compare on the emitted subset and check
-    // everything emitted matches batch exactly.
-    val streamed = spark.table("wagg_out")
-      .collect().map(r => (r.getString(0), r.getDate(1).toString, r.getLong(2), r.getDouble(3))).toSet
-    assert(streamed.nonEmpty)
-    assert(streamed.subsetOf(batch), s"streaming rows not found in batch: ${streamed -- batch}")
   }
 
   test("MisraGries: exact when vocabulary fits; MG guarantees when it does not") {

@@ -20,9 +20,12 @@ Rules enforced per query (columns sorted by name, like the driver):
      the oracle contract is exact-match, floats must be derived from
      identical integer inputs via identical closed formulas.
 
+A query Verify could not write has no output dir and a `name<TAB>error`
+row in `<verifyOutDir>/_failed.tsv`; it is reported with that error.
+
 Usage: python3 tools/selfcheck.py <sfDir> <verifyOutDir> [only,names]
 """
-import json, math, sys
+import json, math, os, sys
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part",
@@ -42,14 +45,30 @@ def table_key(df):
     cols = sorted(df.columns)
     return [tuple(canon(v) for v in row) for row in df[cols].itertuples(index=False, name=None)]
 
+def read_failed(outdir):
+    """Verify's failure manifest: {name: error}, empty when absent."""
+    path = os.path.join(outdir, "_failed.tsv")
+    if not os.path.exists(path):
+        return {}
+    with open(path, encoding="utf-8") as f:
+        rows = [line.rstrip("\n").split("\t", 1) for line in f if line.strip()]
+    return {r[0]: (r[1] if len(r) > 1 else "") for r in rows}
+
 def main(sfdir, outdir, only=None):
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sfdir}/{t}.parquet'")
     oracle = json.load(open(f"{outdir}/oracle_sql.json"))
+    failed = read_failed(outdir)
+    for name in sorted(set(failed) - set(oracle)):
+        print(f"VERIFY FAILED {name} (no oracle): {failed[name][:200]}")
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
+            continue
+        if name in failed:
+            print(f"FAIL {name}: Verify failed: {failed[name][:200]}")
+            n_fail += 1
             continue
         try:
             g = con.execute(f"SELECT * FROM '{outdir}/{name}/*.parquet'").df()
