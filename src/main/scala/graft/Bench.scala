@@ -4,10 +4,9 @@ object Bench {
   private def loadavg1m: Double =
     java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
 
-  /** Env knob with a system-property override (props win) — lets the
-    * integration spec drive [[main]] in-process (budget early-stop and
-    * incremental flush are r14 verdict #1's must-pin behaviors, and
-    * `sys.env` cannot be set from a test JVM). */
+  /** Env knob with a system-property override (props win): a `-D`
+    * on the bench JVM overrides the environment. [[GraftSession]]
+    * reads its AQE switch through it too. */
   private[graft] def knob(name: String, default: String): String =
     sys.props.get(name).orElse(sys.env.get(name)).getOrElse(default)
   private[graft] def knobOpt(name: String): Option[String] =
@@ -108,78 +107,6 @@ object Bench {
     }
   } catch { case _: Throwable => false }
 
-  /** Per-query timings from the PREVIOUS bench run — the reference band
-    * for the in-artifact regression triage (r7 verdict #4: three rows
-    * read >2× above their idle claims on unchanged code and the
-    * artifact alone could not distinguish contention from regression).
-    *
-    * Artifact of record (r9 verdict #1): the bench's own
-    * `BENCH_SELF.json` in `dir`, written in full by [[main]] and
-    * committed every round — the registry outgrew the driver's ~2–4 KB
-    * stdout-tail capture (BENCH_r09.json kept ZERO flat per-query
-    * pairs), so the driver wrapper is only a FALLBACK: newest
-    * `BENCH_r{N}.json`, whose `tail` field escapes quotes and truncates
-    * the head, scanned for `"name":number` pairs filtered to registered
-    * query names. A wrapper whose tail carries no pairs at all (r14:
-    * rc=124 with a warn-only log tail, `parsed: null`) contributes an
-    * empty map and the reader falls through to the next source rather
-    * than silently disabling triage. Either way the artifact's `"sf"`
-    * (inner dir string, or the wrapper's numeric field) must match the
-    * current SF dir or no triage runs (cross-SF bands are meaningless).
-    * Early-stopped self files (r15: `reps_completed` < `reps`) need no
-    * special-casing — the `runs` arrays carry exactly the completed
-    * passes and the ceiling is the max over what ran. */
-  private[graft] def prevBench(sfDir: String, dir: String = "."): Map[String, Double] = try {
-    val self = Some(new java.io.File(dir, "BENCH_SELF.json")).filter(_.isFile)
-    // ALL wrappers, newest first (r14 verdict #7): a killed driver run
-    // leaves a wrapper whose tail is log noise with zero pairs — it
-    // must fall through to the previous round's wrapper, not silently
-    // zero the bands
-    val wrappers = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty[java.io.File])
-      .filter(_.getName.matches("BENCH_r\\d+\\.json"))
-      .sortBy(f => -"\\d+".r.findFirstIn(f.getName).get.toInt).toSeq
-    // first source whose SF matches AND yields pairs wins: a self file
-    // left behind by an off-SF smoke run must not DISABLE triage while
-    // a still-valid driver wrapper sits next to it (r10 review #2)
-    (self.toSeq ++ wrappers).iterator.map { latest =>
-      val text = new String(java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-      val sfOk =
-        "\\\\?\"sf\\\\?\":\\\\?\"([^\"\\\\]+)\\\\?\"".r.findFirstMatchIn(text).map(_.group(1) == sfDir)
-          .orElse("\"sf\": ?([0-9.]+)".r.findFirstMatchIn(text)
-            .map(m => sfDir.endsWith("sf" + m.group(1))))
-          .getOrElse(false)
-      if (!sfOk) Map.empty[String, Double]
-      else {
-        val names = SparkEntry.queries.keySet
-        val flat =
-          "\\\\?\"([A-Za-z0-9_]+)\\\\?\": ?([0-9]+(?:\\.[0-9Ee+-]+)?)".r.findAllMatchIn(text)
-            .map(m => m.group(1) -> m.group(2).toDouble)
-            .filter { case (n, _) => names(n) }
-            .toMap
-        // Band = the recorded CEILING when the prev artifact carries a
-        // `runs` block (r13): the flat `queries` value is the min of
-        // the recorded reps — the OPTIMISTIC tail — and on a host
-        // whose readings vary ~2-3× between process runs, comparing a
-        // future best-of-N against a past floor flags host luck as
-        // regression. A real regression moves min and max together,
-        // so gating against the recorded max keeps true signals (a
-        // ≥1.5×-of-worst reading) while absorbing the measured noise.
-        // Arrays appear ONLY under `runs` (queries are scalars, triage
-        // entries are objects), so a bare per-name array match is
-        // unambiguous; a tail-truncated array still yields a usable
-        // partial max.
-        val ceilings =
-          "\\\\?\"([A-Za-z0-9_]+)\\\\?\":\\[([0-9.,Ee+-]+)\\]".r.findAllMatchIn(text)
-            .map(m => m.group(1) -> m.group(2).split(",").flatMap(s =>
-              scala.util.Try(s.toDouble).toOption))
-            .filter { case (n, vs) => names(n) && vs.nonEmpty }
-            .map { case (n, vs) => n -> vs.max }
-            .toMap
-        flat ++ ceilings
-      }
-    }.find(_.nonEmpty).getOrElse(Map.empty)
-  } catch { case _: Throwable => Map.empty }
-
   /** Host fingerprint for the artifact (r12 verdict #1/#2: the 1.69×
     * driver-vs-self disagreement was unadjudicable because neither
     * artifact recorded WHAT HOST it ran on — an "environmental" claim
@@ -209,40 +136,69 @@ object Bench {
       "page_cache_mb" -> (mem._2 / 1024).toString)
   }
 
+  /** Warm lanes (r15 verdict "next round" #3): the sequential warm pass
+    * was the bench's single largest fixed block (133-155 s). The warm
+    * pass is UNTIMED, so overlapping independent queries (guide §2.6 —
+    * FIFO scheduling back-fills each job's straggler tail with the next
+    * lane's tasks) cuts only run wall, never a measured number. */
+  private val WarmThreads = 4
+
+  /** `sbt "runMain graft.Bench"`: builds the local session on
+    * `SPARK_GRAFT_CPUS` cores, waits up to 120 s for the host to go
+    * idle, runs [[run]] into the working directory and stops the
+    * session. */
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local(knob("SPARK_GRAFT_CPUS", "4"))
+    // Idle-bench discipline (BASELINE.md): readings taken under load are
+    // not comparable across rounds (r6 verdict #1: loadavg 2.35 made three
+    // unchanged operators read 1.4–5.9× above their idle claims). Wait up
+    // to 2 min for the box to go idle — after the session build, whose
+    // own load would otherwise land in [[run]]'s `loadavg1m_start`; if it
+    // never does, proceed — [[run]] stamps a loud warning into the
+    // artifact so the reader knows.
+    var waited = 0
+    while (loadavg1m > 1.0 && waited < 120) {
+      System.err.println(f"[bench] loadavg1m=${loadavg1m}%.2f > 1.0 - waiting for idle (${waited}s)")
+      Thread.sleep(10000); waited += 10
+    }
+    try run(spark, ".") finally spark.stop()
+  }
+
+  /** One bench run on `spark`: an untimed warm pass, then up to
+    * `SPARK_GRAFT_BENCH_REPS` interleaved measured passes over the
+    * registry (or the `SPARK_GRAFT_BENCH_ONLY` rows) at
+    * `SPARK_GRAFT_SF_DIR`, within `SPARK_GRAFT_BENCH_BUDGET_S`. After
+    * every completed pass it rewrites `BENCH_SELF.json` (`BENCH_FOCUS.json`
+    * for a filtered run) in `artifactDir` and prints one summary line.
+    * The session is left running. */
+  def run(spark: SparkSession, artifactDir: String): Unit = {
     val benchT0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - benchT0) / 1e9
     val sfDir = knob("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = knob("SPARK_GRAFT_CPUS", "4")
-    // Wall budget (r14 verdict #1a): default 1800 s keeps the whole run
-    // comfortably inside the driver's observed kill window (r14's 5-rep
-    // run was killed past ~42 min); ≥3 completed passes keep the median
-    // statistic honest, and the budget math targets that naturally —
-    // each pass's go/no-go uses the previous pass's own wall.
+    // Wall budget (r14 verdict #1a): default 1800 s; ≥3 completed passes
+    // keep the median statistic honest, and the budget math targets that
+    // naturally — each pass's go/no-go uses the previous pass's own wall.
     val budgetS = knob("SPARK_GRAFT_BENCH_BUDGET_S", "1800").toDouble
     // focused-run filter for profiling sessions (comma-separated names
-    // or prefixes); a filtered run never overwrites BENCH_SELF.json —
-    // partial bands must not become next round's triage reference
+    // or prefixes); a filtered run never overwrites BENCH_SELF.json
     val only: Option[Set[String]] =
       knobOpt("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     def selected(name: String): Boolean =
       only.forall(pats => pats.exists(p => name == p || name.startsWith(p)))
-    // Idle-bench discipline (BASELINE.md): readings taken under load are
-    // not comparable across rounds (r6 verdict #1: loadavg 2.35 made three
-    // unchanged operators read 1.4–5.9× above their idle claims). Wait up
-    // to ~2 min for the box to go idle; if it never does, proceed but
-    // stamp a loud warning into the artifact so the reader knows.
-    val idleWaitMaxS = knob("SPARK_GRAFT_BENCH_IDLE_WAIT_S", "120").toInt
-    var waited = 0
-    while (loadavg1m > 1.0 && waited < idleWaitMaxS) {
-      System.err.println(f"[bench] loadavg1m=${loadavg1m}%.2f > 1.0 - waiting for idle (${waited}s)")
-      Thread.sleep(10000); waited += 10
-    }
+    // the session's own local[N], not a knob: the caller built it
+    val master = spark.sparkContext.master
+    val cpus = "local\\[(.+)\\]".r.findFirstMatchIn(master).map(_.group(1)).getOrElse(master)
+    // loadavg1m_start is the idle-discipline reading, taken before any
+    // of this run's Spark work — the number to compare against the
+    // <1.0 bar
     val startLoad = loadavg1m
     val loadWarning =
-      if (startLoad > 1.0) s""","warning":"loadavg1m ${num(startLoad, 2)} > 1.0 at start after ${waited}s wait - timings not comparable to idle baselines""""
+      if (startLoad > 1.0) s""","warning":"loadavg1m ${num(startLoad, 2)} > 1.0 at start - timings not comparable to idle baselines""""
       else ""
-    val spark = GraftSession.local(cpus)
+    // a shared session may still hold memos (and their build tags) from
+    // an earlier run over this dir: drop them so `warm_runs` and
+    // `memo_paid` price THIS run's cold builds
+    graft.operators.OpMemo.invalidate(spark, Some(sfDir))
     // Standing instrumentation (r13 verdict #1: the r12 "regression"
     // was adjudicated by hand-reading GC/heap after the fact, and the
     // r13 artifact STILL could not attribute a 4.5× best-of-reps on an
@@ -257,7 +213,7 @@ object Bench {
     val taskRunMs = new java.util.concurrent.atomic.AtomicLong(0)
     val taskGcMs = new java.util.concurrent.atomic.AtomicLong(0)
     val taskCpuNs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+    val listener = new org.apache.spark.scheduler.SparkListener {
       override def onBlockUpdated(
           e: org.apache.spark.scheduler.SparkListenerBlockUpdated): Unit =
         // RDD blocks only: broadcast/shuffle blocks are ContextCleaner-
@@ -274,7 +230,8 @@ object Bench {
           taskCpuNs.addAndGet(m.executorCpuTime)
         }
       }
-    })
+    }
+    spark.sparkContext.addSparkListener(listener)
     def heapUsedMb: Long =
       (Runtime.getRuntime.totalMemory - Runtime.getRuntime.freeMemory) / (1024 * 1024)
     def storageUsedMb: Long =
@@ -313,63 +270,47 @@ object Bench {
       }
     }
     val names = SparkEntry.queries.keys.toSeq.sorted.filter(selected)
-    // Triage bands load BEFORE the first incremental flush below — the
-    // flush overwrites BENCH_SELF.json, which is itself the band source.
-    val prev = prevBench(sfDir)
-    // Untimed warm pass (r12 verdict #2: 44 triaged rows with 10–60×
-    // first-run spikes — the measured pass was profiling the shared
-    // OpMemo graph's topology and the cold page cache, not the
-    // operators). The warm pass pays every shared memo + parquet page
-    // ONCE, outside the clock, and keeps the memo attribution so the
-    // artifact still says who WOULD have paid what. DuckDB's
-    // BASELINE.md numbers are best-of-3 on a warm process, so a warm
-    // measured pass is the symmetric methodology. Its wall is recorded
-    // (`warm_pass_s`, r14 verdict #3) — it is the bench's single
-    // largest fixed cost and was invisible in every prior artifact.
-    val warm = knob("SPARK_GRAFT_BENCH_WARM", "1") != "0"
-    // Warm lanes (r15 verdict "next round" #3): the sequential warm pass
-    // was the bench's single largest fixed block (133-155 s). The warm
-    // pass is UNTIMED, so overlapping independent queries (guide §2.6 —
-    // FIFO scheduling back-fills each job's straggler tail with the next
-    // lane's tasks) cuts only run wall, never a measured number. Memo
-    // attribution moves from before/after key diffs (racy under lanes)
-    // to build-time tags recorded by OpMemo itself — exact either way.
+    // Untimed warm pass (r12 verdict #2: 44 rows with 10–60× first-run
+    // spikes — the measured pass was profiling the shared OpMemo graph's
+    // topology and the cold page cache, not the operators). The warm
+    // pass pays every shared memo + parquet page ONCE, outside the
+    // clock, on WarmThreads lanes. DuckDB's BASELINE.md numbers are
+    // best-of-3 on a warm process, so a warm measured pass is the
+    // symmetric methodology. Its wall is recorded (`warm_pass_s`, r14
+    // verdict #3). Memo attribution (`memo_paid`) comes from build-time
+    // tags recorded by OpMemo itself, exact under concurrent lanes.
     // Per-query warm walls are recorded VERBATIM as `warm_runs` (r15
-    // verdict #1a: every memoized row now carries its cold, memo-paying
-    // wall next to the steady-state median); under >1 lane they overlap,
-    // so they are UPPER bounds on the solo cold cost — the artifact
-    // names the lane count (`warm_parallelism`) so a reader prices that.
-    val warmThreads = math.max(1, knob("SPARK_GRAFT_BENCH_WARM_THREADS", "4").toInt)
+    // verdict #1a: every memoized row carries its cold, memo-paying wall
+    // next to the steady-state median); the lanes overlap, so they are
+    // UPPER bounds on the solo cold cost — the artifact names the lane
+    // count (`warm_parallelism`) so a reader prices that.
     val warmRuns = scala.collection.concurrent.TrieMap.empty[String, Double]
     val warmT0 = System.nanoTime()
-    if (warm) {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(warmThreads)
-      val lanes = names.map { name =>
-        pool.submit(new Runnable {
-          override def run(): Unit = {
-            spark.sparkContext.setJobDescription(s"warm:$name") // thread-local
-            graft.operators.OpMemo.withBuildTag(name)(runOnce(name))
-              .foreach(w => warmRuns(name) = w)
-          }
-        })
-      }
-      pool.shutdown()
-      // every lane is joined: get() rethrows what a lane threw (runOnce
-      // keeps only non-fatal errors), and the whole warm pass is bounded
-      // by the run's wall budget — past it the bench fails loudly rather
-      // than wait on a hung lane
-      try lanes.foreach { f =>
-        val leftS = math.max(0.0, budgetS - elapsedS)
-        try f.get((leftS * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
-        catch {
-          case _: java.util.concurrent.TimeoutException =>
-            throw new IllegalStateException(
-              s"[bench] warm pass still running at the ${budgetS}s budget (SPARK_GRAFT_BENCH_BUDGET_S)")
-          case e: java.util.concurrent.ExecutionException => throw e.getCause
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(WarmThreads)
+    val lanes = names.map { name =>
+      pool.submit(new Runnable {
+        override def run(): Unit = {
+          spark.sparkContext.setJobDescription(s"warm:$name") // thread-local
+          graft.operators.OpMemo.withBuildTag(name)(runOnce(name))
+            .foreach(w => warmRuns(name) = w)
         }
-      } finally pool.shutdownNow()
-      spark.sparkContext.setJobDescription(null)
+      })
     }
+    pool.shutdown()
+    // every lane is joined: get() rethrows what a lane threw (runOnce
+    // keeps only non-fatal errors), and the whole warm pass is bounded
+    // by the run's wall budget — past it the bench fails loudly rather
+    // than wait on a hung lane
+    try lanes.foreach { f =>
+      val leftS = math.max(0.0, budgetS - elapsedS)
+      try f.get((leftS * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
+      catch {
+        case _: java.util.concurrent.TimeoutException =>
+          throw new IllegalStateException(
+            s"[bench] warm pass still running at the ${budgetS}s budget (SPARK_GRAFT_BENCH_BUDGET_S)")
+        case e: java.util.concurrent.ExecutionException => throw e.getCause
+      }
+    } finally pool.shutdownNow()
     val memoPaid: Map[String, Seq[String]] =
       graft.operators.OpMemo.builds(spark, sfDir).toSeq.groupBy(_._2)
         .map { case (q, ks) => q -> ks.map(_._1).sorted }
@@ -416,9 +357,6 @@ object Bench {
     // without a focused re-run.
     val passStats = scala.collection.mutable.ArrayBuffer.empty[String]
     val passes = scala.collection.mutable.ArrayBuffer.empty[Map[String, Option[Double]]]
-    // artifact dir knob: lets the integration spec exercise the real
-    // emit path without clobbering the committed cwd artifacts
-    val artifactDir = knob("SPARK_GRAFT_BENCH_DIR", ".")
     val artifactName = if (only.isEmpty) "BENCH_SELF.json" else "BENCH_FOCUS.json"
     val artifactPath = new java.io.File(artifactDir, artifactName).getPath
     val maxHeapMb = Runtime.getRuntime.maxMemory / (1024 * 1024)
@@ -428,52 +366,20 @@ object Bench {
       .mkString(""","host":{""", ",", "}")
     // Incremental emit (r14 verdict #1b): the artifact is rewritten and
     // the compact stdout summary reprinted after EVERY completed pass,
-    // so a wall-limit kill mid-run still leaves (a) a parseable
-    // BENCH_SELF.json with `reps_completed` passes of verbatim runs and
-    // (b) the last completed pass's summary inside the driver's stdout
-    // tail capture. r14's all-or-nothing write lost the whole round's
-    // number of record to a kill at ~95%.
+    // so a kill mid-run still leaves (a) a parseable artifact with
+    // `reps_completed` passes of verbatim runs and (b) the last
+    // completed pass's summary on stdout.
     def emit(): Unit = {
       val allRuns: Map[String, Seq[Double]] =
         names.filterNot(errors.contains).map(n => n -> passes.toSeq.flatMap(_(n))).toMap
-      // In-artifact regression triage (r7 verdict #4; thresholds r9;
-      // r13 semantics): a row is TRIAGED when its BEST recorded rep sits
-      // above the previous band (1.5× AND +0.3 s absolute; NEW rows with
-      // no band use a 1.0 s bar); a single-rep spike is host noise the
-      // `runs` map documents verbatim, not a regression candidate.
-      // `noisy_first_runs` counts the rep1 spikes separately so the
-      // noise level stays visible in one number.
-      val triage = allRuns.toSeq.sortBy(_._1).flatMap { case (name, rs) =>
-        val best = rs.min
-        prev.get(name) match {
-          case Some(p) if p > 0 && best > 1.5 * p && best - p > 0.3 =>
-            Some(name -> (Some(p), rs.head, best))
-          case None if prev.nonEmpty && best > 1.0 =>
-            Some(name -> (None, rs.head, best))
-          case _ => None
-        }
-      }.toMap
-      val noisyFirstRuns = allRuns.count { case (_, rs) =>
-        rs.head > 2 * rs.min && rs.head - rs.min > 0.3 }
       val results = allRuns.map { case (name, rs) => name -> median(rs) }
-      val triageJson =
-        if (triage.isEmpty) ""
-        else triage.toSeq.sortBy(_._1).map { case (n, (p, f, b)) =>
-          s"""\"$n\":{\"prev\":${p.map(_.toString).getOrElse("null")},\"first\":$f,\"best\":$b}"""
-        }.mkString(""","triage":{""", ",", "}")
-      val memoJson =
-        if (memoPaid.isEmpty) ""
-        else memoPaid.toSeq.sortBy(_._1).map { case (n, ks) =>
-          s"""\"$n\":[${ks.map("\"" + _ + "\"").mkString(",")}]"""
-        }.mkString(""","memo_paid":{""", ",", "}")
-      // cold receipts: the warm pass's per-query walls, keyed like
-      // `queries` — placed BEFORE the `queries` map so prevBench's
-      // last-wins flat scan still bands on the steady-state medians
-      val warmRunsJson =
-        if (warmRuns.isEmpty) ""
-        else warmRuns.toSeq.sortBy(_._1)
-          .map { case (n, w) => s"""\"$n\":${num(w, 3)}""" }
-          .mkString(s""""warm_parallelism":$warmThreads,"warm_runs":{""", ",", "},")
+      val memoJson = memoPaid.toSeq.sortBy(_._1).map { case (n, ks) =>
+        s"""\"$n\":[${ks.map("\"" + _ + "\"").mkString(",")}]"""
+      }.mkString(""","memo_paid":{""", ",", "}")
+      // cold receipts: the warm pass's per-query walls, keyed like `queries`
+      val warmRunsJson = warmRuns.toSeq.sortBy(_._1)
+        .map { case (n, w) => s"""\"$n\":${num(w, 3)}""" }
+        .mkString(s""""warm_parallelism":$WarmThreads,"warm_runs":{""", ",", "},")
       val qs = results.toSeq.sortBy(_._1).map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
       val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -481,8 +387,6 @@ object Bench {
         .map { case (n, msg) => s"""\"$n\":\"${jsonStr(msg)}\"""" }
         .mkString(""","errors":{""", ",", "}")
       // Load context in the artifact (r5 verdict #4, r6 verdict #1):
-      // loadavg1m_start is the idle-discipline reading (taken BEFORE any
-      // Spark work — the number to compare against the <1.0 bar);
       // loadavg1m (end) includes the bench's own local load and is
       // recorded for continuity with earlier artifacts.
       val load = loadavg1m
@@ -496,38 +400,30 @@ object Bench {
         else attrib.toSeq.sortBy(_._1).map { case (n, (t, g, c, w)) =>
           s"""\"$n\":{\"task_ms\":$t,\"task_gc_ms\":$g,\"task_cpu_ms\":$c,\"wall_s\":$w}"""
         }.mkString(s""","attribution_settle":"$settleMode","attribution":{""", ",", "}")
-      // effective-parallelism contract (r15 verdict "next round" #2: the
-      // driver's scaling heuristic fired `suspect_cpus_ignored` on an
-      // HONORED knob because no artifact stated what parallelism the run
-      // actually used — these three fields close that gap in both the
-      // artifact and the stdout summary)
+      // effective-parallelism contract (r15 verdict "next round" #2: no
+      // artifact stated what parallelism the run actually used — these
+      // fields close that gap in both the artifact and the stdout summary)
       val parJson = {
         val cpusJson = scala.util.Try(cpus.trim.toInt).map(_.toString)
           .getOrElse("\"" + cpus + "\"")
         s""","cpus":$cpusJson,"default_parallelism":${spark.sparkContext.defaultParallelism},"shuffle_partitions":${scala.util.Try(spark.conf.get("spark.sql.shuffle.partitions").toInt).getOrElse(-1)},"aqe":"${spark.conf.get("spark.sql.adaptive.enabled")}""""
       }
       val budgetJson = s""","reps_completed":${passes.size},"budget_s":$budgetS,"elapsed_s":${num(elapsedS, 1)},"warm_pass_s":${num(warmPassS, 1)}$parJson"""
-      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",$warmRunsJson"queries":$qs,"sf":"$sfDir","warm_pass":$warm,"reps":$reps$budgetJson,"noisy_first_runs":$noisyFirstRuns,"loadavg1m_start":$startLoad,"loadavg1m":$load$fpJson$passStatsJson$runsJson$errorsJson$triageJson$memoJson$attribJson$loadWarning}"""
-      // best-effort: a read-only cwd / full disk must not cost the round
-      // its stdout artifact line after minutes of measured work (r10
-      // review #3) — the println below is unconditional. A filtered
-      // (BENCH_ONLY) run never overwrites the committed artifact.
+      val fullJson = s"""{"metric":"total","value":$total,"unit":"sec","stat":"median",$warmRunsJson"queries":$qs,"sf":"$sfDir","warm_pass":true,"reps":$reps$budgetJson,"loadavg1m_start":$startLoad,"loadavg1m":$load$fpJson$passStatsJson$runsJson$errorsJson$memoJson$attribJson$loadWarning}"""
+      // best-effort: a read-only dir / full disk must not cost the run
+      // its stdout summary after minutes of measured work (r10 review
+      // #3) — the println below is unconditional
       try java.nio.file.Files.write(java.nio.file.Paths.get(artifactPath),
         (fullJson + "\n").getBytes("UTF-8"))
       catch { case scala.util.control.NonFatal(e) =>
         System.err.println(s"[bench] $artifactPath write failed: ${e.getMessage}") }
       val slowest = results.toSeq.sortBy(-_._2).take(12)
         .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      val regressed = triage.count { case (_, (p, _, b3)) =>
-        p.exists(pv => b3 > 1.5 * pv && b3 - pv > 0.3) }
-      // Artifact of record (r9 verdict #1): the registry's full per-query
-      // map outgrew the driver's ~2–4 KB stdout-tail capture, so the
-      // COMPLETE result JSON goes to the artifact file and the stdout
-      // line is a compact summary sized to survive the tail: total +
-      // triage verdict + the slowest rows only, plus a pointer to the
-      // actual artifact written (BENCH_FOCUS.json for filtered runs —
-      // r14 ADVICE: the summary used to hardcode BENCH_SELF.json).
-      println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"queries_file":"$artifactName","triaged":${triage.size},"regressed":$regressed,"noisy_first_runs":$noisyFirstRuns,"warm_pass":$warm,"reps":$reps$budgetJson,"sf":"$sfDir","loadavg1m_start":$startLoad,"loadavg1m":$load,"jvm_max_heap_mb":$maxHeapMb$fpJson${passStats.mkString(""","pass_stats":[""", ",", "]")}$attribJson$loadWarning}""")
+      // The COMPLETE result JSON goes to the artifact file (r9 verdict
+      // #1: the full per-query map outgrew a stdout-tail capture); the
+      // stdout line is a compact summary — total + the slowest rows
+      // only, plus a pointer to the artifact actually written.
+      println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"queries_file":"$artifactName","warm_pass":true,"reps":$reps$budgetJson,"sf":"$sfDir","loadavg1m_start":$startLoad,"loadavg1m":$load,"jvm_max_heap_mb":$maxHeapMb$fpJson${passStats.mkString(""","pass_stats":[""", ",", "]")}$attribJson$loadWarning}""")
     }
     var lastPassWall = 0.0
     var stopped = false
@@ -556,6 +452,7 @@ object Bench {
       System.err.println(s"[bench] ${errors.size} row(s) FAILED and are left out of the total: ${errors.keys.toSeq.sorted.mkString(", ")}")
     if (only.nonEmpty)
       System.err.println(s"[bench] BENCH_ONLY filter active (${names.size} rows) - wrote $artifactPath, BENCH_SELF.json untouched")
-    if (knob("SPARK_GRAFT_BENCH_KEEP_SESSION", "0") != "1") spark.stop()
+    // a caller's session outlives this run: detach its counters
+    spark.sparkContext.removeSparkListener(listener)
   }
 }

@@ -368,10 +368,9 @@ final class GraftService(
             .map(_.copy(received_time = now))
           if (events.nonEmpty) {
             // probe + dispatch under ONE facade-lock acquisition
-            // (facade.ingestDedup): probing outside the lock could read
-            // an in-memory union that a concurrent HTTP step later
-            // rolls back — dropping an event that was never applied
-            // (r8 review #2.3). Horizon: a replayed id's logged copy
+            // (facade.ingestDedup, r8 review #2.3): probing outside the
+            // lock could miss an id a concurrent HTTP step is applying,
+            // and the event would apply twice. Horizon: a replayed id's logged copy
             // carries its first-processing stamp — minutes (broker
             // redelivery) to one restart gap (checkpoint replay) old —
             // so the probe reads only recent history; generous (7 days)
@@ -616,7 +615,12 @@ final class GraftService(
             case Some(t) => s"$outputDir/${sub.exec_uuid}/$t.parquet"
             case None => s"$outputDir/${sub.exec_uuid}"
           }
-          run(s, inputDir).write.mode("overwrite").parquet(target)
+          // a run leaves no memo behind: an upstream may rewrite a fixed
+          // input dir between runs (stale `table:*` file listings), and
+          // every `graft-run:` exec dir is new (memos would pile up for
+          // the service's life)
+          try run(s, inputDir).write.mode("overwrite").parquet(target)
+          finally graft.operators.OpMemo.invalidate(s, Some(inputDir))
           callback(sub, "success")
         } catch {
           // a USER-ABORTED run (cancelJobGroup) must not post a failure

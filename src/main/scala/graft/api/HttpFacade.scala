@@ -98,13 +98,15 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * restart while incubation state survived (r7 review). */
   private[graft] val catalogHook = new AtomicReference[() => Unit](() => ())
 
-  /** Fires with each batch of ACCEPTED lifecycle events (HTTP /event
-    * and internal ingest) so a durability layer can append them to its
-    * history sink incrementally — the in-memory log union is for the
-    * standalone-facade regime; rewriting the full history per dispatch
-    * would be quadratic lifetime I/O (r7 review #3). */
+  /** Fires with each batch of APPLIED lifecycle events (HTTP /event
+    * and internal ingest). Standalone facade: an in-memory log union,
+    * its only history. A durability layer installs an incremental
+    * append to its history sink instead — rewriting the full history
+    * per dispatch would be quadratic lifetime I/O (r7 review #3). */
   private[graft] val eventSink =
-    new AtomicReference[Seq[LifecycleEvent] => Unit](_ => ())
+    new AtomicReference[Seq[LifecycleEvent] => Unit](events =>
+      eventLog.set(eventLog.get().unionByName(
+        spark.createDataset(events)(Encoders.product[LifecycleEvent]))))
 
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
@@ -235,9 +237,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // history window and the durable dedup horizon — the exact r8
       // finding GraftService fixed for MQ, left open on HTTP)
       val events = parseEvents(r.body).map(_.copy(received_time = now))
-      // ONE ingress path: ingest() owns the union→apply→append
-      // ordering and its rollback (r10 review: this handler carried an
-      // inline copy of the contract)
+      // ONE ingress path: ingest() owns the apply→append ordering
+      // (r10 review: this handler carried an inline copy of the
+      // contract)
       subsJson(ingest(events, now))
     }),
     "/pipeline/dispatcher/event/history" -> Map[String, Handler]("GET" -> { r =>
@@ -305,40 +307,26 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp): Seq[Submission] =
     mutate.synchronized {
       val res = api.dispatch(events, running.get(), incubating.get(), now)
-      // IN-MEMORY log union: the standalone facade's only history (its
-      // default eventSink keeps nothing), rolled back below if applyStep
-      // throws so an un-applied batch never satisfies the dedup probe.
-      // The DURABLE append happens AFTER applyStep succeeds, so
-      // presence-in-the-durable-log ⇒ effects applied & persisted.
-      // With the MQ replay dedup keyed on the durable log, the old
-      // durable-append-first order turned a crash between append and
-      // apply into PERMANENT event loss (the replay matched the log and
-      // no-op'd; r8 review #1) — append-last restores at-least-once for
-      // that window, which the dedup then bounds to exactly that window.
-      val prevLog = eventLog.get()
-      if (events.nonEmpty)
-        eventLog.set(prevLog.unionByName(
-          spark.createDataset(events)(Encoders.product[LifecycleEvent])))
-      val subs =
-        try applyStep(res)
-        catch {
-          case e: Throwable =>
-            // roll the phantom union back: an un-applied batch must not
-            // satisfy the in-memory dedup probe either
-            eventLog.set(prevLog); throw e
-        }
+      // The log append (eventSink) happens AFTER applyStep succeeds, so
+      // presence-in-the-log ⇒ effects applied & persisted, and a failed
+      // step leaves no trace for the dedup probe. With the MQ replay
+      // dedup keyed on the durable log, the old append-first order
+      // turned a crash between append and apply into PERMANENT event
+      // loss (the replay matched the log and no-op'd; r8 review #1) —
+      // append-last restores at-least-once for that window, which the
+      // dedup then bounds to exactly that window.
+      val subs = applyStep(res)
       if (events.nonEmpty) eventSink.get()(events)
       subs
     }
 
   /** Idempotent MQ ingress: drop events whose `event_id` is already in
     * the log within the horizon, dispatch the remainder — probe and
-    * step under ONE lock acquisition, so the probe can never observe
-    * an in-memory union that a concurrent step later rolls back (an
-    * unlocked probe could match a phantom batch, report the event
-    * applied, and let the stream checkpoint past it — permanent loss).
-    * Since the durable append runs AFTER effects ([[ingest]]), a
-    * logged id always means an applied event. Returns the fresh set. */
+    * step under ONE lock acquisition, so no concurrent step can apply
+    * (and log) a probed id between the probe and this dispatch — an
+    * unlocked probe would let both apply it. Since the log append runs
+    * AFTER effects ([[ingest]]), a logged id always means an applied
+    * event. Returns the fresh set. */
   private[graft] def ingestDedup(events: Seq[LifecycleEvent], now: Timestamp,
       horizonCutoff: Timestamp): Seq[LifecycleEvent] =
     mutate.synchronized {

@@ -32,12 +32,12 @@ object OpMemo {
   private val hooked = java.util.Collections.newSetFromMap(
     new java.util.WeakHashMap[SparkSession, java.lang.Boolean]())
 
-  // ---- build attribution (r16: the bench's warm pass now runs
-  // queries CONCURRENTLY, so its old attribution — diff OpMemo.keys
-  // before/after each query — would misattribute any memo another
-  // lane built in between. The builder records WHO built each entry
-  // at build time instead: callers tag their thread via
-  // [[withBuildTag]] and the memo stores the tag alongside the key.)
+  // ---- build attribution (r16: the bench's warm pass runs queries
+  // CONCURRENTLY, so diffing the memo's keys before/after each query
+  // would misattribute any memo another lane built in between. The
+  // builder records WHO built each entry at build time instead:
+  // callers tag their thread via [[withBuildTag]] and the memo stores
+  // the tag alongside the key.)
   private val buildTagTL = new ThreadLocal[String]
   private val builders = TrieMap.empty[(SparkSession, String, String), String]
 
@@ -56,15 +56,6 @@ object OpMemo {
     * `memo_paid` source. Covers frame, scalar and plan-handle memos. */
   def builds(spark: SparkSession, dir: String): Map[String, String] =
     builders.collect { case ((s, d, k), tag) if (s eq spark) && d == dir => k -> tag }.toMap
-
-  /** Memo keys currently materialized for (session, dir) — lets the
-    * bench stamp WHICH query paid each shared training memo (r8
-    * verdict #4b: `ns_text_bpe_fertility` read 2 s in the artifact
-    * because it happened to run first and absorb the BPE training that
-    * `ns_text_bpe_tokens` then rode for 0.12 s, and the artifact could
-    * not say so). */
-  def keys(spark: SparkSession, dir: String): Set[String] =
-    memos.keys.collect { case (s, d, k) if (s eq spark) && d == dir => k }.toSet
 
   def cached(spark: SparkSession, dir: String, key: String)
             (build: => DataFrame): DataFrame = {

@@ -19,9 +19,6 @@ import graft.model.{PipelineDef, PipelineTrigger}
 final case class Catalog(defs: Dataset[PipelineDef]) {
   private def spark: SparkSession = defs.sparkSession
 
-  /** Normalized edge view (explode of triggers, SURVEY §1.3). */
-  def edges(triggerSpecs: Dataset[PipelineTrigger]): Dataset[PipelineTrigger] = triggerSpecs
-
   /** D2 — prefix + tag filtered header listing. The prefix is validated
     * against the uuid alphabet first (reference `data_provider.py:41-44`,
     * fixed per §8.6 to accept '-'). */
@@ -84,13 +81,4 @@ final case class Catalog(defs: Dataset[PipelineDef]) {
     Catalog(defs.join(doomed, Seq("pipeline_uuid"), "left_anti")
       .as[PipelineDef](Encoders.product[PipelineDef]))
   }
-}
-
-object Catalog {
-  /** Load from a parquet catalog table. */
-  def load(spark: SparkSession, path: String): Catalog =
-    Catalog(spark.read.parquet(path).as[PipelineDef](Encoders.product[PipelineDef]))
-
-  def save(c: Catalog, path: String): Unit =
-    c.defs.write.mode("overwrite").parquet(path)
 }

@@ -31,10 +31,11 @@ object Tables {
     * listing and footer-derived schema are reused instead of re-paid
     * driver-side on every construction (r14 verdict #3: the bench's
     * 190 queries × 6 passes re-listed these ten static dirs thousands
-    * of times). The testdata dirs are static for a session's lifetime;
-    * a service that rewrites files under a dir calls
-    * `OpMemo.invalidate(spark, Some(dir))`, the same hook the cached
-    * frames already use. */
+    * of times). A handle is valid while the files under its dir stay
+    * put: `OpMemo.invalidate(spark, Some(dir))` drops it with the
+    * cached frames. `GraftService.dataPlaneJob` calls it on each run's
+    * input dir when the run ends, and `Bench.run` on its SF dir
+    * before the warm pass. */
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     graft.operators.OpMemo.plan(spark, dir, s"table:$name") {
       name match {

@@ -130,9 +130,13 @@ class GraftServiceSpec extends AnyFunSuite {
       // incubation slot consumed
       assert(service.facade.incubating.get()
         .where(col("pipeline_uuid") === "join-orders-customer").isEmpty)
-      // the MQ event joined the event log like an HTTP-posted one
-      assert(service.facade.eventLog.get()
-        .where(col("pipeline_uuid") === "clean-customer").count() == 1)
+      // the MQ event joined the event log like an HTTP-posted one. The
+      // log append is the step's LAST act (after the submission the
+      // poll above saw), so wait for it rather than race it
+      poll("MQ event in the event log") {
+        service.facade.eventLog.get()
+          .where(col("pipeline_uuid") === "clean-customer").count() == 1
+      }
 
       // 3. a malformed MQ message lands in the quarantine, not the log
       broker.publish("""{"this is": not json""")
@@ -512,6 +516,51 @@ class GraftServiceSpec extends AnyFunSuite {
           "/pipeline/dispatcher/running?statuses=running,waiting,pending,success&pipeline_uuid=curated-report")
           .body().contains("\"curated-report\"")
       }
+    } finally service.shutdown()
+  }
+
+  test("data plane: a run leaves no memo behind, so the next run over a rewritten input dir reads the new data") {
+    import org.apache.spark.sql.functions.col
+    val inDir = SparkSuite.tempDir("svc-dataplane-rewrite-in")
+    val outDir = SparkSuite.tempDir("svc-dataplane-rewrite-out")
+    val docs = s"$inDir/documents.parquet"
+    java.nio.file.Files.copy(java.nio.file.Paths.get(SparkSuite.sfDir, "documents.parquet"),
+      java.nio.file.Paths.get(docs))
+    val service = newDataPlaneService()
+    try {
+      val base = s"http://127.0.0.1:${service.start(0).getPort}"
+      val engineArgs =
+        s"""{"pipeline_command":["graft-query"],"pipeline_args":["ns_text_quality_filter","$inDir","$outDir"]}"""
+      assert(call(base, "POST", "/pipeline/config/create_or_replace",
+        upsertBody("quality-rewrite", engineArgs)).statusCode() == 200)
+      // (exec_uuid, success|failure) of every finished run
+      def finished(): Map[String, String] =
+        service.facade.eventLog.get()
+          .where(col("pipeline_uuid") === "quality-rewrite" &&
+            col("event_subtype").isin("success", "failure"))
+          .collect().map(e => e.exec_uuid -> e.event_subtype).toMap
+      def runOnce(n: Int): Unit = {
+        assert(call(base, "POST",
+          "/pipeline/dispatcher/run_by_pipeline_uuid?pipeline_uuid=quality-rewrite")
+          .statusCode() == 200)
+        poll(s"run $n finished", timeoutMs = 60000)(finished().size == n)
+      }
+      runOnce(1)
+      val first = finished()
+      // an upstream rewrites the input in place with fewer rows
+      val source = spark.read.parquet(s"${SparkSuite.sfDir}/documents.parquet")
+      val n0 = source.count()
+      source.orderBy("doc_id").limit((n0 / 2).toInt).write.mode("overwrite").parquet(docs)
+      runOnce(2)
+      val (exec2, status2) = (finished() -- first.keySet).head
+      assert(first.values.toSeq == Seq("success") && status2 == "success",
+        s"both runs must succeed: first $first, second $status2")
+      graft.operators.OpMemo.invalidate(spark, Some(inDir))
+      val expected = SparkEntry.queries("ns_text_quality_filter")(spark, inDir)
+        .orderBy("doc_id").collect().toSeq
+      val written = spark.read.parquet(s"$outDir/$exec2").orderBy("doc_id").collect().toSeq
+      assert(expected.size == n0 / 2 && written == expected,
+        s"the second run must read the rewritten input: ${written.size} rows, expected ${expected.size}")
     } finally service.shutdown()
   }
 
