@@ -299,18 +299,24 @@ object Bench {
     pool.shutdown()
     // every lane is joined: get() rethrows what a lane threw (runOnce
     // keeps only non-fatal errors), and the whole warm pass is bounded
-    // by the run's wall budget — past it the bench fails loudly rather
-    // than wait on a hung lane
-    try lanes.foreach { f =>
-      val leftS = math.max(0.0, budgetS - elapsedS)
-      try f.get((leftS * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS)
-      catch {
-        case _: java.util.concurrent.TimeoutException =>
-          throw new IllegalStateException(
-            s"[bench] warm pass still running at the ${budgetS}s budget (SPARK_GRAFT_BENCH_BUDGET_S)")
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
-      }
-    } finally pool.shutdownNow()
+    // by the run's wall budget — past it the rows still running are
+    // recorded under `errors`, the artifact is written, and then the
+    // bench fails loudly rather than wait on a hung lane
+    val overBudget = s"warm pass still running at the ${budgetS}s budget (SPARK_GRAFT_BENCH_BUDGET_S)"
+    val unfinished =
+      try {
+        val timedOut = lanes.exists { f =>
+          val leftS = math.max(0.0, budgetS - elapsedS)
+          try { f.get((leftS * 1000).toLong, java.util.concurrent.TimeUnit.MILLISECONDS); false }
+          catch {
+            case _: java.util.concurrent.TimeoutException => true
+            case e: java.util.concurrent.ExecutionException => throw e.getCause
+          }
+        }
+        if (!timedOut) Nil
+        else names.zip(lanes).collect { case (n, f) if !f.isDone => n }
+      } finally pool.shutdownNow()
+    unfinished.foreach(n => errors(n) = overBudget)
     val memoPaid: Map[String, Seq[String]] =
       graft.operators.OpMemo.builds(spark, sfDir).toSeq.groupBy(_._2)
         .map { case (q, ks) => q -> ks.map(_._1).sorted }
@@ -424,6 +430,11 @@ object Bench {
       // stdout line is a compact summary — total + the slowest rows
       // only, plus a pointer to the artifact actually written.
       println(s"""{"metric":"total","value":$total,"unit":"sec","stat":"median","queries":$slowest,"n_queries":${results.size},"n_errors":${errors.size},"queries_file":"$artifactName","warm_pass":true,"reps":$reps$budgetJson,"sf":"$sfDir","loadavg1m_start":$startLoad,"loadavg1m":$load,"jvm_max_heap_mb":$maxHeapMb$fpJson${passStats.mkString(""","pass_stats":[""", ",", "]")}$attribJson$loadWarning}""")
+    }
+    if (unfinished.nonEmpty) {
+      emit()
+      spark.sparkContext.removeSparkListener(listener)
+      throw new IllegalStateException(s"[bench] $overBudget: ${unfinished.mkString(", ")}")
     }
     var lastPassWall = 0.0
     var stopped = false

@@ -3,7 +3,7 @@ package graft.api
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{coalesce, col, lit}
+import org.apache.spark.sql.functions.col
 
 import graft.GraftConfig
 import graft.functions.Retry
@@ -70,26 +70,56 @@ final class GraftApi(
     @volatile var catalog: Catalog,
     @volatile var edges: Dataset[PipelineTrigger],
     val engines: EngineManager,
-    cfg: GraftConfig = GraftConfig.default,
+    val cfg: GraftConfig = GraftConfig.default,
     val cronProvider: CronProvider = new RegistryCronProvider) {
 
+  // --- catalog index ----------------------------------------------------
+  @volatile private var indexed: (Catalog, Dataset[PipelineTrigger], CatalogSnapshot) = _
+
+  /** The catalog as an index of driver values ([[CatalogSnapshot]]):
+    * built on first use after each catalog mutation, keyed on the
+    * identity of `catalog` and `edges` (public vars: whoever replaces
+    * them replaces the key), then probed by every dispatch step and
+    * read route. A local catalog collects without a Spark job. */
+  def snapshot: CatalogSnapshot = {
+    val (c, e) = (catalog, edges)
+    val cur = indexed
+    if (cur != null && (cur._1 eq c) && (cur._2 eq e)) cur._3
+    else synchronized {
+      val again = indexed
+      if (again != null && (again._1 eq c) && (again._2 eq e)) again._3
+      else {
+        val snap = CatalogSnapshot(c.defs.collect().toVector, e.collect().toVector)
+        indexed = (c, e, snap)
+        snap
+      }
+    }
+  }
+
+  private lazy val DefEnc = Encoders.product[PipelineDef]
+  private lazy val IncubEnc = Encoders.product[IncubRow]
+
   // --- pipeline CRUD (facade.py:30-68) ---------------------------------
+  // the read verbs are the snapshot's rows as local Datasets
   /** GET /pipeline/list (stub in the reference; semantics = D2). */
   def listPipelines(prefix: Option[String] = None, tagTeam: Option[String] = None,
                     tagEnv: Option[String] = None): DataFrame =
-    catalog.list(prefix, tagTeam, tagEnv)
+    spark.createDataset(snapshot.list(prefix, tagTeam, tagEnv))(DefEnc).drop("pipeline_body")
 
   /** GET /pipeline/describe */
-  def describePipeline(uuid: String): Dataset[PipelineDef] = catalog.describe(uuid)
+  def describePipeline(uuid: String): Dataset[PipelineDef] =
+    spark.createDataset(snapshot.describe(uuid))(DefEnc)
 
   /** GET /pipeline/head */
-  def headPipeline(uuid: String): DataFrame = catalog.head(uuid)
+  def headPipeline(uuid: String): DataFrame = describePipeline(uuid).drop("pipeline_body")
 
   /** GET /pipeline_config/fetch_pipeline_body (D8, facade.py:65-68). */
-  def fetchBody(uuid: String): DataFrame = catalog.body(uuid)
+  def fetchBody(uuid: String): DataFrame =
+    describePipeline(uuid).select("pipeline_uuid", "pipeline_body")
 
   /** GET /pipeline/downstream (D1) */
-  def downstream(uuid: String): DataFrame = catalog.downstream(uuid, edges)
+  def downstream(uuid: String): DataFrame =
+    spark.createDataset(snapshot.downstream(uuid))(DefEnc).drop("pipeline_body")
 
   /** PUT /pipeline (D5) — upsert def + its trigger edges, reconciling
     * the external schedule registration (`data_provider.py:69-70` +
@@ -104,7 +134,7 @@ final class GraftApi(
     val strays = triggers.filter(_.pipeline_uuid != d.pipeline_uuid)
     require(strays.isEmpty,
       s"trigger rows must reference pipeline_uuid=${d.pipeline_uuid}; got ${strays.map(_.pipeline_uuid).distinct.mkString(",")}")
-    val prev = catalog.describe(d.pipeline_uuid).collect().headOption // catalog metadata: bounded
+    val prev = snapshot.byUuid.get(d.pipeline_uuid)
     val reconciled = d.schedule match {
       case Some(sched) =>
         d.copy(scheduler_tracking_id =
@@ -140,7 +170,7 @@ final class GraftApi(
 
   /** DELETE /pipeline (D6) — also deregisters any external schedule. */
   def deletePipeline(uuid: String, safeDelete: Boolean = true): Unit = {
-    val tracking = catalog.describe(uuid).collect().headOption.flatMap(_.scheduler_tracking_id)
+    val tracking = snapshot.byUuid.get(uuid).flatMap(_.scheduler_tracking_id)
     catalog = catalog.delete(uuid, edges, safeDelete)
     edges = edges.where(col("pipeline_uuid") =!= uuid)
     tracking.foreach(cronProvider.deleteCronJob)
@@ -156,47 +186,46 @@ final class GraftApi(
     * registration was unreachable afterwards because the def carrying
     * its tracking id was gone). */
   def flushPipelines(prefix: String): Unit = {
-    val doomedDefs = catalog.list(Some(prefix))
-      .select("pipeline_uuid", "scheduler_tracking_id")
-      .collect() // catalog-sized
+    val doomedDefs = snapshot.list(Some(prefix))
     catalog = catalog.flush(prefix)
-    val doomed = spark.createDataset(doomedDefs.map(_.getString(0)).toSeq)(Encoders.STRING)
+    val doomed = spark.createDataset(doomedDefs.map(_.pipeline_uuid))(Encoders.STRING)
       .toDF("pipeline_uuid")
     edges = edges.join(doomed, Seq("pipeline_uuid"), "left_anti")
       .as[PipelineTrigger](Encoders.product[PipelineTrigger])
-    doomedDefs.foreach(r => Option(r.getString(1)).foreach(cronProvider.deleteCronJob))
+    doomedDefs.foreach(_.scheduler_tracking_id.foreach(cronProvider.deleteCronJob))
   }
 
   // --- events & history (facade.py:100-116) ----------------------------
   /** POST /pipeline/dispatcher/event + the run_by_pipeline_uuid variant
     * (synthesizes an origination event, facade.py:72-78). One batch
-    * step of the dispatcher; returns its outputs.
+    * step of the dispatcher over the catalog index; returns its outputs.
     *
     * A success or failure report for exec X means X has stopped, even
-    * when the running snapshot still lists it: the snapshot is
-    * refreshed after each step, and a run's callback fires inside its
-    * still-running closure. Gated against that row, the retry of a
-    * `concurrency = false` pipeline would incubate behind its own
-    * finished attempt for the whole debounce. The batch is a
-    * driver-side Seq, so the literal filter adds no Spark job. Neither
-    * ingress requires `exec_uuid`: a report without one names no exec,
-    * and a running row without one is kept, as before the filter (a
-    * NULL in `isin` would otherwise drop every row). */
-  def dispatch(events: Seq[LifecycleEvent],
-               running: Dataset[RunningJob],
-               incubating: Dataset[IncubRow],
-               now: Timestamp): Dispatcher.StepResult = {
+    * when the running rows still list it: they are refreshed after each
+    * step, and a run's callback fires inside its still-running closure.
+    * Gated against that row, the retry of a `concurrency = false`
+    * pipeline would incubate behind its own finished attempt for the
+    * whole debounce. Neither ingress requires `exec_uuid`: a report
+    * without one names no exec, and a running row without one is kept. */
+  def dispatchRows(events: Seq[LifecycleEvent],
+                   running: Seq[RunningJob],
+                   incubating: Seq[IncubRow],
+                   now: Timestamp): Dispatcher.Step = {
     val finished = events.collect {
       case e if e.event_type == "job_exec_update" && e.exec_uuid != null &&
           (e.event_subtype == "success" || e.event_subtype == "failure") => e.exec_uuid
-    }.distinct
-    val live =
-      if (finished.isEmpty) running
-      else running.where(!coalesce(col("exec_uuid").isin(finished: _*), lit(false)))
-    Dispatcher.step(spark, catalog.defs, edges, live, incubating,
-      spark.createDataset(events)(Encoders.product[LifecycleEvent]), now,
+    }.toSet
+    val live = running.filterNot(j => j.exec_uuid != null && finished(j.exec_uuid))
+    Dispatcher.step(snapshot, live, incubating, events, now,
       cfg.concurrencyDebounceSeconds, cfg.incubatingJobAgeOutSeconds)
   }
+
+  /** [[dispatchRows]] over Dataset state, with Dataset outputs. */
+  def dispatch(events: Seq[LifecycleEvent],
+               running: Dataset[RunningJob],
+               incubating: Dataset[IncubRow],
+               now: Timestamp): Dispatcher.StepResult =
+    dispatchRows(events, running.collect().toSeq, incubating.collect().toSeq, now).toResult(spark)
 
   /** The synthesized manual-run origination — one definition so the
     * HTTP facade can log the SAME event it dispatches (manual runs
@@ -219,7 +248,9 @@ final class GraftApi(
                         incubating: Dataset[IncubRow]): Dispatcher.StepResult =
     dispatch(Seq(manualOrigination(uuid, now)), running, incubating, now)
 
-  /** GET /pipeline/event/history (D10 semantics; stub in reference). */
+  /** GET /pipeline/event/history (D10 semantics; stub in reference)
+    * over a whole log; the HTTP route answers recent windows from the
+    * facade's driver-held tail. */
   def eventHistory(events: Dataset[LifecycleEvent], now: Timestamp,
                    pipelineUuid: Option[String] = None,
                    sinceSeconds: Option[Long] = None,
@@ -262,24 +293,29 @@ final class GraftApi(
 
   /** GET /pipeline/incubation/update (D15, `facade.py:109-114`) —
     * point-update one incubating row's waiting slots; an absent obj_id
-    * is the reference's 404 path. Metadata-plane point op: the
-    * existence probe is a bounded lookup, the rewrite is distributed. */
-  def updateIncubating(incubating: Dataset[IncubRow], objId: String,
-                       updates: Map[String, String]): Dataset[IncubRow] = {
-    require(incubating.where(col("obj_id") === objId).limit(1).count() == 1,
+    * is the reference's 404 path. */
+  def updateIncubatingRows(incubating: Seq[IncubRow], objId: String,
+                           updates: Map[String, String]): Seq[IncubRow] = {
+    require(incubating.exists(_.obj_id == objId),
       s"Could not update entry for id=$objId") // facade.py:113
-    incubating.map(r =>
-      if (r.obj_id == objId) r.copy(triggers = r.triggers ++ updates) else r)(
-      Encoders.product[IncubRow])
+    incubating.map(r => if (r.obj_id == objId) r.copy(triggers = r.triggers ++ updates) else r)
   }
 
   /** DELETE /pipeline/incubation/delete (D16, `facade.py:116-118`). */
+  def deleteIncubatingRows(incubating: Seq[IncubRow], objId: String): Seq[IncubRow] =
+    incubating.filterNot(_.obj_id == objId)
+
+  /** [[updateIncubatingRows]] over a Dataset state. */
+  def updateIncubating(incubating: Dataset[IncubRow], objId: String,
+                       updates: Map[String, String]): Dataset[IncubRow] =
+    spark.createDataset(updateIncubatingRows(incubating.collect().toSeq, objId, updates))(IncubEnc)
+
+  /** [[deleteIncubatingRows]] over a Dataset state. */
   def deleteIncubating(incubating: Dataset[IncubRow], objId: String): Dataset[IncubRow] =
-    incubating.where(col("obj_id") =!= objId)
+    spark.createDataset(deleteIncubatingRows(incubating.collect().toSeq, objId))(IncubEnc)
 
   /** DELETE /pipeline_incubation/flush (D17, `facade.py:120-122`). */
-  def flushIncubating(): Dataset[IncubRow] =
-    spark.emptyDataset[IncubRow](Encoders.product[IncubRow])
+  def flushIncubating(): Dataset[IncubRow] = spark.emptyDataset[IncubRow](IncubEnc)
 
   /** GET /sys/config (`facade.py:124-126`) — the config as a dict. */
   def sysConfig: Map[String, String] =

@@ -8,14 +8,13 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.duration._
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
 import graft.orchestration.{Cron, EngineJob, EngineManager, LocalSparkEngine}
 import graft.orchestration.Dispatcher.IncubRow
-import graft.streaming.EventIngest
 
 /** THE deployable process — the reference's service wiring
   * (`/root/reference/src/kalytical/facade.py:138-150`: one asyncio
@@ -109,8 +108,7 @@ final class GraftService(
     // firing all submit through here. persistState after every
     // mutation = the reference's Mongo durability (every dispatch
     // leaves restartable state on disk; a step that left the rows as
-    // they were writes nothing); the state it keeps is the rows as a
-    // local relation, so no plan chain outlives one dispatch.
+    // they were writes nothing).
     facade.submissionSink.set { subs =>
       submitAll(subs)
       facade.refreshRunning()
@@ -122,14 +120,13 @@ final class GraftService(
     // catalog mutations persist through the MetaStore when configured.
     // A mutated catalog is a plan over the previous one, so saving it
     // lazily could overwrite files it still reads (FAILED_READ_FILE) —
-    // localize the catalog-sized rows first, save them, and keep them
-    // as the catalog (the incubating-state pattern)
+    // localize the catalog-sized rows (the index's) first, save them,
+    // and keep them as the catalog
     metaStore.foreach { store =>
       facade.catalogHook.set { () =>
-        val defsLocal = spark.createDataset(api.catalog.defs.collect().toSeq)(
-          Encoders.product[PipelineDef])
-        val edgesLocal = spark.createDataset(api.edges.collect().toSeq)(
-          Encoders.product[PipelineTrigger])
+        val rows = api.snapshot
+        val defsLocal = spark.createDataset(rows.defs)(Encoders.product[PipelineDef])
+        val edgesLocal = spark.createDataset(rows.edges)(Encoders.product[PipelineTrigger])
         store.saveDefs(defsLocal)
         store.saveEdges(edgesLocal)
         // swap in the LOCALIZED datasets, not a files-backed reload
@@ -316,7 +313,10 @@ final class GraftService(
         .outputMode("append")
         .trigger(Trigger.ProcessingTime(pollInterval.toMillis))
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          val parsed = EventIngest.parse(batch)
+          // one Spark job reads the batch; the codec decodes each
+          // message on the driver, with the HTTP ingress's rules
+          val (decoded, rejected) = facade.codec.messages(
+            batch.collect().toSeq.map(_.getString(0)))
           quarantineDir.foreach { d =>
             // BEST-EFFORT guard (r10 review #1): a throw here — token
             // metadata read OR the text write itself — would kill the
@@ -326,13 +326,15 @@ final class GraftService(
             // log loudly and move on; the next batch retries the
             // (success-memoized) token read.
             try {
-              val bad = parsed.corrupt.select(col("_raw"))
-              // per-batch OVERWRITE, not a flat append: corrupt rows have
-              // no event_id to dedup by, so a replayed batch would append
-              // the same forensic rows again forever — keyed on the
-              // stream's batchId, the replay overwrites its own dir and
-              // the quarantine stays idempotent (r8 review #3)
-              if (!bad.isEmpty) bad.write.mode("overwrite").text(s"$d/$runToken/batch_$batchId")
+              // per-batch OVERWRITE, not a flat append: rejected
+              // messages have no event_id to dedup by, so a replayed
+              // batch would append the same forensic rows again forever
+              // — keyed on the stream's batchId, the replay overwrites
+              // its own dir and the quarantine stays idempotent (r8
+              // review #3)
+              if (rejected.nonEmpty)
+                spark.createDataset(rejected)(Encoders.STRING).write.mode("overwrite")
+                  .text(s"$d/$runToken/batch_$batchId")
             } catch {
               case scala.util.control.NonFatal(e) =>
                 System.err.println(
@@ -343,19 +345,20 @@ final class GraftService(
           // MQ delivery is at-least-once against the service's own
           // durable state (dispatch + persist happen BEFORE the stream
           // checkpoint commits the offset), so a crash in that window
-          // replays the batch — dedup by event_id against the DURABLE
-          // event log makes the replay a no-op instead of duplicating
-          // history rows and re-dispatching already-applied events
-          // (r7 advice, medium). Since r8 the log append runs AFTER
-          // effects apply (HttpFacade.ingest), so a logged id always
-          // means an applied event — the dedup can never drop a batch
-          // whose effects were lost mid-apply.
+          // replays the batch — dedup by event_id against the logged
+          // ids (restored from the durable log at start) makes the
+          // replay a no-op instead of duplicating history rows and
+          // re-dispatching already-applied events (r7 advice, medium).
+          // Since r8 the log append runs AFTER effects apply
+          // (HttpFacade.ingest), so a logged id always means an applied
+          // event — the dedup can never drop a batch whose effects were
+          // lost mid-apply.
           // distinctBy first: SQS-style redelivery can land the same
-          // event_id TWICE IN ONE POLL, which the log probe alone
+          // event_id TWICE IN ONE POLL, which the id probe alone
           // cannot catch (neither copy is persisted yet)
           val batchIds = scala.collection.mutable.Set.empty[Long]
           val now = nowProvider()
-          val events = parsed.events.collect().toSeq
+          val events = decoded
             .filter(e => batchIds.add(e.event_id)) // keep FIRST copy, preserve arrival order
             // SINK-STAMP received_time (the reference stamps at the
             // data provider, `data_provider.py:130`): producer-supplied
@@ -364,7 +367,7 @@ final class GraftService(
             // below never match a replayed id (r8 review #2.1). Stamping at
             // first ingest also makes received_time rise monotonically
             // across appended log files, which is what lets parquet
-            // row-group stats skip old history in the probe.
+            // row-group stats skip old history in a history read.
             .map(_.copy(received_time = now))
           if (events.nonEmpty) {
             // probe + dispatch under ONE facade-lock acquisition
@@ -373,7 +376,7 @@ final class GraftService(
             // and the event would apply twice. Horizon: a replayed id's logged copy
             // carries its first-processing stamp — minutes (broker
             // redelivery) to one restart gap (checkpoint replay) old —
-            // so the probe reads only recent history; generous (7 days)
+            // so the probe needs only recent ids; generous (7 days)
             // because a miss only degrades to at-least-once.
             val cutoff = new Timestamp(
               now.getTime - cfg.mqDedupHorizonDays * 86400000L)
@@ -389,19 +392,19 @@ final class GraftService(
   // its process restarts resume mid-lifecycle (an incubating child's
   // first satisfied dep survives). The Spark analog, shaped by growth
   // class:
-  //  - INCUBATING (catalog-bounded): after every mutation the state's
-  //    rows are collected and kept in memory as a local relation, which
-  //    is the new state; when they differ from the committed generation
-  //    they are written to ping-pong parquet dirs (A/B with an
-  //    atomically-moved _CURRENT marker — a crash mid-write leaves the
-  //    previous generation intact). Nothing lazy points at the
-  //    files, so the next overwrite of a generation cannot pull them
-  //    from under a reader, and the state's plan stays one relation
-  //    instead of growing a union layer per dispatch.
+  //  - INCUBATING (catalog-bounded): the state is the facade's driver
+  //    rows; after every mutation, when they differ from the committed
+  //    generation they are written to ping-pong parquet dirs (A/B with
+  //    an atomically-moved _CURRENT marker — a crash mid-write leaves
+  //    the previous generation intact). Nothing reads the files but a
+  //    restart, so the next overwrite of a generation cannot pull them
+  //    from under a reader.
   //  - EVENT HISTORY (unbounded append-only): each accepted batch
   //    APPENDS to one parquet dir via the facade's eventSink —
   //    rewriting the full log per dispatch would be quadratic lifetime
-  //    I/O (r7 review #3).
+  //    I/O (r7 review #3). A restart reads back the ids within the MQ
+  //    dedup horizon and raises the history tail's coverage floor
+  //    past every restored row.
   //  - CRON high-water minute: a tiny marker file, so a restart inside
   //    an already-fired minute does not double-fire its schedules.
 
@@ -460,16 +463,15 @@ final class GraftService(
   @volatile private var persistedRows: Seq[IncubRow] = Seq.empty
 
   private[graft] def persistState(): Unit = {
-    val rows = facade.incubating.get().collect().toSeq
-    val state = spark.createDataset(rows)(IncubEnc)
+    val rows = facade.incubating.rows
     if (rows.size != persistedRows.size || rows.diff(persistedRows).nonEmpty) {
       ensureStateRoot()
       val next = if (currentGen.contains("a")) "b" else "a"
-      state.write.mode("overwrite").parquet(s"$stateRoot/$next/incubating")
+      spark.createDataset(rows)(IncubEnc).write.mode("overwrite")
+        .parquet(s"$stateRoot/$next/incubating")
       writeAtomic(markerPath, next)
       persistedRows = rows
     }
-    facade.incubating.set(state)
   }
 
   /** The durable event log, read with the encoder's schema: inferring
@@ -481,11 +483,23 @@ final class GraftService(
     currentGen.foreach { gen =>
       val rows = spark.read.schema(IncubEnc.schema).parquet(s"$stateRoot/$gen/incubating")
         .as[IncubRow](IncubEnc).collect().toSeq
-      facade.incubating.set(spark.createDataset(rows)(IncubEnc))
+      facade.incubating.set(rows)
       persistedRows = rows
     }
     val ev = new org.apache.hadoop.fs.Path(eventsDir)
-    if (hadoopFs(ev).exists(ev)) facade.eventLog.set(readEvents())
+    if (hadoopFs(ev).exists(ev)) {
+      val log = readEvents()
+      facade.eventLog.set(log)
+      // one read: the ids within the MQ dedup horizon. Every restored
+      // row lies at or below the newest of them or below the cutoff, so
+      // the history tail covers only windows after both.
+      val cutoff = nowProvider().getTime - cfg.mqDedupHorizonDays * 86400000L
+      val recent = log.where(col("received_time") >= lit(new Timestamp(cutoff)))
+        .select(col("event_id"), col("received_time")).collect()
+        .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toSeq
+      facade.loggedIds.add(recent)
+      facade.tail.raiseFloor((cutoff +: recent.map(_._2)).max)
+    }
     readMarker(cronMarkerPath).foreach(m => lastCronMinute = m.toLong)
     // engine state is intentionally NOT restored: LocalSparkEngine /
     // ProcessEngine runs die with the process (unlike the reference's
@@ -537,15 +551,11 @@ final class GraftService(
     ()
   }
 
-  /** Submit each run to its def's engine, looked up in the collected
-    * catalog rows — the catalog is the dispatcher's own input, and a
-    * local one collects without a Spark job. */
+  /** Submit each run to its def's engine, looked up in the catalog
+    * index the dispatcher itself read. */
   private def submitAll(subs: Seq[Submission]): Unit =
     if (subs.nonEmpty) {
-      val wanted = subs.map(_.pipeline_uuid).toSet
-      val defsByUuid: Map[String, PipelineDef] =
-        api.catalog.defs.collect().iterator.filter(d => wanted(d.pipeline_uuid))
-          .map(d => d.pipeline_uuid -> d).toMap
+      val defsByUuid = api.snapshot.byUuid
       subs.foreach { sub =>
         // per-run isolation: one submission whose def names an
         // unregistered engine must not abort the rest of the batch —
@@ -728,8 +738,7 @@ object GraftService {
 
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every
-    * non-negative id (enforced at the MQ ingress — see EventIngest
-    * validation), engine-internal callbacks own the negative ids, so
+    * non-negative id (enforced at both ingresses by [[JsonCodec]]), engine-internal callbacks own the negative ids, so
     * no external event can ever alias a logged callback through the
     * ingress dedup regardless of what ids producers pick (r8 advice:
     * the former wall-clock-×1000 positive seed claimed disjointness

@@ -8,11 +8,10 @@ import java.util.concurrent.Executors
 import java.util.concurrent.atomic.AtomicReference
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, explode, lit}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model._
-import graft.orchestration.{Dispatcher, EngineJob}
+import graft.orchestration.{Dispatcher, EngineJob, EventTail, LoggedIds}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
@@ -27,29 +26,37 @@ import graft.orchestration.Dispatcher.IncubRow
   *    reference's `HTTPBearer` dependency; [[Auth.AuthError]] maps to
   *    its own status code, `require`/IllegalArgument to 400 (the
   *    FastAPI HTTPException(400) paths), anything else to 500.
-  *  - tabular results stream out as JSON arrays via Spark's own
-  *    row-to-JSON (`df.toJSON`) — no hand-rolled serializer to drift
-  *    from the schema.
-  *  - request BODIES parse through Spark too: `spark.read.schema(...)
-  *    .json(...)` against the case-class encoder schema, so the HTTP
-  *    boundary enforces exactly the engine's schema and nothing else
-  *    (a malformed field is a null under permissive mode → the same
-  *    validation the library path applies).
+  *  - request bodies and row responses go through one driver-side
+  *    [[JsonCodec]] (Jackson): bodies read by the case-class schema
+  *    the way Spark's JSON reader did, a malformed body is a 400, and
+  *    rows go out the way Spark's row serializer wrote them (null
+  *    fields omitted, ISO timestamps, maps as objects). Dispatch and
+  *    the read routes plan no Spark query; catalog mutations keep their
+  *    Spark validation, and an old history window reads the log.
   *
   * STATE: the reference keeps running/incubating/event-log state in
-  * Mongo + K8s; the library API threads them per call. The facade is
-  * where a deployment holds them between requests, so it owns the
-  * event-loop contract:
-  *   incubating' = newIncubating ∪ deferred
-  * (newIncubating is the step's complete kept state — see applyStep)
-  * and the event log appends each posted lifecycle event. One global
+  * Mongo + K8s and answers each request with a few document lookups
+  * (`dispatcher.py:15-68`). The facade holds the same state between
+  * requests as plain driver values:
+  *  - the catalog index, [[GraftApi.snapshot]], built once per catalog
+  *    mutation;
+  *  - the incubation rows, replaced by each step:
+  *      incubating' = newIncubating ∪ deferred
+  *    (newIncubating is the step's complete kept state — see applyStep);
+  *  - the running rows the concurrency gate reads, refreshed from the
+  *    engines after each submission;
+  *  - the recent end of the event log ([[EventTail]]) and the logged ids
+  *    the MQ replay probe reads ([[LoggedIds]]).
+  * `describe`, `list`, `downstream`, `fetch_pipeline_body`, `running`
+  * and a covered `event/history` window read these values; a history
+  * window older than the tail falls back to the whole log. One global
   * lock serializes mutating verbs — metadata-plane traffic (catalog-
   * sized, the reference's own regime); read verbs hit immutable
-  * snapshots and run unlocked. Scale note: the data plane never flows
-  * through this surface — dispatch inputs and outputs are bounded by
-  * the catalog (10²–10⁴ pipelines, the reference's regime), the live
-  * state and the batch, and [[graft.orchestration.Dispatcher.step]]
-  * folds them on the driver.
+  * values and run unlocked. The data plane never flows through this
+  * surface: dispatch inputs and outputs are bounded by the catalog
+  * (10²–10⁴ pipelines, the reference's regime), the live state and the
+  * batch, and [[graft.orchestration.Dispatcher.step]] folds them on the
+  * driver.
   */
 final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
                        nowProvider: () => Timestamp =
@@ -67,13 +74,17 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
                        sysActions: Map[String, () => String] = Map.empty) {
 
   private val api = secured.api
-  private def emptyIncub = spark.emptyDataset[IncubRow](Encoders.product[IncubRow])
-  private def emptyRunning = spark.emptyDataset[RunningJob](Encoders.product[RunningJob])
-  private def emptyEvents = spark.emptyDataset[LifecycleEvent](Encoders.product[LifecycleEvent])
+  private[graft] val codec = JsonCodec.forSession(spark)
 
-  private[graft] val running = new AtomicReference[Dataset[RunningJob]](emptyRunning)
-  private[graft] val incubating = new AtomicReference[Dataset[IncubRow]](emptyIncub)
-  private[graft] val eventLog = new AtomicReference[Dataset[LifecycleEvent]](emptyEvents)
+  /** Driver-held state rows; `get()` is their local-Dataset view. */
+  private[graft] val running = new HttpFacade.Rows(spark, Encoders.product[RunningJob])
+  private[graft] val incubating = new HttpFacade.Rows(spark, Encoders.product[IncubRow])
+  /** The whole event log as a query — the history fallback. Standalone
+    * facade: the in-memory log; [[GraftService]] sets its parquet log. */
+  private[graft] val eventLog = new AtomicReference[Dataset[LifecycleEvent]](
+    spark.emptyDataset[LifecycleEvent](Encoders.product[LifecycleEvent]))
+  private[graft] val tail = new EventTail(api.cfg.historySinceSeconds)
+  private[graft] val loggedIds = new LoggedIds(api.cfg.mqDedupHorizonDays * 86400000L)
   private val mutate = new Object
 
   /** Where dispatcher submissions GO. Standalone facade: nowhere (the
@@ -147,24 +158,31 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   /** The 18 reference routes (`facade.py:30-126`), method-checked.
     * Path quirks preserved verbatim: `/pipeline_config/fetch_pipeline_body`
     * and `/pipeline_incubation/flush` really are underscored in the
-    * reference. */
+    * reference. A route that reads or replaces driver state gates its
+    * verb with `can` and works on the rows; the Session's Dataset verbs
+    * serve library callers. */
   private val routes: Seq[(String, Map[String, Handler])] = Seq(
     "/pipeline/config/list" -> Map[String, Handler]("POST" -> { r =>
-      json(r.session.listPipelines(r.opt("pipeline_prefix"),
-        r.opt("tag_team"), r.opt("tag_env")))
+      r.session.can("list")
+      codec.rows(api.snapshot.list(r.opt("pipeline_prefix"), r.opt("tag_team"),
+        r.opt("tag_env")), _ != "pipeline_body")
     }),
     "/pipeline/config/describe" -> Map[String, Handler]("GET" -> { r =>
-      json(r.session.describePipeline(r.param("pipeline_uuid")).toDF())
+      r.session.can("describe")
+      codec.rows(api.snapshot.describe(r.param("pipeline_uuid")))
     }),
     "/pipeline/config/downstream" -> Map[String, Handler]("GET" -> { r =>
-      json(r.session.downstream(r.param("pipeline_uuid")))
+      r.session.can("downstream")
+      codec.rows(api.snapshot.downstream(r.param("pipeline_uuid")), _ != "pipeline_body")
     }),
     "/pipeline_config/fetch_pipeline_body" -> Map[String, Handler]("GET" -> { r =>
-      json(r.session.fetchBody(r.param("pipeline_uuid")))
+      r.session.can("head")
+      codec.rows(api.snapshot.describe(r.param("pipeline_uuid")),
+        Set("pipeline_uuid", "pipeline_body"))
     }),
     "/pipeline/config/create_or_replace" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("upsert") // auth BEFORE body-parse driver work (r7 review)
-      val (d, triggers) = parseUpsert(r.body)
+      val (d, triggers) = codec.upsert(r.body)
       mutate.synchronized {
         r.session.upsertPipeline(d, triggers)
         catalogHook.get()()
@@ -199,18 +217,19 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // apply left a logged-but-never-applied event, exactly the
       // permanent-loss window the r8 append-last ordering closed).
       val ev = api.manualOrigination(r.param("pipeline_uuid"), now)
-      subsJson(ingest(Seq(ev), now))
+      codec.rows(ingest(Seq(ev), now))
     }),
     "/pipeline/dispatcher/run_single_use" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("runSingleUse") // auth before body-parse work
-      val (d, argv, env) = parseSingleUse(r.body)
+      val (d, argv, env) = codec.singleUse(r.body)
       val exec = mutate.synchronized {
         r.session.runSingleUse(d, EngineJob.Command(argv, env))
       }
-      s"""{"exec_uuid":${jstr(exec)}}"""
+      codec.obj("exec_uuid" -> exec)
     }),
     "/pipeline/dispatcher/running" -> Map[String, Handler]("GET" -> { r =>
-      json(r.session.runningJobs(
+      r.session.can("running")
+      codec.rows(api.engines.filteredRows(spark,
         statuses = r.opt("statuses").map(_.split(",").toSeq)
           .getOrElse(Seq("running", "waiting", "pending")),
         pipelineUuid = r.opt("pipeline_uuid"),
@@ -221,7 +240,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
         r.opt("engine_name").getOrElse("spark-local"))
       val logs = r.session.logs(backend, r.param("engine_tracking_id"),
         r.opt("max_kb").map(_.toInt).getOrElse(10))
-      s"""{"logs":${jstr(logs)}}"""
+      codec.obj("logs" -> logs)
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
       mutate.synchronized { r.session.abort(r.param("engine_tracking_id")) }
@@ -229,56 +248,59 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     }),
     "/pipeline/dispatcher/event" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("dispatch") // auth first; parse OUTSIDE the global
-      // lock — an anonymous flood used to run Spark JSON jobs while
-      // serializing every authorized mutation (r7 review)
+      // lock — an anonymous flood must not serialize every authorized
+      // mutation behind its parse work (r7 review)
       val now = reqNow(r)
       // SINK-STAMP received_time, the MQ-ingress contract (r10 review:
       // a null/ancient producer stamp hides the event from the
       // history window and the durable dedup horizon — the exact r8
       // finding GraftService fixed for MQ, left open on HTTP)
-      val events = parseEvents(r.body).map(_.copy(received_time = now))
+      // (the codec rejects an external negative event_id → 400)
+      val events = codec.events(r.body).map(_.copy(received_time = now))
       // ONE ingress path: ingest() owns the apply→append ordering
       // (r10 review: this handler carried an inline copy of the
       // contract)
-      subsJson(ingest(events, now))
+      codec.rows(ingest(events, now))
     }),
     "/pipeline/dispatcher/event/history" -> Map[String, Handler]("GET" -> { r =>
-      json(r.session.eventHistory(eventLog.get(), reqNow(r),
-        pipelineUuid = r.opt("pipeline_uuid"),
-        sinceSeconds = r.opt("since_seconds").map(_.toLong),
-        maxRecords = r.opt("max_records").map(_.toInt)))
+      r.session.can("history")
+      val now = reqNow(r)
+      val since = r.opt("since_seconds").map(_.toLong).getOrElse(api.cfg.historySinceSeconds)
+      val max = r.opt("max_records").map(_.toInt).getOrElse(api.cfg.historyMaxRecords)
+      val pipeline = r.opt("pipeline_uuid")
+      codec.rows(tail.history(now.getTime - since * 1000L, pipeline, max).getOrElse(
+        api.eventHistory(eventLog.get(), now, pipeline, Some(since), Some(max))
+          .as[LifecycleEvent](Encoders.product[LifecycleEvent]).collect().toSeq))
     }),
     "/pipeline/incubation/update" -> Map[String, Handler]("GET" -> { r =>
       // (sic) the reference gates this mutation behind GET, facade.py:109
       r.session.can("incubationUpdate") // auth before body-parse work
-      val updates = parseUpdates(r.body)
+      val updates = codec.updates(r.body)
       mutate.synchronized {
-        val updated = r.session.updateIncubating(incubating.get(),
-          r.param("obj_id"), updates)
-        incubating.set(updated)
+        incubating.set(api.updateIncubatingRows(incubating.rows, r.param("obj_id"), updates))
         mutationHook.get()()
-        json(incubating.get().drop("triggers")) // map column: header view, like D14's
+        codec.rows(incubating.rows, _ != "triggers") // map column: header view, like D14's
       }
     }),
     "/pipeline/incubation/delete" -> Map[String, Handler]("DELETE" -> { r =>
+      r.session.can("incubationDelete")
       mutate.synchronized {
-        incubating.set(r.session.deleteIncubating(incubating.get(), r.param("obj_id")))
+        incubating.set(api.deleteIncubatingRows(incubating.rows, r.param("obj_id")))
         mutationHook.get()()
       }
       ok
     }),
     "/pipeline_incubation/flush" -> Map[String, Handler]("DELETE" -> { r =>
+      r.session.can("incubationFlush")
       mutate.synchronized {
-        incubating.set(r.session.flushIncubating())
+        incubating.set(Nil)
         mutationHook.get()()
       }
       ok
     }),
     "/sys/config" -> Map[String, Handler](
       "GET" -> { r =>
-        (r.session.sysConfig ++ extraSysConfig()).toSeq.sortBy(_._1)
-          .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
-          .mkString("{", ",", "}")
+        codec.obj((r.session.sysConfig ++ extraSysConfig()).toSeq.sortBy(_._1): _*)
       },
       // admin actions (r13 ADVICE #2) — same path, POST, so the
       // reference's 18-route surface stays pinned while the service
@@ -288,7 +310,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
         val name = r.param("action")
         val act = sysActions.getOrElse(name, throw new IllegalArgumentException(
           s"unknown action '$name'; known: ${sysActions.keys.toSeq.sorted.mkString(", ")}"))
-        s"""{"action":${jstr(name)},"result":${jstr(act())}}"""
+        codec.obj("action" -> name, "result" -> act())
       })
   )
 
@@ -306,7 +328,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * Returns the step's submissions — catalog-bounded. */
   private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp): Seq[Submission] =
     mutate.synchronized {
-      val res = api.dispatch(events, running.get(), incubating.get(), now)
+      val step = api.dispatchRows(events, running.rows, incubating.rows, now)
       // The log append (eventSink) happens AFTER applyStep succeeds, so
       // presence-in-the-log ⇒ effects applied & persisted, and a failed
       // step leaves no trace for the dedup probe. With the MQ replay
@@ -314,42 +336,44 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // turned a crash between append and apply into PERMANENT event
       // loss (the replay matched the log and no-op'd; r8 review #1) —
       // append-last restores at-least-once for that window, which the
-      // dedup then bounds to exactly that window.
-      val subs = applyStep(res)
-      if (events.nonEmpty) eventSink.get()(events)
+      // dedup then bounds to exactly that window. The driver-held tail
+      // and id index follow the sink, so they hold only logged events.
+      val subs = applyStep(step)
+      if (events.nonEmpty) {
+        eventSink.get()(events)
+        logged(events)
+      }
       subs
     }
 
-  /** Idempotent MQ ingress: drop events whose `event_id` is already in
-    * the log within the horizon, dispatch the remainder — probe and
-    * step under ONE lock acquisition, so no concurrent step can apply
-    * (and log) a probed id between the probe and this dispatch — an
-    * unlocked probe would let both apply it. Since the log append runs
-    * AFTER effects ([[ingest]]), a logged id always means an applied
-    * event. Returns the fresh set. */
+  /** Index events the log now holds: the history tail and the MQ
+    * replay probe's ids. [[GraftService]] also feeds restored ids here. */
+  private[graft] def logged(events: Seq[LifecycleEvent]): Unit = {
+    tail.append(events)
+    loggedIds.add(events.collect {
+      case e if e.received_time != null => e.event_id -> e.received_time.getTime
+    })
+  }
+
+  /** Idempotent MQ ingress: drop events whose `event_id` the log holds
+    * within the horizon, dispatch the remainder — probe and step under
+    * ONE lock acquisition, so no concurrent step can apply (and log) a
+    * probed id between the probe and this dispatch — an unlocked probe
+    * would let both apply it. Since the log append runs AFTER effects
+    * ([[ingest]]), a logged id always means an applied event. The probe
+    * reads the driver-held id index, not the log. Returns the fresh
+    * set. */
   private[graft] def ingestDedup(events: Seq[LifecycleEvent], now: Timestamp,
       horizonCutoff: Timestamp): Seq[LifecycleEvent] =
     mutate.synchronized {
-      val fresh =
-        if (events.isEmpty) events
-        else {
-          val ids = events.map(_.event_id)
-          val seen = eventLog.get()
-            .where(col("received_time") >= lit(horizonCutoff) &&
-              col("event_id").isin(ids: _*))
-            .select("event_id").collect().map(_.getLong(0)).toSet
-          events.filterNot(e => seen(e.event_id))
-        }
+      val fresh = events.filterNot(e => loggedIds.seenSince(e.event_id, horizonCutoff.getTime))
       if (fresh.nonEmpty) ingest(fresh, now)
       fresh
     }
 
   /** One culler pass IF anything is incubating — the emptiness check
-    * and the step run under ONE lock acquisition. Checked outside the
-    * lock (the old [[GraftService.cullTick]] shape), the then files-
-    * backed snapshot could be invalidated mid-scan by two interleaved
-    * persistState generations overwriting its ping-pong dir
-    * (FAILED_READ_FILE → a silently skipped cull pass; r7 advice). */
+    * and the step run under ONE lock acquisition, so the check always
+    * sees the state the step folds (r7 advice). */
   private[graft] def cullStep(now: Timestamp): Unit =
     mutate.synchronized {
       // reentrant lock: the emptiness pre-check and the step share ONE
@@ -357,14 +381,14 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // branch — one code path, so a future change to the state
       // contract cannot silently diverge between the event ingress and
       // the culler (r8 review #6)
-      if (!incubating.get().isEmpty) { ingest(Seq.empty, now); () }
+      if (incubating.rows.nonEmpty) { ingest(Seq.empty, now); () }
     }
 
-  /** Refresh the concurrency-gate snapshot from live engine state —
-    * the service calls this after submitting so the next dispatch
-    * gates against what is actually running. */
+  /** Refresh the concurrency-gate rows from live engine state — the
+    * service calls this after submitting so the next dispatch gates
+    * against what is actually running. */
   private[graft] def refreshRunning(): Unit =
-    running.set(api.engines.allJobs(spark))
+    running.set(api.engines.allRows(spark))
 
   /** The event-loop state contract (see class doc): `newIncubating`
     * IS the complete post-step state — every old row flows through the
@@ -373,23 +397,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * (`(incubating − droppedObjIds) ∪ newIncubating ∪ deferred`) left
     * RELEASED rows behind (droppedObjIds only carries age-outs) and
     * duplicated kept rows — caught by GraftServiceSpec's
-    * slot-consumed assertion (r7).
-    *
-    * The step's outputs are local relations: the new state is their
-    * rows concatenated on the driver (a Spark union of two local
-    * relations would start a job when read), and the submissions are
-    * returned for the caller's response. */
-  private def applyStep(res: Dispatcher.StepResult): Seq[Submission] = {
-    incubating.set(spark.createDataset(
-      (res.newIncubating.collect() ++ res.deferred.collect()).toSeq)(Encoders.product[IncubRow]))
-    val subs = res.submissions.collect().toSeq
-    submissionSink.get()(subs)
-    subs
+    * slot-consumed assertion (r7). The submissions are returned for
+    * the caller's response. */
+  private def applyStep(step: Dispatcher.Step): Seq[Submission] = {
+    incubating.set(step.newIncubating ++ step.deferred)
+    submissionSink.get()(step.submissions)
+    step.submissions
   }
-
-  /** Collected submissions → the same JSON array `df.toJSON` yields. */
-  private def subsJson(subs: Seq[Submission]): String =
-    json(spark.createDataset(subs)(Encoders.product[Submission]).toDF())
 
   // ---- request plumbing -------------------------------------------------
 
@@ -397,7 +411,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     val out =
       try {
         methods.get(ex.getRequestMethod) match {
-          case None => (405, s"""{"error":"method not allowed"}""")
+          case None => (405, codec.obj("error" -> "method not allowed"))
           case Some(h) =>
             // a real RFC 6750 scheme check: `stripPrefix("Bearer")`
             // accepted "Basic ..." verbatim and fused "BearerXYZ" into
@@ -415,9 +429,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
             (200, h(Request(queryParams(ex), body, session)))
         }
       } catch {
-        case e: Auth.AuthError => (e.statusCode, s"""{"error":${jstr(e.message)}}""")
-        case e: IllegalArgumentException => (400, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
-        case e: Throwable => (500, s"""{"error":${jstr(String.valueOf(e.getMessage))}}""")
+        case e: Auth.AuthError => (e.statusCode, codec.obj("error" -> e.message))
+        case e: IllegalArgumentException => (400, codec.obj("error" -> String.valueOf(e.getMessage)))
+        case e: Throwable => (500, codec.obj("error" -> String.valueOf(e.getMessage)))
       }
     val bytes = out._2.getBytes(UTF_8)
     ex.getResponseHeaders.set("Content-Type", "application/json")
@@ -451,119 +465,18 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private def reqNow(r: Request): Timestamp =
     r.opt("now_epoch_ms").map(ms => new Timestamp(ms.toLong)).getOrElse(nowProvider())
 
-  // ---- body parsing (Spark-native, schema-enforced) ---------------------
-
-  private def oneRowJson(body: String, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import spark.implicits._
-    // corrupt capture: permissive mode turns syntactically broken JSON
-    // into one all-null row, which used to pass the count check and
-    // surface later as an encoder NPE → 500 instead of the intended
-    // 400 (r7 review)
-    val parseSchema = org.apache.spark.sql.types.StructType(
-      schema.fields :+ org.apache.spark.sql.types.StructField(
-        "_corrupt", org.apache.spark.sql.types.StringType, nullable = true))
-    val rows = spark.read.schema(parseSchema)
-      .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_corrupt")
-      .json(Seq(body).toDS())
-    require(rows.count() == 1, "request body must be a single JSON object")
-    require(rows.where(col("_corrupt").isNotNull).isEmpty, "malformed JSON in request body")
-    val df = rows.drop("_corrupt")
-    val head = df.head()
-    require((0 until head.length).exists(i => !head.isNullAt(i)),
-      "request body must be a single JSON object with recognized fields")
-    df
-  }
-
-  private def parseUpsert(body: String): (PipelineDef, Seq[PipelineTrigger]) = {
-    val defSchema = Encoders.product[PipelineDef].schema
-    val trigSchema = Encoders.product[PipelineTrigger].schema
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("def", defSchema).add("triggers",
-        org.apache.spark.sql.types.ArrayType(trigSchema))
-    val df = oneRowJson(body, schema)
-    val d = df.select("def.*").as[PipelineDef](Encoders.product[PipelineDef]).head()
-    val triggers = df.select(explode(col("triggers")).as("t")).select("t.*")
-      .as[PipelineTrigger](Encoders.product[PipelineTrigger]).collect().toSeq
-    (d, triggers)
-  }
-
-  private def parseSingleUse(body: String): (PipelineDef, Seq[String], Map[String, String]) = {
-    val defSchema = Encoders.product[PipelineDef].schema
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("def", defSchema)
-      .add("argv", org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.StringType))
-      .add("env", org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
-    val df = oneRowJson(body, schema)
-    val d = df.select("def.*").as[PipelineDef](Encoders.product[PipelineDef]).head()
-    val row = df.head()
-    val argv = Option(row.getSeq[String](1)).getOrElse(
-      throw new IllegalArgumentException("missing argv"))
-    val env = Option(row.getJavaMap[String, String](2))
-      .map(m => scala.jdk.CollectionConverters.MapHasAsScala(m).asScala.toMap)
-      .getOrElse(Map.empty[String, String])
-    (d, argv, env)
-  }
-
-  private def parseEvents(body: String): Seq[LifecycleEvent] = {
-    import spark.implicits._
-    // accepts one event object or an array of them (Spark's JSON
-    // reader explodes a top-level array into rows)
-    val evs =
-      try spark.read.schema(Encoders.product[LifecycleEvent].schema)
-        .json(Seq(body).toDS())
-        .as[LifecycleEvent](Encoders.product[LifecycleEvent]).collect().toSeq
-      catch {
-        // permissive parse + a missing non-nullable field surfaces as
-        // an encoder RuntimeException — map it to the 400 the boundary
-        // contract promises (r10 review: the r7 oneRowJson hardening
-        // never reached this route)
-        case scala.util.control.NonFatal(e) =>
-          throw new IllegalArgumentException(
-            s"malformed lifecycle event body: ${String.valueOf(e.getMessage).take(200)}")
-      }
-    require(evs.nonEmpty, "no lifecycle events in request body")
-    // the reserved-negative-id invariant holds at EVERY ingress, not
-    // just the MQ path (r9 advice): external producers own the
-    // non-negative id half-space, engine callbacks own the negatives
-    // (GraftService.callbackIds) — an HTTP producer minting a negative
-    // id would alias a logged callback in the durable event log and
-    // undermine the uniqueness/forensics contract. require → 400,
-    // mirroring the EventIngest quarantine split.
-    require(evs.forall(_.event_id >= 0),
-      s"negative event_id is reserved for engine callbacks: " +
-        evs.filter(_.event_id < 0).map(_.event_id).mkString(","))
-    evs
-  }
-
-  private def parseUpdates(body: String): Map[String, String] = {
-    val schema = new org.apache.spark.sql.types.StructType()
-      .add("updates", org.apache.spark.sql.types.MapType(
-        org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType))
-    val row = oneRowJson(body, schema).head()
-    Option(row.getJavaMap[String, String](0))
-      .map(m => scala.jdk.CollectionConverters.MapHasAsScala(m).asScala.toMap)
-      .getOrElse(throw new IllegalArgumentException("missing updates map"))
-  }
-
-  // ---- serialization ----------------------------------------------------
-
-  /** Tabular → JSON array via Spark's row serializer (schema-true:
-    * timestamps ISO, maps as objects, null columns omitted). Catalog/
-    * dispatch-sized results only — nothing data-plane crosses here. */
-  private def json(df: DataFrame): String =
-    df.toJSON.collect().mkString("[", ",", "]")
-
   private val ok = """{"ok":true}"""
+}
 
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+object HttpFacade {
+  /** A driver-held row set. The facade's state lives here as plain
+    * values; `get()` is the same rows as a local Dataset (a
+    * `LocalRelation`, which reads without a Spark job) for the
+    * Dataset-typed API. */
+  final class Rows[T](spark: SparkSession, enc: Encoder[T]) {
+    private val ref = new AtomicReference[Vector[T]](Vector.empty)
+    def rows: Vector[T] = ref.get()
+    def set(rows: Seq[T]): Unit = ref.set(rows.toVector)
+    def get(): Dataset[T] = spark.createDataset(rows)(enc)
+  }
 }

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 import graft.model.{PipelineDef, PipelineTrigger}
 
 /** Pipeline catalog: the reference's `pipeline_defs` collection and its
-  * CRUD surface (`/root/reference/src/kalytical/core/data_provider.py`
-  * D1–D8) over immutable Datasets.
+  * mutations (`/root/reference/src/kalytical/core/data_provider.py`
+  * D5–D7) over immutable Datasets; the reads (D1–D4, D8) are
+  * [[CatalogSnapshot]]'s.
   *
   * Writes are functional (return a new Catalog) — persisting is an
   * overwrite of a tiny metadata relation, mirroring the reference's
@@ -19,36 +20,12 @@ import graft.model.{PipelineDef, PipelineTrigger}
 final case class Catalog(defs: Dataset[PipelineDef]) {
   private def spark: SparkSession = defs.sparkSession
 
-  /** D2 — prefix + tag filtered header listing. The prefix is validated
-    * against the uuid alphabet first (reference `data_provider.py:41-44`,
-    * fixed per §8.6 to accept '-'). */
+  /** D2 — prefix + tag filtered header listing (the row verb of
+    * [[CatalogSnapshot.list]] over the collected defs). */
   def list(prefix: Option[String] = None, tagTeam: Option[String] = None,
-           tagEnv: Option[String] = None): DataFrame = {
-    prefix.foreach { p =>
-      require(p.matches("^[a-z0-9-]+$"), s"invalid pipeline prefix: $p")
-    }
-    val base = defs.drop("pipeline_body")
-    val p1 = prefix.map(p => base.where(col("pipeline_uuid").startsWith(p))).getOrElse(base)
-    val p2 = tagTeam.map(t => p1.where(col("tags_team") === t)).getOrElse(p1)
-    tagEnv.map(t => p2.where(col("tags_env") === t)).getOrElse(p2)
-  }
-
-  /** D3 — point lookup, full definition. */
-  def describe(uuid: String): Dataset[PipelineDef] =
-    defs.where(col("pipeline_uuid") === uuid)
-
-  /** D4 — header-only point lookup. */
-  def head(uuid: String): DataFrame = describe(uuid).drop("pipeline_body")
-
-  /** D8 — body-only point lookup. */
-  def body(uuid: String): DataFrame =
-    defs.where(col("pipeline_uuid") === uuid).select("pipeline_uuid", "pipeline_body")
-
-  /** D1 — all defs triggering on `uuid` (reverse-edge lookup). */
-  def downstream(uuid: String, edges: Dataset[PipelineTrigger]): DataFrame =
-    defs.join(
-      edges.where(col("trigger_uuid") === uuid).select("pipeline_uuid").distinct(),
-      Seq("pipeline_uuid"), "left_semi").drop("pipeline_body")
+           tagEnv: Option[String] = None): DataFrame =
+    spark.createDataset(CatalogSnapshot(defs.collect().toVector, Vector.empty)
+      .list(prefix, tagTeam, tagEnv))(Encoders.product[PipelineDef]).drop("pipeline_body")
 
   /** D5 — upsert with referential trigger validation: every declared
     * trigger must name an existing def (left-anti must be empty). */
@@ -80,5 +57,40 @@ final case class Catalog(defs: Dataset[PipelineDef]) {
     val doomed = list(Some(prefix)).select("pipeline_uuid")
     Catalog(defs.join(doomed, Seq("pipeline_uuid"), "left_anti")
       .as[PipelineDef](Encoders.product[PipelineDef]))
+  }
+}
+
+/** The catalog as plain driver values, indexed once: defs by uuid,
+  * dispatch [[StateMachine.Meta]] per pipeline, and child edges by
+  * parent. The reference answers a read or an event with a few document
+  * lookups (`dispatcher.py:15-68`); this is the index those lookups
+  * probe, built once per catalog mutation (`GraftApi.snapshot`) instead
+  * of once per event. Every read verb here is the one implementation:
+  * the Dataset verbs wrap these rows in a local relation. */
+final case class CatalogSnapshot(defs: Vector[PipelineDef], edges: Vector[PipelineTrigger]) {
+  lazy val byUuid: Map[String, PipelineDef] = defs.map(d => d.pipeline_uuid -> d).toMap
+  lazy val metas: Map[String, StateMachine.Meta] = Dispatcher.metaMap(defs, edges)
+  lazy val childEdges: Map[String, Vector[PipelineTrigger]] = edges.groupBy(_.trigger_uuid)
+
+  /** D2 — prefix + tag filter, in catalog order. The prefix is validated
+    * against the uuid alphabet first (reference `data_provider.py:41-44`,
+    * fixed per §8.6 to accept '-'). */
+  def list(prefix: Option[String] = None, tagTeam: Option[String] = None,
+           tagEnv: Option[String] = None): Vector[PipelineDef] = {
+    prefix.foreach { p =>
+      require(p.matches("^[a-z0-9-]+$"), s"invalid pipeline prefix: $p")
+    }
+    defs.filter(d => prefix.forall(d.pipeline_uuid.startsWith) &&
+      tagTeam.forall(d.tags_team.contains) && tagEnv.forall(d.tags_env.contains))
+  }
+
+  /** D3 — point lookup, full definition (D4/D8 project it). */
+  def describe(uuid: String): Vector[PipelineDef] = byUuid.get(uuid).toVector
+
+  /** D1 — all defs triggering on `uuid` (reverse-edge lookup), in
+    * catalog order. */
+  def downstream(uuid: String): Vector[PipelineDef] = {
+    val kids = childEdges.getOrElse(uuid, Vector.empty).map(_.pipeline_uuid).toSet
+    defs.filter(d => kids(d.pipeline_uuid))
   }
 }

@@ -30,12 +30,13 @@ import graft.orchestration.StateMachine._
   * Scale: every input is bounded by the catalog, the live state or the
   * batch (the reference's regime is 10²–10⁴ pipelines, and the
   * reference itself handles an event with a few document lookups), so
-  * the step collects each input once and works on plain Scala
-  * collections: planning a Spark job costs more than the work of one
-  * event batch. The outputs are local Datasets (`LocalRelation`s), so
-  * over local inputs a step starts no Spark job at all. The Spark
-  * statement of the same rules stays in the oracle-checked query
-  * registry (`k07_concurrency_gate`, `k18_deps_satisfied`).
+  * the step is a fold over plain Scala values: the catalog index
+  * ([[CatalogSnapshot]], built once per catalog mutation), the running
+  * rows, the incubation rows and the batch. Planning a Spark query
+  * costs more than the work of one event batch. The Dataset `step`
+  * wraps the same fold for library callers. The Spark statement of the
+  * same rules stays in the oracle-checked query registry
+  * (`k07_concurrency_gate`, `k18_deps_satisfied`).
   */
 object Dispatcher {
 
@@ -61,9 +62,28 @@ object Dispatcher {
   final case class Warning(event_id: Long, pipeline_uuid: String, warning: String)
   final case class Dropped(pipeline_uuid: String, obj_id: String)
 
-  /** One step's outputs, all local Datasets. The step holds no cache
-    * or broadcast, so `cleanup` has nothing to release; callers may
-    * still call it once they are done with the outputs. */
+  /** One step's outputs as driver values — the fold's result. */
+  final case class Step(
+      submissions: Vector[Submission],
+      deferred: Vector[IncubRow],
+      newIncubating: Vector[IncubRow],
+      deadLetters: Vector[DeadLetter],
+      warnings: Vector[Warning],
+      dropped: Vector[Dropped]) {
+    /** The same outputs as local Datasets (no Spark job to read). */
+    def toResult(spark: SparkSession): StepResult = StepResult(
+      spark.createDataset(submissions)(Encoders.product[Submission]),
+      spark.createDataset(deferred)(Encoders.product[IncubRow]),
+      spark.createDataset(newIncubating)(Encoders.product[IncubRow]),
+      spark.createDataset(deadLetters)(Encoders.product[DeadLetter]).toDF(),
+      spark.createDataset(warnings)(Encoders.product[Warning]).toDF(),
+      spark.createDataset(dropped)(Encoders.product[Dropped]).toDF())
+  }
+
+  /** One step's outputs, all local Datasets — the Dataset form of
+    * [[Step]]. The step holds no cache or broadcast, so `cleanup` has
+    * nothing to release; callers may still call it once they are done
+    * with the outputs. */
   final case class StepResult(
       submissions: Dataset[Submission],
       deferred: Dataset[IncubRow],
@@ -103,6 +123,8 @@ object Dispatcher {
 
   private val Live = Set("running", "waiting", "pending")
 
+  /** The Dataset form of [[step]]: collects the inputs (catalog-sized,
+    * live-state-sized and batch-sized) and wraps the outputs. */
   def step(spark: SparkSession,
            defs: Dataset[PipelineDef],
            edges: Dataset[PipelineTrigger],
@@ -111,11 +133,22 @@ object Dispatcher {
            events: Dataset[LifecycleEvent],
            now: Timestamp,
            debounceSeconds: Long = 300L,
-           ageOutSeconds: Long = 86400L): StepResult = {
-    val defRows = defs.collect().toSeq
-    val edgeRows = edges.collect().toSeq
-    val metas = metaMap(defRows, edgeRows)
-    val evs = events.collect().toSeq.filter(_.event_type == "job_exec_update")
+           ageOutSeconds: Long = 86400L): StepResult =
+    step(CatalogSnapshot(defs.collect().toVector, edges.collect().toVector),
+      running.collect().toSeq, incubating.collect().toSeq, events.collect().toSeq,
+      now, debounceSeconds, ageOutSeconds).toResult(spark)
+
+  /** The fold: one event batch against the catalog index, the running
+    * set and the incubation state. */
+  def step(catalog: CatalogSnapshot,
+           running: Seq[RunningJob],
+           incubating: Seq[IncubRow],
+           events: Seq[LifecycleEvent],
+           now: Timestamp,
+           debounceSeconds: Long,
+           ageOutSeconds: Long): Step = {
+    val metas = catalog.metas
+    val evs = events.filter(_.event_type == "job_exec_update")
     def ofSubtype(s: String) = evs.filter(_.event_subtype == s)
 
     // -- P4: origination ---------------------------------------------------
@@ -138,9 +171,8 @@ object Dispatcher {
     // -- P2: success fan-out ----------------------------------------------
     // disable_downstream on the event suppresses triggering children
     // (field declared at runtime_models.py:13; intended semantics)
-    val childEdges = edgeRows.groupBy(_.trigger_uuid)
     val fanout = ofSubtype("success").filterNot(_.disable_downstream).flatMap { e =>
-      childEdges.getOrElse(e.pipeline_uuid, Nil).map(t => (e, t.pipeline_uuid, metas.get(t.pipeline_uuid)))
+      catalog.childEdges.getOrElse(e.pipeline_uuid, Nil).map(t => (e, t.pipeline_uuid, metas.get(t.pipeline_uuid)))
     }
     val fanoutCandidates = fanout.collect { case (e, child, Some(m)) if runnableNow(m) =>
       Candidate(child, "fanout", 0, Map(e.pipeline_uuid -> e.exec_uuid), e.event_id)
@@ -156,7 +188,7 @@ object Dispatcher {
     }
 
     // -- D13/D14/S2: incubation state per pipeline ------------------------
-    val stateByKey = incubating.collect().toSeq.groupBy(_.pipeline_uuid)
+    val stateByKey = incubating.groupBy(_.pipeline_uuid)
     val satsByKey = depSats.groupBy(_._1)
     val noMeta = Meta(None, Nil, 0, concurrency = false)
     val perKey = (stateByKey.keySet ++ satsByKey.keySet).toSeq.sorted.map { key =>
@@ -185,7 +217,7 @@ object Dispatcher {
     // checked the PRE-step running set submitted all N at once
     // (r7 review). Deterministic order: (event_id, exec_tag), no tag
     // first.
-    val live = running.collect().iterator.filter(j => Live(j.engine_status)).map(_.pipeline_uuid).toSet
+    val live = running.iterator.filter(j => Live(j.engine_status)).map(_.pipeline_uuid).toSet
     val candidates = originCandidates ++ retryCandidates ++ fanoutCandidates ++ releaseCandidates
     val firstOf = candidates.groupBy(_.pipeline_uuid).map { case (p, cs) =>
       p -> cs.minBy(c => (c.event_id, c.exec_tag.getOrElse("")))
@@ -219,12 +251,7 @@ object Dispatcher {
         now, None, "concurrency", c.retry_count, c.source_uuids)
     }
 
-    StepResult(
-      spark.createDataset(submissions)(Encoders.product[Submission]),
-      spark.createDataset(deferred)(Encoders.product[IncubRow]),
-      spark.createDataset(newIncubating)(Encoders.product[IncubRow]),
-      spark.createDataset(deadLetters)(Encoders.product[DeadLetter]).toDF(),
-      spark.createDataset(originWarnings ++ childWarnings)(Encoders.product[Warning]).toDF(),
-      spark.createDataset(dropped)(Encoders.product[Dropped]).toDF())
+    Step(submissions.toVector, deferred.toVector, newIncubating.toVector,
+      deadLetters.toVector, (originWarnings ++ childWarnings).toVector, dropped.toVector)
   }
 }

@@ -6,7 +6,6 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.concurrent.{ExecutionContext, Future}
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.model.{RunningJob, Submission}
 
@@ -42,6 +41,10 @@ trait EngineBackend {
   def abort(execUuid: String): Unit
   /** E7 — live run snapshot. */
   def jobs(spark: SparkSession): Dataset[RunningJob]
+  /** E7 as driver rows — what the concurrency gate and the running
+    * route read. Backends that keep their runs in memory override it so
+    * the read plans no query. */
+  def rows(spark: SparkSession): Seq[RunningJob] = jobs(spark).collect().toSeq
   /** E5 — tail of the run's captured log, byte-capped. */
   def logs(execUuid: String, maxKb: Int = 10): String
   /** Whether this backend recorded a user abort for the run — the
@@ -217,14 +220,16 @@ final class LocalSparkEngine(spark: SparkSession) extends EngineBackend with Run
 
   override def wasAborted(execUuid: String): Boolean = wasAbortedIn(execUuid)
 
-  def jobs(spark: SparkSession): Dataset[RunningJob] = {
+  override def rows(spark: SparkSession): Seq[RunningJob] = {
     import scala.jdk.CollectionConverters._
-    val rows = runs.asScala.map { case (id, st) =>
+    runs.asScala.map { case (id, st) =>
       RunningJob(id, st.sub.pipeline_uuid, name,
         trackingIdOf(st), st.status, Some(st.start), st.end)
     }.toSeq
-    spark.createDataset(rows)(Encoders.product[RunningJob])
   }
+
+  def jobs(spark: SparkSession): Dataset[RunningJob] =
+    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
 }
 
 /** E1/E2 — engine registry + pushed-down job filtering across engines. */
@@ -251,22 +256,28 @@ final class EngineManager(engines: Seq[EngineBackend]) {
     * endpoint fans out to every backend the same way). */
   def wasAborted(execUuid: String): Boolean = engines.exists(_.wasAborted(execUuid))
 
-  /** E2 — union of all engines' snapshots with filter/limit pushed into
-    * the plan (the reference applied these client-side). */
-  /** Typed union of every engine's live snapshot — the service's
-    * concurrency-gate refresh. Engine-state-sized (one row per
-    * tracked run), no filter/limit: this is the gate's input, not an
-    * API page. */
-  def allJobs(spark: SparkSession): Dataset[RunningJob] =
-    engines.map(_.jobs(spark)).reduce(_.unionByName(_))
+  /** Every engine's live rows — the service's concurrency-gate
+    * refresh. Engine-state-sized (one row per tracked run), no
+    * filter/limit: this is the gate's input, not an API page. */
+  def allRows(spark: SparkSession): Seq[RunningJob] = engines.flatMap(_.rows(spark))
+
+  /** E2 — the running page across engines: status and pipeline filter,
+    * `exec_uuid` order (nulls first) and limit, on the driver (the
+    * reference applied these client-side too). */
+  def filteredRows(spark: SparkSession,
+                   statuses: Seq[String] = Nil,
+                   pipelineUuid: Option[String] = None,
+                   limit: Int = 10): Seq[RunningJob] =
+    allRows(spark)
+      .filter(j => (statuses.isEmpty || statuses.contains(j.engine_status)) &&
+        pipelineUuid.forall(_ == j.pipeline_uuid))
+      .sortBy(j => Option(j.exec_uuid))
+      .take(limit)
 
   def filteredJobs(spark: SparkSession,
                    statuses: Seq[String] = Nil,
                    pipelineUuid: Option[String] = None,
-                   limit: Int = 10): DataFrame = {
-    var df = engines.map(_.jobs(spark).toDF()).reduce(_.unionByName(_))
-    if (statuses.nonEmpty) df = df.where(col("engine_status").isin(statuses: _*))
-    pipelineUuid.foreach(u => df = df.where(col("pipeline_uuid") === u))
-    df.orderBy("exec_uuid").limit(limit)
-  }
+                   limit: Int = 10): DataFrame =
+    spark.createDataset(filteredRows(spark, statuses, pipelineUuid, limit))(
+      Encoders.product[RunningJob]).toDF()
 }

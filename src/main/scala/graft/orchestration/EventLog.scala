@@ -14,7 +14,9 @@ import graft.model.LifecycleEvent
   * D9 (save) is the service's flat, unpartitioned parquet append under
   * `service-state/events`, one batch per dispatch, with `received_time`
   * stamped at ingest (`GraftService`'s eventSink); this object holds
-  * the read side (D10). The reference's flush (D11) is not served.
+  * the read side (D10): [[history]] over the whole log, and
+  * [[historyRows]] over the driver-held [[EventTail]]. The reference's
+  * flush (D11) is not served.
   */
 object EventLog {
 
@@ -38,4 +40,82 @@ object EventLog {
     eventSubtype.foreach(v => q = q.where(col("event_subtype") === v))
     q.orderBy(col("received_time").desc, col("event_id").desc).limit(maxRecords)
   }
+
+  /** D10 over driver rows: the same window (`received_time` at or after
+    * the cutoff), pipeline filter, newest-first order and limit as
+    * [[history]]. */
+  def historyRows(events: Seq[LifecycleEvent], cutoffMs: Long,
+                  pipelineUuid: Option[String], maxRecords: Int): Seq[LifecycleEvent] =
+    events
+      .filter(e => e.received_time != null && e.received_time.getTime >= cutoffMs &&
+        pipelineUuid.forall(_ == e.pipeline_uuid))
+      .sortWith { (a, b) =>
+        val c = a.received_time.compareTo(b.received_time)
+        if (c != 0) c > 0 else a.event_id > b.event_id
+      }
+      .take(maxRecords)
+}
+
+/** The recent end of the event log, held on the driver so that a
+  * history read plans no query. It holds every event this incarnation
+  * logged whose `received_time` is within `keepSeconds` of the newest
+  * one. The coverage floor is the highest `received_time` of any logged
+  * event it does NOT hold (trimmed here, or written by an earlier
+  * incarnation and raised by the restore): a window whose cutoff is
+  * above the floor has every one of its events here. The floor goes by
+  * the events' own stamps, not the wall clock, because a request may
+  * stamp any time (`now_epoch_ms`). */
+final class EventTail(keepSeconds: Long) {
+  private var held = Vector.empty[LifecycleEvent]
+  private var newestMs = Long.MinValue
+  private var floorMs = Long.MinValue
+
+  def append(events: Seq[LifecycleEvent]): Unit = synchronized {
+    val stamped = events.filter(_.received_time != null)
+    held ++= stamped
+    stamped.foreach(e => newestMs = math.max(newestMs, e.received_time.getTime))
+    val keepFrom = newestMs - keepSeconds * 1000L
+    if (held.exists(_.received_time.getTime < keepFrom)) {
+      val (old, kept) = held.partition(_.received_time.getTime < keepFrom)
+      floorMs = math.max(floorMs, old.map(_.received_time.getTime).max)
+      held = kept
+    }
+  }
+
+  /** Events held elsewhere, up to this stamp, are not here. */
+  def raiseFloor(ms: Long): Unit = synchronized { floorMs = math.max(floorMs, ms) }
+
+  /** D10 from the held rows when the window is covered; None sends the
+    * read to the whole log. */
+  def history(cutoffMs: Long, pipelineUuid: Option[String],
+              maxRecords: Int): Option[Seq[LifecycleEvent]] = {
+    val (rows, floor) = synchronized((held, floorMs))
+    if (cutoffMs > floor) Some(EventLog.historyRows(rows, cutoffMs, pipelineUuid, maxRecords))
+    else None
+  }
+}
+
+/** Logged event ids by `received_time`, within `horizonMs` of the newest
+  * stamp: the MQ replay probe (an id logged at or after the probe's
+  * cutoff was already applied). Restored from the parquet log at start,
+  * then updated with every append. */
+final class LoggedIds(horizonMs: Long) {
+  private val stampOf = scala.collection.mutable.HashMap.empty[Long, Long]
+  private val arrivals = scala.collection.mutable.Queue.empty[(Long, Long)]
+  private var newestMs = Long.MinValue
+
+  def add(ids: Seq[(Long, Long)]): Unit = synchronized {
+    ids.foreach { case (id, ms) =>
+      stampOf(id) = math.max(ms, stampOf.getOrElse(id, Long.MinValue))
+      arrivals += ((id, ms))
+      newestMs = math.max(newestMs, ms)
+    }
+    while (arrivals.nonEmpty && arrivals.head._2 < newestMs - horizonMs) {
+      val (id, ms) = arrivals.dequeue()
+      if (stampOf.get(id).contains(ms)) stampOf.remove(id)
+    }
+  }
+
+  def seenSince(id: Long, cutoffMs: Long): Boolean =
+    synchronized(stampOf.get(id).exists(_ >= cutoffMs))
 }

@@ -282,12 +282,13 @@ final class K8sPodEngine(cfg: K8sPodEngine.K8sConfig, api: PodApi)
       .foreach(st => api.delete(cfg.namespace, st.pod.metadata.name))
   }
 
-  def jobs(spark: SparkSession): Dataset[RunningJob] = {
-    val rows = api.list(cfg.namespace)
+  override def rows(spark: SparkSession): Seq[RunningJob] =
+    api.list(cfg.namespace)
       .filter(_.pod.metadata.labels.contains("pipeline_uuid")) // engine.py:177-179
       .map(unmarshalPod(name, _))
-    spark.createDataset(rows)(Encoders.product[RunningJob])
-  }
+
+  def jobs(spark: SparkSession): Dataset[RunningJob] =
+    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
 
   def logs(execUuid: String, maxKb: Int): String = {
     val byExec = api.list(cfg.namespace)

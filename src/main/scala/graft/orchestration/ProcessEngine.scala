@@ -117,14 +117,16 @@ final class ProcessEngine extends EngineBackend with RunRegistry {
 
   override def wasAborted(execUuid: String): Boolean = wasAbortedIn(execUuid)
 
-  def jobs(spark: SparkSession): Dataset[RunningJob] = {
+  override def rows(spark: SparkSession): Seq[RunningJob] = {
     import scala.jdk.CollectionConverters._
-    val rows = runs.asScala.map { case (id, st) =>
+    runs.asScala.map { case (id, st) =>
       RunningJob(id, st.sub.pipeline_uuid, name, st.trackingId, st.status,
         Some(st.start), st.end)
     }.toSeq
-    spark.createDataset(rows)(Encoders.product[RunningJob])
   }
+
+  def jobs(spark: SparkSession): Dataset[RunningJob] =
+    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
 }
 
 object ProcessEngine {

@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
 
 import graft.model.LifecycleEvent
 
@@ -10,76 +9,18 @@ import graft.model.LifecycleEvent
   * `/root/reference/src/kalytical/core/mq_poller.py:16-40`) as a
   * Structured Streaming source.
   *
-  * The poller's unmarshal-or-log step (`_unmarshall_sqs`,
-  * `mq_poller.py:31-36`) becomes `from_json` with a corrupt-record
-  * column: malformed messages are split into a quarantine stream
-  * instead of being dropped (the reference's committed code deletes at
-  * most one message per poll and even on failure — §8.17; intended
-  * at-least-once semantics come free from checkpointed source offsets).
-  *
-  * Any streaming source of JSON strings works: the service parses each
-  * `http-mq` micro-batch with [[parse]] (a Kafka topic in production).
+  * The service reads each `http-mq` micro-batch (a Kafka topic in
+  * production) as raw JSON strings, and the poller's unmarshal-or-log
+  * step (`_unmarshall_sqs`, `mq_poller.py:31-36`) is the facade's
+  * driver-side codec ([[graft.api.JsonCodec.messages]]): the same
+  * decoding rules as an HTTP event body, with the messages it rejects
+  * kept in a quarantine instead of being dropped (the reference's
+  * committed code deletes at most one message per poll and even on
+  * failure — §8.17; intended at-least-once semantics come free from
+  * checkpointed source offsets).
   */
 object EventIngest {
 
+  /** The lifecycle event's row schema: what a message decodes to. */
   val eventSchema: StructType = Encoders.product[LifecycleEvent].schema
-
-  /** Schema used while parsing: event fields + corrupt capture. */
-  private val parseSchema: StructType =
-    StructType(eventSchema.fields :+ StructField("_corrupt", StringType, nullable = true))
-
-  final case class Parsed(events: Dataset[LifecycleEvent], corrupt: DataFrame)
-
-  /** Parse a stream (or batch) of raw JSON strings into typed events +
-    * a quarantine of malformed lines. */
-  def parse(raw: DataFrame, jsonCol: String = "value"): Parsed = {
-    val spark = raw.sparkSession
-    import spark.implicits._
-    val parsed = raw.select(
-      col(jsonCol).as("_raw"),
-      from_json(col(jsonCol), parseSchema,
-        Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt")).as("e"))
-    // event_id < 0 is INVALID from an external producer: the negative
-    // id half-space is reserved for the engine's own callback events
-    // (GraftService.callbackIds), which is what lets the ingress dedup
-    // key on the bare id without a producer ever aliasing a logged
-    // callback (r8 advice). Enforced here, not just documented: a
-    // negative external id goes to quarantine like any malformed line.
-    //
-    // Dispatch-critical fields must be present (r12 review): a
-    // well-formed JSON object missing one parses clean (PERMISSIVE mode
-    // leaves the field null) but then poisons the stream downstream —
-    // `.as[LifecycleEvent]` throws "Null value appeared in non-nullable
-    // field" on the primitive slots, and because the offset is already
-    // checkpointed the same message replays on every restart: a
-    // permanent crash loop that quarantine exists to prevent. Subtype
-    // and pipeline_uuid are the dispatch keys — null routes nowhere.
-    //
-    // But the reference protocol declares retry_count and
-    // disable_downstream OPTIONAL with defaults (`runtime_models.py:11-12`:
-    // `retry_count: int = 0`, `disable_downstream: Optional[bool] =
-    // False`) — a spec-compliant producer omits them, and quarantining
-    // such events would silently halt dispatch for every conforming
-    // client (r12 ADVICE, medium). So the defaultable fields are
-    // COALESCED to the reference defaults in the good-side projection;
-    // quarantine is reserved for the genuinely required keys.
-    val required = Seq("event_id", "event_subtype", "pipeline_uuid")
-    val defaulted: Map[String, org.apache.spark.sql.Column] = Map(
-      "retry_count" -> lit(0),
-      "disable_downstream" -> lit(false))
-    val complete = required.map(f => col(s"e.$f").isNotNull).reduce(_ && _)
-    val good = parsed
-      .where(col("e").isNotNull && col("e._corrupt").isNull &&
-        complete && col("e.event_id") >= 0)
-      .select(eventSchema.fieldNames.map { f =>
-        defaulted.get(f).map(d => coalesce(col(s"e.$f"), d).as(f))
-          .getOrElse(col(s"e.$f"))
-      }: _*)
-      .as[LifecycleEvent]
-    val bad = parsed
-      .where(col("e").isNull || col("e._corrupt").isNotNull ||
-        !complete || col("e.event_id") < 0)
-      .select(col("_raw"))
-    Parsed(good, bad)
-  }
 }

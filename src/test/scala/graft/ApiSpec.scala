@@ -3,11 +3,10 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 
-import graft.api.{GraftApi, MetaStore, ParquetMetaStore}
+import graft.api.{GraftApi, JsonCodec, MetaStore, ParquetMetaStore}
 import graft.meta.Fixtures
 import graft.model._
 import graft.orchestration.{Catalog, Dispatcher, EngineManager, LocalSparkEngine}
-import graft.streaming.EventIngest
 
 /** Facade-verb surface (18 endpoints → GraftApi), MetaStore factory,
   * ingest parsing, retry semantics. */
@@ -136,11 +135,10 @@ class ApiSpec extends AnyFunSuite {
       "pipeline_uuid": "clean-orders", "exec_uuid": "e-7", "event_time": "2024-01-31T23:00:00Z",
       "received_time": "2024-01-31T23:00:05Z", "retry_count": 0, "disable_downstream": false}"""
       .replaceAll("\n\\s*", " ")
-    val raw = Seq(good, """{"event_id": "not json""", "garbage").toDF("value")
-    val parsed = EventIngest.parse(raw)
-    val evs = parsed.events.collect()
+    val (evs, corrupt) = JsonCodec.forSession(spark)
+      .messages(Seq(good, """{"event_id": "not json""", "garbage"))
     assert(evs.length == 1 && evs.head.pipeline_uuid == "clean-orders" && evs.head.event_id == 7)
-    assert(parsed.corrupt.count() == 2)
+    assert(corrupt.size == 2)
   }
 
   test("retry rethrows after exhausting attempts (deviation §8.21)") {

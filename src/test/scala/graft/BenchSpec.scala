@@ -187,6 +187,27 @@ class BenchSpec extends AnyFunSuite {
       s"the stdout summary must count the failure: $summary")
   }
 
+  test("run(): a warm pass still running at the budget writes the artifact, unfinished rows under errors, then fails") {
+    val out = SparkSuite.tempDir("benchwarmbudget")
+    val rows = Seq("k01_table_counts", "k04_point_lookup")
+    val e = intercept[IllegalStateException] {
+      runBench(out, "SPARK_GRAFT_SF_DIR" -> SparkSuite.sfDir,
+        "SPARK_GRAFT_BENCH_ONLY" -> rows.mkString(","),
+        "SPARK_GRAFT_BENCH_REPS" -> "1",
+        "SPARK_GRAFT_BENCH_BUDGET_S" -> "0.001")
+    }
+    assert(e.getMessage.contains("warm pass still running"), e.getMessage)
+    val a = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(out, "BENCH_FOCUS.json")), "UTF-8")
+    assert(a.contains("\"reps_completed\":0") && a.contains("\"queries\":{}"), a.take(400))
+    val unfinished = rows.filter(q =>
+      ("\"errors\":\\{[^}]*\"" + q + "\":\"warm pass still running").r.findFirstIn(a).isDefined)
+    assert(unfinished.nonEmpty, s"the unfinished rows must be recorded under errors: $a")
+    assert(rows.forall(q => unfinished.contains(q) ||
+      ("\"warm_runs\":\\{[^}]*\"" + q + "\":[0-9.]+").r.findFirstIn(a).isDefined),
+      s"every row is either finished (warm_runs) or under errors: $a")
+  }
+
   test("Bench reads exactly five SPARK_GRAFT_ knobs") {
     // drift guard: a knob only a spec sets is an option no deployed run
     // uses; the bench's inputs are these five

@@ -5,7 +5,12 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.api.{Auth, GraftApi, HttpFacade, SecuredGraftApi}
+import graft.meta.Fixtures
+import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
 
 /** Drift guard: one dispatcher. Every ingress (HTTP, MQ poll, culler
   * and cron ticks) reaches `GraftApi.dispatch` → `Dispatcher.step`, and
@@ -13,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * A second caller of either is a second dispatcher whose routing and
   * concurrency gate drift from the real one, so it fails here. The
   * same holds for streaming: MQ ingest in `GraftService` is the one
-  * streaming query main code starts. */
+  * streaming query main code starts. And the control plane runs on the
+  * driver: an event POST and the read routes start no Spark job. */
 class DispatcherGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src", "main", "scala")
 
@@ -43,5 +49,55 @@ class DispatcherGuardSpec extends AnyFunSuite {
   test("writeStream is started only from GraftService.scala (MQ ingest)") {
     assert(callers("""\.writeStream\b""".r) ==
       Seq(Paths.get("graft", "api", "GraftService.scala").toString))
+  }
+
+  test("HttpFacade.scala parses and answers without Spark (no spark.read, no toJSON)") {
+    val src = new String(Files.readAllBytes(
+      root.resolve(Paths.get("graft", "api", "HttpFacade.scala"))), StandardCharsets.UTF_8)
+    assert(!src.contains("spark.read") && !src.contains("toJSON"))
+  }
+
+  test("standalone facade: an origination, its success and the describe/running/history reads start no Spark job") {
+    val spark = SparkSuite.spark
+    val admin = "admin-token"
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val facade = new HttpFacade(new SecuredGraftApi(api, new Auth.Policy(
+      new Auth.StaticTokenVerifier(Map(admin -> Seq("Data-Admin"))), apiTokens = Set.empty)), spark)
+    val base = s"http://127.0.0.1:${facade.start(0).getPort}"
+    val client = java.net.http.HttpClient.newHttpClient()
+    def call(method: String, path: String, body: String = ""): String = {
+      val res = client.send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
+        .method(method, if (body.isEmpty) java.net.http.HttpRequest.BodyPublishers.noBody()
+          else java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .header("Authorization", s"Bearer $admin").build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode() == 200, s"$method $path -> ${res.body()}")
+      res.body()
+    }
+    def event(id: Long, subtype: String) =
+      s"""{"event_id":$id,"event_type":"job_exec_update","event_subtype":"$subtype",""" +
+        s""""pipeline_uuid":"ingest-orders","exec_uuid":"exec-ingest-orders-$id",""" +
+        """"retry_count":0,"disable_downstream":false}"""
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
+    }
+    Bench.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(call("POST", "/pipeline/dispatcher/event", event(9100, "origination"))
+        .contains("\"ingest-orders\""))
+      call("POST", "/pipeline/dispatcher/event", event(9101, "success"))
+      assert(call("GET", "/pipeline/config/describe?pipeline_uuid=ingest-orders").contains("ingest-orders"))
+      call("GET", "/pipeline/dispatcher/running?statuses=success,failed")
+      assert(call("GET", "/pipeline/dispatcher/event/history?pipeline_uuid=ingest-orders")
+        .contains("exec-ingest-orders-9101"))
+      Bench.drainListenerBus(spark)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      facade.stop()
+    }
+    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs on the control plane")
   }
 }

@@ -718,6 +718,47 @@ class GraftServiceSpec extends AnyFunSuite {
     }
   }
 
+  test("MQ dedup after a restart: a replayed batch inside the horizon is a no-op") {
+    import org.apache.spark.sql.functions.col
+    // the replay a checkpoint rewind delivers: the same batch, probed by
+    // the next incarnation against the ids it read back from the log
+    val ckpt = SparkSuite.tempDir("svc-dedup-ckpt")
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def mkService(): GraftService = {
+      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+        Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+        GraftConfig.default)
+      val policy = new Auth.Policy(
+        new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
+      new GraftService(new SecuredGraftApi(api, policy), spark,
+        mqEndpoint = None, checkpointRoot = ckpt,
+        jobFactory = Some((_, sub) => { fired.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }))
+    }
+    def cutoff(now: Timestamp) =
+      new Timestamp(now.getTime - GraftConfig.default.mqDedupHorizonDays * 86400000L)
+    val batch = Seq(success(61, "x").copy(event_subtype = "origination", pipeline_uuid = "report-weekly"))
+    val a = mkService()
+    try {
+      a.start(0)
+      val now = new Timestamp(System.currentTimeMillis())
+      assert(a.facade.ingestDedup(batch.map(_.copy(received_time = now)), now, cutoff(now)).size == 1)
+    } finally a.shutdown()
+    assert(fired.asScala.toSeq == Seq("report-weekly"))
+
+    val b = mkService()
+    try {
+      b.start(0)
+      val now = new Timestamp(System.currentTimeMillis())
+      val marker = success(62, "x").copy(event_subtype = "origination", pipeline_uuid = "stream-metrics")
+      val fresh = b.facade.ingestDedup((batch :+ marker).map(_.copy(received_time = now)), now, cutoff(now))
+      assert(fresh.map(_.event_id) == Seq(62L), s"the replayed id must be dropped: $fresh")
+      poll("marker dispatched")(fired.contains("stream-metrics"))
+      assert(fired.asScala.count(_ == "report-weekly") == 1, s"a replay must not re-dispatch: $fired")
+      assert(b.facade.eventLog.get().where(col("event_id") === 61L).count() == 1,
+        "a replay must not duplicate history rows")
+    } finally b.shutdown()
+  }
+
   test("cron tick: a due schedule originates and submits through the same path, at most once per minute") {
     val ran = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     // fixed clock at a minute matching ingest-orders' '0 0 * * *'

@@ -137,6 +137,17 @@ class HttpFacadeSpec extends AnyFunSuite {
         "{}").statusCode() == 400)
       assert(call(base, "GET", "/pipeline/incubation/update?obj_id=x", Some(Admin),
         "][").statusCode() == 400)
+      // an event body that omits the reference's optional fields is not
+      // malformed: retry_count defaults to 0 and disable_downstream to
+      // false, as on the MQ ingress (it was a 400 while bodies parsed
+      // through Spark's reader); one missing a dispatch key still is
+      val now = Fixtures.NOW.getTime
+      val bare = """{"event_id":950,"event_type":"job_exec_update",""" +
+        """"event_subtype":"origination","pipeline_uuid":"ingest-orders"}"""
+      val r = call(base, "POST", s"/pipeline/dispatcher/event?now_epoch_ms=$now", Some(Admin), bare)
+      assert(r.statusCode() == 200 && r.body().contains("\"ingest-orders\""), r.body())
+      assert(call(base, "POST", s"/pipeline/dispatcher/event?now_epoch_ms=$now", Some(Admin),
+        bare.replace(""","pipeline_uuid":"ingest-orders"""", "")).statusCode() == 400)
     }
   }
 

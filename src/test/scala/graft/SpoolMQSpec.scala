@@ -89,9 +89,7 @@ class SpoolMQSpec extends AnyFunSuite {
   }
 
   test("ingest defaults optional fields and quarantines only missing dispatch keys (r12 review + r12 advice)") {
-    import spark.implicits._
-    // well-formed JSON, MISSING primitives: PERMISSIVE from_json leaves
-    // them null. The reference protocol (runtime_models.py:11-12)
+    // well-formed JSON, MISSING primitives. The reference protocol (runtime_models.py:11-12)
     // declares retry_count/disable_downstream OPTIONAL with defaults
     // (0 / false) — a spec-compliant producer omits them, so the good
     // side must COALESCE them (r12 ADVICE: the first fix quarantined
@@ -112,12 +110,12 @@ class SpoolMQSpec extends AnyFunSuite {
       "event_time": "2024-01-31T23:00:00Z", "received_time": "2024-01-31T23:00:05Z",
       "retry_count": 0, "disable_downstream": false}""".replaceAll("\n\\s*", " ")
     val goodLine = ev(43, "origination", "ok-pipeline")
-    val parsed = graft.streaming.EventIngest.parse(
-      Seq(missingRetry, missingDd, missingPipeline, goodLine).toDF("value"))
+    val (decoded, rejected) = graft.api.JsonCodec.forSession(spark)
+      .messages(Seq(missingRetry, missingDd, missingPipeline, goodLine))
     // good side: the complete event AND the two defaultable omissions,
     // all DESERIALIZING (the poison vector was exactly this collect
     // throwing on null primitive slots) with reference defaults applied
-    val good = parsed.events.collect().sortBy(_.event_id)
+    val good = decoded.sortBy(_.event_id)
     assert(good.map(_.event_id).toSeq == Seq(40L, 41L, 43L), s"good side: ${good.toSeq}")
     val byId = good.map(e => e.event_id -> e).toMap
     assert(byId(40L).retry_count == 0 && !byId(40L).disable_downstream,
@@ -125,7 +123,7 @@ class SpoolMQSpec extends AnyFunSuite {
     assert(byId(41L).retry_count == 0 && !byId(41L).disable_downstream,
       "omitted disable_downstream must default to false (runtime_models.py:12)")
     // quarantine side: only the line missing a genuine dispatch key
-    val bad = parsed.corrupt.as[String].collect().toSet
+    val bad = rejected.toSet
     assert(bad == Set(missingPipeline), s"quarantine: $bad")
   }
 
