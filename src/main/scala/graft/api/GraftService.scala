@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 
 import scala.concurrent.duration._
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -14,7 +15,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
 import graft.orchestration.{Cron, EngineJob, EngineManager, LocalSparkEngine}
-import graft.orchestration.Dispatcher.IncubRow
 
 /** THE deployable process — the reference's service wiring
   * (`/root/reference/src/kalytical/facade.py:138-150`: one asyncio
@@ -79,7 +79,7 @@ final class GraftService(
     cronCheckInterval: FiniteDuration = 5.seconds, // fires once per due minute
     nowProvider: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
 
-  import GraftService.{EventEnc, IncubEnc}
+  import GraftService.EventEnc
 
   private val api = secured.api
   val facade = new HttpFacade(secured, spark, nowProvider,
@@ -98,25 +98,56 @@ final class GraftService(
 
   /** Bind, start every loop, return the HTTP address. */
   def start(port: Int = 0): InetSocketAddress = synchronized {
-    restoreState()
+    recover()
     // the deployable session serves spark.sql users too: scalar
     // kernels + the graft()/graft_* table functions
     graft.plans.GraftFunctions.register(spark)
     graft.plans.GraftSql.register(spark)
-    // engine submission behind the facade's single dispatch path: an
-    // HTTP-posted event, an MQ message, a culler release and a cron
-    // firing all submit through here. persistState after every
-    // mutation = the reference's Mongo durability (every dispatch
-    // leaves restartable state on disk; a step that left the rows as
-    // they were writes nothing).
+    val addr = facade.start(port)
+
+    mqQuery = mqEndpoint.map(startMqIngest)
+
+    scheduler = Executors.newSingleThreadScheduledExecutor { r =>
+      val t = new Thread(r, "graft-service-ticks"); t.setDaemon(true); t
+    }
+    scheduler.scheduleWithFixedDelay(() => safely("cull") { cullTick() },
+      cfg.cullingIntervalSeconds, cfg.cullingIntervalSeconds, TimeUnit.SECONDS)
+    scheduler.scheduleWithFixedDelay(() => safely("cron") { cronTick() },
+      cronCheckInterval.toMillis, cronCheckInterval.toMillis, TimeUnit.MILLISECONDS)
+    // MQ WATCHDOG (r12 review): one exception escaping the event path
+    // of foreachBatch (a failed journal write, a transient FS error)
+    // permanently TERMINATES the
+    // ingest query while the HTTP surface keeps answering — events
+    // then pile up at the broker until an operator bounces the whole
+    // process. The reference's poller loop log-and-continues
+    // (mq_poller.py:27); the streaming analog is restart-from-
+    // checkpoint: offsets resume where the dead incarnation committed,
+    // and the at-least-once window a mid-batch death opens is exactly
+    // the one the event-id dedup already bounds. The watchdog runs on
+    // the tick scheduler, which shutdown() quiesces BEFORE draining
+    // the query — so a restart can never race the drain.
+    scheduler.scheduleWithFixedDelay(() => safely("mq-watch") { mqWatchTick() },
+      10, 10, TimeUnit.SECONDS)
+
+    shutdownHook = new Thread(() => shutdown(), "graft-service-sigint")
+    Runtime.getRuntime.addShutdownHook(shutdownHook) // the SIGINT handler analog
+    addr
+  }
+
+  /** Restore the durable state and wire the facade to it: every
+    * mutation commits to the journal before it takes effect (the
+    * reference's Mongo durability), and engine submission rides the
+    * facade's single dispatch path — an HTTP-posted event, an MQ
+    * message, a culler release and a cron firing all submit through
+    * here. The runs the journal holds open are submitted once more. */
+  private[graft] def recover(): Unit = {
+    restoreState()
+    facade.commitHook.set(commit)
     facade.submissionSink.set { subs =>
       submitAll(subs)
+      fault("after-submit")
       facade.refreshRunning()
-      persistState()
     }
-    // non-dispatch incubation mutations (point update/delete/flush)
-    // persist too — a restart must not resurrect deleted rows
-    facade.mutationHook.set(() => persistState())
     // catalog mutations persist through the MetaStore when configured.
     // A mutated catalog is a plan over the previous one, so saving it
     // lazily could overwrite files it still reads (FAILED_READ_FILE) —
@@ -140,43 +171,11 @@ final class GraftService(
         api.edges = edgesLocal
       }
     }
-    // event history appends INCREMENTALLY (one batch per dispatch) —
-    // rewriting the full log per dispatch would be quadratic lifetime
-    // I/O; the in-memory log swaps to the files-backed view after each
-    // append, so its lineage stays flat too
-    facade.eventSink.set { events =>
-      spark.createDataset(events)(EventEnc).write.mode("append").parquet(eventsDir)
-      facade.eventLog.set(readEvents())
+    val open = journal.open
+    if (open.nonEmpty) {
+      submitAll(open)
+      facade.refreshRunning()
     }
-    val addr = facade.start(port)
-
-    mqQuery = mqEndpoint.map(startMqIngest)
-
-    scheduler = Executors.newSingleThreadScheduledExecutor { r =>
-      val t = new Thread(r, "graft-service-ticks"); t.setDaemon(true); t
-    }
-    scheduler.scheduleWithFixedDelay(() => safely("cull") { cullTick() },
-      cfg.cullingIntervalSeconds, cfg.cullingIntervalSeconds, TimeUnit.SECONDS)
-    scheduler.scheduleWithFixedDelay(() => safely("cron") { cronTick() },
-      cronCheckInterval.toMillis, cronCheckInterval.toMillis, TimeUnit.MILLISECONDS)
-    // MQ WATCHDOG (r12 review): one exception escaping the event path
-    // of foreachBatch (a failed persistState parquet write, a transient
-    // FS error in the durable log append) permanently TERMINATES the
-    // ingest query while the HTTP surface keeps answering — events
-    // then pile up at the broker until an operator bounces the whole
-    // process. The reference's poller loop log-and-continues
-    // (mq_poller.py:27); the streaming analog is restart-from-
-    // checkpoint: offsets resume where the dead incarnation committed,
-    // and the at-least-once window a mid-batch death opens is exactly
-    // the one the event-id dedup already bounds. The watchdog runs on
-    // the tick scheduler, which shutdown() quiesces BEFORE draining
-    // the query — so a restart can never race the drain.
-    scheduler.scheduleWithFixedDelay(() => safely("mq-watch") { mqWatchTick() },
-      10, 10, TimeUnit.SECONDS)
-
-    shutdownHook = new Thread(() => shutdown(), "graft-service-sigint")
-    Runtime.getRuntime.addShutdownHook(shutdownHook) // the SIGINT handler analog
-    addr
   }
 
   // Restart-loop discipline (r12 advice): an unconditional 10 s restart
@@ -388,123 +387,127 @@ final class GraftService(
   }
 
   // ---- durable service state -------------------------------------------
-  // The reference keeps incubating runs + event history in MongoDB, so
-  // its process restarts resume mid-lifecycle (an incubating child's
-  // first satisfied dep survives). The Spark analog, shaped by growth
-  // class:
-  //  - INCUBATING (catalog-bounded): the state is the facade's driver
-  //    rows; after every mutation, when they differ from the committed
-  //    generation they are written to ping-pong parquet dirs (A/B with
-  //    an atomically-moved _CURRENT marker — a crash mid-write leaves
-  //    the previous generation intact). Nothing reads the files but a
-  //    restart, so the next overwrite of a generation cannot pull them
-  //    from under a reader.
-  //  - EVENT HISTORY (unbounded append-only): each accepted batch
-  //    APPENDS to one parquet dir via the facade's eventSink —
-  //    rewriting the full log per dispatch would be quadratic lifetime
-  //    I/O (r7 review #3). A restart reads back the ids within the MQ
-  //    dedup horizon and raises the history tail's coverage floor
-  //    past every restored row.
-  //  - CRON high-water minute: a tiny marker file, so a restart inside
-  //    an already-fired minute does not double-fire its schedules.
+  // The reference keeps incubating runs + event history in MongoDB, one
+  // document write per change, so its process restarts resume
+  // mid-lifecycle (an incubating child's first satisfied dep survives).
+  // Here the state is the facade's driver values, made durable by ONE
+  // journal under `service-state/journal` ([[Journal]]): each step
+  // commits one hsync'd JSON line — its events, its incubation delta
+  // and its submissions (the outbox) — before any of it takes effect.
+  // An MQ batch is one step, so the batch commits together. A restart
+  // replays the last snapshot and the segments after it: the
+  // incubation rows, the logged ids (the MQ replay probe), the history
+  // tail's coverage floor and the uncompacted events, the cron
+  // high-water minute, and the outbox, whose still-open runs are
+  // submitted once more (an engine whose runs outlive the process
+  // dedups by exec_uuid). A fresh root costs one existence probe. The culler tick compacts: closed
+  // segments' events go to the parquet history under
+  // `service-state/events` (one file per segment, so a re-run replaces
+  // its own file), then a snapshot replaces the segments.
 
   private def stateRoot = s"$checkpointRoot/service-state"
   private def eventsDir = s"$stateRoot/events"
-  // markers go through the HADOOP filesystem of checkpointRoot, like
-  // the parquet state and the MQ runToken beside them (r12 review: the
-  // old java.nio paths silently resolved "hdfs://..." to a LOCAL
-  // directory literally named "hdfs:", so on a cluster checkpoint root
-  // the parquet snapshots landed on the cluster FS while _CURRENT /
-  // _CRON_MINUTE stayed on one machine's local disk — a restart on
-  // another host found no marker, silently skipped the incubating
-  // restore (deleted-row resurrection) and re-fired the cron minute).
-  private def hadoopFs(p: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.FileSystem =
+  // the HADOOP filesystem of checkpointRoot, like the MQ runToken beside
+  // it (r12 review: java.nio paths silently resolved "hdfs://..." to a
+  // LOCAL directory literally named "hdfs:")
+  private def hadoopFs(p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
-  private def markerPath = new org.apache.hadoop.fs.Path(stateRoot, "_CURRENT")
-  private def cronMarkerPath = new org.apache.hadoop.fs.Path(stateRoot, "_CRON_MINUTE")
 
-  private def readMarker(p: org.apache.hadoop.fs.Path): Option[String] = {
-    val fs = hadoopFs(p)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(
-        org.apache.commons.io.IOUtils.toByteArray(in),
-        java.nio.charset.StandardCharsets.UTF_8).trim)
-      finally in.close()
+  /** Test seam: called at each durable boundary (before and after the
+    * journal write, after submission, mid-compaction); a throw there is
+    * a crash at that point. */
+  @volatile private[graft] var fault: String => Unit = _ => ()
+
+  private[graft] lazy val journal =
+    new Journal(stateRoot, spark.sessionState.newHadoopConf(), facade.codec, fault(_))
+
+  private def commit(c: HttpFacade.Commit): Unit = {
+    fault("before-journal")
+    // an abort closes the open runs the engines now report aborted
+    val aborted = c.aborted.fold(Seq.empty[String])(_ =>
+      journal.open.map(_.exec_uuid).filter(api.engines.wasAborted))
+    journal.commit(c.events, c.rows, c.submissions, aborted)
+    fault("after-journal")
+  }
+
+  /** Close the open runs the engines report ended: a run whose job
+    * posts no callback would otherwise be resubmitted by every restart. */
+  private def settle(): Unit = {
+    val open = journal.open
+    if (open.nonEmpty) {
+      val ended = api.engines.allRows(spark)
+        .collect { case j if !GraftService.Live(j.engine_status) => j.exec_uuid }.toSet
+      val closed = open.map(_.exec_uuid).filter(ended)
+      if (closed.nonEmpty)
+        facade.locked(journal.commit(Nil, facade.incubating.rows, Nil, closed))
     }
   }
 
-  private def currentGen: Option[String] = readMarker(markerPath)
-
-  private def writeAtomic(target: org.apache.hadoop.fs.Path, content: String): Unit = {
-    val fs = hadoopFs(target)
-    val tmp = new org.apache.hadoop.fs.Path(stateRoot,
-      s"${target.getName}.tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // rename is the commit primitive (atomic on HDFS/POSIX — the
-    // ScaleOps.writeCuratedAtomic convention, same object-store caveat)
-    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri,
-        spark.sessionState.newHadoopConf())
-      .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  private def ensureStateRoot(): Unit = {
-    val p = new org.apache.hadoop.fs.Path(stateRoot)
-    hadoopFs(p).mkdirs(p)
-    ()
-  }
-
-  // the rows of the committed generation (empty before the first
-  // one): persistState writes a new generation only when they change,
-  // compared as a multiset (the per-key fold may reorder kept rows)
-  @volatile private var persistedRows: Seq[IncubRow] = Seq.empty
-
-  private[graft] def persistState(): Unit = {
-    val rows = facade.incubating.rows
-    if (rows.size != persistedRows.size || rows.diff(persistedRows).nonEmpty) {
-      ensureStateRoot()
-      val next = if (currentGen.contains("a")) "b" else "a"
-      spark.createDataset(rows)(IncubEnc).write.mode("overwrite")
-        .parquet(s"$stateRoot/$next/incubating")
-      writeAtomic(markerPath, next)
-      persistedRows = rows
+  /** Compaction (the culler tick): roll the segment, move the closed
+    * segments' events to the parquet history, snapshot the state they
+    * leave, delete them. Each step is safe to re-run after a crash. */
+  private[graft] def compact(): Unit =
+    facade.locked(journal.roll().map(_ -> facade.eventLog.heldCount)).foreach { case (cut, held) =>
+      val fs = hadoopFs(new Path(eventsDir))
+      val staged = cut.segments.flatMap { seg =>
+        val events = journal.events(seg)
+        if (events.isEmpty) None
+        else {
+          val tmp = s"$stateRoot/compacting/$seg"
+          spark.createDataset(events)(EventEnc).coalesce(1).write.mode("overwrite").parquet(tmp)
+          val part = fs.listStatus(new Path(tmp)).map(_.getPath)
+            .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+            .getOrElse(throw new IllegalStateException(s"no parquet file written under $tmp"))
+          Some(part -> new Path(eventsDir, s"${Journal.segmentName(seg)}.parquet"))
+        }
+      }
+      facade.eventLog.compacted(held, eventsDir) {
+        fs.mkdirs(new Path(eventsDir))
+        staged.foreach { case (part, target) =>
+          fs.delete(target, false)
+          if (!fs.rename(part, target)) throw new java.io.IOException(s"could not move $part to $target")
+        }
+      }
+      fault("mid-compaction:history")
+      journal.snapshot(cut)
+      fs.delete(new Path(s"$stateRoot/compacting"), true)
+      ()
     }
-  }
 
-  /** The durable event log, read with the encoder's schema: inferring
-    * it would start a footer-reading Spark job on every append. */
-  private def readEvents(): org.apache.spark.sql.Dataset[LifecycleEvent] =
-    spark.read.schema(EventEnc.schema).parquet(eventsDir).as[LifecycleEvent](EventEnc)
-
-  private[graft] def restoreState(): Unit = {
-    currentGen.foreach { gen =>
-      val rows = spark.read.schema(IncubEnc.schema).parquet(s"$stateRoot/$gen/incubating")
-        .as[IncubRow](IncubEnc).collect().toSeq
-      facade.incubating.set(rows)
-      persistedRows = rows
+  private def restoreState(): Unit =
+    if (journal.exists) {
+      val segments = journal.restore()
+      facade.incubating.set(journal.incubating)
+      lastCronMinute = journal.cron
+      // the replayed events are the MQ replay probe's, and the whole
+      // log's; the history tail holds only this incarnation's events, so
+      // its coverage starts after every restored one
+      val stamped = segments.flatMap(_._2).filter(_.received_time != null)
+      facade.loggedIds.add(stamped.map(e => e.event_id -> e.received_time.getTime))
+      stamped.map(_.received_time.getTime).maxOption.foreach(facade.tail.raiseFloor)
+      val history = new Path(eventsDir)
+      val fs = hadoopFs(history)
+      if (!fs.exists(history)) facade.eventLog.append(segments.flatMap(_._2))
+      else {
+        // a segment whose file is already in the history was moved there
+        // by a compaction that a crash cut short
+        val moved = fs.listStatus(history).map(_.getPath.getName).toSet
+        facade.eventLog.append(segments.collect {
+          case (n, events) if !moved(s"${Journal.segmentName(n)}.parquet") => events
+        }.flatten)
+        facade.eventLog.compacted(0, eventsDir)(())
+        // one read: the history's ids within the MQ dedup horizon. Every
+        // history row lies at or below the newest of them or below the
+        // cutoff, so the history tail covers only windows after both.
+        val cutoff = nowProvider().getTime - cfg.mqDedupHorizonDays * 86400000L
+        val recent = spark.read.schema(EventEnc.schema).parquet(eventsDir)
+          .where(col("received_time") >= lit(new Timestamp(cutoff)))
+          .select(col("event_id"), col("received_time")).collect()
+          .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toSeq
+        facade.loggedIds.add(recent)
+        facade.tail.raiseFloor((cutoff +: recent.map(_._2)).max)
+      }
     }
-    val ev = new org.apache.hadoop.fs.Path(eventsDir)
-    if (hadoopFs(ev).exists(ev)) {
-      val log = readEvents()
-      facade.eventLog.set(log)
-      // one read: the ids within the MQ dedup horizon. Every restored
-      // row lies at or below the newest of them or below the cutoff, so
-      // the history tail covers only windows after both.
-      val cutoff = nowProvider().getTime - cfg.mqDedupHorizonDays * 86400000L
-      val recent = log.where(col("received_time") >= lit(new Timestamp(cutoff)))
-        .select(col("event_id"), col("received_time")).collect()
-        .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toSeq
-      facade.loggedIds.add(recent)
-      facade.tail.raiseFloor((cutoff +: recent.map(_._2)).max)
-    }
-    readMarker(cronMarkerPath).foreach(m => lastCronMinute = m.toLong)
-    // engine state is intentionally NOT restored: LocalSparkEngine /
-    // ProcessEngine runs die with the process (unlike the reference's
-    // K8s pods, which a real PodApi would re-list here)
-  }
 
   /** Tick bodies never kill the scheduler: the reference's loops
     * log-and-continue on error (`job_culler.py:40`, `mq_poller.py:27`). */
@@ -516,31 +519,33 @@ final class GraftService(
 
   /** One culler pass: an empty event batch is a pure cull step —
     * concurrency-debounced and deps-satisfied rows release (and
-    * SUBMIT), aged-out rows drop (`job_culler.py:17-44`). */
-  private[graft] def cullTick(): Unit =
+    * SUBMIT), aged-out rows drop (`job_culler.py:17-44`). Then the
+    * journal compacts. */
+  private[graft] def cullTick(): Unit = {
     // the empty-state pre-check and the cull step run under ONE
     // facade-lock acquisition, so the check always sees the state the
-    // step folds (r7 advice: checked outside the lock, a files-backed
-    // snapshot could be overwritten mid-scan — a skipped cull pass)
+    // step folds (r7 advice)
     facade.cullStep(nowProvider())
+    settle()
+    compact()
+  }
 
   /** Cron scheduler tick: fires at most once per wall-clock minute
-    * (`Cron.tick` is a pure function of the minute, so double-firing
-    * within one minute would duplicate exec uuids). The high-water
-    * minute advances only AFTER the dispatch succeeds — advancing it
-    * first would turn a transient failure (swallowed by `safely`) into
-    * a silently-lost firing (r7 review #7) — and is persisted so a
-    * restart inside an already-fired minute does not re-fire it
-    * (review #8). */
+    * (`Cron.fire` is a pure function of the minute, so double-firing
+    * within one minute would duplicate exec uuids), folded over the
+    * catalog index on the driver. The high-water minute advances only
+    * AFTER the dispatch succeeds — advancing it first would turn a
+    * transient failure (swallowed by `safely`) into a silently-lost
+    * firing (r7 review #7). The firing's own journal record carries the
+    * minute, so a restart inside an already-fired minute does not
+    * re-fire it (review #8). */
   private[graft] def cronTick(): Unit = {
     val now = nowProvider()
     val minute = now.getTime / 60000L
     if (minute != lastCronMinute) {
-      val due = Cron.tick(spark, api.catalog.defs, now).collect().toSeq
+      val due = Cron.fire(api.snapshot.defs, now)
       if (due.nonEmpty) onEvents(due, now)
       lastCronMinute = minute
-      ensureStateRoot()
-      writeAtomic(cronMarkerPath, minute.toString)
     }
   }
 
@@ -718,6 +723,8 @@ final class GraftService(
           }
         }
         facade.stop()
+        safely("settle")(settle())
+        journal.close()
       } finally {
         if (shutdownHook != null)
           try Runtime.getRuntime.removeShutdownHook(shutdownHook)
@@ -734,7 +741,8 @@ final class GraftService(
 object GraftService {
 
   private val EventEnc = Encoders.product[LifecycleEvent]
-  private val IncubEnc = Encoders.product[IncubRow]
+  /** Engine statuses of a run that has not ended. */
+  private val Live = Set("running", "waiting", "pending")
 
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every

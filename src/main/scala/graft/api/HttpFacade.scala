@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model._
-import graft.orchestration.{Dispatcher, EngineJob, EventTail, LoggedIds}
+import graft.orchestration.{Dispatcher, EngineJob, EventHistory, EventTail, LoggedIds}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
@@ -79,10 +79,10 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   /** Driver-held state rows; `get()` is their local-Dataset view. */
   private[graft] val running = new HttpFacade.Rows(spark, Encoders.product[RunningJob])
   private[graft] val incubating = new HttpFacade.Rows(spark, Encoders.product[IncubRow])
-  /** The whole event log as a query — the history fallback. Standalone
-    * facade: the in-memory log; [[GraftService]] sets its parquet log. */
-  private[graft] val eventLog = new AtomicReference[Dataset[LifecycleEvent]](
-    spark.emptyDataset[LifecycleEvent](Encoders.product[LifecycleEvent]))
+  /** The whole event log, the history fallback: `get()` builds the
+    * compacted parquet ∪ the events held since. Standalone facade: all
+    * held; [[GraftService]] compacts it on the culler tick. */
+  private[graft] val eventLog = new EventHistory(spark)
   private[graft] val tail = new EventTail(api.cfg.historySinceSeconds)
   private[graft] val loggedIds = new LoggedIds(api.cfg.mqDedupHorizonDays * 86400000L)
   private val mutate = new Object
@@ -97,11 +97,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] val submissionSink =
     new AtomicReference[Seq[Submission] => Unit](_ => ())
 
-  /** Fires after any NON-dispatch incubation mutation (the three point
-    * ops: update / delete / flush) so a durability layer can persist
-    * the new state — without this, a service restart would resurrect
-    * rows an operator explicitly deleted (r7 review #1). */
-  private[graft] val mutationHook = new AtomicReference[() => Unit](() => ())
+  /** Makes a mutation durable BEFORE it takes effect: a dispatch step
+    * (its events, the incubation rows it leaves and its submissions),
+    * an incubation point op (update / delete / flush — without it a
+    * restart would resurrect rows an operator deleted, r7 review #1) and
+    * an abort. Standalone facade: nothing; [[GraftService]] installs its
+    * journal here. A throw leaves the mutation unapplied. */
+  private[graft] val commitHook = new AtomicReference[HttpFacade.Commit => Unit](_ => ())
 
   /** Fires after any CATALOG mutation (upsert / delete / flush of
     * pipeline defs) so a durability layer can save defs+edges through
@@ -110,14 +112,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] val catalogHook = new AtomicReference[() => Unit](() => ())
 
   /** Fires with each batch of APPLIED lifecycle events (HTTP /event
-    * and internal ingest). Standalone facade: an in-memory log union,
-    * its only history. A durability layer installs an incremental
-    * append to its history sink instead — rewriting the full history
-    * per dispatch would be quadratic lifetime I/O (r7 review #3). */
+    * and internal ingest), after the batch's effects: it appends them
+    * to the driver-held end of [[eventLog]]. The batch was made durable
+    * by [[commitHook]] before its effects. */
   private[graft] val eventSink =
-    new AtomicReference[Seq[LifecycleEvent] => Unit](events =>
-      eventLog.set(eventLog.get().unionByName(
-        spark.createDataset(events)(Encoders.product[LifecycleEvent]))))
+    new AtomicReference[Seq[LifecycleEvent] => Unit](eventLog.append)
 
   private var server: HttpServer = _
   private var pool: java.util.concurrent.ExecutorService = _
@@ -243,7 +242,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       codec.obj("logs" -> logs)
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
-      mutate.synchronized { r.session.abort(r.param("engine_tracking_id")) }
+      mutate.synchronized {
+        val token = r.param("engine_tracking_id")
+        r.session.abort(token)
+        commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, aborted = Some(token)))
+      }
       ok
     }),
     "/pipeline/dispatcher/event" -> Map[String, Handler]("POST" -> { r =>
@@ -277,25 +280,20 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       r.session.can("incubationUpdate") // auth before body-parse work
       val updates = codec.updates(r.body)
       mutate.synchronized {
-        incubating.set(api.updateIncubatingRows(incubating.rows, r.param("obj_id"), updates))
-        mutationHook.get()()
+        replaceIncubating(api.updateIncubatingRows(incubating.rows, r.param("obj_id"), updates))
         codec.rows(incubating.rows, _ != "triggers") // map column: header view, like D14's
       }
     }),
     "/pipeline/incubation/delete" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("incubationDelete")
       mutate.synchronized {
-        incubating.set(api.deleteIncubatingRows(incubating.rows, r.param("obj_id")))
-        mutationHook.get()()
+        replaceIncubating(api.deleteIncubatingRows(incubating.rows, r.param("obj_id")))
       }
       ok
     }),
     "/pipeline_incubation/flush" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("incubationFlush")
-      mutate.synchronized {
-        incubating.set(Nil)
-        mutationHook.get()()
-      }
+      mutate.synchronized(replaceIncubating(Nil))
       ok
     }),
     "/sys/config" -> Map[String, Handler](
@@ -329,16 +327,14 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp): Seq[Submission] =
     mutate.synchronized {
       val step = api.dispatchRows(events, running.rows, incubating.rows, now)
-      // The log append (eventSink) happens AFTER applyStep succeeds, so
-      // presence-in-the-log ⇒ effects applied & persisted, and a failed
-      // step leaves no trace for the dedup probe. With the MQ replay
-      // dedup keyed on the durable log, the old append-first order
-      // turned a crash between append and apply into PERMANENT event
-      // loss (the replay matched the log and no-op'd; r8 review #1) —
-      // append-last restores at-least-once for that window, which the
-      // dedup then bounds to exactly that window. The driver-held tail
-      // and id index follow the sink, so they hold only logged events.
-      val subs = applyStep(step)
+      // One commit makes the events, the state they leave and the runs
+      // they start durable together, before any of it takes effect: a
+      // crash before it loses nothing acknowledged (the replay applies
+      // the batch), a crash after it restores all three (the replay's
+      // ids are logged, and the open submissions are resubmitted). The
+      // sink and the driver-held tail and id index follow the effects,
+      // so they hold only applied events.
+      val subs = applyStep(events, step)
       if (events.nonEmpty) {
         eventSink.get()(events)
         logged(events)
@@ -384,6 +380,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       if (incubating.rows.nonEmpty) { ingest(Seq.empty, now); () }
     }
 
+  /** Run `body` under the lock every mutation holds. */
+  private[graft] def locked[T](body: => T): T = mutate.synchronized(body)
+
   /** Refresh the concurrency-gate rows from live engine state — the
     * service calls this after submitting so the next dispatch gates
     * against what is actually running. */
@@ -397,12 +396,19 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * (`(incubating − droppedObjIds) ∪ newIncubating ∪ deferred`) left
     * RELEASED rows behind (droppedObjIds only carries age-outs) and
     * duplicated kept rows — caught by GraftServiceSpec's
-    * slot-consumed assertion (r7). The submissions are returned for
-    * the caller's response. */
-  private def applyStep(step: Dispatcher.Step): Seq[Submission] = {
-    incubating.set(step.newIncubating ++ step.deferred)
+    * slot-consumed assertion (r7). The step is committed first; the
+    * submissions are returned for the caller's response. */
+  private def applyStep(events: Seq[LifecycleEvent], step: Dispatcher.Step): Seq[Submission] = {
+    val next = step.newIncubating ++ step.deferred
+    commitHook.get()(HttpFacade.Commit(events, next, step.submissions))
+    incubating.set(next)
     submissionSink.get()(step.submissions)
     step.submissions
+  }
+
+  private def replaceIncubating(rows: Seq[IncubRow]): Unit = {
+    commitHook.get()(HttpFacade.Commit(Nil, rows, Nil))
+    incubating.set(rows)
   }
 
   // ---- request plumbing -------------------------------------------------
@@ -469,6 +475,12 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 }
 
 object HttpFacade {
+  /** One mutation for [[HttpFacade.commitHook]]: the events it accepts,
+    * the incubation rows it leaves, the runs it submits, and the token
+    * of an abort. */
+  final case class Commit(events: Seq[LifecycleEvent], rows: Seq[IncubRow],
+                          submissions: Seq[Submission], aborted: Option[String] = None)
+
   /** A driver-held row set. The facade's state lives here as plain
     * values; `get()` is the same rows as a local Dataset (a
     * `LocalRelation`, which reads without a Spark job) for the

@@ -15,7 +15,8 @@ import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger}
+import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
+import graft.orchestration.Dispatcher.IncubRow
 
 /** The control plane's one JSON codec: every request body and every row
   * response of the HTTP facade, and every MQ message, go through it on
@@ -44,7 +45,11 @@ import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger}
   *
   * Writing follows `df.toJSON` over the same rows: fields in case-class
   * order, `None`/null fields omitted, timestamps as
-  * `yyyy-MM-dd'T'HH:mm:ss.SSSXXX` in `zone`, maps as objects. */
+  * `yyyy-MM-dd'T'HH:mm:ss.SSSXXX` in `zone`, maps as objects.
+  *
+  * The service's [[Journal]] lines go through it too: [[line]] writes a
+  * record with its rows nested and timestamps to the microsecond, and
+  * [[record]] reads one back. */
 final class JsonCodec(zone: ZoneId) {
   import JsonCodec._
 
@@ -54,7 +59,7 @@ final class JsonCodec(zone: ZoneId) {
   def events(body: String): Seq[LifecycleEvent] = {
     val root = tree(body)
     val evs =
-      if (root.isArray) root.elements().asScala.map(event).toSeq
+      if (root.isArray) root.elements().asScala.map(event(_)).toSeq
       else if (root.isObject) Seq(event(root))
       else bad("a lifecycle event body must be a JSON object or an array of them")
     if (evs.isEmpty) bad("no lifecycle events in request body")
@@ -70,7 +75,9 @@ final class JsonCodec(zone: ZoneId) {
     (decoded.flatMap(_._2.getOrElse(Nil)), decoded.collect { case (v, None) => v })
   }
 
-  private def event(n: JsonNode): LifecycleEvent = {
+  /** A journaled event was accepted once, so engine-minted (negative)
+    * ids pass; an external one must be non-negative. */
+  private def event(n: JsonNode, external: Boolean = true): LifecycleEvent = {
     val o = new Obj(n, "lifecycle event")
     val e = LifecycleEvent(
       event_id = o.long("event_id").getOrElse(bad("lifecycle event needs event_id")),
@@ -84,7 +91,7 @@ final class JsonCodec(zone: ZoneId) {
       disable_downstream = o.bool("disable_downstream").getOrElse(false))
     // external producers own the non-negative ids; engine callbacks,
     // cron and manual runs mint the negative ones (GraftService.callbackIds)
-    if (e.event_id < 0)
+    if (external && e.event_id < 0)
       bad(s"negative event_id is reserved for engine callbacks: ${e.event_id}")
     e
   }
@@ -132,6 +139,31 @@ final class JsonCodec(zone: ZoneId) {
     PipelineTrigger(o.str("pipeline_uuid").orNull, o.str("trigger_uuid").orNull, o.str("op").orNull)
   }
 
+  /** One journal line: a [[Journal.Record]]. */
+  def record(line: String): Journal.Record = {
+    val o = new Obj(objectTree(line), "journal record")
+    Journal.Record(
+      events = o.array("events").map(event(_, external = false)),
+      added = o.array("added").map(incubRow),
+      removed = o.array("removed").map(text),
+      outbox = o.array("outbox").map(submission),
+      closed = o.array("closed").map(text),
+      cron_minute = o.long("cron_minute"))
+  }
+
+  private def incubRow(n: JsonNode): IncubRow = {
+    val o = new Obj(n, "incubation row")
+    IncubRow(o.str("pipeline_uuid").orNull, o.str("obj_id").orNull, o.ts("create_time").orNull,
+      o.str("created_by_uuid"), o.str("reason").orNull, o.int("retry_count").getOrElse(0),
+      o.strMap("triggers").getOrElse(Map.empty))
+  }
+
+  private def submission(n: JsonNode): Submission = {
+    val o = new Obj(n, "submission")
+    Submission(o.str("pipeline_uuid").orNull, o.str("exec_uuid").orNull,
+      o.strMap("source_uuids").getOrElse(Map.empty), o.int("retry_count").getOrElse(0))
+  }
+
   private def tree(body: String): JsonNode =
     try Option(Mapper.readTree(body)).getOrElse(MissingNode.getInstance)
     catch { case NonFatal(e) => bad(s"malformed JSON in request body: ${String.valueOf(e.getMessage).take(200)}") }
@@ -173,20 +205,29 @@ final class JsonCodec(zone: ZoneId) {
   // ---- writing -------------------------------------------------------------
 
   private val tsFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSXXX").withZone(zone)
+  private val microFormat = DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX").withZone(zone)
 
   /** Case-class rows as a JSON array; `keep` selects fields by name. */
   def rows(rows: Seq[Product], keep: String => Boolean = _ => true): String =
     write { g =>
       g.writeStartArray()
-      rows.foreach { r =>
-        g.writeStartObject()
-        r.productElementNames.zip(r.productIterator).foreach { case (k, v) =>
-          if (keep(k) && v != null && v != None) { g.writeFieldName(k); value(g, v) }
-        }
-        g.writeEndObject()
-      }
+      rows.foreach(product(g, _, keep, tsFormat))
       g.writeEndArray()
     }
+
+  /** A case-class record as one JSON line: nested rows as objects,
+    * timestamps to the microsecond, so [[record]] reads back what was
+    * written. */
+  def line(r: Product): String = write(product(_, r, _ => true, microFormat))
+
+  private def product(g: JsonGenerator, r: Product, keep: String => Boolean,
+                      ts: DateTimeFormatter): Unit = {
+    g.writeStartObject()
+    r.productElementNames.zip(r.productIterator).foreach { case (k, v) =>
+      if (keep(k) && v != null && v != None) { g.writeFieldName(k); value(g, v, ts) }
+    }
+    g.writeEndObject()
+  }
 
   /** A flat object of string fields (status bodies, errors, config). */
   def obj(fields: (String, String)*): String =
@@ -196,19 +237,20 @@ final class JsonCodec(zone: ZoneId) {
       g.writeEndObject()
     }
 
-  private def value(g: JsonGenerator, v: Any): Unit = v match {
+  private def value(g: JsonGenerator, v: Any, ts: DateTimeFormatter): Unit = v match {
     case null | None => g.writeNull()
-    case Some(x) => value(g, x)
+    case Some(x) => value(g, x, ts)
     case s: String => g.writeString(s)
     case i: Int => g.writeNumber(i)
     case l: Long => g.writeNumber(l)
     case b: Boolean => g.writeBoolean(b)
-    case t: Timestamp => g.writeString(tsFormat.format(t.toInstant))
+    case t: Timestamp => g.writeString(ts.format(t.toInstant))
     case m: Map[_, _] =>
       g.writeStartObject()
-      m.foreach { case (k, x) => g.writeFieldName(String.valueOf(k)); value(g, x) }
+      m.foreach { case (k, x) => g.writeFieldName(String.valueOf(k)); value(g, x, ts) }
       g.writeEndObject()
-    case s: Seq[_] => g.writeStartArray(); s.foreach(value(g, _)); g.writeEndArray()
+    case s: Seq[_] => g.writeStartArray(); s.foreach(value(g, _, ts)); g.writeEndArray()
+    case p: Product => product(g, p, _ => true, ts)
     case other => throw new IllegalStateException(s"no JSON form for ${other.getClass.getName}")
   }
 

@@ -3,8 +3,7 @@ package graft.orchestration
 import java.sql.Timestamp
 import java.time.{ZoneOffset, ZonedDateTime}
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 import graft.model.{LifecycleEvent, PipelineDef}
 
@@ -94,14 +93,10 @@ object Cron {
 
   /** One scheduler tick: synthetic origination events for every
     * scheduled pipeline due at `now` (the Spark analog of the cron pod's
-    * POST back to the API, `ext_sched.py:22`). The registry is small
-    * metadata — evaluated driver-side, emitted as a Dataset for the
-    * dispatcher. */
-  def tick(spark: SparkSession, defs: Dataset[PipelineDef], now: Timestamp): Dataset[LifecycleEvent] = {
-    import spark.implicits._
-    val scheduled = defs.select("pipeline_uuid", "schedule")
-      .where(col("schedule").isNotNull)
-      .as[(String, String)].collect()
+    * POST back to the API, `ext_sched.py:22`), folded over the catalog's
+    * rows on the driver. */
+  def fire(defs: Seq[PipelineDef], now: Timestamp): Seq[LifecycleEvent] = {
+    val scheduled = defs.collect { case d if d.schedule.isDefined => (d.pipeline_uuid, d.schedule.get) }
     // deterministic per tick; the id space gives each minute 1M slots
     // so tick ids never collide across adjacent minutes (the old
     // minute*1000+i scheme collided at the 1000th same-minute schedule,
@@ -122,7 +117,8 @@ object Cron {
           System.err.println(s"[cron] skipping unparsable schedule for $uuid: ${e.getMessage}")
           false
       }
-    val fired = scheduled.zipWithIndex.collect {
+    val minute = now.getTime / 60000L
+    scheduled.zipWithIndex.collect {
       case ((uuid, expr), i) if dueSafe(uuid, expr) =>
         LifecycleEvent(
           // NEGATIVE id: engine-minted events own the negative
@@ -136,14 +132,25 @@ object Cron {
           // at −epochMs (~1e12, strictly decreasing per-process), cron
           // at −(minute·1e6 + i) (~3e13). (r10 advice: this note used
           // to claim callbacks count down from −1.)
-          event_id = -(now.getTime / 60000L * 1000000L + i),
+          event_id = -(minute * 1000000L + i),
           event_type = "job_exec_update",
           event_subtype = "origination",
           pipeline_uuid = uuid,
-          exec_uuid = s"cron-$uuid-${now.getTime / 60000L}",
+          exec_uuid = s"cron-$uuid-$minute",
           event_time = now, received_time = now,
           retry_count = 0, disable_downstream = false)
-    }.toSeq
-    spark.createDataset(fired)
+    }
   }
+
+  /** The minute a [[fire]]d origination was minted in; None for any
+    * other event. */
+  def minuteOf(e: LifecycleEvent): Option[Long] =
+    if (e.event_id < 0 && e.event_subtype == "origination" && e.exec_uuid != null &&
+        e.exec_uuid.startsWith("cron-") && e.exec_uuid.endsWith(s"-${-e.event_id / 1000000L}"))
+      Some(-e.event_id / 1000000L)
+    else None
+
+  /** [[fire]] over a catalog Dataset, as a local Dataset. */
+  def tick(spark: SparkSession, defs: Dataset[PipelineDef], now: Timestamp): Dataset[LifecycleEvent] =
+    spark.createDataset(fire(defs.collect().toSeq, now))(Encoders.product[LifecycleEvent])
 }

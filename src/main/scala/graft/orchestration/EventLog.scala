@@ -2,7 +2,7 @@ package graft.orchestration
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.model.LifecycleEvent
@@ -11,12 +11,14 @@ import graft.model.LifecycleEvent
   * collection (D9–D11, `/root/reference/src/kalytical/core/
   * data_provider.py:128-155`).
   *
-  * D9 (save) is the service's flat, unpartitioned parquet append under
-  * `service-state/events`, one batch per dispatch, with `received_time`
-  * stamped at ingest (`GraftService`'s eventSink); this object holds
-  * the read side (D10): [[history]] over the whole log, and
-  * [[historyRows]] over the driver-held [[EventTail]]. The reference's
-  * flush (D11) is not served.
+  * D9 (save) is the service's journal (`GraftService`, `api.Journal`):
+  * each accepted batch is one hsync'd JSON line, with `received_time`
+  * stamped at ingest. The culler tick's compaction moves the closed
+  * segments' events into the parquet history under
+  * `service-state/events`, one file per segment. This object holds the
+  * read side (D10): [[history]] over the whole log ([[EventHistory]]),
+  * and [[historyRows]] over the driver-held [[EventTail]]. The
+  * reference's flush (D11) is not served.
   */
 object EventLog {
 
@@ -54,6 +56,35 @@ object EventLog {
         if (c != 0) c > 0 else a.event_id > b.event_id
       }
       .take(maxRecords)
+}
+
+/** The whole event log, built when read: the compacted parquet history
+  * (once there is one) and the events held on the driver since. Each
+  * applied batch is appended here; a standalone facade never compacts,
+  * so its log is all held. `get()` is one Dataset over both, planned per
+  * read, never per append. */
+final class EventHistory(spark: SparkSession) {
+  private val enc = Encoders.product[LifecycleEvent]
+  private var held = Vector.empty[LifecycleEvent]
+  private var dir: Option[String] = None
+
+  def append(events: Seq[LifecycleEvent]): Unit = synchronized { held ++= events }
+
+  def heldCount: Int = synchronized(held.size)
+
+  /** The first `n` held events now live in the parquet history under
+    * `history`: `publish` moves their files there, under the same lock
+    * as the drop, so no read sees them twice. */
+  def compacted(n: Int, history: String)(publish: => Unit): Unit = synchronized {
+    publish
+    held = held.drop(n)
+    dir = Some(history)
+  }
+
+  def get(): Dataset[LifecycleEvent] = synchronized {
+    val local = spark.createDataset(held)(enc)
+    dir.fold(local)(d => spark.read.schema(enc.schema).parquet(d).as[LifecycleEvent](enc).union(local))
+  }
 }
 
 /** The recent end of the event log, held on the driver so that a
@@ -97,8 +128,8 @@ final class EventTail(keepSeconds: Long) {
 
 /** Logged event ids by `received_time`, within `horizonMs` of the newest
   * stamp: the MQ replay probe (an id logged at or after the probe's
-  * cutoff was already applied). Restored from the parquet log at start,
-  * then updated with every append. */
+  * cutoff was already applied). Restored from the journal and the
+  * parquet history at start, then updated with every logged batch. */
 final class LoggedIds(horizonMs: Long) {
   private val stampOf = scala.collection.mutable.HashMap.empty[Long, Long]
   private val arrivals = scala.collection.mutable.Queue.empty[(Long, Long)]

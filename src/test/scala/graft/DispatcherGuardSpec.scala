@@ -8,9 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{Auth, GraftApi, HttpFacade, SecuredGraftApi}
+import graft.api.{Auth, GraftApi, GraftService, HttpFacade, SecuredGraftApi}
 import graft.meta.Fixtures
-import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
+import graft.orchestration.{Catalog, EngineJob, EngineManager, LocalSparkEngine}
 
 /** Drift guard: one dispatcher. Every ingress (HTTP, MQ poll, culler
   * and cron ticks) reaches `GraftApi.dispatch` → `Dispatcher.step`, and
@@ -19,7 +19,8 @@ import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
   * concurrency gate drift from the real one, so it fails here. The
   * same holds for streaming: MQ ingest in `GraftService` is the one
   * streaming query main code starts. And the control plane runs on the
-  * driver: an event POST and the read routes start no Spark job. */
+  * driver: an event POST and the read routes start no Spark job, and
+  * neither does the service's durability on the ack path. */
 class DispatcherGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src", "main", "scala")
 
@@ -57,47 +58,85 @@ class DispatcherGuardSpec extends AnyFunSuite {
     assert(!src.contains("spark.read") && !src.contains("toJSON"))
   }
 
-  test("standalone facade: an origination, its success and the describe/running/history reads start no Spark job") {
-    val spark = SparkSuite.spark
-    val admin = "admin-token"
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
-      new EngineManager(Seq(new LocalSparkEngine(spark))))
-    val facade = new HttpFacade(new SecuredGraftApi(api, new Auth.Policy(
-      new Auth.StaticTokenVerifier(Map(admin -> Seq("Data-Admin"))), apiTokens = Set.empty)), spark)
-    val base = s"http://127.0.0.1:${facade.start(0).getPort}"
-    val client = java.net.http.HttpClient.newHttpClient()
-    def call(method: String, path: String, body: String = ""): String = {
-      val res = client.send(java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
+  private val admin = "admin-token"
+  private def secured(api: GraftApi) = new SecuredGraftApi(api, new Auth.Policy(
+    new Auth.StaticTokenVerifier(Map(admin -> Seq("Data-Admin"))), apiTokens = Set.empty))
+
+  /** An authorized request that must answer 200; its body. */
+  private def call(base: String, method: String, path: String, body: String = ""): String = {
+    val res = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
         .method(method, if (body.isEmpty) java.net.http.HttpRequest.BodyPublishers.noBody()
           else java.net.http.HttpRequest.BodyPublishers.ofString(body))
         .header("Authorization", s"Bearer $admin").build(),
-        java.net.http.HttpResponse.BodyHandlers.ofString())
-      assert(res.statusCode() == 200, s"$method $path -> ${res.body()}")
-      res.body()
-    }
-    def event(id: Long, subtype: String) =
-      s"""{"event_id":$id,"event_type":"job_exec_update","event_subtype":"$subtype",""" +
-        s""""pipeline_uuid":"ingest-orders","exec_uuid":"exec-ingest-orders-$id",""" +
-        """"retry_count":0,"disable_downstream":false}"""
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    assert(res.statusCode() == 200, s"$method $path -> ${res.body()}")
+    res.body()
+  }
+
+  private def event(id: Long, subtype: String) =
+    s"""{"event_id":$id,"event_type":"job_exec_update","event_subtype":"$subtype",""" +
+      s""""pipeline_uuid":"ingest-orders","exec_uuid":"exec-ingest-orders-$id",""" +
+      """"retry_count":0,"disable_downstream":false}"""
+
+  /** The Spark jobs `body` starts. */
+  private def jobsOf(body: => Unit): Int = {
+    val spark = SparkSuite.spark
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = { jobs.incrementAndGet(); () }
     }
     Bench.drainListenerBus(spark)
     spark.sparkContext.addSparkListener(listener)
-    try {
-      assert(call("POST", "/pipeline/dispatcher/event", event(9100, "origination"))
+    try { body; Bench.drainListenerBus(spark) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    jobs.get()
+  }
+
+  test("standalone facade: an origination, its success and the describe/running/history reads start no Spark job") {
+    val spark = SparkSuite.spark
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val facade = new HttpFacade(secured(api), spark)
+    val base = s"http://127.0.0.1:${facade.start(0).getPort}"
+    val jobs = try jobsOf {
+      assert(call(base, "POST", "/pipeline/dispatcher/event", event(9100, "origination"))
         .contains("\"ingest-orders\""))
-      call("POST", "/pipeline/dispatcher/event", event(9101, "success"))
-      assert(call("GET", "/pipeline/config/describe?pipeline_uuid=ingest-orders").contains("ingest-orders"))
-      call("GET", "/pipeline/dispatcher/running?statuses=success,failed")
-      assert(call("GET", "/pipeline/dispatcher/event/history?pipeline_uuid=ingest-orders")
+      call(base, "POST", "/pipeline/dispatcher/event", event(9101, "success"))
+      assert(call(base, "GET", "/pipeline/config/describe?pipeline_uuid=ingest-orders").contains("ingest-orders"))
+      call(base, "GET", "/pipeline/dispatcher/running?statuses=success,failed")
+      assert(call(base, "GET", "/pipeline/dispatcher/event/history?pipeline_uuid=ingest-orders")
         .contains("exec-ingest-orders-9101"))
-      Bench.drainListenerBus(spark)
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      facade.stop()
-    }
-    assert(jobs.get() == 0, s"${jobs.get()} Spark jobs on the control plane")
+    } finally facade.stop()
+    assert(jobs == 0, s"$jobs Spark jobs on the control plane")
+  }
+
+  test("started service: an event POST and its run's callback start no Spark job, and both are journaled") {
+    val spark = SparkSuite.spark
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val ckpt = SparkSuite.tempDir("guard-svc-ckpt")
+    // no culler or cron tick inside the test
+    val service = new GraftService(secured(api), spark, mqEndpoint = None, checkpointRoot = ckpt,
+      jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
+      cfg = graft.GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
+      cronCheckInterval = scala.concurrent.duration.DurationInt(1).hour)
+    def journal(): Seq[String] =
+      Files.list(Paths.get(ckpt, "service-state", "journal")).iterator().asScala.toSeq
+        .filter(_.toString.endsWith(".jsonl"))
+        .flatMap(f => Files.readAllLines(f).asScala).filter(_.nonEmpty)
+    val base = s"http://127.0.0.1:${service.start(0).getPort}"
+    val (jobs, records) = try {
+      val n = jobsOf {
+        assert(call(base, "POST", "/pipeline/dispatcher/event", event(9200, "origination"))
+          .contains("exec-ingest-orders-9200"))
+        // the run's callback, as its pod would post it
+        call(base, "POST", "/pipeline/dispatcher/event",
+          event(9201, "success").replace("exec-ingest-orders-9201", "exec-ingest-orders-9200"))
+      }
+      (n, journal())
+    } finally service.shutdown()
+    assert(jobs == 0, s"$jobs Spark jobs on the service's ack path")
+    assert(records.size == 2, s"one record per step: $records")
   }
 }

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 
 import graft.GraftConfig
-import graft.api.{Auth, GraftApi, GraftService, SecuredGraftApi}
+import graft.api.{Auth, GraftApi, GraftService, Journal, SecuredGraftApi}
 import graft.meta.Fixtures
 import graft.model.{LifecycleEvent, PipelineDef, Submission}
 import graft.orchestration.{Catalog, EngineJob, EngineManager, LocalSparkEngine}
@@ -275,14 +275,10 @@ class GraftServiceSpec extends AnyFunSuite {
     } finally b.shutdown()
   }
 
-  test("durable state: a step that leaves the incubation rows unchanged writes no generation; a deferral does") {
+  test("durable state: a step that leaves the incubation rows unchanged journals no delta; a deferral journals one") {
     import org.apache.spark.sql.functions.col
     val ckpt = SparkSuite.tempDir("svc-persist-ckpt")
-    val marker = java.nio.file.Paths.get(ckpt, "service-state", "_CURRENT")
-    def generation(): Option[(String, java.nio.file.attribute.FileTime)] =
-      if (!java.nio.file.Files.exists(marker)) None
-      else Some((new String(java.nio.file.Files.readAllBytes(marker), "UTF-8").trim,
-        java.nio.file.Files.getLastModifiedTime(marker)))
+    val journalDir = java.nio.file.Paths.get(ckpt, "service-state", "journal")
     def origination(id: Long, pipeline: String): LifecycleEvent =
       success(id, pipeline).copy(event_subtype = "origination", exec_uuid = s"manual-$pipeline-$id")
     def batch(evs: LifecycleEvent*): String = evs.map(asJson).mkString("[", ",", "]")
@@ -292,36 +288,52 @@ class GraftServiceSpec extends AnyFunSuite {
       GraftConfig.default)
     val policy = new Auth.Policy(
       new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
-    // no culler or cron tick inside the test: only the posted steps persist
+    // no culler or cron tick inside the test: only the posted steps journal
     val service = new GraftService(new SecuredGraftApi(api, policy), spark,
       mqEndpoint = None, checkpointRoot = ckpt,
       jobFactory = Some((_, sub) => { ran.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }),
       cfg = GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
       cronCheckInterval = 1.hour)
+    // every journal record so far, oldest first
+    def records(): Seq[Journal.Record] =
+      if (!java.nio.file.Files.exists(journalDir)) Nil
+      else java.nio.file.Files.list(journalDir).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.endsWith(".jsonl")).sortBy(_.getFileName.toString)
+        .flatMap(f => java.nio.file.Files.readAllLines(f).asScala.filter(_.nonEmpty))
+        .map(service.facade.codec.record)
     try {
       val base = s"http://127.0.0.1:${service.start(0).getPort}"
+      assert(records().isEmpty, "a start on a fresh root writes nothing")
       // 1. two same-batch originations of a concurrency=false pipeline:
-      //    the first submits, the second defers -> a new generation
+      //    the first submits, the second defers -> one record, one added row
       assert(call(base, "POST", "/pipeline/dispatcher/event",
         batch(origination(51, "report-weekly"), origination(52, "report-weekly"))).statusCode() == 200)
       assert(service.facade.incubating.get()
         .where(col("pipeline_uuid") === "report-weekly" && col("reason") === "concurrency").count() == 1)
-      val g1 = generation()
-      assert(g1.isDefined, "a deferral must commit a generation")
+      val r1 = records()
+      assert(r1.size == 1, "the batch is one record")
+      assert(r1.last.events.map(_.event_id) == Seq(51L, 52L))
+      assert(r1.last.added.map(_.pipeline_uuid) == Seq("report-weekly"), "a deferral must journal its row")
+      assert(r1.last.outbox.map(_.exec_uuid) == Seq("exec-report-weekly-51"))
       // 2. a direct-submit origination leaves the rows as they were:
-      //    _CURRENT keeps its generation and is not rewritten
-      Thread.sleep(20) // a rewrite would move the marker's mtime
+      //    its record holds the event and the run, and no delta
       assert(call(base, "POST", "/pipeline/dispatcher/event",
         asJson(origination(53, "solo-maintenance"))).statusCode() == 200)
       assert(ran.contains("solo-maintenance"))
       assert(service.facade.incubating.get().count() == 1)
-      assert(generation() == g1, "an unchanged state must not commit a new generation")
-      // 3. another deferral flips the generation
+      val r2 = records()
+      assert(r2.size == 2)
+      assert(r2.last.added.isEmpty && r2.last.removed.isEmpty,
+        s"an unchanged state must not journal a delta: ${r2.last}")
+      assert(r2.last.outbox.map(_.pipeline_uuid) == Seq("solo-maintenance"))
+      // a cull step that changes nothing and accepts no event writes nothing
+      service.facade.cullStep(new Timestamp(System.currentTimeMillis()))
+      assert(records().size == 2, "an empty, unchanged step must write no record")
+      // 3. another deferral journals another added row
       assert(call(base, "POST", "/pipeline/dispatcher/event",
         batch(origination(54, "report-monthly"), origination(55, "report-monthly"))).statusCode() == 200)
       assert(service.facade.incubating.get().count() == 2)
-      assert(generation().map(_._1).exists(g => !g1.map(_._1).contains(g)),
-        s"a deferral must flip _CURRENT: ${g1} -> ${generation()}")
+      assert(records().size == 3 && records().last.added.map(_.pipeline_uuid) == Seq("report-monthly"))
     } finally service.shutdown()
   }
 
