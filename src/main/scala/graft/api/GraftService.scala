@@ -14,7 +14,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
-import graft.orchestration.{Cron, EngineJob, EngineManager, LocalSparkEngine}
+import graft.orchestration.{Cron, Dispatcher, EngineJob, EngineManager, LocalSparkEngine}
 
 /** THE deployable process — the reference's service wiring
   * (`/root/reference/src/kalytical/facade.py:138-150`: one asyncio
@@ -400,10 +400,14 @@ final class GraftService(
   // tail's coverage floor and the uncompacted events, the cron
   // high-water minute, and the outbox, whose still-open runs are
   // submitted once more (an engine whose runs outlive the process
-  // dedups by exec_uuid). A fresh root costs one existence probe. The culler tick compacts: closed
-  // segments' events go to the parquet history under
+  // dedups by exec_uuid); an abort closes the runs its token names. A
+  // fresh root costs one existence probe. The culler tick compacts:
+  // closed segments' events go to the parquet history under
   // `service-state/events` (one file per segment, so a re-run replaces
-  // its own file), then a snapshot replaces the segments.
+  // its own file), then a snapshot replaces the segments. On a `file:`
+  // root the moved files, their directory and the snapshot's rename are
+  // forced to the disk before the segments are deleted; elsewhere the
+  // filesystem's own close and rename guarantees hold.
 
   private def stateRoot = s"$checkpointRoot/service-state"
   private def eventsDir = s"$stateRoot/events"
@@ -423,10 +427,7 @@ final class GraftService(
 
   private def commit(c: HttpFacade.Commit): Unit = {
     fault("before-journal")
-    // an abort closes the open runs the engines now report aborted
-    val aborted = c.aborted.fold(Seq.empty[String])(_ =>
-      journal.open.map(_.exec_uuid).filter(api.engines.wasAborted))
-    journal.commit(c.events, c.rows, c.submissions, aborted)
+    journal.commit(c.events, c.rows, c.submissions, c.closed)
     fault("after-journal")
   }
 
@@ -436,7 +437,7 @@ final class GraftService(
     val open = journal.open
     if (open.nonEmpty) {
       val ended = api.engines.allRows(spark)
-        .collect { case j if !GraftService.Live(j.engine_status) => j.exec_uuid }.toSet
+        .collect { case j if !Dispatcher.Live(j.engine_status) => j.exec_uuid }.toSet
       val closed = open.map(_.exec_uuid).filter(ended)
       if (closed.nonEmpty)
         facade.locked(journal.commit(Nil, facade.incubating.rows, Nil, closed))
@@ -468,6 +469,10 @@ final class GraftService(
           if (!fs.rename(part, target)) throw new java.io.IOException(s"could not move $part to $target")
         }
       }
+      // Spark wrote the files without a sync: force them and their
+      // directory before the snapshot lets the segments go
+      staged.foreach { case (_, target) => Journal.force(fs, target) }
+      if (staged.nonEmpty) Journal.force(fs, new Path(eventsDir))
       fault("mid-compaction:history")
       journal.snapshot(cut)
       fs.delete(new Path(s"$stateRoot/compacting"), true)
@@ -741,8 +746,6 @@ final class GraftService(
 object GraftService {
 
   private val EventEnc = Encoders.product[LifecycleEvent]
-  /** Engine statuses of a run that has not ended. */
-  private val Live = Set("running", "waiting", "pending")
 
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every

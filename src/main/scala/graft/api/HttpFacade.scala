@@ -242,10 +242,17 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       codec.obj("logs" -> logs)
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
+      r.session.can("abort")
       mutate.synchronized {
         val token = r.param("engine_tracking_id")
+        // the runs the token names (an exec_uuid or a tracking id),
+        // resolved before the abort: a backend whose aborted runs vanish
+        // (a deleted pod) no longer reports them after it
+        val named = (token +: api.engines.allRows(spark).collect {
+          case j if j.engine_tracking_id == token => j.exec_uuid
+        }).distinct
         r.session.abort(token)
-        commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, aborted = Some(token)))
+        commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, closed = named))
       }
       ok
     }),
@@ -476,10 +483,10 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 
 object HttpFacade {
   /** One mutation for [[HttpFacade.commitHook]]: the events it accepts,
-    * the incubation rows it leaves, the runs it submits, and the token
-    * of an abort. */
+    * the incubation rows it leaves, the runs it submits, and the
+    * exec_uuids of the runs it ends (an abort's). */
   final case class Commit(events: Seq[LifecycleEvent], rows: Seq[IncubRow],
-                          submissions: Seq[Submission], aborted: Option[String] = None)
+                          submissions: Seq[Submission], closed: Seq[String] = Nil)
 
   /** A driver-held row set. The facade's state lives here as plain
     * values; `get()` is the same rows as a local Dataset (a

@@ -1,6 +1,8 @@
 package graft.api
 
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Paths, StandardOpenOption}
 
 import scala.collection.mutable
 
@@ -38,6 +40,8 @@ import graft.orchestration.Dispatcher.IncubRow
   * Segments and snapshots go through the raw FS for `file:` paths: the
   * checksummed local FS's streams do not hsync (their `hsync()` only
   * flushes), so a segment whose stream lacks the capability is refused.
+  * A snapshot's rename is forced to the disk (for `file:`, see
+  * [[Journal.force]]) before the segments it replaces are deleted.
   */
 final class Journal(root: String, conf: Configuration, codec: JsonCodec,
                     fault: String => Unit = _ => ()) {
@@ -142,6 +146,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
       o.hsync()
     } finally o.close()
     if (!fs.rename(tmp, target)) throw new java.io.IOException(s"could not rename $tmp to $target")
+    force(fs, dir)
     fault("mid-compaction:snapshot")
   }
 
@@ -151,8 +156,11 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
   // ---- internals -----------------------------------------------------------
 
   private def apply(r: Record): Unit = {
-    val removed = r.removed.toSet
-    rows = rows.filterNot(x => removed(x.obj_id)) ++ r.added
+    // a row added again replaces itself: a record whose write reached the
+    // disk but whose hsync threw is committed once more by the retried
+    // step, and a restore replays both
+    val replaced = (r.removed ++ r.added.map(_.obj_id)).toSet
+    rows = rows.filterNot(x => replaced(x.obj_id)) ++ r.added
     r.events.foreach { e =>
       if (e.exec_uuid != null && (e.event_subtype == "success" || e.event_subtype == "failure"))
         outbox.remove(e.exec_uuid)
@@ -226,6 +234,15 @@ object Journal {
   /** Segment `n`'s file name, without its extension: its journal file
     * and its parquet history file share it. */
   def segmentName(n: Long): String = f"seg-$n%012d"
+
+  /** Force a `file:` path, a file or a directory (its entries: a rename
+    * into it), to the disk. Other filesystems keep their own close and
+    * rename guarantees; a stream's hsync does not cover a rename. */
+  private[graft] def force(fs: FileSystem, p: Path): Unit =
+    if (fs.getUri.getScheme == "file") {
+      val ch = FileChannel.open(Paths.get(fs.makeQualified(p).toUri), StandardOpenOption.READ)
+      try ch.force(true) finally ch.close()
+    }
 
   /** Refuse a stream whose `hsync()` would not reach the disk. */
   private[graft] def requireHsync(out: FSDataOutputStream, p: Path): Unit =

@@ -121,7 +121,8 @@ object Dispatcher {
       else None
     }
 
-  private val Live = Set("running", "waiting", "pending")
+  /** Engine statuses of a run that has not ended. */
+  private[graft] val Live = Set("running", "waiting", "pending")
 
   /** The Dataset form of [[step]]: collects the inputs (catalog-sized,
     * live-state-sized and batch-sized) and wraps the outputs. */

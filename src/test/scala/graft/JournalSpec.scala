@@ -70,6 +70,82 @@ class JournalSpec extends AnyFunSuite {
     assert(codec.record(codec.line(Journal.Record())) == Journal.Record())
   }
 
+  test("a record committed twice (its write reached the disk, its hsync threw) restores its rows once") {
+    val codec = graft.api.JsonCodec.forSession(spark)
+    val dir = new Path(SparkSuite.tempDir("journal-twice"))
+    val conf = spark.sessionState.newHadoopConf()
+    val row = IncubRow("p", "inc-7-a", new Timestamp(1000L), None, "dependencies", 0, Map("a" -> "exec-1"))
+    val line = codec.line(Journal.Record(added = Seq(row)))
+    val raw = dir.getFileSystem(conf).asInstanceOf[LocalFileSystem].getRawFileSystem
+    val out = raw.create(new Path(dir, s"journal/${Journal.segmentName(1)}.jsonl"), false)
+    try out.write(s"$line\n$line\n".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    val journal = new Journal(dir.toString, conf, codec)
+    journal.restore()
+    assert(journal.incubating == Vector(row))
+  }
+
+  /** A pod-like backend that keeps `wasAborted`'s default: an aborted
+    * run is deleted, posts no callback and drops out of its rows. Every
+    * submit is counted, a resubmit too. */
+  private final class VanishingEngine extends EngineBackend {
+    val name = "spark-local"
+    val submits = mutable.ArrayBuffer.empty[String]
+    private val live = mutable.LinkedHashMap.empty[String, Submission]
+    def submit(sub: Submission, job: EngineJob): Unit = synchronized {
+      submits += sub.exec_uuid
+      live(sub.exec_uuid) = sub
+    }
+    def abort(token: String): Unit = synchronized {
+      live.keys.filter(id => id == token || s"pod-$id" == token).toSeq.foreach(live.remove)
+    }
+    def jobs(spark: SparkSession): Dataset[RunningJob] =
+      spark.createDataset(rows(spark))(Encoders.product[RunningJob])
+    override def rows(spark: SparkSession): Seq[RunningJob] = synchronized {
+      live.values.toSeq.map(s =>
+        RunningJob(s.exec_uuid, s.pipeline_uuid, name, s"pod-${s.exec_uuid}", "running", None, None))
+    }
+    def logs(execUuid: String, maxKb: Int): String = ""
+  }
+
+  test("abort: a restart does not resubmit a run aborted by its exec_uuid or its tracking id, even when the backend deletes it") {
+    val engine = new VanishingEngine
+    val cfg = GraftConfig.default
+    val policy = new Auth.Policy(new Auth.StaticTokenVerifier(Map("t" -> Seq("Data-Admin"))), apiTokens = Set.empty)
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(engine)), cfg)
+    val root = SparkSuite.tempDir("journal-abort")
+    def incarnation(): GraftService = {
+      val s = new GraftService(new SecuredGraftApi(api, policy), spark, mqEndpoint = None,
+        checkpointRoot = root, jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())), cfg = cfg)
+      s.recover()
+      s
+    }
+    val svc = incarnation()
+    val now = new Timestamp(1767225600000L)
+    val subs = svc.facade.ingest(Seq("ingest-orders", "ingest-customer", "ingest-lineitem").zipWithIndex.map {
+      case (p, i) => LifecycleEvent(701L + i, "job_exec_update", "origination", p, s"orig-$p", now, now, 0,
+        disable_downstream = false)
+    }, now).map(_.exec_uuid)
+    assert(subs.size == 3 && engine.submits == subs)
+    val base = s"http://127.0.0.1:${svc.facade.start(0).getPort}"
+    try Seq(s"pod-${subs(0)}", subs(1)).foreach { token =>
+      val res = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(java.net.URI.create(
+          s"$base/pipeline/dispatcher/abort_pipeline?engine_tracking_id=$token"))
+          .DELETE().header("Authorization", "Bearer t").build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(res.statusCode() == 200, res.body())
+    } finally svc.facade.stop()
+    assert(engine.rows(spark).map(_.exec_uuid) == Seq(subs(2)))
+    assert(svc.journal.open.map(_.exec_uuid) == Seq(subs(2)))
+    svc.journal.close() // the process is gone
+    val restarted = incarnation()
+    // only the run nobody aborted is submitted again
+    assert(engine.submits == subs :+ subs(2))
+    restarted.journal.close()
+  }
+
   /** An engine whose runs outlive the service: it starts each exec_uuid
     * once (a second submit of a started exec is a no-op, like creating a
     * pod that exists) and reports no live runs. */
