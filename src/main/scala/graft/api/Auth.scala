@@ -1,7 +1,7 @@
 package graft.api
 
 /** Port of the reference's bearer-token role gate
-  * (`/root/reference/src/kalytical/auth/auth.py:9-47`): every facade
+  * (`kalytical/auth/auth.py:9-47`): every facade
   * verb declares an allowed-role class ('read' or 'admin',
   * `facade.py:30-124`), requests carry a bearer token, and the checker
   * admits it when (a) it is one of the static API tokens — superuser,
@@ -88,8 +88,7 @@ object Auth {
     "incubationUpdate" -> "admin", // facade.py:109
     "incubationDelete" -> "admin", // facade.py:116
     "incubationFlush" -> "admin",  // facade.py:120
-    "sysConfig" -> "read",     // facade.py:124
-    "cronTick" -> "admin"      // scheduler tick = dispatch-class mutation
+    "sysConfig" -> "read"      // facade.py:124
   )
 
   /** Policy = verifier + API tokens; yields a per-verb gate. */

@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
 
 import graft.meta.Fixtures
 import graft.model.{PipelineDef, PipelineTrigger}
-import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine, ProcessEngine}
+import graft.orchestration.{Catalog, Cron, EngineManager, LocalSparkEngine, ProcessEngine}
 
 /** `kaly`-style CLI (the reference ships an empty stub with intended
   * usage `kaly create pipeline pipeline.yaml`, `kaly/Readme.md:1-2`).
@@ -198,14 +198,16 @@ object Cli {
   }
 
   /** Verb dispatch, separated from `main` so ApiSpec can drive the CLI
-    * round-trip in-process. Returns a process exit code. */
+    * round-trip in-process. The read verbs print rows through
+    * [[JsonCodec]], the bytes the HTTP routes answer. Returns a process
+    * exit code. */
   def run(api: GraftApi, spark: SparkSession, args: List[String]): Int = args match {
     case "list" :: rest =>
-      api.listPipelines(prefix = rest.headOption).show(100, truncate = false); 0
+      printRows(spark, api.catalog.list(prefix = rest.headOption), _ != "pipeline_body")
     case "describe" :: uuid :: Nil =>
-      api.describePipeline(uuid).show(truncate = false); 0
+      printRows(spark, api.catalog.describe(uuid))
     case "downstream" :: uuid :: Nil =>
-      api.downstream(uuid).select("pipeline_uuid", "triggers_op").show(100, truncate = false); 0
+      printRows(spark, api.catalog.downstream(uuid), _ != "pipeline_body")
     case "history" :: uuid :: Nil =>
       // fixtures-backed like the demo catalog in main(), but the data
       // dir is configurable (r12 review: a hardcoded /root/testdata
@@ -222,12 +224,12 @@ object Cli {
         .agg(org.apache.spark.sql.functions.max("received_time"))
         .collect()(0).getTimestamp(0))
         .getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
-      api.eventHistory(events, now, pipelineUuid = Some(uuid), maxRecords = Some(20))
-        .show(truncate = false); 0
+      printRows(spark, api.eventHistory(events, now, pipelineUuid = Some(uuid), maxRecords = Some(20))
+        .as(events.encoder).collect().toSeq)
     case "running" :: Nil =>
-      api.runningJobs().show(truncate = false); 0
+      printRows(spark, api.engines.filteredRows(spark, Seq("running", "waiting", "pending")))
     case "cron-due" :: ts :: Nil =>
-      api.cronTick(Fixtures.ts(ts)).show(truncate = false); 0
+      printRows(spark, Cron.fire(api.catalog.defs, Fixtures.ts(ts)))
     case "create" :: "pipeline" :: path :: Nil =>
       val (d, triggers) = parsePipelineFile(spark, path)
       api.upsertPipeline(d, triggers)
@@ -241,17 +243,14 @@ object Cli {
       api.flushPipelines(prefix)
       println(s"flushed pipelines with prefix '$prefix'"); 0
     case "run" :: uuid :: Nil =>
-      // facade run_by_pipeline_uuid: synthesize an origination event
-      // against the live running/incubating views
-      import org.apache.spark.sql.Encoders
-      val res = api.runByPipelineUuid(uuid,
-        new java.sql.Timestamp(System.currentTimeMillis()),
-        // full running view (no page limit): the concurrency gate must
-        // see every live run, not the default 10-row page
-        api.runningJobs(limit = Int.MaxValue).as(Encoders.product[graft.model.RunningJob]),
-        spark.emptyDataset(Encoders.product[graft.orchestration.Dispatcher.IncubRow]))
-      val subs = res.submissions.collect()
-      subs.foreach(s => println(s"submitted ${s.pipeline_uuid} exec=${s.exec_uuid}"))
+      // facade run_by_pipeline_uuid: synthesize an origination event and
+      // dispatch it against every engine's live runs (the concurrency
+      // gate must see each one, not a page). The CLI holds no incubation
+      // state and submits nothing: it prints what the step dispatched.
+      val now = new java.sql.Timestamp(System.currentTimeMillis())
+      val subs = api.dispatchRows(Seq(api.manualOrigination(uuid, now)),
+        api.engines.allRows(spark), Nil, now).submissions
+      subs.foreach(s => println(s"dispatched ${s.pipeline_uuid} exec=${s.exec_uuid}"))
       if (subs.isEmpty) { System.err.println(s"no submission for $uuid (unknown or deferred)"); 1 }
       else 0
     case "abort" :: execUuid :: Nil =>
@@ -266,12 +265,16 @@ object Cli {
       2
   }
 
+  private def printRows(spark: SparkSession, rows: Seq[Product],
+                        keep: String => Boolean = _ => true): Int = {
+    println(JsonCodec.forSession(spark).rows(rows, keep)); 0
+  }
+
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.service()
     spark.sparkContext.setLogLevel("ERROR")
     // demo catalog = the deterministic fixtures; a deployment loads via MetaStore
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark),
+    val api = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
       new EngineManager(Seq(new LocalSparkEngine(spark), new ProcessEngine)))
     val code = run(api, spark, args.toList)
     spark.stop()

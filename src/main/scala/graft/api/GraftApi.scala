@@ -3,7 +3,6 @@ package graft.api
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.GraftConfig
 import graft.functions.Retry
@@ -56,70 +55,36 @@ object MetaStore {
 }
 
 /** The engine's verb surface — the reference's 18 FastAPI endpoints
-  * (`/root/reference/src/kalytical/facade.py:30-126`) as library
-  * methods over the catalog, event log, engine manager and dispatcher.
-  * Auth is out of scope for the engine core (SURVEY §2.a API surface);
-  * a thin HTTP layer could wrap this 1:1.
+  * (`kalytical/facade.py:30-126`) as library methods over the catalog,
+  * event log, engine manager and dispatcher. The catalog and the
+  * incubation and running state are driver values; the HTTP routes
+  * ([[HttpFacade]]) gate a verb and call these directly. Auth is out of
+  * scope for the engine core (SURVEY §2.a API surface).
   */
 final class GraftApi(
     val spark: SparkSession,
     // @volatile (r12 review): mutations run under the facade's dispatch
-    // lock but HTTP read routes read these WITHOUT it — a non-volatile
-    // var gives the reader thread no happens-before edge with the
-    // locked write, so it could observe arbitrarily stale catalog state
+    // lock but HTTP read routes read the catalog WITHOUT it — a
+    // non-volatile var gives the reader thread no happens-before edge
+    // with the locked write, so it could observe a stale catalog
     @volatile var catalog: Catalog,
-    @volatile var edges: Dataset[PipelineTrigger],
     val engines: EngineManager,
     val cfg: GraftConfig = GraftConfig.default,
     val cronProvider: CronProvider = new RegistryCronProvider) {
 
-  // --- catalog index ----------------------------------------------------
-  @volatile private var indexed: (Catalog, Dataset[PipelineTrigger], CatalogSnapshot) = _
+  /** The Dataset boundary: `defs` ([[Catalog]]'s Dataset form) and
+    * `edges` are collected on the catalog's first read, not here. */
+  def this(spark: SparkSession, defs: Catalog, edges: Dataset[PipelineTrigger],
+           engines: EngineManager, cfg: GraftConfig) =
+    this(spark, defs.withEdges(edges), engines, cfg)
 
-  /** The catalog as an index of driver values ([[CatalogSnapshot]]):
-    * built on first use after each catalog mutation, keyed on the
-    * identity of `catalog` and `edges` (public vars: whoever replaces
-    * them replaces the key), then probed by every dispatch step and
-    * read route. A local catalog collects without a Spark job. */
-  def snapshot: CatalogSnapshot = {
-    val (c, e) = (catalog, edges)
-    val cur = indexed
-    if (cur != null && (cur._1 eq c) && (cur._2 eq e)) cur._3
-    else synchronized {
-      val again = indexed
-      if (again != null && (again._1 eq c) && (again._2 eq e)) again._3
-      else {
-        val snap = CatalogSnapshot(c.defs.collect().toVector, e.collect().toVector)
-        indexed = (c, e, snap)
-        snap
-      }
-    }
-  }
-
-  private lazy val DefEnc = Encoders.product[PipelineDef]
-  private lazy val IncubEnc = Encoders.product[IncubRow]
+  def this(spark: SparkSession, defs: Catalog, edges: Dataset[PipelineTrigger],
+           engines: EngineManager) =
+    this(spark, defs, edges, engines, GraftConfig.default)
 
   // --- pipeline CRUD (facade.py:30-68) ---------------------------------
-  // the read verbs are the snapshot's rows as local Datasets
-  /** GET /pipeline/list (stub in the reference; semantics = D2). */
-  def listPipelines(prefix: Option[String] = None, tagTeam: Option[String] = None,
-                    tagEnv: Option[String] = None): DataFrame =
-    spark.createDataset(snapshot.list(prefix, tagTeam, tagEnv))(DefEnc).drop("pipeline_body")
-
-  /** GET /pipeline/describe */
-  def describePipeline(uuid: String): Dataset[PipelineDef] =
-    spark.createDataset(snapshot.describe(uuid))(DefEnc)
-
-  /** GET /pipeline/head */
-  def headPipeline(uuid: String): DataFrame = describePipeline(uuid).drop("pipeline_body")
-
-  /** GET /pipeline_config/fetch_pipeline_body (D8, facade.py:65-68). */
-  def fetchBody(uuid: String): DataFrame =
-    describePipeline(uuid).select("pipeline_uuid", "pipeline_body")
-
-  /** GET /pipeline/downstream (D1) */
-  def downstream(uuid: String): DataFrame =
-    spark.createDataset(snapshot.downstream(uuid))(DefEnc).drop("pipeline_body")
+  // the reads (list, describe, downstream, fetch_pipeline_body) are the
+  // catalog's own row functions
 
   /** PUT /pipeline (D5) — upsert def + its trigger edges, reconciling
     * the external schedule registration (`data_provider.py:69-70` +
@@ -129,12 +94,12 @@ final class GraftApi(
   def upsertPipeline(d: PipelineDef, triggers: Seq[PipelineTrigger]): Unit = {
     // every trigger row must belong to THIS def: a stray row for
     // another pipeline would silently inject an edge onto it — and be
-    // irremovable by re-upserting d, since the fold below only replaces
+    // irremovable by re-upserting d, since the upsert only replaces
     // rows keyed on d.pipeline_uuid (r7 review)
     val strays = triggers.filter(_.pipeline_uuid != d.pipeline_uuid)
     require(strays.isEmpty,
       s"trigger rows must reference pipeline_uuid=${d.pipeline_uuid}; got ${strays.map(_.pipeline_uuid).distinct.mkString(",")}")
-    val prev = snapshot.byUuid.get(d.pipeline_uuid)
+    val prev = catalog.byUuid.get(d.pipeline_uuid)
     val reconciled = d.schedule match {
       case Some(sched) =>
         d.copy(scheduler_tracking_id =
@@ -163,42 +128,32 @@ final class GraftApi(
     }
     if (reconciled.schedule.isEmpty)
       prev.flatMap(_.scheduler_tracking_id).foreach(cronProvider.deleteCronJob)
-    val others = edges.where(col("pipeline_uuid") =!= d.pipeline_uuid)
-    edges = others.unionByName(
-      spark.createDataset(triggers)(Encoders.product[PipelineTrigger]))
   }
 
   /** DELETE /pipeline (D6) — also deregisters any external schedule. */
   def deletePipeline(uuid: String, safeDelete: Boolean = true): Unit = {
-    val tracking = snapshot.byUuid.get(uuid).flatMap(_.scheduler_tracking_id)
-    catalog = catalog.delete(uuid, edges, safeDelete)
-    edges = edges.where(col("pipeline_uuid") =!= uuid)
+    val tracking = catalog.byUuid.get(uuid).flatMap(_.scheduler_tracking_id)
+    catalog = catalog.delete(uuid, safeDelete)
     tracking.foreach(cronProvider.deleteCronJob)
   }
 
   /** DELETE /pipeline/flush (D7). Flush bypasses the D6 per-pipeline
-    * orphan guard, so the flushed pipelines' trigger edges must go with
-    * them — a surviving edge whose child has no def would surface as an
-    * unknown-child warning on the next dispatch (ADVICE r1). External
-    * schedules deregister too (r12 review: [[deletePipeline]] did, flush
-    * did not — a flushed scheduled pipeline's CronJob kept firing
+    * orphan guard, so the flushed pipelines' trigger edges go with them
+    * ([[Catalog.flush]]), and so do their external schedules (r12
+    * review: a flushed scheduled pipeline's CronJob kept firing
     * callbacks for a nonexistent pipeline forever, and the stale
     * registration was unreachable afterwards because the def carrying
     * its tracking id was gone). */
   def flushPipelines(prefix: String): Unit = {
-    val doomedDefs = snapshot.list(Some(prefix))
+    val doomed = catalog.list(Some(prefix))
     catalog = catalog.flush(prefix)
-    val doomed = spark.createDataset(doomedDefs.map(_.pipeline_uuid))(Encoders.STRING)
-      .toDF("pipeline_uuid")
-    edges = edges.join(doomed, Seq("pipeline_uuid"), "left_anti")
-      .as[PipelineTrigger](Encoders.product[PipelineTrigger])
-    doomedDefs.foreach(_.scheduler_tracking_id.foreach(cronProvider.deleteCronJob))
+    doomed.foreach(_.scheduler_tracking_id.foreach(cronProvider.deleteCronJob))
   }
 
   // --- events & history (facade.py:100-116) ----------------------------
   /** POST /pipeline/dispatcher/event + the run_by_pipeline_uuid variant
     * (synthesizes an origination event, facade.py:72-78). One batch
-    * step of the dispatcher over the catalog index; returns its outputs.
+    * step of the dispatcher over the catalog; returns its outputs.
     *
     * A success or failure report for exec X means X has stopped, even
     * when the running rows still list it: they are refreshed after each
@@ -216,11 +171,12 @@ final class GraftApi(
           (e.event_subtype == "success" || e.event_subtype == "failure") => e.exec_uuid
     }.toSet
     val live = running.filterNot(j => j.exec_uuid != null && finished(j.exec_uuid))
-    Dispatcher.step(snapshot, live, incubating, events, now,
+    Dispatcher.step(catalog, live, incubating, events, now,
       cfg.concurrencyDebounceSeconds, cfg.incubatingJobAgeOutSeconds)
   }
 
-  /** [[dispatchRows]] over Dataset state, with Dataset outputs. */
+  /** [[dispatchRows]] over Dataset state, with Dataset outputs (the
+    * service benchmark's replay calls this form). */
   def dispatch(events: Seq[LifecycleEvent],
                running: Dataset[RunningJob],
                incubating: Dataset[IncubRow],
@@ -232,7 +188,7 @@ final class GraftApi(
     * used to bypass the history log, r7 review). */
   def manualOrigination(uuid: String, now: Timestamp): LifecycleEvent = {
     // negative id: engine-minted, the reserved half-space (see
-    // Cron.tick's sub-range note; r10 review). Strictly-decreasing
+    // Cron.fire's sub-range note; r10 review). Strictly-decreasing
     // per-process floor: two manual runs of DIFFERENT pipelines in the
     // same millisecond would otherwise alias in the durable event log —
     // the uniqueness contract the ingress negative-id guard defends for
@@ -242,11 +198,6 @@ final class GraftApi(
     LifecycleEvent(id, "job_exec_update", "origination", uuid,
       s"manual-$uuid-${now.getTime}", now, now, 0, disable_downstream = false)
   }
-
-  def runByPipelineUuid(uuid: String, now: Timestamp,
-                        running: Dataset[RunningJob],
-                        incubating: Dataset[IncubRow]): Dispatcher.StepResult =
-    dispatch(Seq(manualOrigination(uuid, now)), running, incubating, now)
 
   /** GET /pipeline/event/history (D10 semantics; stub in reference)
     * over a whole log; the HTTP route answers recent windows from the
@@ -260,23 +211,13 @@ final class GraftApi(
       maxRecords = maxRecords.getOrElse(cfg.historyMaxRecords))
 
   // --- runs (facade.py:80-98) ------------------------------------------
-  /** GET /pipeline/running (E2). */
-  def runningJobs(statuses: Seq[String] = Seq("running", "waiting", "pending"),
-                  pipelineUuid: Option[String] = None,
-                  limit: Int = 10): DataFrame =
-    engines.filteredJobs(spark, statuses, pipelineUuid, limit)
-
+  // the running page is the engines' `filteredRows`
   /** POST /pipeline/abort (E3/E6). */
   def abort(execUuid: String): Unit = engines.abort(execUuid)
 
   /** GET /pipeline/logs (E5). */
   def logs(engine: EngineBackend, execUuid: String, maxKb: Int = 10): String =
     engine.logs(execUuid, maxKb)
-
-  // --- scheduler (S4) ---------------------------------------------------
-  /** One cron tick: synthetic origination events for due schedules. */
-  def cronTick(now: Timestamp): Dataset[LifecycleEvent] =
-    Cron.tick(spark, catalog.defs, now)
 
   // --- single-use runs, incubation point ops, sys config ---------------
   /** POST /pipeline/dispatcher/run_single_use (`facade.py:80-83`) —
@@ -294,28 +235,16 @@ final class GraftApi(
   /** GET /pipeline/incubation/update (D15, `facade.py:109-114`) —
     * point-update one incubating row's waiting slots; an absent obj_id
     * is the reference's 404 path. */
-  def updateIncubatingRows(incubating: Seq[IncubRow], objId: String,
-                           updates: Map[String, String]): Seq[IncubRow] = {
+  def updateIncubating(incubating: Seq[IncubRow], objId: String,
+                       updates: Map[String, String]): Seq[IncubRow] = {
     require(incubating.exists(_.obj_id == objId),
       s"Could not update entry for id=$objId") // facade.py:113
     incubating.map(r => if (r.obj_id == objId) r.copy(triggers = r.triggers ++ updates) else r)
   }
 
   /** DELETE /pipeline/incubation/delete (D16, `facade.py:116-118`). */
-  def deleteIncubatingRows(incubating: Seq[IncubRow], objId: String): Seq[IncubRow] =
+  def deleteIncubating(incubating: Seq[IncubRow], objId: String): Seq[IncubRow] =
     incubating.filterNot(_.obj_id == objId)
-
-  /** [[updateIncubatingRows]] over a Dataset state. */
-  def updateIncubating(incubating: Dataset[IncubRow], objId: String,
-                       updates: Map[String, String]): Dataset[IncubRow] =
-    spark.createDataset(updateIncubatingRows(incubating.collect().toSeq, objId, updates))(IncubEnc)
-
-  /** [[deleteIncubatingRows]] over a Dataset state. */
-  def deleteIncubating(incubating: Dataset[IncubRow], objId: String): Dataset[IncubRow] =
-    spark.createDataset(deleteIncubatingRows(incubating.collect().toSeq, objId))(IncubEnc)
-
-  /** DELETE /pipeline_incubation/flush (D17, `facade.py:120-122`). */
-  def flushIncubating(): Dataset[IncubRow] = spark.emptyDataset[IncubRow](IncubEnc)
 
   /** GET /sys/config (`facade.py:124-126`) — the config as a dict. */
   def sysConfig: Map[String, String] =

@@ -14,10 +14,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
-import graft.orchestration.{Cron, Dispatcher, EngineJob, EngineManager, LocalSparkEngine}
+import graft.orchestration.{Catalog, Cron, Dispatcher, EngineJob, EngineManager, LocalSparkEngine}
 
 /** THE deployable process — the reference's service wiring
-  * (`/root/reference/src/kalytical/facade.py:138-150`: one asyncio
+  * (`kalytical/facade.py:138-150`: one asyncio
   * loop carrying uvicorn + `MQ_Poller.fetch_message_loop` +
   * `IncubatingJobCuller.cull_jobs_loop`, SIGINT → graceful shutdown)
   * re-expressed Spark-first. One `GraftService` composes everything
@@ -148,27 +148,14 @@ final class GraftService(
       fault("after-submit")
       facade.refreshRunning()
     }
-    // catalog mutations persist through the MetaStore when configured.
-    // A mutated catalog is a plan over the previous one, so saving it
-    // lazily could overwrite files it still reads (FAILED_READ_FILE) —
-    // localize the catalog-sized rows (the index's) first, save them,
-    // and keep them as the catalog
+    // catalog mutations persist through the MetaStore when configured:
+    // the catalog is driver rows, so the store's files serve restart-time
+    // loads only and no reader scans them while a save overwrites them
     metaStore.foreach { store =>
       facade.catalogHook.set { () =>
-        val rows = api.snapshot
-        val defsLocal = spark.createDataset(rows.defs)(Encoders.product[PipelineDef])
-        val edgesLocal = spark.createDataset(rows.edges)(Encoders.product[PipelineTrigger])
-        store.saveDefs(defsLocal)
-        store.saveEdges(edgesLocal)
-        // swap in the LOCALIZED datasets, not a files-backed reload
-        // (r12 review): a concurrent read route scanning the previous
-        // files-backed catalog would hit FAILED_READ_FILE when the
-        // next save's overwrite deletes those files mid-scan. The
-        // local rows ARE what was just persisted (catalog-sized,
-        // LocalRelation — lineage flat by construction); the store's
-        // files serve restart-time loads only, which race nothing.
-        api.catalog = graft.orchestration.Catalog(defsLocal)
-        api.edges = edgesLocal
+        val c = api.catalog
+        store.saveDefs(spark.createDataset(c.defs)(Encoders.product[PipelineDef]))
+        store.saveEdges(spark.createDataset(c.edges)(Encoders.product[PipelineTrigger]))
       }
     }
     val open = journal.open
@@ -548,7 +535,7 @@ final class GraftService(
     val now = nowProvider()
     val minute = now.getTime / 60000L
     if (minute != lastCronMinute) {
-      val due = Cron.fire(api.snapshot.defs, now)
+      val due = Cron.fire(api.catalog.defs, now)
       if (due.nonEmpty) onEvents(due, now)
       lastCronMinute = minute
     }
@@ -562,10 +549,10 @@ final class GraftService(
   }
 
   /** Submit each run to its def's engine, looked up in the catalog
-    * index the dispatcher itself read. */
+    * the dispatcher itself read. */
   private def submitAll(subs: Seq[Submission]): Unit =
     if (subs.nonEmpty) {
-      val defsByUuid = api.snapshot.byUuid
+      val defsByUuid = api.catalog.byUuid
       subs.foreach { sub =>
         // per-run isolation: one submission whose def names an
         // unregistered engine must not abort the rest of the batch —
@@ -842,17 +829,13 @@ object GraftService {
       case None => GraftConfig.default
     }
     val store = sys.env.get("GRAFT_META_DIR").map(_ => MetaStore.forConfig(cfg))
-    // localized once, as catalogHook does after a mutation: a files-
-    // backed catalog would be rescanned by every dispatch step
-    val (defs, edges) = store match {
-      case Some(s) =>
-        (spark.createDataset(s.loadDefs(spark).collect().toSeq)(Encoders.product[PipelineDef]),
-          spark.createDataset(s.loadEdges(spark).collect().toSeq)(Encoders.product[PipelineTrigger]))
-      case None =>
-        (graft.meta.Fixtures.defsDS(spark), graft.meta.Fixtures.edgesDS(spark))
+    val engines = new EngineManager(Seq(new LocalSparkEngine(spark)))
+    // the store's files are collected once, on the catalog's first read
+    val api = store match {
+      case Some(s) => new GraftApi(spark, Catalog(s.loadDefs(spark)), s.loadEdges(spark), engines, cfg)
+      case None => new GraftApi(spark, Catalog(graft.meta.Fixtures.defs, graft.meta.Fixtures.edges),
+        engines, cfg)
     }
-    val api = new GraftApi(spark, graft.orchestration.Catalog(defs), edges,
-      new EngineManager(Seq(new LocalSparkEngine(spark))), cfg)
     // no permissive mode: absent a configured token one is minted and
     // printed to stderr (local demo), so the HTTP surface is never
     // accidentally open

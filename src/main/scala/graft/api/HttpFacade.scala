@@ -15,11 +15,13 @@ import graft.orchestration.{Dispatcher, EngineJob, EventHistory, EventTail, Logg
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
-  * (`/root/reference/src/kalytical/facade.py:30-126`, 18 endpoints)
-  * as one thin file over [[SecuredGraftApi]]: route → verb → role gate
-  * → engine, nothing else. Built on the JDK's embedded
-  * `com.sun.net.httpserver` (zero added dependencies — the constraint
-  * a sandboxed build shares with a hermetic production image).
+  * (`kalytical/facade.py:30-126`, 18 endpoints) as one thin file over
+  * [[SecuredGraftApi]]: route → role gate → [[GraftApi]] verb, nothing
+  * else. Every route gates its verb with `can` before any other work
+  * (parsing a body, resolving a parameter, taking the lock). Built on
+  * the JDK's embedded `com.sun.net.httpserver` (zero added dependencies
+  * — the constraint a sandboxed build shares with a hermetic production
+  * image).
   *
   * Request/response conventions:
   *  - bearer auth via `Authorization: Bearer <token>`, exactly the
@@ -30,15 +32,15 @@ import graft.orchestration.Dispatcher.IncubRow
   *    [[JsonCodec]] (Jackson): bodies read by the case-class schema
   *    the way Spark's JSON reader did, a malformed body is a 400, and
   *    rows go out the way Spark's row serializer wrote them (null
-  *    fields omitted, ISO timestamps, maps as objects). Dispatch and
-  *    the read routes plan no Spark query; catalog mutations keep their
-  *    Spark validation, and an old history window reads the log.
+  *    fields omitted, ISO timestamps, maps as objects). Dispatch, the
+  *    catalog routes and the read routes plan no Spark query; only a
+  *    history window older than the tail reads the log.
   *
   * STATE: the reference keeps running/incubating/event-log state in
   * Mongo + K8s and answers each request with a few document lookups
   * (`dispatcher.py:15-68`). The facade holds the same state between
   * requests as plain driver values:
-  *  - the catalog index, [[GraftApi.snapshot]], built once per catalog
+  *  - the catalog, [[GraftApi.catalog]], a new value per catalog
   *    mutation;
   *  - the incubation rows, replaced by each step:
   *      incubating' = newIncubating ∪ deferred
@@ -157,54 +159,56 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   /** The 18 reference routes (`facade.py:30-126`), method-checked.
     * Path quirks preserved verbatim: `/pipeline_config/fetch_pipeline_body`
     * and `/pipeline_incubation/flush` really are underscored in the
-    * reference. A route that reads or replaces driver state gates its
-    * verb with `can` and works on the rows; the Session's Dataset verbs
-    * serve library callers. */
+    * reference. Each route gates its verb with `can` first — an
+    * anonymous flood must not parse bodies or serialize authorized
+    * mutations behind the lock (r7 review) — then works on the driver
+    * values. */
   private val routes: Seq[(String, Map[String, Handler])] = Seq(
     "/pipeline/config/list" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("list")
-      codec.rows(api.snapshot.list(r.opt("pipeline_prefix"), r.opt("tag_team"),
+      codec.rows(api.catalog.list(r.opt("pipeline_prefix"), r.opt("tag_team"),
         r.opt("tag_env")), _ != "pipeline_body")
     }),
     "/pipeline/config/describe" -> Map[String, Handler]("GET" -> { r =>
       r.session.can("describe")
-      codec.rows(api.snapshot.describe(r.param("pipeline_uuid")))
+      codec.rows(api.catalog.describe(r.param("pipeline_uuid")))
     }),
     "/pipeline/config/downstream" -> Map[String, Handler]("GET" -> { r =>
       r.session.can("downstream")
-      codec.rows(api.snapshot.downstream(r.param("pipeline_uuid")), _ != "pipeline_body")
+      codec.rows(api.catalog.downstream(r.param("pipeline_uuid")), _ != "pipeline_body")
     }),
     "/pipeline_config/fetch_pipeline_body" -> Map[String, Handler]("GET" -> { r =>
       r.session.can("head")
-      codec.rows(api.snapshot.describe(r.param("pipeline_uuid")),
+      codec.rows(api.catalog.describe(r.param("pipeline_uuid")),
         Set("pipeline_uuid", "pipeline_body"))
     }),
     "/pipeline/config/create_or_replace" -> Map[String, Handler]("POST" -> { r =>
-      r.session.can("upsert") // auth BEFORE body-parse driver work (r7 review)
+      r.session.can("upsert")
       val (d, triggers) = codec.upsert(r.body)
       mutate.synchronized {
-        r.session.upsertPipeline(d, triggers)
+        api.upsertPipeline(d, triggers)
         catalogHook.get()()
       }
       ok
     }),
     "/pipeline/config/delete" -> Map[String, Handler]("DELETE" -> { r =>
+      r.session.can("delete")
       mutate.synchronized {
-        r.session.deletePipeline(r.param("pipeline_uuid"),
-          r.opt("safe_delete").forall(_.toBoolean))
+        api.deletePipeline(r.param("pipeline_uuid"), r.opt("safe_delete").forall(_.toBoolean))
         catalogHook.get()()
       }
       ok
     }),
     "/pipeline/config/flush" -> Map[String, Handler]("DELETE" -> { r =>
+      r.session.can("flush")
       mutate.synchronized {
-        r.session.flushPipelines(r.param("pipeline_prefix"))
+        api.flushPipelines(r.param("pipeline_prefix"))
         catalogHook.get()()
       }
       ok
     }),
     "/pipeline/dispatcher/run_by_pipeline_uuid" -> Map[String, Handler]("POST" -> { r =>
-      r.session.can("dispatch")
+      r.session.can("runByPipelineUuid") // facade.py:72
       val now = reqNow(r)
       // the synthesized origination is a REAL lifecycle event: it
       // joins the history log and the durability sink like every
@@ -219,11 +223,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       codec.rows(ingest(Seq(ev), now))
     }),
     "/pipeline/dispatcher/run_single_use" -> Map[String, Handler]("POST" -> { r =>
-      r.session.can("runSingleUse") // auth before body-parse work
+      r.session.can("runSingleUse")
       val (d, argv, env) = codec.singleUse(r.body)
-      val exec = mutate.synchronized {
-        r.session.runSingleUse(d, EngineJob.Command(argv, env))
-      }
+      val exec = mutate.synchronized(api.runSingleUse(d, EngineJob.Command(argv, env)))
       codec.obj("exec_uuid" -> exec)
     }),
     "/pipeline/dispatcher/running" -> Map[String, Handler]("GET" -> { r =>
@@ -235,11 +237,10 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
         limit = r.opt("limit").map(_.toInt).getOrElse(10)))
     }),
     "/pipeline/dispatcher/get_logs" -> Map[String, Handler]("GET" -> { r =>
-      val backend = api.engines.backend(
-        r.opt("engine_name").getOrElse("spark-local"))
-      val logs = r.session.logs(backend, r.param("engine_tracking_id"),
-        r.opt("max_kb").map(_.toInt).getOrElse(10))
-      codec.obj("logs" -> logs)
+      r.session.can("logs")
+      val backend = api.engines.backend(r.opt("engine_name").getOrElse("spark-local"))
+      codec.obj("logs" -> api.logs(backend, r.param("engine_tracking_id"),
+        r.opt("max_kb").map(_.toInt).getOrElse(10)))
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("abort")
@@ -251,15 +252,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
         val named = (token +: api.engines.allRows(spark).collect {
           case j if j.engine_tracking_id == token => j.exec_uuid
         }).distinct
-        r.session.abort(token)
+        api.abort(token)
         commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, closed = named))
       }
       ok
     }),
     "/pipeline/dispatcher/event" -> Map[String, Handler]("POST" -> { r =>
-      r.session.can("dispatch") // auth first; parse OUTSIDE the global
-      // lock — an anonymous flood must not serialize every authorized
-      // mutation behind its parse work (r7 review)
+      r.session.can("dispatch")
       val now = reqNow(r)
       // SINK-STAMP received_time, the MQ-ingress contract (r10 review:
       // a null/ancient producer stamp hides the event from the
@@ -284,17 +283,17 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     }),
     "/pipeline/incubation/update" -> Map[String, Handler]("GET" -> { r =>
       // (sic) the reference gates this mutation behind GET, facade.py:109
-      r.session.can("incubationUpdate") // auth before body-parse work
+      r.session.can("incubationUpdate")
       val updates = codec.updates(r.body)
       mutate.synchronized {
-        replaceIncubating(api.updateIncubatingRows(incubating.rows, r.param("obj_id"), updates))
+        replaceIncubating(api.updateIncubating(incubating.rows, r.param("obj_id"), updates))
         codec.rows(incubating.rows, _ != "triggers") // map column: header view, like D14's
       }
     }),
     "/pipeline/incubation/delete" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("incubationDelete")
       mutate.synchronized {
-        replaceIncubating(api.deleteIncubatingRows(incubating.rows, r.param("obj_id")))
+        replaceIncubating(api.deleteIncubating(incubating.rows, r.param("obj_id")))
       }
       ok
     }),
@@ -305,13 +304,14 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     }),
     "/sys/config" -> Map[String, Handler](
       "GET" -> { r =>
-        codec.obj((r.session.sysConfig ++ extraSysConfig()).toSeq.sortBy(_._1): _*)
+        r.session.can("sysConfig")
+        codec.obj((api.sysConfig ++ extraSysConfig()).toSeq.sortBy(_._1): _*)
       },
       // admin actions (r13 ADVICE #2) — same path, POST, so the
       // reference's 18-route surface stays pinned while the service
       // gains an in-band reset lever (e.g. clear_mq_ingest_health)
       "POST" -> { r =>
-        r.session.can("flush") // admin verb class, BEFORE arg parsing
+        r.session.can("flush") // admin verb class
         val name = r.param("action")
         val act = sysActions.getOrElse(name, throw new IllegalArgumentException(
           s"unknown action '$name'; known: ${sysActions.keys.toSeq.sorted.mkString(", ")}"))
@@ -490,8 +490,8 @@ object HttpFacade {
 
   /** A driver-held row set. The facade's state lives here as plain
     * values; `get()` is the same rows as a local Dataset (a
-    * `LocalRelation`, which reads without a Spark job) for the
-    * Dataset-typed API. */
+    * `LocalRelation`, which reads without a Spark job) for the Dataset
+    * form of [[GraftApi.dispatch]]. */
   final class Rows[T](spark: SparkSession, enc: Encoder[T]) {
     private val ref = new AtomicReference[Vector[T]](Vector.empty)
     def rows: Vector[T] = ref.get()

@@ -1,18 +1,11 @@
 package graft.api
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.{DataFrame, Dataset}
-
-import graft.model._
-import graft.orchestration.{Dispatcher, EngineBackend}
-import graft.orchestration.Dispatcher.IncubRow
-
 /** The auth-gated facade: the role-check decorators of
-  * `facade.py:30-124` applied verb-by-verb over [[GraftApi]], so the
-  * engine core stays auth-free (SURVEY §2.a) and a deployment wraps it
-  * exactly once. `as(token)` is the request's bearer credential; every
-  * verb gates through [[Auth.Policy]] before delegating.
+  * `facade.py:30-124` as one gate over [[GraftApi]], so the engine core
+  * stays auth-free (SURVEY §2.a) and a deployment wraps it exactly once.
+  * `as(token)` is the request's bearer credential; a caller gates a verb
+  * through [[Auth.Policy]] with `can` before any other work, then calls
+  * the [[GraftApi]] verb directly.
   */
 final class SecuredGraftApi(val api: GraftApi, policy: Auth.Policy) {
 
@@ -20,68 +13,10 @@ final class SecuredGraftApi(val api: GraftApi, policy: Auth.Policy) {
   def anonymous: Session = new Session(None)
 
   final class Session private[SecuredGraftApi] (token: Option[String]) {
-    private def gate(verb: String): Unit = policy.require(verb, token)
-
-    /** Pre-flight authorization of `verb` WITHOUT running it — the
-      * HTTP layer rejects BEFORE spending driver work parsing request
-      * bodies (the reference's FastAPI dependency order; r7 review). */
-    def can(verb: String): Unit = gate(verb)
-
-    def listPipelines(prefix: Option[String] = None, tagTeam: Option[String] = None,
-                      tagEnv: Option[String] = None): DataFrame = {
-      gate("list"); api.listPipelines(prefix, tagTeam, tagEnv)
-    }
-    def describePipeline(uuid: String): Dataset[PipelineDef] = {
-      gate("describe"); api.describePipeline(uuid)
-    }
-    def headPipeline(uuid: String): DataFrame = { gate("head"); api.headPipeline(uuid) }
-    def fetchBody(uuid: String): DataFrame = { gate("head"); api.fetchBody(uuid) }
-    def downstream(uuid: String): DataFrame = { gate("downstream"); api.downstream(uuid) }
-    def upsertPipeline(d: PipelineDef, triggers: Seq[PipelineTrigger]): Unit = {
-      gate("upsert"); api.upsertPipeline(d, triggers)
-    }
-    def deletePipeline(uuid: String, safeDelete: Boolean = true): Unit = {
-      gate("delete"); api.deletePipeline(uuid, safeDelete)
-    }
-    def flushPipelines(prefix: String): Unit = { gate("flush"); api.flushPipelines(prefix) }
-    def dispatch(events: Seq[LifecycleEvent], running: Dataset[RunningJob],
-                 incubating: Dataset[IncubRow], now: Timestamp): Dispatcher.StepResult = {
-      gate("dispatch"); api.dispatch(events, running, incubating, now)
-    }
-    def runByPipelineUuid(uuid: String, now: Timestamp, running: Dataset[RunningJob],
-                          incubating: Dataset[IncubRow]): Dispatcher.StepResult = {
-      gate("runByPipelineUuid"); api.runByPipelineUuid(uuid, now, running, incubating)
-    }
-    def eventHistory(events: Dataset[LifecycleEvent], now: Timestamp,
-                     pipelineUuid: Option[String] = None,
-                     sinceSeconds: Option[Long] = None,
-                     maxRecords: Option[Int] = None): DataFrame = {
-      gate("history"); api.eventHistory(events, now, pipelineUuid, sinceSeconds, maxRecords)
-    }
-    def runningJobs(statuses: Seq[String] = Seq("running", "waiting", "pending"),
-                    pipelineUuid: Option[String] = None, limit: Int = 10): DataFrame = {
-      gate("running"); api.runningJobs(statuses, pipelineUuid, limit)
-    }
-    def abort(execUuid: String): Unit = { gate("abort"); api.abort(execUuid) }
-    def logs(engine: EngineBackend, execUuid: String, maxKb: Int = 10): String = {
-      gate("logs"); api.logs(engine, execUuid, maxKb)
-    }
-    def cronTick(now: Timestamp): Dataset[LifecycleEvent] = {
-      gate("cronTick"); api.cronTick(now)
-    }
-    def runSingleUse(d: PipelineDef, job: graft.orchestration.EngineJob): String = {
-      gate("runSingleUse"); api.runSingleUse(d, job)
-    }
-    def updateIncubating(incubating: Dataset[IncubRow], objId: String,
-                         updates: Map[String, String]): Dataset[IncubRow] = {
-      gate("incubationUpdate"); api.updateIncubating(incubating, objId, updates)
-    }
-    def deleteIncubating(incubating: Dataset[IncubRow], objId: String): Dataset[IncubRow] = {
-      gate("incubationDelete"); api.deleteIncubating(incubating, objId)
-    }
-    def flushIncubating(): Dataset[IncubRow] = {
-      gate("incubationFlush"); api.flushIncubating()
-    }
-    def sysConfig: Map[String, String] = { gate("sysConfig"); api.sysConfig }
+    /** Authorize `verb` or throw [[Auth.AuthError]] — before parsing a
+      * body, resolving a parameter or taking a lock, so a rejected
+      * request costs no driver work (the reference's FastAPI dependency
+      * order; r7 review). */
+    def can(verb: String): Unit = policy.require(verb, token)
   }
 }

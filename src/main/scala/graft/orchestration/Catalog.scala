@@ -1,73 +1,31 @@
 package graft.orchestration
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 
 import graft.model.{PipelineDef, PipelineTrigger}
 
-/** Pipeline catalog: the reference's `pipeline_defs` collection and its
-  * mutations (`/root/reference/src/kalytical/core/data_provider.py`
-  * D5–D7) over immutable Datasets; the reads (D1–D4, D8) are
-  * [[CatalogSnapshot]]'s.
+/** The pipeline catalog as plain driver values: the reference's
+  * `pipeline_defs` collection and its trigger edges
+  * (`kalytical/core/data_provider.py`), indexed once per catalog value
+  * — defs by uuid, dispatch [[StateMachine.Meta]] per pipeline, and
+  * child edges by parent. The reference answers a read or an event with
+  * a few document lookups (`dispatcher.py:15-68`); this is the index
+  * those lookups probe. The reads (D1–D3) and the mutations
+  * (D5–D7) are row functions; a mutation returns a new Catalog, which
+  * the holder swaps in — the reference's upsert/replace pattern without
+  * the Mongo mutex. Guards implement the INTENDED semantics (SURVEY
+  * §8.7–8.9): trigger references must exist (D5), deletes refuse when
+  * downstream pipelines depend on the target (D6) unless
+  * `safeDelete=false`.
   *
-  * Writes are functional (return a new Catalog) — persisting is an
-  * overwrite of a tiny metadata relation, mirroring the reference's
-  * upsert/replace pattern without the Mongo mutex. Guards implement the
-  * INTENDED semantics (SURVEY §8.7–8.9): trigger references must exist
-  * (D5), deletes refuse when downstream pipelines depend on the target
-  * (D6) unless `safeDelete=false`.
+  * The rows are loaded on first read: a catalog built from Datasets
+  * (the companion's Dataset boundary) collects them then, once, instead
+  * of at construction.
   */
-final case class Catalog(defs: Dataset[PipelineDef]) {
-  private def spark: SparkSession = defs.sparkSession
-
-  /** D2 — prefix + tag filtered header listing (the row verb of
-    * [[CatalogSnapshot.list]] over the collected defs). */
-  def list(prefix: Option[String] = None, tagTeam: Option[String] = None,
-           tagEnv: Option[String] = None): DataFrame =
-    spark.createDataset(CatalogSnapshot(defs.collect().toVector, Vector.empty)
-      .list(prefix, tagTeam, tagEnv))(Encoders.product[PipelineDef]).drop("pipeline_body")
-
-  /** D5 — upsert with referential trigger validation: every declared
-    * trigger must name an existing def (left-anti must be empty). */
-  def upsert(d: PipelineDef, triggers: Seq[PipelineTrigger]): Catalog = {
-    require(d.pipeline_uuid.matches("^[a-z0-9-]+$"), s"invalid pipeline_uuid: ${d.pipeline_uuid}")
-    val declared = spark.createDataset(triggers.map(_.trigger_uuid))(Encoders.STRING)
-      .toDF("trigger_uuid")
-    val missing = declared
-      .join(defs.select(col("pipeline_uuid").as("trigger_uuid")), Seq("trigger_uuid"), "left_anti")
-      .collect().map(_.getString(0))
-    require(missing.isEmpty, s"triggers reference unknown pipelines: ${missing.mkString(", ")}")
-    val replaced = defs.where(col("pipeline_uuid") =!= d.pipeline_uuid)
-      .unionByName(spark.createDataset(Seq(d))(Encoders.product[PipelineDef]))
-    Catalog(replaced)
-  }
-
-  /** D6 — delete with orphan guard: refuses when other pipelines trigger
-    * on the target (intended semantics, §8.8). */
-  def delete(uuid: String, edges: Dataset[PipelineTrigger], safeDelete: Boolean = true): Catalog = {
-    if (safeDelete) {
-      val orphanCount = edges.where(col("trigger_uuid") === uuid).limit(1).count()
-      require(orphanCount == 0, s"cannot delete $uuid: downstream pipelines depend on it")
-    }
-    Catalog(defs.where(col("pipeline_uuid") =!= uuid))
-  }
-
-  /** D7 — bulk delete of a D2 result set via left-anti rewrite. */
-  def flush(prefix: String): Catalog = {
-    val doomed = list(Some(prefix)).select("pipeline_uuid")
-    Catalog(defs.join(doomed, Seq("pipeline_uuid"), "left_anti")
-      .as[PipelineDef](Encoders.product[PipelineDef]))
-  }
-}
-
-/** The catalog as plain driver values, indexed once: defs by uuid,
-  * dispatch [[StateMachine.Meta]] per pipeline, and child edges by
-  * parent. The reference answers a read or an event with a few document
-  * lookups (`dispatcher.py:15-68`); this is the index those lookups
-  * probe, built once per catalog mutation (`GraftApi.snapshot`) instead
-  * of once per event. Every read verb here is the one implementation:
-  * the Dataset verbs wrap these rows in a local relation. */
-final case class CatalogSnapshot(defs: Vector[PipelineDef], edges: Vector[PipelineTrigger]) {
+final class Catalog private (loadDefs: () => Seq[PipelineDef],
+                             loadEdges: () => Seq[PipelineTrigger]) {
+  lazy val defs: Vector[PipelineDef] = loadDefs().toVector
+  lazy val edges: Vector[PipelineTrigger] = loadEdges().toVector
   lazy val byUuid: Map[String, PipelineDef] = defs.map(d => d.pipeline_uuid -> d).toMap
   lazy val metas: Map[String, StateMachine.Meta] = Dispatcher.metaMap(defs, edges)
   lazy val childEdges: Map[String, Vector[PipelineTrigger]] = edges.groupBy(_.trigger_uuid)
@@ -93,4 +51,48 @@ final case class CatalogSnapshot(defs: Vector[PipelineDef], edges: Vector[Pipeli
     val kids = childEdges.getOrElse(uuid, Vector.empty).map(_.pipeline_uuid).toSet
     defs.filter(d => kids(d.pipeline_uuid))
   }
+
+  /** D5 — upsert with referential trigger validation: every declared
+    * trigger must name a def already in the catalog. The def and its
+    * trigger rows replace any previous ones and go to the end. */
+  def upsert(d: PipelineDef, triggers: Seq[PipelineTrigger]): Catalog = {
+    require(d.pipeline_uuid.matches("^[a-z0-9-]+$"), s"invalid pipeline_uuid: ${d.pipeline_uuid}")
+    val missing = triggers.map(_.trigger_uuid).filterNot(byUuid.contains)
+    require(missing.isEmpty, s"triggers reference unknown pipelines: ${missing.mkString(", ")}")
+    Catalog(defs.filterNot(_.pipeline_uuid == d.pipeline_uuid) :+ d,
+      edges.filterNot(_.pipeline_uuid == d.pipeline_uuid) ++ triggers)
+  }
+
+  /** D6 — delete with orphan guard: refuses when other pipelines trigger
+    * on the target (intended semantics, §8.8). The target's own trigger
+    * rows go with it. */
+  def delete(uuid: String, safeDelete: Boolean = true): Catalog = {
+    if (safeDelete)
+      require(!edges.exists(_.trigger_uuid == uuid),
+        s"cannot delete $uuid: downstream pipelines depend on it")
+    Catalog(defs.filterNot(_.pipeline_uuid == uuid), edges.filterNot(_.pipeline_uuid == uuid))
+  }
+
+  /** D7 — bulk delete of a D2 result set with the flushed defs' own
+    * trigger rows. Flush bypasses the D6 orphan guard, so an edge from a
+    * survivor onto a flushed def stays (the dispatcher warns on it). */
+  def flush(prefix: String): Catalog = {
+    val doomed = list(Some(prefix)).map(_.pipeline_uuid).toSet
+    Catalog(defs.filterNot(d => doomed(d.pipeline_uuid)),
+      edges.filterNot(e => doomed(e.pipeline_uuid)))
+  }
+
+  /** These defs with `edges`, collected on first read. */
+  def withEdges(edges: Dataset[PipelineTrigger]): Catalog =
+    new Catalog(() => defs, () => edges.collect().toSeq)
+}
+
+object Catalog {
+  def apply(defs: Seq[PipelineDef], edges: Seq[PipelineTrigger]): Catalog =
+    new Catalog(() => defs, () => edges)
+
+  /** The Dataset boundary: a catalog of `defs` with no edges, collected
+    * on first read; [[Catalog.withEdges]] adds the edges the same way. */
+  def apply(defs: Dataset[PipelineDef]): Catalog =
+    new Catalog(() => defs.collect().toSeq, () => Nil)
 }

@@ -3,8 +3,6 @@ package graft.orchestration
 import java.sql.Timestamp
 import java.time.{ZoneOffset, ZonedDateTime}
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
-
 import graft.model.{LifecycleEvent, PipelineDef}
 
 /** Time-scheduled triggers: the reference's K8s CronJob provider (S4,
@@ -149,8 +147,4 @@ object Cron {
         e.exec_uuid.startsWith("cron-") && e.exec_uuid.endsWith(s"-${-e.event_id / 1000000L}"))
       Some(-e.event_id / 1000000L)
     else None
-
-  /** [[fire]] over a catalog Dataset, as a local Dataset. */
-  def tick(spark: SparkSession, defs: Dataset[PipelineDef], now: Timestamp): Dataset[LifecycleEvent] =
-    spark.createDataset(fire(defs.collect().toSeq, now))(Encoders.product[LifecycleEvent])
 }

@@ -7,7 +7,7 @@ import scala.collection.concurrent.TrieMap
   * materializes each scheduled pipeline as a K8s CronJob named
   * `kalytical-api-trigger-<uuid>` that calls back into the dispatcher.
   *
-  * In the Spark rebuild the TICK side is in-engine ([[Cron.tick]]
+  * In the Spark rebuild the TICK side is in-engine ([[Cron.fire]]
   * synthesizes origination events, S4) — but the provider SURFACE is
   * kept so deployments that want external firing (K8s CronJob, EventBridge,
   * Airflow) plug in behind the same trait, and so the catalog's

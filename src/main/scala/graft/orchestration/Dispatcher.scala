@@ -30,13 +30,12 @@ import graft.orchestration.StateMachine._
   * Scale: every input is bounded by the catalog, the live state or the
   * batch (the reference's regime is 10²–10⁴ pipelines, and the
   * reference itself handles an event with a few document lookups), so
-  * the step is a fold over plain Scala values: the catalog index
-  * ([[CatalogSnapshot]], built once per catalog mutation), the running
-  * rows, the incubation rows and the batch. Planning a Spark query
-  * costs more than the work of one event batch. The Dataset `step`
-  * wraps the same fold for library callers. The Spark statement of the
-  * same rules stays in the oracle-checked query registry
-  * (`k07_concurrency_gate`, `k18_deps_satisfied`).
+  * the step is a fold over plain Scala values: the catalog ([[Catalog]],
+  * indexed once per catalog value), the running rows, the incubation
+  * rows and the batch. Planning a Spark query costs more than the work
+  * of one event batch. The Spark statement of the same rules stays in
+  * the oracle-checked query registry (`k07_concurrency_gate`,
+  * `k18_deps_satisfied`).
   */
 object Dispatcher {
 
@@ -124,24 +123,9 @@ object Dispatcher {
   /** Engine statuses of a run that has not ended. */
   private[graft] val Live = Set("running", "waiting", "pending")
 
-  /** The Dataset form of [[step]]: collects the inputs (catalog-sized,
-    * live-state-sized and batch-sized) and wraps the outputs. */
-  def step(spark: SparkSession,
-           defs: Dataset[PipelineDef],
-           edges: Dataset[PipelineTrigger],
-           running: Dataset[RunningJob],
-           incubating: Dataset[IncubRow],
-           events: Dataset[LifecycleEvent],
-           now: Timestamp,
-           debounceSeconds: Long = 300L,
-           ageOutSeconds: Long = 86400L): StepResult =
-    step(CatalogSnapshot(defs.collect().toVector, edges.collect().toVector),
-      running.collect().toSeq, incubating.collect().toSeq, events.collect().toSeq,
-      now, debounceSeconds, ageOutSeconds).toResult(spark)
-
   /** The fold: one event batch against the catalog index, the running
     * set and the incubation state. */
-  def step(catalog: CatalogSnapshot,
+  def step(catalog: Catalog,
            running: Seq[RunningJob],
            incubating: Seq[IncubRow],
            events: Seq[LifecycleEvent],

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.concurrent.{ExecutionContext, Future}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 
 import graft.model.{RunningJob, Submission}
 
@@ -273,11 +273,4 @@ final class EngineManager(engines: Seq[EngineBackend]) {
         pipelineUuid.forall(_ == j.pipeline_uuid))
       .sortBy(j => Option(j.exec_uuid))
       .take(limit)
-
-  def filteredJobs(spark: SparkSession,
-                   statuses: Seq[String] = Nil,
-                   pipelineUuid: Option[String] = None,
-                   limit: Int = 10): DataFrame =
-    spark.createDataset(filteredRows(spark, statuses, pipelineUuid, limit))(
-      Encoders.product[RunningJob]).toDF()
 }

@@ -157,30 +157,27 @@ class AdviceResolvedSpec extends AnyFunSuite {
   }
 
   test("incubation point ops address rows by the obj_id read from state, either format") {
-    import org.apache.spark.sql.Encoders
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val api = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
     val rows = Seq(
       Dispatcher.IncubRow("p", "inc-000000000007", new Timestamp(1000L), None,
         "dependencies", 0, Map("dep-a" -> WaitRow.Waiting)),
       Dispatcher.IncubRow("p", "inc-000000000008-p", new Timestamp(2000L), None,
         "dependencies", 0, Map("dep-b" -> WaitRow.Waiting)))
-    val ds = spark.createDataset(rows)(Encoders.product[Dispatcher.IncubRow])
     // update + delete by the LEGACY id touch exactly that row
-    val upd = api.updateIncubating(ds, "inc-000000000007", Map("dep-a" -> "exec-9")).collect()
+    val upd = api.updateIncubating(rows, "inc-000000000007", Map("dep-a" -> "exec-9"))
     assert(upd.find(_.obj_id == "inc-000000000007").get.triggers("dep-a") == "exec-9")
     assert(upd.find(_.obj_id == "inc-000000000008-p").get.triggers("dep-b") == WaitRow.Waiting)
-    assert(api.deleteIncubating(ds, "inc-000000000007").collect()
+    assert(api.deleteIncubating(rows, "inc-000000000007")
       .map(_.obj_id).toSeq == Seq("inc-000000000008-p"))
     // and by the NEW-format id likewise
-    assert(api.deleteIncubating(ds, "inc-000000000008-p").collect()
+    assert(api.deleteIncubating(rows, "inc-000000000008-p")
       .map(_.obj_id).toSeq == Seq("inc-000000000007"))
   }
 
   // 5. cron id sub-range -------------------------------------------------
   test("cron origination ids occupy the documented -(minute*1e6 + i) sub-range") {
-    val fired = Cron.tick(spark, Fixtures.defsDS(spark), Fixtures.ts("2024-02-01 03:00:10"))
-      .collect()
+    val fired = Cron.fire(Fixtures.defs, Fixtures.ts("2024-02-01 03:00:10"))
     assert(fired.nonEmpty, "fixture cron must fire at 03:00")
     fired.foreach { ev =>
       val minute = Fixtures.ts("2024-02-01 03:00:10").getTime / 60000L

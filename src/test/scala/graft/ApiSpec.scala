@@ -6,7 +6,7 @@ import org.apache.spark.sql.Encoders
 import graft.api.{GraftApi, JsonCodec, MetaStore, ParquetMetaStore}
 import graft.meta.Fixtures
 import graft.model._
-import graft.orchestration.{Catalog, Dispatcher, EngineManager, LocalSparkEngine}
+import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
 
 /** Facade-verb surface (18 endpoints → GraftApi), MetaStore factory,
   * ingest parsing, retry semantics. */
@@ -18,11 +18,10 @@ class ApiSpec extends AnyFunSuite {
     Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))))
 
   test("list/describe/head/downstream verbs") {
-    val a = api
-    assert(a.listPipelines(Some("report-")).count() == 3)
-    assert(a.describePipeline("report-daily").count() == 1)
-    assert(!a.headPipeline("report-daily").columns.contains("pipeline_body"))
-    assert(a.downstream("report-daily").count() == 4)
+    val c = api.catalog
+    assert(c.list(Some("report-")).size == 3)
+    assert(c.describe("report-daily").size == 1)
+    assert(c.downstream("report-daily").size == 4)
   }
 
   test("upsert + delete round-trip keeps catalog and edges consistent") {
@@ -30,27 +29,27 @@ class ApiSpec extends AnyFunSuite {
     a.upsertPipeline(Fixtures.defs.head.copy(pipeline_uuid = "brand-new", schedule = None,
       scheduler_tracking_id = None),
       Seq(PipelineTrigger("brand-new", "report-daily", "any")))
-    assert(a.describePipeline("brand-new").count() == 1)
-    assert(a.edges.where($"pipeline_uuid" === "brand-new").count() == 1)
+    assert(a.catalog.describe("brand-new").size == 1)
+    assert(a.catalog.edges.count(_.pipeline_uuid == "brand-new") == 1)
     a.deletePipeline("brand-new")
-    assert(a.describePipeline("brand-new").count() == 0)
-    assert(a.edges.where($"pipeline_uuid" === "brand-new").count() == 0)
+    assert(a.catalog.describe("brand-new").isEmpty)
+    assert(!a.catalog.edges.exists(_.pipeline_uuid == "brand-new"))
   }
 
   test("flushPipelines drops defs AND their trigger edges; survivors still dispatch (D7)") {
     val a = api
-    assert(a.edges.where($"pipeline_uuid".startsWith("report-")).count() > 0)
+    assert(a.catalog.edges.exists(_.pipeline_uuid.startsWith("report-")))
     a.flushPipelines("report-")
-    assert(a.listPipelines(Some("report-")).count() == 0)
+    assert(a.catalog.list(Some("report-")).isEmpty)
     // flushed pipelines' trigger edges must go with them (ADVICE r1)
-    assert(a.edges.where($"pipeline_uuid".startsWith("report-")).count() == 0)
+    assert(!a.catalog.edges.exists(_.pipeline_uuid.startsWith("report-")))
     // success of a surviving parent whose children were all flushed must
     // dispatch cleanly (previously threw NoSuchElementException in childMeta)
-    val r = a.dispatch(
+    val r = a.dispatchRows(
       Seq(LifecycleEvent(900L, "job_exec_update", "success", "agg-revenue", "exec-900",
         Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)),
-      spark.emptyDataset[RunningJob], spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
-    assert(r.submissions.count() == 0)
+      Nil, Nil, Fixtures.NOW)
+    assert(r.submissions.isEmpty)
   }
 
   test("a failure report drops its own exec from the concurrency gate: the retry submits in the same step") {
@@ -62,17 +61,15 @@ class ApiSpec extends AnyFunSuite {
       "running", Some(Fixtures.NOW), None)
     val failure = LifecycleEvent(950L, "job_exec_update", "failure", "flaky-export", "exec-x",
       Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
-    val r = api.dispatch(Seq(failure), Seq(job("exec-x")).toDS(),
-      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
-    assert(r.submissions.collect().map(s => (s.pipeline_uuid, s.retry_count)).toSeq ==
+    val r = api.dispatchRows(Seq(failure), Seq(job("exec-x")), Nil, Fixtures.NOW)
+    assert(r.submissions.map(s => (s.pipeline_uuid, s.retry_count)) ==
       Seq(("flaky-export", 1)))
-    assert(r.deferred.collect().filter(_.reason == "concurrency").isEmpty,
+    assert(r.deferred.filter(_.reason == "concurrency").isEmpty,
       "the retry incubated behind its own finished attempt")
     // a DIFFERENT live exec of the pipeline still gates the retry
-    val gated = api.dispatch(Seq(failure), Seq(job("exec-x"), job("exec-y")).toDS(),
-      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
-    assert(gated.submissions.count() == 0)
-    assert(gated.deferred.collect().map(_.reason).toSeq == Seq("concurrency"))
+    val gated = api.dispatchRows(Seq(failure), Seq(job("exec-x"), job("exec-y")), Nil, Fixtures.NOW)
+    assert(gated.submissions.isEmpty)
+    assert(gated.deferred.map(_.reason) == Seq("concurrency"))
   }
 
   test("a success/failure report without an exec_uuid leaves the concurrency gate whole") {
@@ -85,10 +82,9 @@ class ApiSpec extends AnyFunSuite {
       Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
     val origination = LifecycleEvent(952L, "job_exec_update", "origination", "solo-maintenance",
       "orig-s", Fixtures.NOW, Fixtures.NOW, 0, disable_downstream = false)
-    val r = api.dispatch(Seq(failure, origination), Seq(live).toDS(),
-      spark.emptyDataset[Dispatcher.IncubRow], Fixtures.NOW)
-    assert(!r.submissions.collect().exists(_.pipeline_uuid == "solo-maintenance"))
-    assert(r.deferred.collect().map(d => (d.pipeline_uuid, d.reason)).toSeq
+    val r = api.dispatchRows(Seq(failure, origination), Seq(live), Nil, Fixtures.NOW)
+    assert(!r.submissions.exists(_.pipeline_uuid == "solo-maintenance"))
+    assert(r.deferred.map(d => (d.pipeline_uuid, d.reason))
       .contains(("solo-maintenance", "concurrency")))
   }
 
@@ -104,10 +100,9 @@ class ApiSpec extends AnyFunSuite {
 
   test("run_by_pipeline_uuid dispatches an origination event") {
     val a = api
-    val r = a.runByPipelineUuid("ingest-orders", Fixtures.NOW,
-      spark.emptyDataset[RunningJob],
-      spark.emptyDataset[Dispatcher.IncubRow])
-    assert(r.submissions.collect().map(_.pipeline_uuid).toSeq == Seq("ingest-orders"))
+    val r = a.dispatchRows(Seq(a.manualOrigination("ingest-orders", Fixtures.NOW)), Nil, Nil,
+      Fixtures.NOW)
+    assert(r.submissions.map(_.pipeline_uuid) == Seq("ingest-orders"))
   }
 
   test("event history verb applies defaults and filters") {
@@ -192,20 +187,18 @@ class ApiSpec extends AnyFunSuite {
     while (System.currentTimeMillis() < deadline && st() == "running") Thread.sleep(50)
     assert(st() == "success")
     assert(proc.logs(exec).contains(s"one $exec"))
-    assert(a.describePipeline("one-shot").count() == 0) // never registered
+    assert(a.catalog.describe("one-shot").isEmpty) // never registered
 
-    // incubation point ops over a metadata-scale dataset
-    val inc = spark.createDataset(Seq(
+    // incubation point ops over the driver-held rows
+    val inc = Seq(
       IncubRow("p-a", "obj-1", new Timestamp(1000L), None, "dependencies", 0,
         Map("dep-x" -> "waiting", "dep-y" -> "waiting")),
-      IncubRow("p-b", "obj-2", new Timestamp(2000L), None, "concurrency", 1, Map.empty)))(
-      org.apache.spark.sql.Encoders.product[IncubRow])
+      IncubRow("p-b", "obj-2", new Timestamp(2000L), None, "concurrency", 1, Map.empty))
     val updated = a.updateIncubating(inc, "obj-1", Map("dep-x" -> "exec-42"))
-    val row = updated.collect().find(_.obj_id == "obj-1").get
+    val row = updated.find(_.obj_id == "obj-1").get
     assert(row.triggers == Map("dep-x" -> "exec-42", "dep-y" -> "waiting"))
     intercept[IllegalArgumentException] { a.updateIncubating(inc, "no-such", Map.empty) } // 404
-    assert(a.deleteIncubating(inc, "obj-2").collect().map(_.obj_id).toSeq == Seq("obj-1"))
-    assert(a.flushIncubating().count() == 0)
+    assert(a.deleteIncubating(inc, "obj-2").map(_.obj_id) == Seq("obj-1"))
 
     // sys config surfaces exactly the config's keys
     val cfgMap = a.sysConfig
@@ -217,16 +210,15 @@ class ApiSpec extends AnyFunSuite {
     import graft.model.PipelineTrigger
     import graft.orchestration.RegistryCronProvider
     val provider = new RegistryCronProvider
-    val a = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-      cronProvider = provider)
+    val a = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
+      new EngineManager(Seq(new LocalSparkEngine(spark))), cronProvider = provider)
     val base = Fixtures.defs.head.copy(pipeline_uuid = "cron-new",
       schedule = Some("0 5 * * *"), scheduler_tracking_id = None)
 
     // schedule -> registered + tracking id stamped (data_provider.py:69-70)
     a.upsertPipeline(base, Seq.empty)
     assert(provider.listCronJobs() == Map("graft-cron-cron-new" -> "0 5 * * *"))
-    assert(a.describePipeline("cron-new").collect().head.scheduler_tracking_id
+    assert(a.catalog.describe("cron-new").head.scheduler_tracking_id
       .contains("graft-cron-cron-new"))
     // re-upsert with a new schedule -> re-created, not duplicated (409 path)
     a.upsertPipeline(base.copy(schedule = Some("30 6 * * *")), Seq.empty)
@@ -234,7 +226,7 @@ class ApiSpec extends AnyFunSuite {
     // schedule removed -> deregistered, tracking id cleared
     a.upsertPipeline(base.copy(schedule = None), Seq.empty)
     assert(provider.listCronJobs().isEmpty)
-    assert(a.describePipeline("cron-new").collect().head.scheduler_tracking_id.isEmpty)
+    assert(a.catalog.describe("cron-new").head.scheduler_tracking_id.isEmpty)
     // rejected upsert (unknown trigger) leaves no stray registration
     intercept[IllegalArgumentException] {
       a.upsertPipeline(base, Seq(PipelineTrigger("cron-new", "no-such-parent", "all")))
@@ -249,7 +241,7 @@ class ApiSpec extends AnyFunSuite {
         Seq(PipelineTrigger("cron-new", "no-such-parent", "all")))
     }
     assert(provider.listCronJobs() == Map("graft-cron-cron-new" -> "0 5 * * *"))
-    assert(a.describePipeline("cron-new").collect().head.scheduler_tracking_id
+    assert(a.catalog.describe("cron-new").head.scheduler_tracking_id
       .contains("graft-cron-cron-new"))
     a.upsertPipeline(base.copy(schedule = None), Seq.empty) // clean up for the next block
     assert(provider.listCronJobs().isEmpty)
@@ -270,7 +262,7 @@ class ApiSpec extends AnyFunSuite {
     a.upsertPipeline(base, Seq.empty)
     assert(provider.listCronJobs().nonEmpty)
     a.flushPipelines("cron-")
-    assert(a.describePipeline("cron-new").isEmpty)
+    assert(a.catalog.describe("cron-new").isEmpty)
     assert(provider.listCronJobs().isEmpty,
       "flush must deregister the flushed pipelines' external schedules")
   }
@@ -304,35 +296,31 @@ class ApiSpec extends AnyFunSuite {
     val secured = new SecuredGraftApi(api, policy)
 
     // read verb: read + admin groups pass, unknown group and missing token fail
-    assert(secured.as("tok-read").listPipelines(Some("report-")).count() == 3)
-    assert(secured.as("tok-admin").listPipelines(Some("report-")).count() == 3)
-    intercept[Auth.AuthError] { secured.as("tok-none").listPipelines() }
-    intercept[Auth.AuthError] { secured.anonymous.listPipelines() } // auth.py:27
-    // admin verb: read group denied, admin group passes
-    intercept[Auth.AuthError] { secured.as("tok-read").flushPipelines("nope-") }
-    val a2 = secured.as("tok-admin")
-    a2.upsertPipeline(Fixtures.defs.head.copy(pipeline_uuid = "auth-new", schedule = None,
-      scheduler_tracking_id = None), Seq.empty)
-    assert(a2.describePipeline("auth-new").count() == 1)
-    // API token = superuser on every verb (auth.py:32-33)
-    val root = secured.as("s3cret-api-token")
-    assert(root.listPipelines().count() >= 40)
-    root.flushPipelines("auth-new")
-    assert(root.listPipelines(Some("auth-new")).count() == 0)
-    // unknown token: the expired/unrecognized-schema path (auth.py:38)
-    intercept[Auth.AuthError] { secured.as("garbage").listPipelines() }
-    // the late-added verbs gate too: sys/config is read, run_single_use is admin
-    assert(secured.as("tok-read").sysConfig.nonEmpty)
-    intercept[Auth.AuthError] {
-      secured.as("tok-read").runSingleUse(Fixtures.defs.head,
-        graft.orchestration.EngineJob.Command(Seq("/bin/true")))
+    secured.as("tok-read").can("list")
+    secured.as("tok-admin").can("list")
+    intercept[Auth.AuthError] { secured.as("tok-none").can("list") }
+    intercept[Auth.AuthError] { secured.anonymous.can("list") } // auth.py:27
+    // the verb table: a read group passes exactly the read verbs, an
+    // admin group every verb
+    Auth.VerbRoles.foreach { case (verb, role) =>
+      if (role == "read") secured.as("tok-read").can(verb)
+      else intercept[Auth.AuthError](secured.as("tok-read").can(verb))
+      secured.as("tok-admin").can(verb)
     }
-    intercept[Auth.AuthError] { secured.as("tok-none").flushIncubating() }
+    // API token = superuser on every verb (auth.py:32-33)
+    Auth.VerbRoles.keys.foreach(secured.as("s3cret-api-token").can)
+    // unknown token: the expired/unrecognized-schema path (auth.py:38)
+    intercept[Auth.AuthError] { secured.as("garbage").can("list") }
+    // the late-added verbs gate too: sys/config is read, run_single_use is admin
+    secured.as("tok-read").can("sysConfig")
+    intercept[Auth.AuthError] { secured.as("tok-read").can("runSingleUse") }
+    intercept[Auth.AuthError] { secured.as("tok-none").can("incubationFlush") }
     // delete is admin-gated — deliberate deviation from facade.py:41's
     // read-gating slip (destructive verb behind the weakest role)
     assert(Auth.VerbRoles("delete") == "admin" && Auth.VerbRoles("upsert") == "admin")
-    intercept[Auth.AuthError] { secured.as("tok-read").deletePipeline("report-daily") }
-    assert(api.describePipeline("report-daily").count() == 1) // denied = untouched
+    intercept[Auth.AuthError] { secured.as("tok-read").can("delete") }
+    // a verb no route names is a programming error, not a denial
+    intercept[IllegalArgumentException] { secured.as("s3cret-api-token").can("cronTick") }
   }
 
   test("auth: JwtVerifier validates HS256/RS256 signatures, exp/nbf, and the groups claim") {
@@ -423,22 +411,16 @@ class ApiSpec extends AnyFunSuite {
       claims("\"Data-Engineers\""))).isEmpty)
 
     // end-to-end through the secured facade: the reference's 403 paths
-    val backing = api
     val policy = new Auth.Policy(verifier, apiTokens = Set.empty)
-    val secured = new SecuredGraftApi(backing, policy)
-    assert(secured.as(rs256(rsHdr, claims("\"Data-Analyst\"")))
-      .listPipelines(Some("report-")).count() == 3)
+    val secured = new SecuredGraftApi(api, policy)
+    secured.as(rs256(rsHdr, claims("\"Data-Analyst\""))).can("list")
     intercept[Auth.AuthError] { // read group cannot hit an admin verb
-      secured.as(rs256(rsHdr, claims("\"Data-Analyst\""))).deletePipeline("report-daily")
+      secured.as(rs256(rsHdr, claims("\"Data-Analyst\""))).can("delete")
     }
-    secured.as(hs256(hsHdr, claims("\"Data-Engineers\"")))
-      .upsertPipeline(Fixtures.defs.head.copy(pipeline_uuid = "jwt-new", schedule = None,
-        scheduler_tracking_id = None), Seq.empty)
-    assert(backing.describePipeline("jwt-new").count() == 1)
-    secured.as(hs256(hsHdr, claims("\"Data-Admin\""))).flushPipelines("jwt-new")
+    secured.as(hs256(hsHdr, claims("\"Data-Engineers\""))).can("upsert")
+    secured.as(hs256(hsHdr, claims("\"Data-Admin\""))).can("flush")
     intercept[Auth.AuthError] { // expired admin token is just an invalid token
-      secured.as(hs256(hsHdr, claims("\"Data-Engineers\"", exp = now - 1)))
-        .listPipelines()
+      secured.as(hs256(hsHdr, claims("\"Data-Engineers\"", exp = now - 1))).can("list")
     }
   }
 
@@ -453,9 +435,9 @@ class ApiSpec extends AnyFunSuite {
          "triggers": [{"trigger_uuid": "report-daily", "op": "all"},
                       {"trigger_uuid": "ingest-orders"}]}""")
     assert(Cli.run(a, spark, List("create", "pipeline", f.toString)) == 0)
-    val made = a.describePipeline("cli-made").collect().head
+    val made = a.catalog.describe("cli-made").head
     assert(made.retry_max == 2 && made.schedule.contains("0 4 * * *"))
-    val es = a.edges.where($"pipeline_uuid" === "cli-made").collect()
+    val es = a.catalog.edges.filter(_.pipeline_uuid == "cli-made")
     assert(es.map(_.trigger_uuid).sorted.toSeq == Seq("ingest-orders", "report-daily"))
     assert(es.forall(_.op == "all")) // missing op falls back to triggers_op
     // D5 validation still applies through the CLI path: unknown trigger parent
@@ -486,11 +468,11 @@ class ApiSpec extends AnyFunSuite {
         |  - trigger_uuid: ingest-orders
         |""".stripMargin)
     assert(Cli.run(a, spark, List("create", "pipeline", f.toString)) == 0)
-    val made = a.describePipeline("yaml-made").collect().head
+    val made = a.catalog.describe("yaml-made").head
     assert(made.retry_max == 3 && made.concurrency &&
       made.schedule.contains("0 5 * * *") && made.description == "from yaml" &&
       made.tags_team.contains("core"), s"yaml fields mis-parsed: $made")
-    val es = a.edges.where($"pipeline_uuid" === "yaml-made").collect()
+    val es = a.catalog.edges.filter(_.pipeline_uuid == "yaml-made")
     assert(es.map(_.trigger_uuid).sorted.toSeq == Seq("ingest-orders", "report-daily"))
     assert(es.forall(_.op == "all")) // missing op falls back to triggers_op
     // D5 validation applies through the YAML path too
@@ -574,7 +556,7 @@ class ApiSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(f, """{"pipeline_uuid": "cli-leaf"}""")
     assert(Cli.run(a, spark, List("create", "pipeline", f.toString)) == 0)
     assert(Cli.run(a, spark, List("delete", "cli-leaf")) == 0)
-    assert(a.describePipeline("cli-leaf").isEmpty)
+    assert(a.catalog.describe("cli-leaf").isEmpty)
     // flush by prefix removes the whole family (D7 through the CLI)
     Seq("fam-a", "fam-b").foreach { u =>
       val g = java.nio.file.Files.createTempFile(u, ".json")
@@ -582,7 +564,7 @@ class ApiSpec extends AnyFunSuite {
       assert(Cli.run(a, spark, List("create", "pipeline", g.toString)) == 0)
     }
     assert(Cli.run(a, spark, List("flush", "fam-")) == 0)
-    assert(a.listPipelines(prefix = Some("fam-")).isEmpty)
+    assert(a.catalog.list(prefix = Some("fam-")).isEmpty)
   }
 
   test("native dot == interpreted HOF dot, bit for bit") {

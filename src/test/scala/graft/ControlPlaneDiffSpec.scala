@@ -200,7 +200,7 @@ class ControlPlaneDiffSpec extends AnyFunSuite {
     val defs = Fixtures.defsDS(spark)
     val edges = Fixtures.edgesDS(spark)
     val api = new GraftApi(spark, Catalog(defs), edges, new EngineManager(Nil))
-    val snap = api.snapshot
+    val snap = api.catalog
     val uuids = Fixtures.defs.map(_.pipeline_uuid) :+ "no-such-pipeline"
     for (u <- uuids) {
       assert(tree(codec.rows(snap.describe(u))) ==

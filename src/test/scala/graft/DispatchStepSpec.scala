@@ -5,7 +5,7 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.Encoders
 
 import graft.api.GraftApi
 import graft.meta.Fixtures
@@ -66,11 +66,11 @@ class DispatchStepSpec extends AnyFunSuite {
   test("property: over 200 seeded batches every candidate lands once, the gate holds, obj_ids are conserved") {
     (0 until 200).foreach { seed =>
       val in = inputs(seed)
-      val r = stepOf(spark, in)
-      val subs = r.submissions.collect().toSeq
-      val deferred = r.deferred.collect().toSeq
-      val kept = r.newIncubating.collect().toSeq
-      val dropped = r.droppedObjIds.collect().map(_.getString(1)).toSeq
+      val r = stepOf(in)
+      val subs = r.submissions
+      val deferred = r.deferred
+      val kept = r.newIncubating
+      val dropped = r.dropped.map(_.obj_id)
       val ctx = s"seed $seed"
 
       // exec ids are unique
@@ -167,11 +167,10 @@ object DispatchStepSpec {
     Inputs(running, incubating, events)
   }
 
-  def stepOf(spark: SparkSession, in: Inputs): Dispatcher.StepResult =
-    Dispatcher.step(spark, Fixtures.defsDS(spark), Fixtures.edgesDS(spark),
-      spark.createDataset(in.running)(Encoders.product[RunningJob]),
-      spark.createDataset(in.incubating)(Encoders.product[IncubRow]),
-      spark.createDataset(in.events)(Encoders.product[LifecycleEvent]),
+  private val catalog = Catalog(Fixtures.defs, Fixtures.edges)
+
+  def stepOf(in: Inputs): Dispatcher.Step =
+    Dispatcher.step(catalog, in.running, in.incubating, in.events,
       now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
 
   private def routed(in: Inputs, subtype: String): Seq[LifecycleEvent] =

@@ -13,14 +13,16 @@ import graft.meta.Fixtures
 import graft.orchestration.{Catalog, EngineJob, EngineManager, LocalSparkEngine}
 
 /** Drift guard: one dispatcher. Every ingress (HTTP, MQ poll, culler
-  * and cron ticks) reaches `GraftApi.dispatch` → `Dispatcher.step`, and
-  * only `Dispatcher.step` folds the incubation state machine per key.
-  * A second caller of either is a second dispatcher whose routing and
-  * concurrency gate drift from the real one, so it fails here. The
+  * and cron ticks) reaches `GraftApi.dispatchRows` → `Dispatcher.step`,
+  * and only `Dispatcher.step` folds the incubation state machine per
+  * key. A second caller of either is a second dispatcher whose routing
+  * and concurrency gate drift from the real one, so it fails here. The
   * same holds for streaming: MQ ingest in `GraftService` is the one
   * streaming query main code starts. And the control plane runs on the
-  * driver: an event POST and the read routes start no Spark job, and
-  * neither does the service's durability on the ack path. */
+  * driver, in one representation: the catalog is driver rows, typed as
+  * a Dataset only at the MetaStore and construction boundary; an event
+  * POST, the catalog mutations and the read routes start no Spark job,
+  * and neither does the service's durability on the ack path. */
 class DispatcherGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src", "main", "scala")
 
@@ -50,6 +52,13 @@ class DispatcherGuardSpec extends AnyFunSuite {
   test("writeStream is started only from GraftService.scala (MQ ingest)") {
     assert(callers("""\.writeStream\b""".r) ==
       Seq(Paths.get("graft", "api", "GraftService.scala").toString))
+  }
+
+  test("only the MetaStore, Fixtures and the Catalog/GraftApi construction boundary type the catalog as a Dataset") {
+    assert(callers("""\bDataset\[Pipeline(Def|Trigger)\]""".r) == Seq(
+      Paths.get("graft", "api", "GraftApi.scala").toString,
+      Paths.get("graft", "meta", "Fixtures.scala").toString,
+      Paths.get("graft", "orchestration", "Catalog.scala").toString))
   }
 
   test("HttpFacade.scala parses and answers without Spark (no spark.read, no toJSON)") {
@@ -109,6 +118,32 @@ class DispatcherGuardSpec extends AnyFunSuite {
         .contains("exec-ingest-orders-9101"))
     } finally facade.stop()
     assert(jobs == 0, s"$jobs Spark jobs on the control plane")
+  }
+
+  test("standalone facade: 50 upserts with triggers, then describe, list, delete and flush start no Spark job") {
+    val spark = SparkSuite.spark
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val facade = new HttpFacade(secured(api), spark)
+    val base = s"http://127.0.0.1:${facade.start(0).getPort}"
+    // a chain: guard-000 triggers on ingest-orders, each next one on the last
+    def upsert(i: Int): String = {
+      val parent = if (i == 0) "ingest-orders" else f"guard-${i - 1}%03d"
+      f"""{"def":{"pipeline_uuid":"guard-$i%03d","description":"guard","retry_max":0,""" +
+        """"concurrency":false,"engine":"spark-local","engine_args":"{}","triggers_op":"any"},""" +
+        f""""triggers":[{"pipeline_uuid":"guard-$i%03d","trigger_uuid":"$parent","op":"any"}]}"""
+    }
+    val jobs = try jobsOf {
+      (0 until 50).foreach(i => call(base, "POST", "/pipeline/config/create_or_replace", upsert(i)))
+      assert(call(base, "GET", "/pipeline/config/describe?pipeline_uuid=guard-049").contains("guard-049"))
+      assert(call(base, "POST", "/pipeline/config/list?pipeline_prefix=guard-")
+        .split("\"pipeline_uuid\"").length - 1 == 50)
+      call(base, "DELETE", "/pipeline/config/delete?pipeline_uuid=guard-049")
+      call(base, "DELETE", "/pipeline/config/flush?pipeline_prefix=guard-")
+      assert(call(base, "POST", "/pipeline/config/list?pipeline_prefix=guard-") == "[]")
+    } finally facade.stop()
+    assert(jobs == 0, s"$jobs Spark jobs for catalog mutations without a MetaStore")
+    assert(!api.catalog.edges.exists(_.pipeline_uuid.startsWith("guard-")))
   }
 
   test("started service: an event POST and its run's callback start no Spark job, and both are journaled") {

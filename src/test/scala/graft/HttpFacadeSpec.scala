@@ -21,9 +21,10 @@ class HttpFacadeSpec extends AnyFunSuite {
   private val Admin = "admin-token"
   private val Read = "read-token"
 
-  private def newFacade(): HttpFacade = {
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))))
+  private def newApi(): GraftApi = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+    Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))))
+
+  private def newFacade(api: GraftApi = newApi()): HttpFacade = {
     val policy = new Auth.Policy(
       new Auth.StaticTokenVerifier(Map(
         Admin -> Seq("Data-Admin"),
@@ -45,8 +46,10 @@ class HttpFacadeSpec extends AnyFunSuite {
     client.send(b.build(), HttpResponse.BodyHandlers.ofString())
   }
 
-  private def withFacade(f: (HttpFacade, String) => Unit): Unit = {
-    val facade = newFacade()
+  private def withFacade(f: (HttpFacade, String) => Unit): Unit = withFacade(newApi())(f)
+
+  private def withFacade(api: GraftApi)(f: (HttpFacade, String) => Unit): Unit = {
+    val facade = newFacade(api)
     val addr = facade.start(0)
     try f(facade, s"http://127.0.0.1:${addr.getPort}")
     finally facade.stop()
@@ -109,6 +112,74 @@ class HttpFacadeSpec extends AnyFunSuite {
         .statusCode() == 400)
       assert(call(base, "GET", "/pipeline/config/list?pipeline_prefix=report-", Some(Read))
         .statusCode() == 405)
+    }
+  }
+
+  /** Every route and method with the verb it gates (`facade.py:30-126`;
+    * POST /sys/config is the admin action lever). */
+  private val RouteVerbs = Seq(
+    ("POST", "/pipeline/config/list", "list"),
+    ("GET", "/pipeline/config/describe", "describe"),
+    ("GET", "/pipeline/config/downstream", "downstream"),
+    ("GET", "/pipeline_config/fetch_pipeline_body", "head"),
+    ("POST", "/pipeline/config/create_or_replace", "upsert"),
+    ("DELETE", "/pipeline/config/delete", "delete"),
+    ("DELETE", "/pipeline/config/flush", "flush"),
+    ("POST", "/pipeline/dispatcher/run_by_pipeline_uuid", "runByPipelineUuid"),
+    ("POST", "/pipeline/dispatcher/run_single_use", "runSingleUse"),
+    ("GET", "/pipeline/dispatcher/running", "running"),
+    ("GET", "/pipeline/dispatcher/get_logs", "logs"),
+    ("DELETE", "/pipeline/dispatcher/abort_pipeline", "abort"),
+    ("POST", "/pipeline/dispatcher/event", "dispatch"),
+    ("GET", "/pipeline/dispatcher/event/history", "history"),
+    ("GET", "/pipeline/incubation/update", "incubationUpdate"),
+    ("DELETE", "/pipeline/incubation/delete", "incubationDelete"),
+    ("DELETE", "/pipeline_incubation/flush", "incubationFlush"),
+    ("GET", "/sys/config", "sysConfig"),
+    ("POST", "/sys/config", "flush"))
+
+  test("auth table: every route is 403 anonymous, and 403 for a read token exactly where its verb is admin") {
+    withFacade { (facade, base) =>
+      assert(RouteVerbs.map(_._2).distinct.size == facade.routeCount)
+      assert(RouteVerbs.map(_._3).toSet == Auth.VerbRoles.keySet, "a verb no route gates")
+      for ((method, path, verb) <- RouteVerbs) {
+        val anon = call(base, method, path)
+        assert(anon.statusCode() == 403, s"anonymous $method $path -> ${anon.statusCode()} ${anon.body()}")
+        val read = call(base, method, path, Some(Read))
+        assert((read.statusCode() == 403) == (Auth.VerbRoles(verb) == "admin"),
+          s"read token $method $path ($verb) -> ${read.statusCode()} ${read.body()}")
+      }
+    }
+  }
+
+  test("auth before work: an anonymous get_logs naming an unknown engine is 403, not 400") {
+    withFacade { (_, base) =>
+      val r = call(base, "GET", "/pipeline/dispatcher/get_logs?engine_name=nope&engine_tracking_id=x")
+      assert(r.statusCode() == 403, r.body())
+      assert(call(base, "GET", "/pipeline/dispatcher/get_logs?engine_name=nope&engine_tracking_id=x",
+        Some(Admin)).statusCode() == 400)
+    }
+  }
+
+  test("CLI read verbs print the bytes the HTTP read routes answer") {
+    val api = newApi()
+    def cli(args: String*): String = {
+      val out = new java.io.ByteArrayOutputStream()
+      assert(Console.withOut(out)(graft.api.Cli.run(api, spark, args.toList)) == 0)
+      out.toString("UTF-8").trim
+    }
+    withFacade(api) { (_, base) =>
+      def http(method: String, path: String): String = {
+        val r = call(base, method, path, Some(Read))
+        assert(r.statusCode() == 200, r.body())
+        r.body()
+      }
+      assert(cli("list", "report-") == http("POST", "/pipeline/config/list?pipeline_prefix=report-"))
+      assert(cli("describe", "report-daily") ==
+        http("GET", "/pipeline/config/describe?pipeline_uuid=report-daily"))
+      assert(cli("downstream", "report-daily") ==
+        http("GET", "/pipeline/config/downstream?pipeline_uuid=report-daily"))
+      assert(cli("running") == http("GET", "/pipeline/dispatcher/running"))
     }
   }
 

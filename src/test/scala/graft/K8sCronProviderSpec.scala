@@ -95,8 +95,8 @@ class K8sCronProviderSpec extends AnyFunSuite {
     import graft.meta.Fixtures
     import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
     val api2 = new InMemoryCronApi
-    val a = new graft.api.GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+    val a = new graft.api.GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
+      new EngineManager(Seq(new LocalSparkEngine(spark))),
       cronProvider = new K8sCronJobProvider(cfg, api2))
     val base = Fixtures.defs.head.copy(pipeline_uuid = "sched-k8s", schedule = Some("0 3 * * *"),
       triggers_op = None, scheduler_tracking_id = None)

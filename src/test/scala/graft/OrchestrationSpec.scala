@@ -1,7 +1,6 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.Encoders
 
 import graft.meta.Fixtures
 import graft.model._
@@ -13,7 +12,6 @@ import graft.orchestration.Dispatcher.IncubRow
   * §5.3-adjacent batch checks). */
 class OrchestrationSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
-  import spark.implicits._
 
   private def ts(s: String) = Fixtures.ts(s)
   private val now = Fixtures.NOW
@@ -29,45 +27,44 @@ class OrchestrationSpec extends AnyFunSuite {
       i.reason, i.retry_count, byObj.getOrElse(i.obj_id, Nil).map(t => t.trigger_uuid -> t.status).toMap))
   }
 
+  private val catalog = Catalog(Fixtures.defs, Fixtures.edges)
+
   private def step(events: Seq[LifecycleEvent],
                    incub: Seq[IncubRow] = Nil,
-                   running: Seq[RunningJob] = Nil) =
-    Dispatcher.step(spark,
-      Fixtures.defsDS(spark), Fixtures.edgesDS(spark),
-      spark.createDataset(running)(Encoders.product[RunningJob]),
-      spark.createDataset(incub)(Encoders.product[IncubRow]),
-      spark.createDataset(events)(Encoders.product[LifecycleEvent]),
-      now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
+                   running: Seq[RunningJob] = Nil,
+                   at: java.sql.Timestamp = now,
+                   cat: Catalog = catalog): Dispatcher.Step =
+    Dispatcher.step(cat, running, incub, events, at, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
 
   test("origination of a known pipeline submits it") {
     val r = step(Seq(mkEvent(1, "origination", "ingest-orders")))
-    val subs = r.submissions.collect()
+    val subs = r.submissions
     assert(subs.map(_.pipeline_uuid).toSeq == Seq("ingest-orders"))
-    assert(r.warnings.count() == 0)
+    assert(r.warnings.size == 0)
   }
 
   test("origination of an unknown pipeline warns, never submits (P4)") {
     val r = step(Seq(mkEvent(2, "origination", "no-such-pipeline")))
-    assert(r.submissions.count() == 0)
-    assert(r.warnings.select("pipeline_uuid").as[String].collect().toSeq == Seq("no-such-pipeline"))
+    assert(r.submissions.size == 0)
+    assert(r.warnings.map(_.pipeline_uuid) == Seq("no-such-pipeline"))
   }
 
   test("success fans out: 'any' children run, 'all' children incubate (P2/K8)") {
     val r = step(Seq(mkEvent(3, "success", "report-daily")))
-    val subs = r.submissions.collect().map(_.pipeline_uuid).sorted.toSeq
+    val subs = r.submissions.map(_.pipeline_uuid).sorted.toSeq
     // report-weekly + flaky-export are 'any'; report-monthly + ghost-child are 'all' >1 dep
     assert(subs == Seq("flaky-export", "report-weekly"))
-    val inc = r.newIncubating.collect().map(_.pipeline_uuid).sorted.toSeq
+    val inc = r.newIncubating.map(_.pipeline_uuid).sorted.toSeq
     assert(inc == Seq("ghost-child", "report-monthly"))
     // the satisfied slot records the source exec uuid
-    val gh = r.newIncubating.collect().find(_.pipeline_uuid == "report-monthly").get
+    val gh = r.newIncubating.find(_.pipeline_uuid == "report-monthly").get
     assert(gh.triggers("report-daily") == "exec-3")
     assert(gh.triggers("agg-revenue") == StateMachine.WaitRow.Waiting)
   }
 
   test("all-deps satisfied within one batch releases the child with sources (D14+S2-ii)") {
     val r = step(Seq(mkEvent(10, "success", "clean-orders"), mkEvent(11, "success", "clean-customer")))
-    val sub = r.submissions.collect().find(_.pipeline_uuid == "join-orders-customer")
+    val sub = r.submissions.find(_.pipeline_uuid == "join-orders-customer")
     assert(sub.isDefined)
     assert(sub.get.source_uuids == Map("clean-orders" -> "exec-10", "clean-customer" -> "exec-11"))
   }
@@ -75,8 +72,8 @@ class OrchestrationSpec extends AnyFunSuite {
   test("disable_downstream suppresses fan-out (P2)") {
     val ev = mkEvent(40, "success", "report-daily").copy(disable_downstream = true)
     val r = step(Seq(ev))
-    assert(r.submissions.count() == 0)
-    assert(r.newIncubating.count() == 0)
+    assert(r.submissions.size == 0)
+    assert(r.newIncubating.size == 0)
   }
 
   test("failure below retry_max resubmits with retry+1; at max dead-letters (P3/K15)") {
@@ -84,9 +81,9 @@ class OrchestrationSpec extends AnyFunSuite {
       mkEvent(20, "failure", "flaky-export", retry = 1), // retry_max=3 -> retry
       mkEvent(21, "failure", "flaky-export", retry = 3), // at max -> dead letter
       mkEvent(22, "failure", "ingest-orders", retry = 0))) // retry_max=0 -> dead letter
-    val subs = r.submissions.collect()
+    val subs = r.submissions
     assert(subs.map(s => (s.pipeline_uuid, s.retry_count)).toSet == Set(("flaky-export", 2)))
-    assert(r.deadLetters.select("pipeline_uuid").as[String].collect().sorted.toSeq ==
+    assert(r.deadLetters.map(_.pipeline_uuid).sorted ==
       Seq("flaky-export", "ingest-orders"))
   }
 
@@ -96,8 +93,8 @@ class OrchestrationSpec extends AnyFunSuite {
       mkEvent(31, "origination", "stream-metrics")), running = running ++ Seq(
       RunningJob("e2", "stream-metrics", "spark-local", "t", "running", None, None)))
     // stream-metrics has concurrency=true -> submits even while running
-    assert(r.submissions.collect().map(_.pipeline_uuid).toSeq == Seq("stream-metrics"))
-    val deferred = r.deferred.collect()
+    assert(r.submissions.map(_.pipeline_uuid).toSeq == Seq("stream-metrics"))
+    val deferred = r.deferred
     assert(deferred.map(_.pipeline_uuid).toSeq == Seq("report-daily"))
     assert(deferred.head.reason == "concurrency")
   }
@@ -109,15 +106,15 @@ class OrchestrationSpec extends AnyFunSuite {
     // once gate used to submit both
     val r = step(Seq(mkEvent(60, "origination", "report-daily"),
       mkEvent(61, "origination", "report-daily")))
-    assert(r.submissions.collect().map(_.pipeline_uuid).toSeq == Seq("report-daily"),
+    assert(r.submissions.map(_.pipeline_uuid).toSeq == Seq("report-daily"),
       "exactly one same-step candidate may run for a non-concurrent pipeline")
-    val d = r.deferred.collect()
+    val d = r.deferred
     assert(d.map(_.pipeline_uuid).toSeq == Seq("report-daily") &&
       d.head.reason == "concurrency")
     // concurrency=true pipelines are exempt: both same-step candidates run
     val r2 = step(Seq(mkEvent(62, "origination", "stream-metrics"),
       mkEvent(63, "origination", "stream-metrics")))
-    assert(r2.submissions.collect().length == 2 && r2.deferred.collect().isEmpty)
+    assert(r2.submissions.length == 2 && r2.deferred.isEmpty)
   }
 
   test("deferred rows keep source lineage; the debounced requeue releases WITH it (job_culler.py:26, r7 review)") {
@@ -126,18 +123,14 @@ class OrchestrationSpec extends AnyFunSuite {
     // submission must still carry the upstream exec lineage
     val running = Seq(RunningJob("e1", "report-weekly", "spark-local", "t", "running", None, None))
     val r1 = step(Seq(mkEvent(70, "success", "report-daily")), running = running)
-    val defRows = r1.deferred.collect().filter(_.pipeline_uuid == "report-weekly")
+    val defRows = r1.deferred.filter(_.pipeline_uuid == "report-weekly")
     assert(defRows.length == 1)
     assert(defRows.head.triggers == Map("report-daily" -> "exec-70"),
       s"deferred row must record its sources: ${defRows.head.triggers}")
     // debounce expires (advance now), nothing running anymore -> requeue
     val later = new java.sql.Timestamp(now.getTime + (Fixtures.DebounceSeconds + 10) * 1000L)
-    val r2 = Dispatcher.step(spark, Fixtures.defsDS(spark),
-      Fixtures.edgesDS(spark), spark.emptyDataset[RunningJob],
-      spark.createDataset(defRows.toSeq)(Encoders.product[IncubRow]),
-      spark.emptyDataset[LifecycleEvent], later,
-      Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
-    val released = r2.submissions.collect().filter(_.pipeline_uuid == "report-weekly")
+    val r2 = step(Nil, incub = defRows, at = later)
+    val released = r2.submissions.filter(_.pipeline_uuid == "report-weekly")
     assert(released.length == 1 && released.head.retry_count == 1)
     assert(released.head.source_uuids == Map("report-daily" -> "exec-70"),
       s"requeued run lost its lineage: ${released.head.source_uuids}")
@@ -150,20 +143,15 @@ class OrchestrationSpec extends AnyFunSuite {
     // behind a long-running instance
     val running = Seq(RunningJob("e1", "report-weekly", "spark-local", "t", "running", None, None))
     val r1 = step(Seq(mkEvent(70, "success", "report-daily")), running = running)
-    val d1 = r1.deferred.collect().filter(_.pipeline_uuid == "report-weekly")
+    val d1 = r1.deferred.filter(_.pipeline_uuid == "report-weekly")
     assert(d1.length == 1)
     val stableId = d1.head.obj_id
     var rows = d1.toSeq
     var at = now
     (1 to 3).foreach { cycle =>
       at = new java.sql.Timestamp(at.getTime + (Fixtures.DebounceSeconds + 10) * 1000L)
-      val r = Dispatcher.step(spark, Fixtures.defsDS(spark),
-        Fixtures.edgesDS(spark),
-        spark.createDataset(running)(Encoders.product[RunningJob]), // STILL blocked
-        spark.createDataset(rows)(Encoders.product[IncubRow]),
-        spark.emptyDataset[LifecycleEvent], at,
-        Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
-      val d = r.deferred.collect().filter(_.pipeline_uuid == "report-weekly")
+      val r = step(Nil, incub = rows, running = running, at = at) // STILL blocked
+      val d = r.deferred.filter(_.pipeline_uuid == "report-weekly")
       assert(d.length == 1, s"cycle $cycle: expected one re-deferred row")
       assert(d.head.obj_id == stableId,
         s"cycle $cycle grew the obj_id: ${d.head.obj_id}")
@@ -176,34 +164,28 @@ class OrchestrationSpec extends AnyFunSuite {
   test("culler releases satisfied + debounced rows from prior state, drops aged (S2/K16-K18)") {
     val state = incubRows(Fixtures.incubating, Fixtures.incubatingTriggers)
     val r = step(Nil, incub = state)
-    val subs = r.submissions.collect()
+    val subs = r.submissions
     // all-satisfied rows release: inc-03 (agg-revenue), inc-11 (flaky-export),
     // inc-15 (agg-supplier-balance); inc-05 would be but ages out first.
     // concurrency past debounce: only inc-06 (report-daily) — inc-07/inc-16
     // are within the 300 s debounce and stay incubating.
     assert(subs.map(_.pipeline_uuid).sorted.toSeq ==
       Seq("agg-revenue", "agg-supplier-balance", "flaky-export", "report-daily"))
-    val dropped = r.droppedObjIds.select("obj_id").as[String].collect().sorted.toSeq
+    val dropped = r.dropped.map(_.obj_id).sorted
     assert(dropped == Seq("inc-05", "inc-09", "inc-17"))
     // inc-08 within debounce stays
-    assert(r.newIncubating.collect().exists(_.obj_id == "inc-08"))
+    assert(r.newIncubating.exists(_.obj_id == "inc-08"))
   }
 
   test("success fan-out to a child with no def warns instead of failing (ADVICE r1)") {
     // an edge whose child def was flushed (D7 bypasses the D5 guard)
     val danglingEdges = Fixtures.edges :+ PipelineTrigger("vanished-child", "ingest-orders", "any")
-    val r = Dispatcher.step(spark,
-      Fixtures.defsDS(spark),
-      spark.createDataset(danglingEdges)(Encoders.product[PipelineTrigger]),
-      spark.emptyDataset[RunningJob],
-      spark.emptyDataset[IncubRow],
-      spark.createDataset(Seq(mkEvent(50, "success", "ingest-orders")))(
-        Encoders.product[LifecycleEvent]),
-      now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
+    val r = step(Seq(mkEvent(50, "success", "ingest-orders")),
+      cat = Catalog(Fixtures.defs, danglingEdges))
     // known children still dispatch; the dangling one becomes a warning
-    assert(r.submissions.collect().map(_.pipeline_uuid).sorted.toSeq ==
+    assert(r.submissions.map(_.pipeline_uuid).sorted.toSeq ==
       Seq("clean-orders", "stream-metrics"))
-    val w = r.warnings.collect().map(row => (row.getString(1), row.getString(2)))
+    val w = r.warnings.map(w => (w.pipeline_uuid, w.warning))
     assert(w.toSeq == Seq(("vanished-child", "unknown child pipeline for success fan-out")))
   }
 
@@ -212,12 +194,7 @@ class OrchestrationSpec extends AnyFunSuite {
     def releaseOf(objId: String, t: java.sql.Timestamp) = {
       val rows = incubRows(Fixtures.incubating.filter(_.obj_id == objId),
         Fixtures.incubatingTriggers)
-      Dispatcher.step(spark, Fixtures.defsDS(spark), Fixtures.edgesDS(spark),
-        spark.emptyDataset[RunningJob],
-        spark.createDataset(rows)(Encoders.product[IncubRow]),
-        spark.emptyDataset[LifecycleEvent],
-        t, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
-        .submissions.collect().map(_.exec_uuid).toSeq
+      step(Nil, incub = rows, at = t).submissions.map(_.exec_uuid)
     }
     // inc-06 and inc-04+inc-06 both contain report-daily releases
     val a = releaseOf("inc-06", now)
@@ -226,20 +203,15 @@ class OrchestrationSpec extends AnyFunSuite {
     // and two different rows released in ONE step differ too
     val both = incubRows(Fixtures.incubating.filter(i => Set("inc-03", "inc-06").contains(i.obj_id)),
       Fixtures.incubatingTriggers)
-    val subs = Dispatcher.step(spark, Fixtures.defsDS(spark), Fixtures.edgesDS(spark),
-      spark.emptyDataset[RunningJob],
-      spark.createDataset(both)(Encoders.product[IncubRow]),
-      spark.emptyDataset[LifecycleEvent],
-      now, Fixtures.DebounceSeconds, Fixtures.AgeOutSeconds)
-      .submissions.collect().map(_.exec_uuid)
+    val subs = step(Nil, incub = both).submissions.map(_.exec_uuid)
     assert(subs.distinct.length == subs.length)
   }
 
   test("catalog upsert validates trigger references (D5)") {
-    val cat = Catalog(Fixtures.defsDS(spark))
+    val cat = catalog
     val ok = cat.upsert(Fixtures.defs.head.copy(pipeline_uuid = "new-pipe"),
       Seq(PipelineTrigger("new-pipe", "ingest-orders", "any")))
-    assert(ok.defs.count() == 41)
+    assert(ok.defs.size == 41)
     val bad = intercept[IllegalArgumentException] {
       cat.upsert(Fixtures.defs.head.copy(pipeline_uuid = "new-pipe"),
         Seq(PipelineTrigger("new-pipe", "does-not-exist", "any")))
@@ -251,17 +223,16 @@ class OrchestrationSpec extends AnyFunSuite {
   }
 
   test("catalog delete refuses when downstream exists (D6), allows otherwise") {
-    val cat = Catalog(Fixtures.defsDS(spark))
-    val edges = Fixtures.edgesDS(spark)
-    intercept[IllegalArgumentException] { cat.delete("ingest-orders", edges) }
-    assert(cat.delete("ingest-orders", edges, safeDelete = false).defs.count() == 39)
-    assert(cat.delete("adhoc-task-00", edges).defs.count() == 39)
+    val cat = catalog
+    intercept[IllegalArgumentException] { cat.delete("ingest-orders") }
+    assert(cat.delete("ingest-orders", safeDelete = false).defs.size == 39)
+    assert(cat.delete("adhoc-task-00").defs.size == 39)
   }
 
   test("catalog list validates prefix and filters (D2)") {
-    val cat = Catalog(Fixtures.defsDS(spark))
-    assert(cat.list(Some("ingest-")).count() == 7)
-    assert(cat.list(tagTeam = Some("data-eng"), tagEnv = Some("prod")).count() == 10)
+    val cat = catalog
+    assert(cat.list(Some("ingest-")).size == 7)
+    assert(cat.list(tagTeam = Some("data-eng"), tagEnv = Some("prod")).size == 10)
     intercept[IllegalArgumentException] { cat.list(Some("Ingest_")) }
   }
 
@@ -314,10 +285,10 @@ class OrchestrationSpec extends AnyFunSuite {
 
   test("cron tick emits origination events for due schedules") {
     // fixtures schedule sources at '0 {i%24} * * *'
-    val fired = Cron.tick(spark, Fixtures.defsDS(spark), ts("2024-02-01 03:00:10")).collect()
+    val fired = Cron.fire(Fixtures.defs, ts("2024-02-01 03:00:10"))
     assert(fired.map(_.pipeline_uuid).toSeq == Seq("ingest-part")) // i=3
     assert(fired.head.event_subtype == "origination")
-    assert(Cron.tick(spark, Fixtures.defsDS(spark), ts("2024-02-01 03:01:10")).isEmpty)
+    assert(Cron.fire(Fixtures.defs, ts("2024-02-01 03:01:10")).isEmpty)
   }
 
   test("engine: submit/status/logs/abort lifecycle (E1-E8)") {
@@ -331,7 +302,7 @@ class OrchestrationSpec extends AnyFunSuite {
     val job = engine.jobs(spark).collect().head
     assert(job.engine_status == "success" && job.pipeline_uuid == "adhoc-task-00")
     assert(engine.logs("exec-test-1").contains("completed"))
-    assert(mgr.filteredJobs(spark, statuses = Seq("success")).count() == 1)
+    assert(mgr.filteredRows(spark, statuses = Seq("success")).size == 1)
     intercept[IllegalArgumentException] { mgr.submit("k8s", sub, _ => ()) }
   }
 
@@ -373,10 +344,10 @@ class OrchestrationSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] {
       new LocalSparkEngine(spark).submit(sub, EngineJob.Command(Seq("true")))
     }
-    // filteredJobs unions across heterogeneous backends
+    // filteredRows unions across heterogeneous backends
     val both = new EngineManager(Seq(new LocalSparkEngine(spark), engine))
-    assert(both.filteredJobs(spark, statuses = Seq("success", "failed", "aborted"), limit = 10)
-      .count() == 3)
+    assert(both.filteredRows(spark, statuses = Seq("success", "failed", "aborted"), limit = 10)
+      .size == 3)
   }
 
   test("abort/logs accept the engine_tracking_id the jobs endpoint reports (r10 review)") {
