@@ -1,6 +1,7 @@
 package graft.api
 
 import java.net.InetSocketAddress
+import java.nio.charset.StandardCharsets.UTF_8
 import java.sql.Timestamp
 import java.util.concurrent.{CountDownLatch, Executors, ScheduledExecutorService, TimeUnit}
 import java.util.concurrent.atomic.AtomicBoolean
@@ -8,13 +9,13 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
+import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
 import graft.orchestration.{Catalog, Cron, Dispatcher, EngineJob, EngineManager, LocalSparkEngine}
+import graft.sources.mq.{HttpMQ, MQClient}
 
 /** THE deployable process — the reference's service wiring
   * (`kalytical/facade.py:138-150`: one asyncio
@@ -25,13 +26,14 @@ import graft.orchestration.{Catalog, Cron, Dispatcher, EngineJob, EngineManager,
   *
   *  - the 18-endpoint [[HttpFacade]] (uvicorn analog), which OWNS the
   *    running/incubating/event-log state between requests;
-  *  - the MQ ingress: ONE Structured Streaming query over the
-  *    socket-backed `http-mq` DSv2 source (`mq_poller.py:16-30`'s SQS
-  *    long-poll; the 2 s `WaitTimeSeconds` becomes the processing-time
-  *    trigger), checkpointed offsets instead of the reference's
-  *    delete-at-most-one-per-poll ack bug, with the corrupt-message
-  *    quarantine (`_unmarshall_sqs`'s except-log path) persisted as an
-  *    append-only text sink;
+  *  - the MQ ingress: ONE driver thread, `graft-mq-poll`, long-polling
+  *    the queue bridge ([[HttpMQ]]; `mq_poller.py:16-30`'s SQS
+  *    long-poll, whose 2 s `WaitTimeSeconds` is `pollInterval`). Each
+  *    batch's end offset commits in the journal record that holds the
+  *    batch's effects, instead of the reference's
+  *    delete-at-most-one-per-poll ack bug, so a restart resumes right
+  *    after the last applied batch; the corrupt-message quarantine
+  *    (`_unmarshall_sqs`'s except-log path) is one file per batch;
   *  - the culler tick (`job_culler.py:17-44`): an empty-batch
   *    dispatcher step every `cullingIntervalSeconds`, so the
   *    debounce / deps-satisfied / age-out rules fire against wall
@@ -75,7 +77,9 @@ final class GraftService(
     // catalog is as ephemeral as the library regime, while the rest of
     // the service state is durable (r7 review)
     metaStore: Option[MetaStore] = None,
-    pollInterval: FiniteDuration = 2.seconds, // mq_poller.py:20 WaitTimeSeconds=2
+    // the MQ long-poll's wait (mq_poller.py:20 WaitTimeSeconds=2); a
+    // bridge that answers at once is polled this often
+    pollInterval: FiniteDuration = 2.seconds,
     cronCheckInterval: FiniteDuration = 5.seconds, // fires once per due minute
     nowProvider: () => Timestamp = () => new Timestamp(System.currentTimeMillis())) {
 
@@ -83,13 +87,10 @@ final class GraftService(
 
   private val api = secured.api
   val facade = new HttpFacade(secured, spark, nowProvider,
-    () => Map("mq_ingest_health" -> mqIngestUnhealthy.getOrElse("ok")),
+    () => Map("mq_ingest_health" -> mqHealth),
     sysActions = Map("clear_mq_ingest_health" -> (() => clearMqIngestHealth())))
 
-  // @volatile: the mq watchdog tick (scheduler thread) restarts a dead
-  // query by reassigning this; shutdown (caller thread) reads it after
-  // quiescing the scheduler
-  @volatile private[graft] var mqQuery: Option[StreamingQuery] = None
+  @volatile private var mqThread: Thread = _
   private var scheduler: ScheduledExecutorService = _
   private var shutdownHook: Thread = _
   private val stopped = new AtomicBoolean(false)
@@ -105,7 +106,11 @@ final class GraftService(
     graft.plans.GraftSql.register(spark)
     val addr = facade.start(port)
 
-    mqQuery = mqEndpoint.map(startMqIngest)
+    mqEndpoint.foreach { ep =>
+      mqThread = new Thread(() => pollLoop(new HttpMQ(ep)), "graft-mq-poll")
+      mqThread.setDaemon(true)
+      mqThread.start()
+    }
 
     scheduler = Executors.newSingleThreadScheduledExecutor { r =>
       val t = new Thread(r, "graft-service-ticks"); t.setDaemon(true); t
@@ -114,21 +119,6 @@ final class GraftService(
       cfg.cullingIntervalSeconds, cfg.cullingIntervalSeconds, TimeUnit.SECONDS)
     scheduler.scheduleWithFixedDelay(() => safely("cron") { cronTick() },
       cronCheckInterval.toMillis, cronCheckInterval.toMillis, TimeUnit.MILLISECONDS)
-    // MQ WATCHDOG (r12 review): one exception escaping the event path
-    // of foreachBatch (a failed journal write, a transient FS error)
-    // permanently TERMINATES the
-    // ingest query while the HTTP surface keeps answering — events
-    // then pile up at the broker until an operator bounces the whole
-    // process. The reference's poller loop log-and-continues
-    // (mq_poller.py:27); the streaming analog is restart-from-
-    // checkpoint: offsets resume where the dead incarnation committed,
-    // and the at-least-once window a mid-batch death opens is exactly
-    // the one the event-id dedup already bounds. The watchdog runs on
-    // the tick scheduler, which shutdown() quiesces BEFORE draining
-    // the query — so a restart can never race the drain.
-    scheduler.scheduleWithFixedDelay(() => safely("mq-watch") { mqWatchTick() },
-      10, 10, TimeUnit.SECONDS)
-
     shutdownHook = new Thread(() => shutdown(), "graft-service-sigint")
     Runtime.getRuntime.addShutdownHook(shutdownHook) // the SIGINT handler analog
     addr
@@ -165,213 +155,144 @@ final class GraftService(
     }
   }
 
-  // Restart-loop discipline (r12 advice): an unconditional 10 s restart
-  // of a DETERMINISTICALLY failing batch (poison message past
-  // quarantine, tail-rewind IllegalStateException, persistent FS error)
-  // re-executes the failing batch's foreachBatch side effects forever.
-  // Consecutive death-observations back off exponentially (2^n ticks,
-  // capped) and after MqMaxRestartFailures the watchdog STOPS restarting
-  // and raises `mq_ingest_health` on GET /sys/config — a permanent
-  // fault degrades loudly instead of looping. A completed batch on a
-  // restarted incarnation (lastProgress non-null) resets the counter,
-  // so transient faults keep the old self-healing behavior.
-  private[graft] val mqRestartFailures = new java.util.concurrent.atomic.AtomicInteger(0)
-  @volatile private[graft] var mqBackoffTicks: Int = 0
-  @volatile private[graft] var mqActiveTicks: Int = 0
-  @volatile private[graft] var mqIngestUnhealthy: Option[String] = None
-  private[graft] val MqMaxRestartFailures = 8
-  /** Consecutive active watchdog ticks (~1 hour at the 10 s cadence)
-    * after which a restarted incarnation counts as recovered even with
-    * NO completed batch (r13 ADVICE #2: on an idle topic lastProgress
-    * stays null forever, so transient deaths spread over weeks
-    * accumulated to the halt cap). The window is deliberately LONG
-    * (r14 review: a 3-minute window silently re-opened the infinite-
-    * restart loop for deterministic faults with a period over 3
-    * minutes — e.g. a poison message arriving every 10 minutes reset
-    * the count each cycle and the halt cap never fired): a fault that
-    * recurs FASTER than hourly still accumulates to the cap and halts
-    * loudly, while one rarer than hourly is indistinguishable from the
-    * transient faults this reset exists for, and its side-effect
-    * replay is bounded to at most one per window — the residual an
-    * operator watches via `mq_ingest_health` and clears via the
-    * admin action. */
-  private[graft] val MqStableResetTicks = 360
+  // ---- the MQ ingress ----------------------------------------------------
+  // One driver thread turns until shutdown (`mq_poller.py:16-30`). A turn
+  // long-polls from the journal's offset, reads the batch, decodes it with
+  // the HTTP ingress's rules, and commits it through `ingestDedup` with
+  // the batch's end offset in the same journal record as its effects;
+  // then it acks the offset upstream. A crash before that record replays
+  // the batch from the same offset, a crash after it replays nothing, so
+  // the event-id dedup is left with broker redelivery alone. A failed
+  // turn is logged and retried after a bounded exponential backoff
+  // (`mq_poller.py:27`), and `mq_ingest_health` on GET /sys/config
+  // reports the failure streak. Shutdown interrupts only a wait, never a
+  // step in flight.
 
-  /** Admin reset for the halt state (r13 ADVICE #2: mqIngestUnhealthy
-    * had no reset path short of a process restart): clears the health
-    * flag and counters so the next watchdog tick resumes restarting.
-    * Reached over HTTP via `POST /sys/config?action=clear_mq_ingest_health`
-    * (admin role — the flush verb class). */
+  @volatile private var mqFailures = 0
+  @volatile private var mqLastError = ""
+  private val mqWaitLock = new Object
+  private var mqWaiting = false // guarded by mqWaitLock
+
+  private[graft] def mqPolling: Boolean = mqThread != null && mqThread.isAlive
+
+  private def mqHealth: String =
+    if (mqFailures == 0) "ok"
+    else s"failing: $mqFailures consecutive mq turns failed; last error: $mqLastError"
+
+  /** Admin reset of `mq_ingest_health`, short of a process restart.
+    * Reached over HTTP via
+    * `POST /sys/config?action=clear_mq_ingest_health` (admin role — the
+    * flush verb class). */
   def clearMqIngestHealth(): String = {
-    val was = mqIngestUnhealthy
-    mqIngestUnhealthy = None
-    mqRestartFailures.set(0); mqBackoffTicks = 0; mqActiveTicks = 0
-    val msg = was match {
-      case Some(w) => s"cleared: $w"
-      case None    => "already ok"
-    }
+    val was = mqHealth
+    mqFailures = 0
+    mqLastError = ""
+    val msg = if (was == "ok") "already ok" else s"cleared: $was"
     System.err.println(s"[graft-service] mq ingest health reset by admin - $msg")
     msg
   }
 
-  private[graft] def mqWatchTick(): Unit =
-    mqEndpoint.foreach { ep =>
-      if (!stopped.get()) mqQuery.foreach { q =>
-        if (q.isActive) {
-          mqActiveTicks += 1
-          // recovery = a completed batch OR sustained uptime: an idle
-          // topic never completes a batch, and without the uptime arm
-          // rare transient deaths accumulate forever (r13 ADVICE #2)
-          if (mqRestartFailures.get() > 0 &&
-              (q.lastProgress != null || mqActiveTicks >= MqStableResetTicks)) {
-            val how = if (q.lastProgress != null) "batch completed"
-                      else s"active ${MqStableResetTicks} ticks"
-            System.err.println(s"[graft-service] mq ingest recovered ($how) - resetting failure count")
-            mqRestartFailures.set(0); mqBackoffTicks = 0
-          }
-        } else if (mqIngestUnhealthy.isEmpty) {
-          mqActiveTicks = 0
-          if (mqBackoffTicks > 0) mqBackoffTicks -= 1
-          else {
-            val why = q.exception.map(_.getMessage).getOrElse("stopped cleanly")
-            val n = mqRestartFailures.incrementAndGet()
-            if (n >= MqMaxRestartFailures) {
-              mqIngestUnhealthy = Some(
-                s"mq ingest halted after $n consecutive failed restarts; last error: $why")
-              System.err.println(s"[graft-service] ${mqIngestUnhealthy.get} - " +
-                "NOT restarting (see /sys/config mq_ingest_health)")
-            } else {
-              mqBackoffTicks = math.min(1 << n, 32) // 20 s … ~5 min between tries
-              System.err.println(
-                s"[graft-service] mq ingest query died ($why) - restart $n/$MqMaxRestartFailures, " +
-                  s"next retry in ${10 * (mqBackoffTicks + 1)}s if it dies again")
-              mqQuery = Some(startMqIngest(ep))
-            }
-          }
+  private def pollLoop(client: MQClient): Unit =
+    while (!stopped.get()) {
+      val began = System.currentTimeMillis()
+      val pause =
+        try {
+          val advanced = pollTurn(client)
+          mqFailures = 0
+          if (advanced) 0L else pollInterval.toMillis - (System.currentTimeMillis() - began)
+        } catch {
+          case _: InterruptedException => 0L // shutdown: the loop condition ends it
+          case e: Throwable =>
+            mqFailures += 1
+            mqLastError = String.valueOf(e.getMessage)
+            val backoff = math.min(pollInterval.toMillis << math.min(mqFailures - 1, 5),
+              GraftService.MqMaxBackoffMs)
+            System.err.println(s"[graft-service] mq turn failed ($mqFailures in a row, " +
+              s"next in $backoff ms): $mqLastError")
+            backoff
         }
-      }
+      if (pause > 0)
+        try waiting(Thread.sleep(pause)) catch { case _: InterruptedException => () }
     }
 
-  private def startMqIngest(ep: String): StreamingQuery = {
-      // per-checkpoint-incarnation token: batch ids restart at 0
-      // whenever the checkpoint is deleted/reset, and a batchId-only
-      // quarantine key would then overwrite the PREVIOUS incarnation's
-      // forensic rows (r8 advice). The token is the streaming QUERY ID
-      // from the checkpoint's own metadata file — stable across
-      // restarts that keep the checkpoint (so a replayed batch still
-      // overwrites its own dir, staying idempotent), fresh exactly
-      // when the checkpoint is reset (so incarnations never collide).
-      // Read lazily (the file exists once the query starts, before the
-      // first batch); Hadoop FS so any checkpoint filesystem works.
-      // Memoized ONLY on a successful read (r9 advice: a `lazy val`
-      // caches whatever the FIRST evaluation produced — after one
-      // transient FS error the wall-clock fallback was pinned for the
-      // whole incarnation, so a post-restart replayed batch wrote its
-      // forensic rows under a FRESH token dir instead of overwriting
-      // its own, re-introducing the duplicate-rows non-idempotency on
-      // the error path). Every batch retries the metadata read until
-      // one succeeds; a failed read throws, which the QUARANTINE
-      // try-guard below converts to a loudly-logged skip of THAT
-      // batch's forensic write — never an unstable wall-clock token,
-      // and never a dead ingest stream (a foreachBatch exception
-      // would TERMINATE the query permanently, r10 review #1: nothing
-      // watches/restarts mqQuery, so 'fail the batch loudly' here
-      // would actually mean 'halt all MQ ingest until process
-      // restart'). Quarantine is best-effort forensics; the EVENT
-      // path below never depends on the token.
-      val runTokenCache = new java.util.concurrent.atomic.AtomicReference[String](null)
-      def runToken: String = Option(runTokenCache.get()).getOrElse {
-        val p = new org.apache.hadoop.fs.Path(s"$checkpointRoot/mq-ingest/metadata")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val in = fs.open(p)
-        val body = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val tok = """"id"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(body)
-          .map(m => s"run_${m.group(1)}")
-          .getOrElse(sys.error(s"no id in stream metadata at $p"))
-        runTokenCache.compareAndSet(null, tok)
-        runTokenCache.get()
-      }
-      val raw = spark.readStream.format("http-mq").option("endpoint", ep).load()
-        .selectExpr("CAST(value AS STRING) AS value")
-      raw.writeStream
-        .queryName("graft-mq-ingest")
-        .option("checkpointLocation", s"$checkpointRoot/mq-ingest")
-        .outputMode("append")
-        .trigger(Trigger.ProcessingTime(pollInterval.toMillis))
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          // one Spark job reads the batch; the codec decodes each
-          // message on the driver, with the HTTP ingress's rules
-          val (decoded, rejected) = facade.codec.messages(
-            batch.collect().toSeq.map(_.getString(0)))
-          quarantineDir.foreach { d =>
-            // BEST-EFFORT guard (r10 review #1): a throw here — token
-            // metadata read OR the text write itself — would kill the
-            // 'graft-mq-ingest' query permanently and silently halt
-            // ALL event ingest while the HTTP facade keeps answering.
-            // Forensics must never outrank the data path: on failure,
-            // log loudly and move on; the next batch retries the
-            // (success-memoized) token read.
-            try {
-              // per-batch OVERWRITE, not a flat append: rejected
-              // messages have no event_id to dedup by, so a replayed
-              // batch would append the same forensic rows again forever
-              // — keyed on the stream's batchId, the replay overwrites
-              // its own dir and the quarantine stays idempotent (r8
-              // review #3)
-              if (rejected.nonEmpty)
-                spark.createDataset(rejected)(Encoders.STRING).write.mode("overwrite")
-                  .text(s"$d/$runToken/batch_$batchId")
-            } catch {
-              case scala.util.control.NonFatal(e) =>
-                System.err.println(
-                  s"[graft] quarantine write skipped for batch $batchId: ${e.getMessage}")
-            }
-          }
-          // poll-sized batch -> the shared ingress (catalog regime).
-          // MQ delivery is at-least-once against the service's own
-          // durable state (dispatch + persist happen BEFORE the stream
-          // checkpoint commits the offset), so a crash in that window
-          // replays the batch — dedup by event_id against the logged
-          // ids (restored from the durable log at start) makes the
-          // replay a no-op instead of duplicating history rows and
-          // re-dispatching already-applied events (r7 advice, medium).
-          // Since r8 the log append runs AFTER effects apply
-          // (HttpFacade.ingest), so a logged id always means an applied
-          // event — the dedup can never drop a batch whose effects were
-          // lost mid-apply.
-          // distinctBy first: SQS-style redelivery can land the same
-          // event_id TWICE IN ONE POLL, which the id probe alone
-          // cannot catch (neither copy is persisted yet)
-          val batchIds = scala.collection.mutable.Set.empty[Long]
-          val now = nowProvider()
-          val events = decoded
-            .filter(e => batchIds.add(e.event_id)) // keep FIRST copy, preserve arrival order
-            // SINK-STAMP received_time (the reference stamps at the
-            // data provider, `data_provider.py:130`): producer-supplied
-            // times can be null or arbitrarily old, which would both
-            // hide rows from history queries AND make the dedup horizon
-            // below never match a replayed id (r8 review #2.1). Stamping at
-            // first ingest also makes received_time rise monotonically
-            // across appended log files, which is what lets parquet
-            // row-group stats skip old history in a history read.
-            .map(_.copy(received_time = now))
-          if (events.nonEmpty) {
-            // probe + dispatch under ONE facade-lock acquisition
-            // (facade.ingestDedup, r8 review #2.3): probing outside the
-            // lock could miss an id a concurrent HTTP step is applying,
-            // and the event would apply twice. Horizon: a replayed id's logged copy
-            // carries its first-processing stamp — minutes (broker
-            // redelivery) to one restart gap (checkpoint replay) old —
-            // so the probe needs only recent ids; generous (7 days)
-            // because a miss only degrades to at-least-once.
-            val cutoff = new Timestamp(
-              now.getTime - cfg.mqDedupHorizonDays * 86400000L)
-            facade.ingestDedup(events, now, cutoff)
-            ()
-          }
-        }
-        .start()
+  /** One turn; false when no message arrived. */
+  private def pollTurn(client: MQClient): Boolean = {
+    val from = journal.mqOffset.getOrElse(checkpointOffset)
+    val end = waiting(client.batchEnd(from, pollInterval.toMillis))
+    if (end <= from || stopped.get()) false
+    else {
+      val msgs = client.read(from, end)
+      if (msgs.size != end - from)
+        throw new IllegalStateException(s"mq read [$from, $end) returned ${msgs.size} messages")
+      val (decoded, rejected) = facade.codec.messages(msgs.map(m => new String(m._3, UTF_8)))
+      quarantine(from, rejected)
+      // distinctBy: SQS-style redelivery can land the same event_id
+      // TWICE IN ONE POLL, which the id probe alone cannot catch (neither
+      // copy is logged yet); keep the first copy, in arrival order
+      val batchIds = scala.collection.mutable.Set.empty[Long]
+      val now = nowProvider()
+      val events = decoded
+        .filter(e => batchIds.add(e.event_id))
+        // SINK-STAMP received_time (the reference stamps at the data
+        // provider, `data_provider.py:130`): producer-supplied times can
+        // be null or arbitrarily old, which would both hide rows from
+        // history queries AND make the dedup horizon below never match a
+        // redelivered id
+        .map(_.copy(received_time = now))
+      // Horizon: a redelivered id's logged copy carries its first stamp,
+      // minutes old; generous (7 days) because a miss only degrades to
+      // at-least-once
+      val cutoff = new Timestamp(now.getTime - cfg.mqDedupHorizonDays * 86400000L)
+      facade.ingestDedup(events, now, cutoff, Some(end))
+      client.commit(end)
+      true
+    }
   }
+
+  /** Run one wait of the poll thread; shutdown interrupts only these. */
+  private def waiting[T](body: => T): T = {
+    mqWaitLock.synchronized {
+      if (stopped.get()) throw new InterruptedException("shutting down")
+      mqWaiting = true
+    }
+    // an interrupt that lands after `body` returned is cleared here, so it
+    // cannot reach the step that follows
+    try body finally mqWaitLock.synchronized { mqWaiting = false; Thread.interrupted(); () }
+  }
+
+  /** Where a root without a journaled offset starts: the last committed
+    * offset of the Structured Streaming ingest that earlier versions ran
+    * under `mq-ingest/` (the newest batch under `commits/`, whose end
+    * offset is the last line of `offsets/<id>`), else 0. Read only until
+    * the first batch journals its offset. */
+  private lazy val checkpointOffset: Long = {
+    val ckpt = new Path(s"$checkpointRoot/mq-ingest")
+    val commits = new Path(ckpt, "commits")
+    val fs = hadoopFs(ckpt)
+    val newest = if (!fs.exists(commits)) None
+      else fs.listStatus(commits).map(_.getPath.getName)
+        .filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).maxOption
+    newest.fold(0L) { id =>
+      val in = fs.open(new Path(ckpt, s"offsets/$id"))
+      try new String(in.readAllBytes(), UTF_8).split('\n').map(_.trim).filter(_.nonEmpty).last.toLong
+      finally in.close()
+    }
+  }
+
+  /** Best-effort forensics: a batch's rejected messages, one per line, in
+    * one file named by the batch's start offset. A replay starts at the
+    * same committed offset, so it overwrites its own file. */
+  private def quarantine(from: Long, rejected: Seq[String]): Unit =
+    quarantineDir.filter(_ => rejected.nonEmpty).foreach { d =>
+      try {
+        val p = new Path(d, f"batch-$from%012d.txt")
+        val out = hadoopFs(p).create(p, true)
+        try out.write(rejected.mkString("", "\n", "\n").getBytes(UTF_8)) finally out.close()
+      } catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] quarantine write skipped for the batch at $from: ${e.getMessage}")
+      }
+    }
 
   // ---- durable service state -------------------------------------------
   // The reference keeps incubating runs + event history in MongoDB, one
@@ -381,8 +302,9 @@ final class GraftService(
   // journal under `service-state/journal` ([[Journal]]): each step
   // commits one hsync'd JSON line — its events, its incubation delta
   // and its submissions (the outbox) — before any of it takes effect.
-  // An MQ batch is one step, so the batch commits together. A restart
-  // replays the last snapshot and the segments after it: the
+  // An MQ batch is one step, so the batch commits together, with its
+  // end offset. A restart replays the last snapshot and the segments
+  // after it: the
   // incubation rows, the logged ids (the MQ replay probe), the history
   // tail's coverage floor and the uncompacted events, the cron
   // high-water minute, and the outbox, whose still-open runs are
@@ -398,9 +320,9 @@ final class GraftService(
 
   private def stateRoot = s"$checkpointRoot/service-state"
   private def eventsDir = s"$stateRoot/events"
-  // the HADOOP filesystem of checkpointRoot, like the MQ runToken beside
-  // it (r12 review: java.nio paths silently resolved "hdfs://..." to a
-  // LOCAL directory literally named "hdfs:")
+  // the HADOOP filesystem of a path under checkpointRoot (java.nio paths
+  // silently resolved "hdfs://..." to a LOCAL directory literally named
+  // "hdfs:")
   private def hadoopFs(p: Path): org.apache.hadoop.fs.FileSystem =
     p.getFileSystem(spark.sessionState.newHadoopConf())
 
@@ -414,7 +336,7 @@ final class GraftService(
 
   private def commit(c: HttpFacade.Commit): Unit = {
     fault("before-journal")
-    journal.commit(c.events, c.rows, c.submissions, c.closed)
+    journal.commit(c.events, c.rows, c.submissions, c.closed, c.mqOffset)
     fault("after-journal")
   }
 
@@ -666,23 +588,20 @@ final class GraftService(
         retry_count = sub.retry_count, disable_downstream = false)), now)
     }
 
-  /** Graceful shutdown (`facade.py:142-150`): stop ticking, drain the
-    * in-flight micro-batch (bounded grace), stop the stream, close the
-    * HTTP server. Idempotent; also wired to JVM shutdown (SIGINT). */
+  /** Graceful shutdown (`facade.py:142-150`): stop ticking, end the MQ
+    * poll thread (a pending wait is interrupted, a step in flight runs
+    * out), close the HTTP server. Idempotent; also wired to JVM shutdown
+    * (SIGINT). */
   def shutdown(graceMillis: Long = 10000L): Unit = {
     if (stopped.compareAndSet(false, true)) {
       try {
         // ONE deadline shared by every phase (r12 review): per-phase
         // budgets of graceMillis each let worst-case shutdown run to
         // ~3× the stated grace — under a K8s terminationGracePeriod
-        // sized to graceMillis, SIGKILL would land mid q.stop()/
-        // facade.stop(), reopening the interrupt-between-effects-and-
-        // checkpoint replay window the drain exists to close. Phases
-        // spend from the same budget; whatever remains goes to the
-        // drain, which matters most (stop() interrupts the in-flight
-        // batch; an expired drain degrades to the documented
-        // at-least-once replay — observed r12 under a co-resident test
-        // JVM, where a 1-event batch outlived the old 5 s cap).
+        // sized to graceMillis, SIGKILL would land mid-phase. Whatever
+        // the ticks leave goes to the poll thread's step in flight; one
+        // that outlives it is cut by the process exit, and its batch
+        // replays from the journaled offset.
         val deadline = System.currentTimeMillis() + graceMillis
         def remaining: Long = math.max(0L, deadline - System.currentTimeMillis())
         if (scheduler != null) {
@@ -690,29 +609,11 @@ final class GraftService(
           scheduler.awaitTermination(remaining, TimeUnit.MILLISECONDS)
           ()
         }
-        mqQuery.foreach { q =>
-          // bounded drain: a ProcessingTime query never self-terminates,
-          // so awaitTermination cannot observe "batch done" — poll the
-          // trigger-active flag instead and stop once the in-flight
-          // micro-batch (ingest + persist) has committed; a hung batch
-          // must not wedge shutdown, so the wait is capped.
-          // Exception-safe (r12 review): a query that already DIED
-          // rethrows its stored StreamingQueryException from both
-          // stop() and awaitTermination() — letting that propagate
-          // skipped facade.stop(), leaking the HttpServer's non-daemon
-          // pool threads (the exact JVM-never-exits leak the r7
-          // HttpFacade.stop() fix closed). The query is dead either
-          // way; log and keep shutting down.
-          try {
-            while (q.status.isTriggerActive && remaining > 0)
-              Thread.sleep(50)
-            q.stop()
-            q.awaitTermination(math.max(remaining, 1000L))
-            ()
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[graft-service] mq query shutdown: ${e.getMessage}")
-          }
+        if (mqThread != null) {
+          mqWaitLock.synchronized { if (mqWaiting) mqThread.interrupt() }
+          mqThread.join(math.max(remaining, 1L))
+          if (mqThread.isAlive)
+            System.err.println("[graft-service] mq poll thread still in a step at the shutdown deadline")
         }
         facade.stop()
         safely("settle")(settle())
@@ -733,6 +634,9 @@ final class GraftService(
 object GraftService {
 
   private val EventEnc = Encoders.product[LifecycleEvent]
+
+  /** The longest pause between failed MQ turns. */
+  private val MqMaxBackoffMs = 60000L
 
   /** Callback event-id space: the NEGATIVE half-space, nanosecond-
     * seeded and strictly DECREASING. External producers own every
@@ -816,7 +720,10 @@ object GraftService {
     *   GRAFT_HTTP_PORT       listen port (default 8080)
     *   GRAFT_MQ_ENDPOINT     http-mq bridge URL (omit: no MQ ingress)
     *   GRAFT_META_DIR        parquet metadata root (omit: demo fixtures)
-    *   GRAFT_CHECKPOINT_DIR  streaming checkpoint root (default ./graft-ckpt)
+    *   GRAFT_CHECKPOINT_DIR  state root: the journal and the event history
+    *                         (default ./graft-ckpt)
+    *   GRAFT_QUARANTINE_DIR  rejected MQ messages, one file per batch
+    *                         (omit: not kept)
     *   GRAFT_ADMIN_TOKEN     static bearer token with the admin role
     *                         (omit: anonymous-allowed demo policy)
     */

@@ -64,13 +64,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
                        nowProvider: () => Timestamp =
                          () => new Timestamp(System.currentTimeMillis()),
                        // live service-health entries merged into GET
-                       // /sys/config (r12 advice: a permanently-failing
-                       // MQ ingest must degrade LOUDLY — the service
-                       // injects its mq_ingest_health flag here)
+                       // /sys/config (a failing MQ ingest must degrade
+                       // LOUDLY — the service injects its
+                       // mq_ingest_health entry here)
                        extraSysConfig: () => Map[String, String] = () => Map.empty,
                        // named admin actions served by POST /sys/config
-                       // ?action=<name> (r13 ADVICE #2: the MQ halt flag
-                       // needed a reset path short of a process restart);
+                       // ?action=<name> (the MQ health entry needs a
+                       // reset short of a process restart);
                        // admin role (the flush verb class), unknown
                        // action -> 400
                        sysActions: Map[String, () => String] = Map.empty) {
@@ -331,7 +331,8 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * (`mq_poller.py:25`, `job_culler.py:27`). An EMPTY event batch is
     * a pure culler pass (debounce/age-out rules fire against `now`).
     * Returns the step's submissions — catalog-bounded. */
-  private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp): Seq[Submission] =
+  private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp,
+      mqOffset: Option[Long] = None): Seq[Submission] =
     mutate.synchronized {
       val step = api.dispatchRows(events, running.rows, incubating.rows, now)
       // One commit makes the events, the state they leave and the runs
@@ -340,8 +341,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // the batch), a crash after it restores all three (the replay's
       // ids are logged, and the open submissions are resubmitted). The
       // sink and the driver-held tail and id index follow the effects,
-      // so they hold only applied events.
-      val subs = applyStep(events, step)
+      // so they hold only applied events. An MQ batch's end offset
+      // commits in the same record.
+      val subs = applyStep(events, step, mqOffset)
       if (events.nonEmpty) {
         eventSink.get()(events)
         logged(events)
@@ -364,13 +366,16 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * probed id between the probe and this dispatch — an unlocked probe
     * would let both apply it. Since the log append runs AFTER effects
     * ([[ingest]]), a logged id always means an applied event. The probe
-    * reads the driver-held id index, not the log. Returns the fresh
-    * set. */
+    * reads the driver-held id index, not the log. `mqOffset`, the
+    * batch's end offset, commits with the step; a batch with nothing
+    * fresh still commits it. Returns the fresh set. */
   private[graft] def ingestDedup(events: Seq[LifecycleEvent], now: Timestamp,
-      horizonCutoff: Timestamp): Seq[LifecycleEvent] =
+      horizonCutoff: Timestamp, mqOffset: Option[Long] = None): Seq[LifecycleEvent] =
     mutate.synchronized {
       val fresh = events.filterNot(e => loggedIds.seenSince(e.event_id, horizonCutoff.getTime))
-      if (fresh.nonEmpty) ingest(fresh, now)
+      if (fresh.nonEmpty) ingest(fresh, now, mqOffset)
+      else if (mqOffset.nonEmpty)
+        commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, mqOffset = mqOffset))
       fresh
     }
 
@@ -405,9 +410,10 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * duplicated kept rows — caught by GraftServiceSpec's
     * slot-consumed assertion (r7). The step is committed first; the
     * submissions are returned for the caller's response. */
-  private def applyStep(events: Seq[LifecycleEvent], step: Dispatcher.Step): Seq[Submission] = {
+  private def applyStep(events: Seq[LifecycleEvent], step: Dispatcher.Step,
+      mqOffset: Option[Long]): Seq[Submission] = {
     val next = step.newIncubating ++ step.deferred
-    commitHook.get()(HttpFacade.Commit(events, next, step.submissions))
+    commitHook.get()(HttpFacade.Commit(events, next, step.submissions, mqOffset = mqOffset))
     incubating.set(next)
     submissionSink.get()(step.submissions)
     step.submissions
@@ -483,10 +489,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 
 object HttpFacade {
   /** One mutation for [[HttpFacade.commitHook]]: the events it accepts,
-    * the incubation rows it leaves, the runs it submits, and the
-    * exec_uuids of the runs it ends (an abort's). */
+    * the incubation rows it leaves, the runs it submits, the exec_uuids
+    * of the runs it ends (an abort's) and an MQ batch's end offset. */
   final case class Commit(events: Seq[LifecycleEvent], rows: Seq[IncubRow],
-                          submissions: Seq[Submission], closed: Seq[String] = Nil)
+                          submissions: Seq[Submission], closed: Seq[String] = Nil,
+                          mqOffset: Option[Long] = None)
 
   /** A driver-held row set. The facade's state lives here as plain
     * values; `get()` is the same rows as a local Dataset (a

@@ -21,12 +21,14 @@ import graft.orchestration.Dispatcher.IncubRow
   *
   * One [[Journal.Record]] per ingest step holds the accepted events, the
   * incubation delta (rows added, obj_ids removed) and the step's
-  * submissions, its outbox. An outbox entry stays open until a later
+  * submissions, its outbox; an MQ batch's record also holds the batch's
+  * end offset, so the offset commits with the batch's effects in one
+  * write. An outbox entry stays open until a later
   * record holds a terminal event (`success`/`failure`) for its
   * exec_uuid or closes it (an abort, or a run the engines report ended
   * without a callback). A record that would hold nothing is not written.
   * The journal keeps the state its records add up to: the incubation
-  * rows, the open outbox and the high-water cron minute.
+  * rows, the open outbox, the high-water cron minute and the MQ offset.
   *
   * Each incarnation writes its own segments (`seg-<n>.jsonl`), created
   * on the first write and never appended to after a restart. [[roll]]
@@ -57,6 +59,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
   private var rows = Vector.empty[IncubRow]
   private val outbox = mutable.LinkedHashMap.empty[String, Submission]
   private var cronMinute = -1L
+  private var offset = Option.empty[Long]
 
   private val segments = mutable.SortedSet.empty[Long] // on disk, not yet snapshotted
   private var snapshots = Seq.empty[Long]
@@ -74,6 +77,9 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
 
   /** The high-water cron minute the records hold (-1: none). */
   def cron: Long = synchronized(cronMinute)
+
+  /** The MQ offset the records hold: every message below it is applied. */
+  def mqOffset: Option[Long] = synchronized(offset)
 
   /** Rebuild the state from the newest snapshot and the segments after
     * it. Returns each replayed segment's events, in order. */
@@ -97,13 +103,13 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
   }
 
   /** Make one step durable: its events, the incubation rows it leaves,
-    * its submissions, and the outbox entries it closes. Writes nothing
-    * when the record would be empty. */
+    * its submissions, the outbox entries it closes and, for an MQ batch,
+    * its end offset. Writes nothing when the record would be empty. */
   def commit(events: Seq[LifecycleEvent], next: Seq[IncubRow], submissions: Seq[Submission],
-             closed: Seq[String] = Nil): Unit = synchronized {
+             closed: Seq[String] = Nil, mqOffset: Option[Long] = None): Unit = synchronized {
     val gone = rows.diff(next)
     val r = Record(events, next.diff(rows), gone.map(_.obj_id), submissions,
-      closed.filter(outbox.contains), events.flatMap(Cron.minuteOf).maxOption)
+      closed.filter(outbox.contains), events.flatMap(Cron.minuteOf).maxOption, mqOffset)
     if (r != Record()) {
       append(codec.line(r))
       apply(r)
@@ -116,7 +122,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
     closeSegment()
     if (segments.isEmpty) None
     else Some(Cut(segments.toSeq, Record(added = rows, outbox = outbox.values.toSeq,
-      cron_minute = Some(cronMinute).filter(_ >= 0))))
+      cron_minute = Some(cronMinute).filter(_ >= 0), mq_offset = offset)))
   }
 
   /** The events a closed segment holds. */
@@ -168,6 +174,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
     r.closed.foreach(outbox.remove)
     r.outbox.foreach(s => outbox(s.exec_uuid) = s)
     r.cron_minute.foreach(m => cronMinute = math.max(cronMinute, m))
+    r.mq_offset.foreach(o => offset = Some(offset.fold(o)(math.max(_, o))))
   }
 
   private def append(line: String): Unit = {
@@ -224,7 +231,8 @@ object Journal {
       removed: Seq[String] = Nil,
       outbox: Seq[Submission] = Nil,
       closed: Seq[String] = Nil,
-      cron_minute: Option[Long] = None)
+      cron_minute: Option[Long] = None,
+      mq_offset: Option[Long] = None)
 
   /** Closed segments and the state they add up to. */
   final case class Cut(segments: Seq[Long], state: Record) {

@@ -148,7 +148,8 @@ final class JsonCodec(zone: ZoneId) {
       removed = o.array("removed").map(text),
       outbox = o.array("outbox").map(submission),
       closed = o.array("closed").map(text),
-      cron_minute = o.long("cron_minute"))
+      cron_minute = o.long("cron_minute"),
+      mq_offset = o.long("mq_offset"))
   }
 
   private def incubRow(n: JsonNode): IncubRow = {

@@ -2,62 +2,54 @@ package graft.sources.mq
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.util
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset}
-import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
-
-/** NETWORK message-queue source — the socket-backed sibling of
-  * [[SpoolMQ]], closing the reference's actual transport (S1: SQS
-  * long-poll over the network, `mq_poller.py:16-30`). Same DSv2
-  * `MicroBatchStream` contract, same Kafka row schema, so the three
-  * MQ flavors (spool dir / this / a real Kafka topic) swap by
-  * `format()` string alone.
+/** The network queue client: the reference's transport (S1, SQS
+  * long-poll over the network, `mq_poller.py:16-30`) spoken to a queue
+  * bridge over HTTP.
   *
-  * Wire protocol (offset-addressed so Spark's checkpoint replay works
-  * — the property SQS's receive/delete lacks and the reference's
-  * delete-at-most-one-per-poll loop gets wrong):
+  * Wire protocol (offset-addressed, so a replay from a committed offset
+  * re-reads the same messages — the property SQS's receive/delete lacks
+  * and the reference's delete-at-most-one-per-poll loop gets wrong):
   *
-  *   GET <endpoint>?tail          →  "<count>"   (current message count)
-  *   GET <endpoint>?from=A&to=B   →  one message per line:
-  *                                   "<offset>\t<epochMillis>\t<base64 body>"
+  *   GET <endpoint>?tail                 →  "<count>"   (current message count)
+  *   GET <endpoint>?tail&after=N&wait=ms →  "<count>" once it passes N, or
+  *                                          after `wait` ms (long-poll; a
+  *                                          bridge may ignore it and answer
+  *                                          at once)
+  *   GET <endpoint>?from=A&to=B          →  one message per line:
+  *                                          "<offset>\t<epochMillis>\t<base64 body>"
   *
-  * The driver's per-batch work is ONE tail request (the long-poll —
-  * the 2 s wait of `mq_poller.py:20` becomes the trigger interval);
-  * payload bytes move only on EXECUTOR-side range fetches, the [start,
-  * end) batch sliced into ≤8 even ranges. At-least-once: offsets are
-  * engine-checkpointed; `commit` is a non-destructive ack exactly like
-  * [[SpoolMQ]] (a broker that truncates on ack would DELETE ≤ the
-  * committed offset here — never per-message).
+  * `commit` is non-destructive: the bridge keeps what the service
+  * consumed (a bridge that truncates on ack would delete ≤ the committed
+  * offset — never per-message).
   *
-  * A production deployment points this at its queue bridge; the spec
-  * drives it against an in-process JDK HttpServer serving the same
-  * protocol (HttpMQSpec) — a real socket either way.
+  * A production deployment points this at its queue bridge; the specs
+  * drive it against an in-process JDK HttpServer serving the same
+  * protocol (`MQBroker`) — a real socket either way.
   */
-object HttpMQ {
-  val schema: StructType = SpoolMQ.schema // Kafka schema, shared
+final class HttpMQ(endpoint: String) extends MQClient {
+  def tail: Long = HttpMQ.tail(endpoint)
+  def awaitTail(after: Long, waitMs: Long): Long =
+    HttpMQ.get(s"$endpoint?tail&after=$after&wait=$waitMs", waitMs).trim.toLong
+  def read(from: Long, to: Long): Seq[(Long, Long, Array[Byte])] =
+    if (to <= from) Nil else HttpMQ.fetch(endpoint, from, to)
+  def commit(end: Long): Unit = ()
+}
 
+object HttpMQ {
   // TIMEOUTS (r10 review: a broker that accepts the TCP connection but
   // never responds — GC pause, half-open connection after a partition —
-  // blocked the driver's trigger thread FOREVER inside latestOffset,
-  // freezing the stream with no error and no retry). A timed-out poll
-  // throws, the trigger fails loudly, the next one retries.
-  private val RequestTimeout = java.time.Duration.ofSeconds(30)
+  // blocked the poll forever with no error and no retry). A timed-out
+  // request throws, the turn fails loudly, the next one retries.
+  private val RequestTimeoutMs = 30000L
   private lazy val client = HttpClient.newBuilder()
     .connectTimeout(java.time.Duration.ofSeconds(10)).build()
 
-  private def get(url: String): String = {
+  /** One GET; `waitMs` extends the timeout by the long-poll's wait. */
+  private def get(url: String, waitMs: Long = 0L): String = {
     val res = client.send(
-      HttpRequest.newBuilder(URI.create(url)).timeout(RequestTimeout).GET().build(),
+      HttpRequest.newBuilder(URI.create(url))
+        .timeout(java.time.Duration.ofMillis(RequestTimeoutMs + waitMs)).GET().build(),
       HttpResponse.BodyHandlers.ofString())
     require(res.statusCode() == 200, s"mq endpoint $url returned ${res.statusCode()}")
     res.body()
@@ -67,8 +59,8 @@ object HttpMQ {
 
   /** One (offset, epochMillis, body) per non-empty line. CRLF-tolerant
     * (r10 review: a bridge emitting \r\n left \r on the base64 field —
-    * every task failed on decode though the payloads were fine), and a
-    * short line fails with a NAMED error instead of a MatchError. */
+    * every decode failed though the payloads were fine), and a short
+    * line fails with a NAMED error instead of a MatchError. */
   def fetch(endpoint: String, from: Long, to: Long): Seq[(Long, Long, Array[Byte])] =
     get(s"$endpoint?from=$from&to=$to").split("\r?\n").toSeq.filter(_.nonEmpty).map { line =>
       line.split("\t", 3) match {
@@ -80,78 +72,4 @@ object HttpMQ {
               line.take(80))
       }
     }
-}
-
-class HttpMQProvider extends TableProvider with DataSourceRegister {
-  override def shortName(): String = "http-mq"
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType = HttpMQ.schema
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: util.Map[String, String]): Table = {
-    val endpoint = Option(properties.get("endpoint")).getOrElse(
-      throw new IllegalArgumentException("http-mq requires .option(\"endpoint\", url)"))
-    val cap = Option(properties.get("maxPerTrigger")).map(_.toLong).getOrElse(100000L)
-    new HttpMQTable(endpoint, cap)
-  }
-}
-
-final class HttpMQTable(endpoint: String, maxPerTrigger: Long = 100000L)
-    extends Table with SupportsRead {
-  override def name(): String = s"http-mq:$endpoint"
-  override def schema(): StructType = HttpMQ.schema
-  override def capabilities(): util.Set[TableCapability] =
-    Set(TableCapability.MICRO_BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan {
-        override def readSchema(): StructType = HttpMQ.schema
-        override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new HttpMQStream(endpoint, maxPerTrigger)
-      }
-    }
-}
-
-/** Backlog admission cap + drain contract — shared with [[SpoolMQStream]]
-  * through [[MQAdmissionControl]] (one definition, r12 review). */
-final class HttpMQStream(endpoint: String, protected val maxPerTrigger: Long = 100000L)
-    extends MQAdmissionControl {
-  protected def tailNow(): Long = HttpMQ.tail(endpoint)
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (a, b) = (start.asInstanceOf[SpoolOffset].n, end.asInstanceOf[SpoolOffset].n)
-    if (b <= a) Array.empty
-    else {
-      val nSplits = math.min(8L, b - a).toInt
-      val step = (b - a + nSplits - 1) / nSplits
-      (a until b by step)
-        .map(lo => HttpMQPartition(endpoint, lo, math.min(lo + step, b)): InputPartition)
-        .toArray
-    }
-  }
-  override def createReaderFactory(): PartitionReaderFactory = new HttpMQReaderFactory
-}
-
-final case class HttpMQPartition(endpoint: String, from: Long, to: Long)
-    extends InputPartition
-
-final class HttpMQReaderFactory extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[HttpMQPartition]
-    new PartitionReader[InternalRow] {
-      // executor-side range fetch: payload bytes never cross the driver
-      private lazy val msgs = HttpMQ.fetch(p.endpoint, p.from, p.to)
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < msgs.length }
-      override def get(): InternalRow = {
-        val (offset, epochMs, body) = msgs(i)
-        InternalRow(
-          null,                                   // unkeyed, like SpoolMQ
-          body,
-          UTF8String.fromString(p.endpoint),      // topic = endpoint
-          0,
-          offset,
-          epochMs * 1000L,                        // micros
-          1)
-      }
-      override def close(): Unit = ()
-    }
-  }
 }

@@ -1,47 +1,33 @@
 package graft.sources.mq
 
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
 
-import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-import org.apache.spark.sql.connector.read.streaming.Offset
-
 /** SQS adapter seam (r14 verdict #8): everything between the public
-  * AWS SQS semantics and the repo's MQ source contract, compiled and
-  * contract-tested here, with the network-touching client behind ONE
-  * constructor-injected interface. The reference polls live SQS
-  * (`mq_poller.py:16-30`); this sandbox has no egress, so the honest
-  * maximum is an adapter that is one dependency injection from live:
-  * implement [[SqsClientApi]] over the real
-  * `software.amazon.awssdk.services.sqs.SqsClient` (receiveMessage /
-  * deleteMessageBatch on a queue URL) and [[SqsMQStream]] inherits the
-  * 7-law `MQSourceContract` suite unchanged — the suite runs below
-  * against an in-memory fake of this same interface with real SQS
-  * semantics (visibility timeout, receipt-handle invalidation,
-  * at-least-once redelivery).
+  * AWS SQS semantics and the [[MQClient]] contract, with the
+  * network-touching client behind ONE constructor-injected interface.
+  * The reference polls live SQS (`mq_poller.py:16-30`); implement
+  * [[SqsClientApi]] over the SDK's `SqsClient` (receiveMessage /
+  * deleteMessageBatch on a queue URL) and [[SqsBridge]] passes the
+  * `MQSourceContract` suite unchanged — the suite runs against an
+  * in-memory fake with real SQS semantics (visibility timeout,
+  * receipt-handle invalidation, at-least-once redelivery).
   *
-  * WHY A RECEIVE-SPOOL BRIDGE, not a direct receive() source: Spark's
-  * checkpoint replay needs offset-ADDRESSED, replayable reads (law 4:
-  * a committed range re-reads byte-identical; law 6: redelivery maps
-  * onto the SAME offsets). SQS has neither — receive() is a one-shot
-  * lease and a message read twice has no stable position. So the
-  * adapter pumps receives into a [[SpoolMQ]]-shaped local spool
-  * (one file per message, DENSE arrival-order offsets = filename
-  * order), dedups broker redeliveries by messageId back onto their
-  * original offset, and serves all range reads from the spool. The
-  * destructive half of SQS lives exactly where the wire contract
-  * comment in [[HttpMQ]] prescribes: `commit(end)` deletes from the
+  * WHY A RECEIVE-SPOOL BRIDGE: a replay from a committed offset needs
+  * offset-ADDRESSED reads, and SQS's receive() is a one-shot lease with
+  * no stable position. So the bridge pumps receives into a local spool
+  * (one file per message, DENSE arrival-order offsets = filename order),
+  * dedups redeliveries by messageId onto their original offset, and
+  * serves range reads from the spool. `commit(end)` deletes from the
   * QUEUE only messages at offsets < end (never per-receive, unlike the
-  * reference's delete-at-most-one-per-poll loop), while the spool
-  * keeps them for replay/audit. Deletion is best-effort at-least-once:
-  * a stale receipt handle (visibility expired between receive and
-  * commit) fails the delete, SQS redelivers, the bridge dedups the
-  * redelivery onto its already-committed offset, and the stream never
-  * re-emits it.
+  * reference's delete-at-most-one-per-poll loop); the spool keeps them.
+  * A stale receipt handle fails its delete, SQS redelivers, and the
+  * bridge dedups the redelivery onto its committed offset.
   *
-  * At cluster scale the spool dir is the bridge host's durable buffer
-  * (the same role Kafka Connect gives its local log); executors read
-  * message payloads from the spool partitions, never from SQS.
+  * OPERATOR CONTRACT: offsets are listing POSITIONS, so
+  * spool files must NOT be removed under a committed offset; the
+  * detectable case (listing shorter than the offset) fails loudly.
   */
 object SqsMQ {
   /** SQS `Message` fields the bridge consumes — mirrors the SDK's
@@ -74,15 +60,38 @@ object SqsMQ {
         java.util.Base64.getUrlDecoder.decode(b64), StandardCharsets.UTF_8)).toOption
       case _ => None
     }
+
+  /** The spool's messages in offset order (filename sort). Dot- and
+    * underscore-prefixed files are not messages (a half-written one is
+    * a dot-file until its rename).
+    *
+    * A directory that EXISTS but fails to list (transient I/O error,
+    * NFS blip — `listFiles` returns null for both) FAILS LOUDLY
+    * instead of reading as an empty queue (that reading rewinds the tail
+    * to 0, and when the mount recovers the whole spool replays). A NOT-YET-CREATED spool dir is an empty
+    * queue (the pre-producer grace). */
+  def listSpool(dir: String): Array[File] = {
+    val d = new File(dir)
+    Option(d.listFiles()) match {
+      case Some(fs) =>
+        fs.filter(f => f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+          .sortBy(_.getName)
+      case None if !d.exists() => Array.empty
+      case None =>
+        throw new java.io.IOException(
+          s"spool dir $dir exists but cannot be listed - failing the read " +
+            "rather than reading it as an empty queue (offset rewind)")
+    }
+  }
 }
 
 /** The pump/dedup/ack state machine between an [[SqsMQ.SqsClientApi]]
-  * and a [[SpoolMQ]] spool dir. Restart-safe: the messageId→offset map
-  * is rebuilt from the spool filenames, so a bridge that crashed after
-  * spooling but before commit maps the broker's redeliveries onto the
-  * offsets the checkpoint already names (law 6). */
+  * and a spool dir, as an [[MQClient]]. Restart-safe: the
+  * messageId→offset map is rebuilt from the spool filenames, so a bridge
+  * that crashed after spooling but before commit maps the broker's
+  * redeliveries onto the offsets already spooled. */
 final class SqsBridge(client: SqsMQ.SqsClientApi, val spoolDir: String,
-                      receiveBatch: Int = 10) {
+                      receiveBatch: Int = 10) extends MQClient {
   import SqsMQ._
 
   // offset -> latest receipt handle for not-yet-acked messages; handles
@@ -91,26 +100,30 @@ final class SqsBridge(client: SqsMQ.SqsClientApi, val spoolDir: String,
   private val idToOffset = scala.collection.mutable.HashMap.empty[String, Long]
   private var nextOffset = 0L
   // rebuild from the spool: offsets are dense filename positions
-  SpoolMQ.listMessages(spoolDir).zipWithIndex.foreach { case (f, i) =>
+  listSpool(spoolDir).zipWithIndex.foreach { case (f, i) =>
     messageIdOf(f.getName).foreach(id => idToOffset(id) = i.toLong)
     nextOffset = i + 1L
   }
 
-  /** Drain everything visible right now into the spool; returns the
-    * spool tail. Dedup by messageId: a redelivered message refreshes
-    * its receipt handle but keeps its original offset and is NOT
-    * rewritten (the spooled bytes are the replay truth). */
-  def pump(): Long = synchronized {
+  /** Drain what is visible right now into the spool, stopping once
+    * `max` messages were received (a queue that is never empty must not
+    * hold the caller forever); returns the spool tail. Dedup by
+    * messageId: a redelivered message refreshes its receipt handle but
+    * keeps its original offset and is NOT rewritten (the spooled bytes
+    * are the replay truth). */
+  def pump(max: Long = MQClient.MaxBatch): Long = synchronized {
+    var received = 0L
     var batch = client.receive(receiveBatch)
     while (batch.nonEmpty) {
+      received += batch.size
       batch.foreach { m =>
         idToOffset.get(m.messageId) match {
           case Some(off) => handles(off) = m.receiptHandle // redelivery
           case None =>
             val off = nextOffset
             val name = fileNameFor(off, m.messageId)
-            // tmp-prefix + atomic rename: SpoolMQ.listMessages skips
-            // dot-files, so a half-written message is never listed
+            // tmp-prefix + atomic rename: listSpool skips dot-files, so
+            // a half-written message is never listed
             val tmp = Path.of(spoolDir, "." + name)
             Files.createDirectories(Path.of(spoolDir))
             Files.write(tmp, m.body)
@@ -121,7 +134,8 @@ final class SqsBridge(client: SqsMQ.SqsClientApi, val spoolDir: String,
             nextOffset = off + 1
         }
       }
-      batch = if (batch.size < receiveBatch) Seq.empty else client.receive(receiveBatch)
+      batch = if (batch.size < receiveBatch || received >= max) Seq.empty
+              else client.receive(receiveBatch)
     }
     nextOffset
   }
@@ -129,37 +143,37 @@ final class SqsBridge(client: SqsMQ.SqsClientApi, val spoolDir: String,
   /** Destructive upstream ack for offsets < `end`, in SQS's batch-of-10
     * chunks. Best-effort: stale handles fail inside the client and the
     * redelivery dedups back onto its (already committed) offset. */
-  def ackUpTo(end: Long): Unit = synchronized {
+  def commit(end: Long): Unit = synchronized {
     val acked = handles.keys.filter(_ < end).toSeq.sorted
     acked.grouped(10).foreach(chunk => client.deleteBatch(chunk.map(handles)))
     acked.foreach(handles.remove)
   }
-}
 
-/** The DSv2 stream over the bridge: admission control, AvailableNow
-  * drain, rewind guard and offset algebra come from
-  * [[MQAdmissionControl]]; range reads are [[SpoolMQ]]'s executor-side
-  * partitions over the spool; `commit` is where SQS's destructive ack
-  * happens — and ONLY there. */
-final class SqsMQStream(bridge: SqsBridge, protected val maxPerTrigger: Long = 100000L)
-    extends MQAdmissionControl {
   // pump first, then report the LISTING as the tail — the listing is
   // the offset→message truth (the rewind guard must see a spool that
-  // shrank under a live checkpoint; the bridge's in-memory counter
+  // shrank under a committed offset; the bridge's in-memory counter
   // cannot shrink)
-  protected def tailNow(): Long = {
-    bridge.pump()
-    SpoolMQ.listMessages(bridge.spoolDir).length.toLong
+  def tail: Long = {
+    pump()
+    listSpool(spoolDir).length.toLong
   }
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val (a, b) = (start.asInstanceOf[SpoolOffset].n, end.asInstanceOf[SpoolOffset].n)
-    // pump before planning: a range read with no prior latestOffset
-    // (checkpoint replay of a committed batch) must still find the
-    // spool populated — pump is idempotent via the messageId dedup
-    if (SpoolMQ.listMessages(bridge.spoolDir).length < b) bridge.pump()
-    SpoolMQStream.partitions(bridge.spoolDir, a, b)
+
+  /** SQS's receive takes no wait here: answers at once. */
+  def awaitTail(after: Long, waitMs: Long): Long = tail
+
+  def read(from: Long, to: Long): Seq[(Long, Long, Array[Byte])] = {
+    // pump first when the spool is short: a replay of a committed range
+    // with no prior tail probe must still find it (pump is idempotent
+    // via the messageId dedup)
+    val listed = listSpool(spoolDir)
+    val files = if (listed.length < to) { pump(); listSpool(spoolDir) } else listed
+    if (from > files.length)
+      throw new IllegalStateException(
+        s"spool listing has ${files.length} messages but the committed offset is $from - " +
+          "spool files were removed under a live checkpoint, which remaps " +
+          "offset->message; restore them or reset the offset")
+    files.zipWithIndex.slice(from.toInt, math.min(to, files.length.toLong).toInt).map {
+      case (f, i) => (i.toLong, f.lastModified(), Files.readAllBytes(f.toPath))
+    }.toSeq
   }
-  override def createReaderFactory(): PartitionReaderFactory = new SpoolMQReaderFactory
-  override def commit(end: Offset): Unit =
-    bridge.ackUpTo(end.asInstanceOf[SpoolOffset].n)
 }

@@ -19,16 +19,16 @@ import graft.orchestration.{Catalog, EngineJob, EngineManager, LocalSparkEngine}
 
 /** The deployable PROCESS, end-to-end (r6 verdict #1 — the
   * `facade.py:138-150` analog): one [[GraftService]] carrying the HTTP
-  * facade, the socket-backed `http-mq` ingest stream, the culler tick
+  * facade, the MQ poll loop over a socket, the culler tick
   * and the cron tick, all sharing one incubation state and one engine
   * submission path.
   *
   * The flagship test walks the full lifecycle over real sockets: an
   * HTTP-posted success incubates an 'all'-triggered child; the second
-  * parent's success arrives over the MQ SOCKET, is streamed in,
+  * parent's success arrives over the MQ SOCKET, is polled in,
   * satisfies the dependency set and releases; the released run is
   * visible through `/pipeline/dispatcher/running` while it runs;
-  * clean shutdown is asserted (stream terminated, port closed,
+  * clean shutdown is asserted (poll thread stopped, port closed,
   * idempotent).
   */
 class GraftServiceSpec extends AnyFunSuite {
@@ -72,7 +72,8 @@ class GraftServiceSpec extends AnyFunSuite {
   private def newService(mq: Option[String], cfg: GraftConfig,
                          jobFactory: (Option[PipelineDef], Submission) => EngineJob,
                          now: () => Timestamp = () => new Timestamp(System.currentTimeMillis()),
-                         cronCheck: FiniteDuration = 5.seconds): GraftService = {
+                         cronCheck: FiniteDuration = 5.seconds,
+                         pollInterval: FiniteDuration = 250.millis): GraftService = {
     val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
       Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))), cfg)
     val policy = new Auth.Policy(
@@ -83,7 +84,7 @@ class GraftServiceSpec extends AnyFunSuite {
       quarantineDir = Some(SparkSuite.tempDir("svc-quarantine")),
       jobFactory = Some(jobFactory),
       cfg = cfg,
-      pollInterval = 250.millis,
+      pollInterval = pollInterval,
       cronCheckInterval = cronCheck,
       nowProvider = now)
   }
@@ -118,7 +119,7 @@ class GraftServiceSpec extends AnyFunSuite {
         .where(col("pipeline_uuid") === "join-orders-customer").count() == 1,
         "kept incubation row duplicated by an unrelated dispatch")
 
-      // 2. second parent succeeds over the MQ SOCKET: the stream
+      // 2. second parent succeeds over the MQ SOCKET: the poll loop
       //    ingests it, the shared state releases the child, the service
       //    submits it to its engine
       broker.publish(asJson(success(2, "clean-customer")))
@@ -141,8 +142,8 @@ class GraftServiceSpec extends AnyFunSuite {
       // 3. a malformed MQ message lands in the quarantine, not the log
       broker.publish("""{"this is": not json""")
       poll("corrupt message quarantined") {
-        // quarantine writes one subdir per stream batch (replay
-        // idempotence) — read the tree recursively
+        // quarantine writes one file per batch (replay idempotence)
+        // — read the tree recursively
         val q = spark.read.option("recursiveFileLookup", "true")
           .text(service.quarantineDir.get).collect().map(_.getString(0))
         q.exists(_.contains("not json"))
@@ -156,10 +157,9 @@ class GraftServiceSpec extends AnyFunSuite {
           .body().contains("\"success\"")
       }
 
-      // 5. graceful shutdown: stream terminated, port closed, idempotent
+      // 5. graceful shutdown: poll thread stopped, port closed, idempotent
       service.shutdown()
-      assert(service.mqQuery.forall(!_.isActive), "mq ingest stream must be stopped")
-      assert(!spark.streams.active.exists(_.name == "graft-mq-ingest"))
+      assert(!service.mqPolling, "the mq poll thread must be stopped")
       intercept[java.io.IOException] {
         call(base, "GET", "/sys/config")
       }
@@ -754,6 +754,12 @@ class GraftServiceSpec extends AnyFunSuite {
       a.start(0)
       val now = new Timestamp(System.currentTimeMillis())
       assert(a.facade.ingestDedup(batch.map(_.copy(received_time = now)), now, cutoff(now)).size == 1)
+      // the run ends before the process does: a run still open at
+      // shutdown is resubmitted by the restart, which is not a replay
+      poll("run ended") {
+        a.facade.refreshRunning()
+        a.facade.running.rows.nonEmpty && a.facade.running.rows.forall(_.engine_status != "running")
+      }
     } finally a.shutdown()
     assert(fired.asScala.toSeq == Seq("report-weekly"))
 
@@ -796,159 +802,124 @@ class GraftServiceSpec extends AnyFunSuite {
     } finally service.shutdown()
   }
 
-  test("MQ watchdog: a dead ingest query restarts from checkpoint and events keep flowing (r12 review)") {
-    // pre-fix: one exception escaping foreachBatch terminated
-    // 'graft-mq-ingest' permanently while HTTP kept answering — all MQ
-    // ingest silently halted until a process bounce
+  test("MQ poll loop: a failing endpoint degrades health, recovery resumes from the journaled offset, shutdown interrupts a pending long-poll") {
+    // the reference's poller logs and continues (mq_poller.py:27): a
+    // failed turn backs off and retries from the offset the journal
+    // holds, so nothing committed is applied twice and nothing is lost
     val broker = new MQBroker
     val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-      GraftConfig.default)
-    val policy = new Auth.Policy(
-      new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
-    val svc = new GraftService(new SecuredGraftApi(api, policy), spark,
-      mqEndpoint = Some(broker.endpoint),
-      checkpointRoot = SparkSuite.tempDir("svc-mq-watchdog-ckpt"),
-      jobFactory = Some((_, sub) => { fired.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }),
-      pollInterval = 250.millis)
+    val svc = newService(Some(broker.endpoint), GraftConfig.default,
+      (_, sub) => { fired.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) })
     try {
-      svc.start(0)
-      broker.publish(asJson(success(61, "x").copy(
+      val addr = svc.start(0)
+      val base = s"http://127.0.0.1:${addr.getPort}"
+      def health: String = call(base, "GET", "/sys/config").body()
+      broker.publish(asJson(success(81, "x").copy(
         event_subtype = "origination", pipeline_uuid = "report-weekly")))
       poll("message 1 dispatched")(fired.contains("report-weekly"))
-      // wait for the batch's OFFSET COMMIT, not just its side effect:
-      // fired.add runs inside foreachBatch, which completes BEFORE the
-      // engine commits the offset — killing in that window legitimately
-      // replays the batch (at-least-once), and this test is about the
-      // COMMITTED-message case (r13: the race flaked under host stall;
-      // lastProgress posts after the commit log write)
-      poll("batch 1 committed")(svc.mqQuery.exists(q =>
-        q.isActive && q.recentProgress.exists(_.numInputRows > 0)))
-      // kill the query the way a batch failure would leave it: inactive
-      svc.mqQuery.get.stop()
-      poll("query observed dead")(svc.mqQuery.exists(q => !q.isActive))
-      // the watchdog tick (normally on the scheduler every 10 s)
-      svc.mqWatchTick()
-      assert(svc.mqQuery.exists(_.isActive), "watchdog must restart the ingest query")
-      // the restarted incarnation resumes the SAME checkpoint: a new
-      // message flows, and the pre-kill message is not re-dispatched
-      broker.publish(asJson(success(62, "x").copy(
+      assert(health.contains("\"mq_ingest_health\":\"ok\""), health)
+
+      broker.failing = true
+      broker.publish(asJson(success(82, "x").copy(
         event_subtype = "origination", pipeline_uuid = "stream-metrics")))
-      poll("message 2 dispatched after restart")(fired.contains("stream-metrics"))
-      assert(fired.asScala.count(_ == "report-weekly") == 1,
-        s"restart must not re-dispatch the committed message: $fired")
-    } finally {
-      svc.shutdown()
-      broker.stop()
-    }
-  }
-
-  test("MQ watchdog: repeated deaths back off, then halt loudly on /sys/config (r12 advice)") {
-    // pre-fix: a DETERMINISTICALLY failing batch (poison past
-    // quarantine, rewind guard, persistent FS fault) was restarted
-    // every 10 s forever, re-executing the failing batch's side
-    // effects with no backoff, cap, or health signal
-    val broker = new MQBroker
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-      GraftConfig.default)
-    val policy = new Auth.Policy(
-      new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
-    val svc = new GraftService(new SecuredGraftApi(api, policy), spark,
-      mqEndpoint = Some(broker.endpoint),
-      checkpointRoot = SparkSuite.tempDir("svc-mq-backoff-ckpt"),
-      jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
-      pollInterval = 250.millis)
-    try {
-      val addr = svc.start(0)
-      val base = s"http://localhost:${addr.getPort}"
-      // first death: restart immediately, but arm the backoff window
-      svc.mqQuery.get.stop()
-      poll("query observed dead")(svc.mqQuery.exists(q => !q.isActive))
-      svc.mqWatchTick()
-      assert(svc.mqQuery.exists(_.isActive), "first death must restart immediately")
-      assert(svc.mqBackoffTicks == 2, s"backoff must arm after restart 1: ${svc.mqBackoffTicks}")
-      // second death: the next two ticks must WAIT (backoff), the third restarts
-      svc.mqQuery.get.stop()
-      poll("query observed dead again")(svc.mqQuery.exists(q => !q.isActive))
-      svc.mqWatchTick(); assert(svc.mqQuery.exists(q => !q.isActive), "tick 1 must back off")
-      svc.mqWatchTick(); assert(svc.mqQuery.exists(q => !q.isActive), "tick 2 must back off")
-      svc.mqWatchTick(); assert(svc.mqQuery.exists(_.isActive), "tick 3 must restart")
-      // a COMPLETED batch on the restarted incarnation resets the count
-      broker.publish(asJson(success(71, "x").copy(
-        event_subtype = "origination", pipeline_uuid = "report-weekly")))
-      poll("a batch completes")(svc.mqQuery.exists(q => q.isActive && q.lastProgress != null))
-      svc.mqWatchTick()
-      assert(svc.mqRestartFailures.get() == 0, "recovery must reset the failure count")
-      // at the cap: the watchdog STOPS restarting and degrades loudly
-      svc.mqRestartFailures.set(svc.MqMaxRestartFailures - 1)
-      svc.mqQuery.get.stop()
-      poll("query observed dead at cap")(svc.mqQuery.exists(q => !q.isActive))
-      svc.mqWatchTick()
-      assert(svc.mqIngestUnhealthy.isDefined, "cap must raise the unhealthy flag")
-      assert(svc.mqQuery.exists(q => !q.isActive), "cap must NOT restart")
-      svc.mqWatchTick() // further ticks: still halted, no restart loop
-      assert(svc.mqQuery.exists(q => !q.isActive))
-      val cfg = call(base, "GET", "/sys/config").body()
-      assert(cfg.contains("\"mq_ingest_health\"") && cfg.contains("halted after"),
-        s"/sys/config must surface the halt: $cfg")
-    } finally {
-      svc.shutdown()
-      broker.stop()
-    }
-  }
-
-  test("MQ watchdog: idle-topic uptime resets the count; admin action clears a halt (r13 ADVICE #2)") {
-    // pre-fix: the failure count only reset when a batch COMPLETED
-    // (lastProgress != null) — on an idle topic no batch ever runs, so
-    // transient deaths spread over weeks accumulated to the halt cap,
-    // and the halt flag had no reset path short of a process restart
-    val broker = new MQBroker
-    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-      GraftConfig.default)
-    val policy = new Auth.Policy(
-      new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
-    val svc = new GraftService(new SecuredGraftApi(api, policy), spark,
-      mqEndpoint = Some(broker.endpoint),
-      checkpointRoot = SparkSuite.tempDir("svc-mq-idle-reset-ckpt"),
-      jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
-      pollInterval = 250.millis)
-    try {
-      val addr = svc.start(0)
-      val base = s"http://localhost:${addr.getPort}"
-      // a transient death on an IDLE topic (no events published, so no
-      // batch will ever complete on the restarted incarnation)
-      svc.mqQuery.get.stop()
-      poll("query observed dead")(svc.mqQuery.exists(q => !q.isActive))
-      svc.mqWatchTick()
-      assert(svc.mqRestartFailures.get() == 1 && svc.mqQuery.exists(_.isActive))
-      // sustained uptime — MqStableResetTicks consecutive active ticks —
-      // must reset the count with NO completed batch
-      poll("restarted query active")(svc.mqQuery.exists(_.isActive))
-      (1 to svc.MqStableResetTicks).foreach(_ => svc.mqWatchTick())
-      assert(svc.mqRestartFailures.get() == 0,
-        s"idle uptime must reset the failure count, still ${svc.mqRestartFailures.get()}")
-      // halt state: the admin action clears it in-band and the watchdog
-      // resumes restarting on the next tick
-      svc.mqRestartFailures.set(svc.MqMaxRestartFailures - 1)
-      svc.mqQuery.get.stop()
-      poll("query observed dead at cap")(svc.mqQuery.exists(q => !q.isActive))
-      svc.mqWatchTick()
-      assert(svc.mqIngestUnhealthy.isDefined && svc.mqQuery.exists(q => !q.isActive))
+      poll("failing turns surface on /sys/config")(health.contains("\"mq_ingest_health\":\"failing: "))
+      assert(!fired.contains("stream-metrics"), "a failing endpoint delivers nothing")
       val res = call(base, "POST", "/sys/config?action=clear_mq_ingest_health")
       assert(res.statusCode() == 200, s"admin clear must succeed: ${res.body()}")
       assert(res.body().contains("cleared:"), res.body())
-      assert(svc.mqIngestUnhealthy.isEmpty && svc.mqRestartFailures.get() == 0)
-      svc.mqWatchTick()
-      assert(svc.mqQuery.exists(_.isActive), "watchdog must resume restarts after the clear")
-      val cfg = call(base, "GET", "/sys/config").body()
-      assert(cfg.contains("\"mq_ingest_health\":\"ok\""), s"health must read ok again: $cfg")
       // unknown action -> 400, not a silent no-op
       assert(call(base, "POST", "/sys/config?action=nope").statusCode() == 400)
+
+      broker.failing = false
+      poll("message 2 dispatched after recovery")(fired.contains("stream-metrics"))
+      poll("health reads ok again")(health.contains("\"mq_ingest_health\":\"ok\""))
+      assert(fired.asScala.count(_ == "report-weekly") == 1,
+        s"recovery must not re-dispatch the committed message: $fired")
+      assert(svc.journal.mqOffset.contains(2L), s"journaled offset: ${svc.journal.mqOffset}")
     } finally {
       svc.shutdown()
+      broker.stop()
+    }
+
+    // shutdown inside its grace while the loop waits in a long-poll
+    val idle = new MQBroker
+    val waiter = newService(Some(idle.endpoint), GraftConfig.default,
+      (_, _) => EngineJob.SparkClosure(_ => ()), pollInterval = 60.seconds)
+    try {
+      waiter.start(0)
+      poll("poll thread running")(waiter.mqPolling)
+      Thread.sleep(500) // now inside its 60 s wait at the broker
+      val t0 = System.nanoTime()
+      waiter.shutdown(5000L)
+      val ms = (System.nanoTime() - t0) / 1000000L
+      assert(ms < 5000L, s"shutdown took $ms ms with a 5000 ms grace")
+      assert(!waiter.mqPolling, "the mq poll thread must be stopped")
+    } finally {
+      waiter.shutdown()
+      idle.stop()
+    }
+  }
+
+  test("MQ upgrade: a root with only a streaming checkpoint resumes after its last committed batch, and reads it only until an offset is journaled") {
+    // a root written by the Structured Streaming ingest: its offsets live
+    // in Spark's checkpoint layout, the journal holds none. Without the
+    // import an upgraded service starts at 0 and re-dispatches every
+    // message older than the dedup horizon.
+    val broker = new MQBroker
+    val root = SparkSuite.tempDir("svc-mq-upgrade-ckpt")
+    val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def origination(id: Long, p: String) =
+      asJson(success(id, "x").copy(event_subtype = "origination", pipeline_uuid = p))
+    def write(rel: String, body: String): Unit = {
+      val p = java.nio.file.Path.of(root, "mq-ingest", rel)
+      java.nio.file.Files.createDirectories(p.getParent)
+      java.nio.file.Files.writeString(p, body)
+    }
+    def offsets(end: String) =
+      "v1\n{\"batchWatermarkMs\":0,\"batchTimestampMs\":1706742000000,\"conf\":{}}\n" + end + "\n"
+    write("metadata", "{\"id\":\"0b6e3f56-0000-4000-8000-000000000000\"}\n")
+    write("offsets/0", offsets("1"))
+    write("commits/0", "v1\n{\"nextBatchWatermarkMs\":0}\n")
+    write("offsets/1", offsets("3"))
+    write("commits/1", "v1\n{\"nextBatchWatermarkMs\":0}\n")
+    write("commits/.1.crc", "crc")
+    write("offsets/2", offsets("4")) // planned, never committed: replays
+    Seq("ingest-orders", "ingest-customer", "ingest-lineitem", "report-daily").zipWithIndex
+      .foreach { case (p, i) => broker.publish(origination(90L + i, p)) }
+    def mkService(): GraftService = {
+      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+        Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+        GraftConfig.default)
+      val policy = new Auth.Policy(
+        new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
+      new GraftService(new SecuredGraftApi(api, policy), spark,
+        mqEndpoint = Some(broker.endpoint), checkpointRoot = root,
+        jobFactory = Some((_, sub) => { fired.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }),
+        pollInterval = 250.millis)
+    }
+    val a = mkService()
+    try {
+      a.start(0)
+      poll("the uncommitted batch's message dispatched")(fired.contains("report-daily"))
+      broker.publish(origination(94L, "stream-metrics"))
+      poll("a new message dispatched")(fired.contains("stream-metrics"))
+      assert(fired.asScala.toSeq.sorted == Seq("report-daily", "stream-metrics"),
+        s"no committed message may dispatch again: $fired")
+      assert(a.journal.mqOffset.contains(5L))
+    } finally a.shutdown()
+
+    // the journal holds the offset now: a checkpoint that could not even
+    // be read is never opened again
+    write("offsets/9", offsets("not-an-offset"))
+    write("commits/9", "v1\n{\"nextBatchWatermarkMs\":0}\n")
+    val b = mkService()
+    try {
+      b.start(0)
+      broker.publish(origination(95L, "report-monthly"))
+      poll("a message after the restart dispatched")(fired.contains("report-monthly"))
+      assert(fired.size == 3, s"nothing replays after the restart: $fired")
+    } finally {
+      b.shutdown()
       broker.stop()
     }
   }

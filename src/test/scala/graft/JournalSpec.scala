@@ -18,11 +18,13 @@ import graft.orchestration.Dispatcher.IncubRow
   * pure dispatcher model.
   *
   * The crash spec drives seeded event sequences through a
-  * [[GraftService]]'s ingress (MQ-style batches through `ingestDedup`,
-  * culler ticks with their compaction). A fault hook throws at each
-  * durable boundary; at each throw the service is abandoned without
-  * shutdown, a new one starts on the same checkpoint root, and the
-  * interrupted tick is delivered again, as a broker or a client would.
+  * [[GraftService]]'s ingress (MQ-style batches at dense offsets
+  * through `ingestDedup`, culler ticks with their compaction). A fault
+  * hook throws at each durable boundary; at each throw the service is
+  * abandoned without shutdown, a new one starts on the same checkpoint
+  * root, its restored offset must be the end of the last batch whose
+  * record committed, and the interrupted tick is delivered again from
+  * that offset, as the broker would.
   * The engine outlives the services, as K8s pods do, and starts each
   * exec_uuid once. The runs it started must be exactly the runs the
   * pure `Dispatcher` fold submits over the same sequence with no crash,
@@ -65,7 +67,8 @@ class JournalSpec extends AnyFunSuite {
       removed = Seq("inc-0"),
       outbox = Seq(Submission("p", "exec-p-2", Map("a" -> "exec-9"), 0)),
       closed = Seq("exec-p-0"),
-      cron_minute = Some(29000000L))
+      cron_minute = Some(29000000L),
+      mq_offset = Some(100042L))
     assert(codec.record(codec.line(r)) == r)
     assert(codec.record(codec.line(Journal.Record())) == Journal.Record())
   }
@@ -83,6 +86,33 @@ class JournalSpec extends AnyFunSuite {
     val journal = new Journal(dir.toString, conf, codec)
     journal.restore()
     assert(journal.incubating == Vector(row))
+  }
+
+  test("a segment whose last line is torn restores every record before it; a bad line before the last fails the restore") {
+    val codec = graft.api.JsonCodec.forSession(spark)
+    val conf = spark.sessionState.newHadoopConf()
+    val r1 = IncubRow("p", "inc-1", new Timestamp(1000L), None, "dependencies", 0, Map("a" -> "exec-1"))
+    val r2 = IncubRow("q", "inc-2", new Timestamp(2000L), None, "concurrency", 0, Map.empty)
+    val l1 = codec.line(Journal.Record(added = Seq(r1), mq_offset = Some(3L)))
+    val l2 = codec.line(Journal.Record(added = Seq(r2), mq_offset = Some(5L)))
+    val torn = codec.line(Journal.Record(removed = Seq("inc-1"), mq_offset = Some(9L)))
+    def segment(body: String): Journal = {
+      val dir = new Path(SparkSuite.tempDir("journal-torn"))
+      val raw = dir.getFileSystem(conf).asInstanceOf[LocalFileSystem].getRawFileSystem
+      val out = raw.create(new Path(dir, s"journal/${Journal.segmentName(1)}.jsonl"), false)
+      try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+      new Journal(dir.toString, conf, codec)
+    }
+    // a write that never returned: the last line stops mid-record
+    val j = segment(s"$l1\n$l2\n${torn.take(torn.length / 2)}")
+    j.restore()
+    assert(j.incubating == Vector(r1, r2), "every record before the torn line restores")
+    assert(j.mqOffset.contains(5L), "the torn record's offset must not restore")
+    // the same damage before the last line is corruption, not a torn write
+    val e = intercept[IllegalArgumentException] {
+      segment(s"$l1\n${torn.take(torn.length / 2)}\n$l2\n").restore()
+    }
+    assert(e.getMessage.contains("malformed JSON"), e.getMessage)
   }
 
   /** A pod-like backend that keeps `wasAborted`'s default: an aborted
@@ -165,7 +195,10 @@ class JournalSpec extends AnyFunSuite {
   private final case class Crash(point: String) extends RuntimeException(point)
 
   private sealed trait Tick { def now: Timestamp }
-  private final case class Batch(now: Timestamp, events: Seq[LifecycleEvent]) extends Tick
+  /** MQ-style: the events are the messages at offsets `[from, end)`. */
+  private final case class Batch(now: Timestamp, events: Seq[LifecycleEvent], from: Long) extends Tick {
+    def end: Long = from + events.size
+  }
   private final case class Cull(now: Timestamp) extends Tick
 
   private val pool = Seq("ingest-orders", "ingest-customer", "clean-orders", "clean-customer",
@@ -183,6 +216,7 @@ class JournalSpec extends AnyFunSuite {
     val pending = mutable.ArrayBuffer.empty[Submission]
     val ticks = mutable.ArrayBuffer.empty[Tick]
     val states = mutable.ArrayBuffer.empty[Seq[IncubRow]]
+    var offset = 0L
     def event(subtype: String, pipeline: String, exec: String, retry: Int, now: Timestamp) = {
       nextId += 1
       LifecycleEvent(nextId, "job_exec_update", subtype, pipeline, exec, now, now, retry,
@@ -197,7 +231,7 @@ class JournalSpec extends AnyFunSuite {
       val now = new Timestamp(clock)
       val tick =
         if (rnd.nextInt(6) == 0) Cull(now)
-        else Batch(now, (0 until 1 + rnd.nextInt(3)).map { _ =>
+        else Batch(now, from = offset, events = (0 until 1 + rnd.nextInt(3)).map { _ =>
           if (pending.nonEmpty && rnd.nextInt(3) > 0) {
             val s = pending.remove(rnd.nextInt(pending.size))
             event(if (rnd.nextInt(4) == 0) "failure" else "success", s.pipeline_uuid, s.exec_uuid,
@@ -207,7 +241,7 @@ class JournalSpec extends AnyFunSuite {
             event("origination", p, s"orig-$p-$nextId", 0, now)
           }
         })
-      val events = tick match { case Batch(_, evs) => evs; case Cull(_) => Nil }
+      val events = tick match { case b: Batch => offset = b.end; b.events; case Cull(_) => Nil }
       if (events.nonEmpty || rows.nonEmpty) {
         val step = api.dispatchRows(events, Nil, rows, now)
         rows = step.newIncubating ++ step.deferred
@@ -237,6 +271,9 @@ class JournalSpec extends AnyFunSuite {
       val faults = new scala.util.Random(-seed)
       val maxCrashes = 1 + faults.nextInt(4)
       var crashes = 0
+      var lastCrash = ""
+      // the end of the last batch whose record committed
+      var committed = 0L
       var clock = ticks.head.now
       def incarnation(): GraftService = {
         val s = new GraftService(new SecuredGraftApi(api, policy), spark, mqEndpoint = None,
@@ -246,6 +283,7 @@ class JournalSpec extends AnyFunSuite {
           if (crashes < maxCrashes && faults.nextInt(12) == 0) {
             crashes += 1
             crashesAt(point) += 1
+            lastCrash = point
             throw Crash(point)
           }
         s.recover()
@@ -258,15 +296,31 @@ class JournalSpec extends AnyFunSuite {
         while (!done) {
           try {
             tick match {
-              case Batch(now, events) =>
-                svc.facade.ingestDedup(events, now, new Timestamp(now.getTime - 7 * 86400000L))
+              case b @ Batch(now, events, from) =>
+                // the broker redelivers from the offset the journal holds
+                val restored = svc.journal.mqOffset.getOrElse(0L)
+                assert(restored == from || restored == b.end,
+                  s"seed $seed tick $i: offset $restored outside the batch [$from, ${b.end})")
+                val redelivered = events.drop((restored - from).toInt)
+                if (redelivered.nonEmpty)
+                  svc.facade.ingestDedup(redelivered, now, new Timestamp(now.getTime - 7 * 86400000L),
+                    Some(b.end))
+                committed = b.end
               case Cull(_) => svc.cullTick()
             }
             done = true
           } catch {
-            case Crash(_) =>
+            case Crash(point) =>
+              // the batch's record is on the disk once the journal write returned
+              tick match {
+                case b: Batch if point != "before-journal" => committed = b.end
+                case _ =>
+              }
               svc.journal.close() // the process is gone: its descriptors close
               svc = incarnation()
+              assert(svc.journal.mqOffset.getOrElse(0L) == committed,
+                s"seed $seed tick $i: restored offset ${svc.journal.mqOffset} after a crash at " +
+                  s"$lastCrash, but the last committed batch ends at $committed")
           }
         }
         assert(sorted(svc.facade.incubating.rows) == sorted(state),
@@ -277,10 +331,12 @@ class JournalSpec extends AnyFunSuite {
       svc = incarnation()
       assert(sorted(svc.facade.incubating.rows) == sorted(states.last), s"seed $seed: restored rows")
       assert(svc.journal.open.map(_.exec_uuid).toSet == pendingAtEnd, s"seed $seed: open outbox")
+      val lastEnd = ticks.collect { case b: Batch => b.end }.lastOption
+      assert(svc.journal.mqOffset == lastEnd, s"seed $seed: restored offset")
       if (seed % 10 == 0) {
         // the whole-log view holds each accepted event once, compacted or not
         val logged = svc.facade.eventLog.get().collect().map(_.event_id).toSeq
-        val accepted = ticks.collect { case Batch(_, evs) => evs.map(_.event_id) }.flatten
+        val accepted = ticks.collect { case Batch(_, evs, _) => evs.map(_.event_id) }.flatten
         assert(logged.sorted == accepted.sorted, s"seed $seed: event log")
       }
       svc.journal.close()

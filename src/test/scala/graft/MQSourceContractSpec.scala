@@ -1,47 +1,42 @@
 package graft
 
 import java.nio.charset.StandardCharsets
+import java.time.ZoneId
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl, SupportsTriggerAvailableNow}
+import graft.api.{JsonCodec, Journal}
+import graft.sources.mq.{HttpMQ, MQClient}
 
-import graft.sources.mq.{SpoolMQStream, HttpMQStream}
-
-/** THE transport-independent MQ source contract (r12 verdict #7): the
-  * behavioral surface a REAL broker adapter (SQS, Kafka, Pub/Sub)
-  * must pass unchanged before it can replace the in-repo sources. The
-  * reference's transport is live SQS (`mq_poller.py:16-30`); this
-  * sandbox has no network egress, so the honest deliverable is the
-  * seam — one abstract suite, every law written against the public
-  * DSv2 streaming interfaces only ([[MicroBatchStream]] +
-  * [[SupportsAdmissionControl]] + [[SupportsTriggerAvailableNow]]),
-  * drived twice below through the two shipped transports (spool dir,
-  * loopback HTTP). An SQS adapter implements [[Transport]] with a real
-  * queue client and inherits the suite verbatim.
+/** THE transport-independent MQ contract: the behavioral surface a
+  * REAL broker adapter (SQS, Kafka, Pub/Sub) must pass unchanged
+  * before the service can poll it. The reference's transport is live
+  * SQS (`mq_poller.py:16-30`); the suite needs no network, so the
+  * deliverable is the seam — one abstract suite, every law written
+  * against [[MQClient]] only, the calls the service's poll loop makes
+  * (`batchEnd`, `read`, `commit`), driven below through the shipped
+  * transports (loopback HTTP, the SQS bridge, and the bridge's spool
+  * written by a producer directly).
   *
   * Laws (each a test):
-  *  1. offset monotonicity — offsets are totally-ordered counts that
-  *     never decrease while the transport only grows, and round-trip
-  *     through `json()`/`deserializeOffset`.
-  *  2. admission cap — no single batch advances past `maxPerTrigger`;
-  *     a backlog drains across several capped batches, losslessly.
-  *  3. Trigger.AvailableNow — the drain target is pinned at prepare
-  *     time (late arrivals wait for the next run); ReadAllAvailable
-  *     is uncapped; reportLatestOffset is the TRUE tail.
+  *  1. offset monotonicity — offsets are counts that never decrease
+  *     while the transport only grows, and round-trip through the
+  *     journal line that commits them.
+  *  2. batch cap — no single batch passes the cap; a backlog drains
+  *     across several capped batches, losslessly.
   *  4. at-least-once, non-destructive ack — a committed range replays
   *     byte-identical (commit must not destroy replayability; SQS's
   *     per-message delete becomes "delete ≤ committed offset only").
-  *  5. rewind refusal — a tail below the checkpointed offset (messages
-  *     removed under a live checkpoint) FAILS LOUDLY; silently
-  *     remapping offsets would skip and/or re-deliver.
+  *  5. rewind refusal — a tail below the committed offset (messages
+  *     removed under it) FAILS LOUDLY; silently remapping offsets would
+  *     skip and/or re-deliver.
   *  6. visibility-timeout redelivery (r13 verdict #6) — a batch that
-  *     was RECEIVED but never committed (crash before commit; SQS: the
+  *     was READ but never committed (crash before commit; SQS: the
   *     visibility timeout elapses on undeleted messages) reappears to
-  *     a restarted incarnation with IDENTICAL (offset, body) pairs —
-  *     the offset is the downstream exactly-once dedup key, so
-  *     redelivery must map onto the same offsets, never mint new ones,
-  *     and an uncommitted receive must not advance consumption state.
+  *     a restarted client with IDENTICAL (offset, body) pairs — the
+  *     offset is what the service journals, so redelivery must map onto
+  *     the same offsets, never mint new ones, and an uncommitted read
+  *     must not advance consumption state.
   *  7. out-of-order arrival within a batch (r13 verdict #6) — SQS
   *     standard queues order best-effort: offsets track BROKER-ARRIVAL
   *     order, not payload order, so a batch whose logical sequence
@@ -52,99 +47,69 @@ import graft.sources.mq.{SpoolMQStream, HttpMQStream}
 abstract class MQSourceContract extends AnyFunSuite {
 
   /** What an adapter provides: a publisher, an out-of-band remover
-    * (the fault injector for law 5), and the stream under test. */
+    * (the fault injector for law 5), and a client; each `client()` is a
+    * new incarnation over the same queue. */
   trait Transport {
     def publish(body: String): Unit
     /** Remove the `n` OLDEST messages out-of-band (broker truncation /
-      * spool file deletion under a live checkpoint). */
+      * spool file deletion under a committed offset). */
     def removeOldest(n: Int): Unit
-    def stream(maxPerTrigger: Long = 100000L): MicroBatchStream
-      with SupportsAdmissionControl with SupportsTriggerAvailableNow
+    def client(): MQClient
   }
 
   def transportName: String
   def withTransport(body: Transport => Unit): Unit
 
-  // -- contract helpers: public interfaces only ---------------------------
-  private def des(s: MicroBatchStream, n: Long): Offset =
-    s.deserializeOffset(n.toString)
-  private def off(o: Offset): Long = o.json().toLong
-  private def latest(s: MicroBatchStream with SupportsAdmissionControl,
-                     start: Long, limit: ReadLimit): Long =
-    off(s.latestOffset(des(s, start), limit))
-  /** Read [a, b) through the partition readers — (offset, utf8 body). */
-  private def readRange(s: MicroBatchStream, a: Long, b: Long): Seq[(Long, String)] = {
-    val rf = s.createReaderFactory()
-    s.planInputPartitions(des(s, a), des(s, b)).flatMap { p =>
-      val r = rf.createReader(p)
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      try while (r.next()) {
-        val row = r.get()
-        buf += ((row.getLong(4), new String(row.getBinary(1), StandardCharsets.UTF_8)))
-      } finally r.close()
-      buf
-    }.toSeq.sortBy(_._1)
-  }
+  private def end(c: MQClient, from: Long, max: Long = MQClient.MaxBatch): Long =
+    c.batchEnd(from, waitMs = 0L, max)
+  /** Read [a, b) — (offset, utf8 body). */
+  private def readRange(c: MQClient, a: Long, b: Long): Seq[(Long, String)] =
+    c.read(a, b).map { case (off, _, body) => (off, new String(body, StandardCharsets.UTF_8)) }
 
   test(s"[$transportName] law 1: offsets are monotone counts and round-trip through json") {
     withTransport { t =>
-      val s = t.stream()
-      assert(off(s.initialOffset()) == 0L, "a fresh source starts at offset 0")
+      val c = t.client()
+      assert(end(c, 0) == 0L, "a fresh queue holds no message")
       (0 until 5).foreach(i => t.publish(s"m$i"))
-      val o1 = latest(s, 0, ReadLimit.allAvailable())
+      val o1 = end(c, 0)
       assert(o1 == 5L, s"tail after 5 publishes must be 5, got $o1")
       (5 until 8).foreach(i => t.publish(s"m$i"))
-      val o2 = latest(s, o1, ReadLimit.allAvailable())
+      val o2 = end(c, o1)
       assert(o2 == 8L)
-      assert(latest(s, o2, ReadLimit.allAvailable()) == 8L,
+      assert(end(c, o2) == 8L,
         "an idle transport must hold the offset steady, never decrease")
-      val rt = s.deserializeOffset(des(s, o2).json())
-      assert(off(rt) == o2, "offset json round-trip")
+      val codec = new JsonCodec(ZoneId.of("UTC"))
+      assert(codec.record(codec.line(Journal.Record(mq_offset = Some(o2)))).mq_offset == Some(o2),
+        "offset json round-trip through the journal line")
     }
   }
 
   test(s"[$transportName] law 2: no batch passes the admission cap; a backlog drains losslessly") {
     withTransport { t =>
       (0 until 25).foreach(i => t.publish(s"b$i"))
-      val s = t.stream(maxPerTrigger = 10L)
-      val limit = s.getDefaultReadLimit
+      val c = t.client()
       var startAt = 0L
       val batches = Iterator.continually {
-        val end = latest(s, startAt, limit)
-        val batch = (startAt, end); startAt = end; batch
+        val e = end(c, startAt, max = 10L)
+        val batch = (startAt, e); startAt = e; batch
       }.takeWhile { case (a, b) => b > a }.toSeq
       assert(batches.map { case (a, b) => b - a } == Seq(10L, 10L, 5L),
         s"25 backlogged messages under cap 10 must drain 10/10/5: $batches")
-      val all = batches.flatMap { case (a, b) => readRange(s, a, b) }
+      val all = batches.flatMap { case (a, b) => readRange(c, a, b) }
       assert(all.map(_._2) == (0 until 25).map(i => s"b$i"),
         "the capped drain must deliver every message exactly once, in order")
-    }
-  }
-
-  test(s"[$transportName] law 3: AvailableNow pins the drain target; ReadAllAvailable is uncapped") {
-    withTransport { t =>
-      (0 until 6).foreach(i => t.publish(s"p$i"))
-      val s = t.stream(maxPerTrigger = 100L)
-      s.prepareForTriggerAvailableNow()
-      t.publish("late-arrival")
-      assert(latest(s, 0, ReadLimit.allAvailable()) == 6L,
-        "the AvailableNow drain target is pinned at prepare time")
-      assert(off(s.reportLatestOffset()) == 7L,
-        "reportLatestOffset must still be the TRUE transport tail")
-      val fresh = t.stream(maxPerTrigger = 2L)
-      assert(latest(fresh, 0, ReadLimit.allAvailable()) == 7L,
-        "ReadAllAvailable is the wrapper's uncapped probe - the cap must not bind it")
     }
   }
 
   test(s"[$transportName] law 4: ack is non-destructive - a committed range replays byte-identical") {
     withTransport { t =>
       (0 until 4).foreach(i => t.publish(s"r$i"))
-      val s = t.stream()
-      val first = readRange(s, 0, 4)
+      val c = t.client()
+      assert(end(c, 0) == 4L)
+      val first = readRange(c, 0, 4)
       assert(first.map(_._2) == Seq("r0", "r1", "r2", "r3"))
-      s.commit(des(s, 4)) // the engine acks the batch
-      val replay = readRange(s, 0, 4)
+      c.commit(4) // the service acks the batch
+      val replay = readRange(c, 0, 4)
       assert(replay == first,
         "at-least-once: a committed range must stay replayable, byte-identical")
     }
@@ -153,21 +118,21 @@ abstract class MQSourceContract extends AnyFunSuite {
   test(s"[$transportName] law 6: an unacked batch redelivers with IDENTICAL offsets (visibility timeout)") {
     withTransport { t =>
       (0 until 3).foreach(i => t.publish(s"v$i"))
-      val s = t.stream()
-      val end = latest(s, 0, ReadLimit.allAvailable())
-      assert(end == 3L)
-      // received but never committed — the incarnation dies before
-      // commit; on SQS the visibility timeout elapses and the
-      // undeleted messages become receivable again
-      val firstRead = readRange(s, 0, end)
+      val c = t.client()
+      val e = end(c, 0)
+      assert(e == 3L)
+      // read but never committed — the incarnation dies before commit;
+      // on SQS the visibility timeout elapses and the undeleted messages
+      // become receivable again
+      val firstRead = readRange(c, 0, e)
       assert(firstRead.map(_._2) == Seq("v0", "v1", "v2"))
-      // a restarted incarnation probes from the CHECKPOINTED start:
-      // the messages must reappear — receiving without committing must
-      // not advance any server- or client-side consumption state
-      val s2 = t.stream()
-      val end2 = latest(s2, 0, ReadLimit.allAvailable())
-      assert(end2 == end, s"an unacked receive must not advance consumption state: $end2")
-      val redelivered = readRange(s2, 0, end2)
+      // a restarted incarnation polls from the JOURNALED start: the
+      // messages must reappear — reading without committing must not
+      // advance any server- or client-side consumption state
+      val c2 = t.client()
+      val e2 = end(c2, 0)
+      assert(e2 == e, s"an unacked read must not advance consumption state: $e2")
+      val redelivered = readRange(c2, 0, e2)
       assert(redelivered == firstRead,
         "redelivery must map onto the SAME (offset, body) pairs - the offset is the " +
         "downstream exactly-once dedup key; minting new offsets would double-deliver")
@@ -180,14 +145,14 @@ abstract class MQSourceContract extends AnyFunSuite {
       // best-effort ordering): arrival order is 3,0,4,1,5,2
       val arrival = Seq(3, 0, 4, 1, 5, 2)
       arrival.foreach(i => t.publish(s"seq-$i"))
-      val s = t.stream()
-      val end = latest(s, 0, ReadLimit.allAvailable())
-      assert(end == 6L)
-      val batch = readRange(s, 0, end)
+      val c = t.client()
+      val e = end(c, 0)
+      assert(e == 6L)
+      val batch = readRange(c, 0, e)
       assert(batch.map(_._1) == (0L until 6L),
         s"offsets must be dense and unique per arrival: ${batch.map(_._1)}")
       assert(batch.map(_._2) == arrival.map(i => s"seq-$i"),
-        "delivery preserves BROKER-ARRIVAL order, exactly once each - the source " +
+        "delivery preserves BROKER-ARRIVAL order, exactly once each - the client " +
         "must not reorder by payload; event-time ordering is downstream's job")
     }
   }
@@ -195,11 +160,11 @@ abstract class MQSourceContract extends AnyFunSuite {
   test(s"[$transportName] law 5: a tail rewind under a live checkpoint fails loudly") {
     withTransport { t =>
       (0 until 5).foreach(i => t.publish(s"w$i"))
-      val s = t.stream()
-      assert(latest(s, 0, ReadLimit.allAvailable()) == 5L) // checkpointed: 5 consumed
-      t.removeOldest(2) // broker truncation / spool archival under the checkpoint
+      val c = t.client()
+      assert(end(c, 0) == 5L) // committed: 5 consumed
+      t.removeOldest(2) // broker truncation / spool archival under the offset
       val e = intercept[IllegalStateException] {
-        latest(s, 5L, ReadLimit.allAvailable())
+        end(c, 5L)
       }
       assert(e.getMessage.contains("removed under a live checkpoint"),
         s"rewind must refuse with the named cause, got: ${e.getMessage}")
@@ -207,11 +172,14 @@ abstract class MQSourceContract extends AnyFunSuite {
   }
 }
 
-/** Spool-dir transport under the contract. */
+/** The bridge's spool as a queue on its own: a producer writes one file
+  * per message and the SQS queue stays empty, so every read is the
+  * spool half of [[graft.sources.mq.SqsBridge]]. */
 class SpoolMQContractSpec extends MQSourceContract {
   def transportName = "spool-mq"
   def withTransport(body: Transport => Unit): Unit = {
     val dir = SparkSuite.tempDir("mq-contract-spool")
+    val q = new FakeSqsQueue()
     var n = 0
     body(new Transport {
       def publish(b: String): Unit = {
@@ -220,9 +188,9 @@ class SpoolMQContractSpec extends MQSourceContract {
         n += 1
       }
       def removeOldest(k: Int): Unit =
-        graft.sources.mq.SpoolMQ.listMessages(dir).take(k)
+        graft.sources.mq.SqsMQ.listSpool(dir).take(k)
           .foreach(f => java.nio.file.Files.delete(f.toPath))
-      def stream(cap: Long) = new SpoolMQStream(dir, cap)
+      def client() = new graft.sources.mq.SqsBridge(q.client, dir)
     })
   }
 }
@@ -235,7 +203,7 @@ class HttpMQContractSpec extends MQSourceContract {
     try body(new Transport {
       def publish(b: String): Unit = broker.publish(b)
       def removeOldest(k: Int): Unit = broker.removeOldest(k)
-      def stream(cap: Long) = new HttpMQStream(broker.endpoint, cap)
+      def client() = new HttpMQ(broker.endpoint)
     }) finally broker.stop()
   }
 }

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.mq.{SpoolMQ, SqsBridge, SqsMQ, SqsMQStream}
+import graft.sources.mq.{SqsBridge, SqsMQ}
 
 /** In-memory queue with REAL SQS semantics — the fake behind the
   * [[SqsMQ.SqsClientApi]] seam (r14 verdict #8): visibility-timeout
@@ -46,19 +46,19 @@ final class FakeSqsQueue(visibilityMillis: Long = 60000L) {
   def expireVisibility(): Unit = synchronized { entries.foreach(_.invisibleUntil = 0L) }
 }
 
-/** The SQS bridge under the full 7-law transport contract — verbatim
-  * inheritance, driven through the in-memory SQS-semantics fake. */
+/** The SQS bridge under the transport contract — verbatim inheritance,
+  * driven through the in-memory SQS-semantics fake; each client is a new
+  * bridge over the same spool and queue. */
 class SqsMQContractSpec extends MQSourceContract {
   def transportName = "sqs-bridge"
   def withTransport(body: Transport => Unit): Unit = {
     val dir = SparkSuite.tempDir("mq-contract-sqs")
     val q = new FakeSqsQueue()
-    val bridge = new SqsBridge(q.client, dir)
     body(new Transport {
       def publish(b: String): Unit = q.send(b)
       def removeOldest(k: Int): Unit =
-        SpoolMQ.listMessages(dir).take(k).foreach(f => Files.delete(f.toPath))
-      def stream(cap: Long) = new SqsMQStream(bridge, cap)
+        SqsMQ.listSpool(dir).take(k).foreach(f => Files.delete(f.toPath))
+      def client() = new SqsBridge(q.client, dir)
     })
   }
 }
@@ -77,13 +77,10 @@ class SqsMQSpec extends AnyFunSuite {
   test("commit deletes UPSTREAM exactly the committed prefix; the spool keeps replaying") {
     val (dir, q, bridge) = fixture()
     (0 until 5).foreach(i => q.send(s"d$i"))
-    val s = new SqsMQStream(bridge)
-    assert(s.latestOffset(s.initialOffset(),
-      org.apache.spark.sql.connector.read.streaming.ReadLimit.allAvailable())
-      .json().toLong == 5L)
-    s.commit(s.deserializeOffset("3"))
+    assert(bridge.batchEnd(0L, waitMs = 0L) == 5L)
+    bridge.commit(3L)
     assert(q.undeletedCount == 2, "offsets 0,1,2 must be deleted from the queue, 3,4 kept")
-    assert(SpoolMQ.listMessages(dir).length == 5,
+    assert(SqsMQ.listSpool(dir).length == 5,
       "the spool is the replay truth - commit must not touch it")
   }
 
@@ -91,14 +88,14 @@ class SqsMQSpec extends AnyFunSuite {
     val (dir, q, bridge) = fixture()
     (0 until 3).foreach(i => q.send(s"r$i"))
     assert(bridge.pump() == 3L)
-    val namesBefore = SpoolMQ.listMessages(dir).map(_.getName).toSeq
+    val namesBefore = SqsMQ.listSpool(dir).map(_.getName).toSeq
     // leases elapse (crash before commit); the broker re-serves all 3
     q.expireVisibility()
     assert(bridge.pump() == 3L, "redelivery must not mint new offsets")
-    assert(SpoolMQ.listMessages(dir).map(_.getName).toSeq == namesBefore,
+    assert(SqsMQ.listSpool(dir).map(_.getName).toSeq == namesBefore,
       "redelivered messages must not be re-spooled")
     // the REFRESHED handles must still ack: the originals are void
-    bridge.ackUpTo(3L)
+    bridge.commit(3L)
     assert(q.undeletedCount == 0, "ack after redelivery must use the fresh receipt handles")
   }
 
@@ -106,14 +103,14 @@ class SqsMQSpec extends AnyFunSuite {
     val (dir, q, bridge) = fixture()
     (0 until 4).foreach(i => q.send(s"c$i"))
     assert(bridge.pump() == 4L)
-    val before = SpoolMQ.listMessages(dir).map(_.getName).toSeq
+    val before = SqsMQ.listSpool(dir).map(_.getName).toSeq
     // incarnation dies before commit; a new bridge rebuilds id→offset
     // from the spool filenames and the broker redelivers everything
     q.expireVisibility()
     val bridge2 = new SqsBridge(q.client, dir)
     assert(bridge2.pump() == 4L, "rebuilt dedup map must absorb the redelivery")
-    assert(SpoolMQ.listMessages(dir).map(_.getName).toSeq == before)
-    bridge2.ackUpTo(4L)
+    assert(SqsMQ.listSpool(dir).map(_.getName).toSeq == before)
+    bridge2.commit(4L)
     assert(q.undeletedCount == 0)
   }
 
@@ -126,14 +123,14 @@ class SqsMQSpec extends AnyFunSuite {
     // now stale — but pump() hasn't run, so the bridge doesn't know
     q.expireVisibility()
     q.client.receive(10) // another consumer's receive rotates the handle
-    bridge.ackUpTo(1L)   // stale-handle delete fails silently (SQS Failed entry)
+    bridge.commit(1L)   // stale-handle delete fails silently (SQS Failed entry)
     assert(q.undeletedCount == 1, "stale handle must NOT delete")
     // at-least-once closure: the redelivery dedups onto offset 0, the
-    // stream never re-emits it (0 < committed), and the refreshed
+    // consumer never reads it again (0 < committed), and the refreshed
     // handle lets the next commit cycle finally delete upstream
     q.expireVisibility()
     assert(bridge.pump() == 1L)
-    bridge.ackUpTo(1L)
+    bridge.commit(1L)
     assert(q.undeletedCount == 0)
   }
 
@@ -144,5 +141,31 @@ class SqsMQSpec extends AnyFunSuite {
       s"filename must be filesystem-safe: $name")
     assert(SqsMQ.messageIdOf(name).contains(id))
     assert(name.startsWith("m000000000042_"), "offset prefix keeps filename sort = offset order")
+  }
+
+  test("pump stops at the batch cap while the queue is never empty") {
+    // every receive comes back full: the old drain looped until a receive
+    // came back short, so a busy queue held the poll turn forever
+    val dir = SparkSuite.tempDir("sqs-mq-full")
+    val full = new SqsMQ.SqsClientApi {
+      private var n = 0L
+      def receive(max: Int): Seq[SqsMQ.SqsMessage] = synchronized {
+        (0 until max).map { _ =>
+          n += 1
+          // 25 distinct messages, redelivered round and round
+          SqsMQ.SqsMessage(s"mid-${n % 25}", s"h-$n", s"body-${n % 25}".getBytes("UTF-8"), 0L)
+        }
+      }
+      def deleteBatch(handles: Seq[String]): Unit = ()
+    }
+    val bridge = new SqsBridge(full, dir)
+    val tail = new java.util.concurrent.atomic.AtomicLong(-1L)
+    val t = new Thread(() => tail.set(bridge.tail))
+    t.setDaemon(true)
+    t.start()
+    t.join(60000L)
+    assert(!t.isAlive, "pump did not return within 60 s on a queue that is never empty")
+    assert(tail.get() == 25L, s"every distinct message spooled once: ${tail.get()}")
+    assert(SqsMQ.listSpool(dir).length == 25)
   }
 }
