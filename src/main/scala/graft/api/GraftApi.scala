@@ -156,20 +156,19 @@ final class GraftApi(
     * step of the dispatcher over the catalog; returns its outputs.
     *
     * A success or failure report for exec X means X has stopped, even
-    * when the running rows still list it: they are refreshed after each
-    * step, and a run's callback fires inside its still-running closure.
-    * Gated against that row, the retry of a `concurrency = false`
-    * pipeline would incubate behind its own finished attempt for the
-    * whole debounce. Neither ingress requires `exec_uuid`: a report
-    * without one names no exec, and a running row without one is kept. */
+    * when the running rows still list it: the service's rows drop X only
+    * once the record holding the report is written, after this fold, and
+    * an engine can report X running while its callback fires inside the
+    * still-running closure. Gated against that row, the retry of a
+    * `concurrency = false` pipeline would incubate behind its own
+    * finished attempt for the whole debounce. Neither ingress requires
+    * `exec_uuid`: a report without one names no exec, and a running row
+    * without one is kept. */
   def dispatchRows(events: Seq[LifecycleEvent],
                    running: Seq[RunningJob],
                    incubating: Seq[IncubRow],
                    now: Timestamp): Dispatcher.Step = {
-    val finished = events.collect {
-      case e if e.event_type == "job_exec_update" && e.exec_uuid != null &&
-          (e.event_subtype == "success" || e.event_subtype == "failure") => e.exec_uuid
-    }.toSet
+    val finished = GraftApi.finished(events)
     val live = running.filterNot(j => j.exec_uuid != null && finished(j.exec_uuid))
     Dispatcher.step(catalog, live, incubating, events, now,
       cfg.concurrencyDebounceSeconds, cfg.incubatingJobAgeOutSeconds)
@@ -252,6 +251,14 @@ final class GraftApi(
 }
 
 object GraftApi {
+  /** The exec_uuids whose success or failure report `events` hold: the
+    * runs the batch ends. */
+  private[graft] def finished(events: Seq[LifecycleEvent]): Set[String] =
+    events.collect {
+      case e if e.event_type == "job_exec_update" && e.exec_uuid != null &&
+          (e.event_subtype == "success" || e.event_subtype == "failure") => e.exec_uuid
+    }.toSet
+
   /** Floor for minted manual-run event ids: updateAndGet keeps ids
     * strictly decreasing even when several manual runs land in one
     * millisecond (r10 advice — same-ms runs of different pipelines

@@ -47,7 +47,9 @@ import graft.sources.mq.{HttpMQ, MQClient}
   * a culler release and a cron firing are literally the same code
   * path, and dispatcher submissions flow to their def's engine backend
   * ([[EngineManager.submit]]) so `/pipeline/dispatcher/running`
-  * reflects them immediately.
+  * reflects them immediately. The concurrency gate reads the journal's
+  * open runs, not the engines: a step polls no engine unless the gate
+  * would defer a candidate behind one of them.
   *
   * Scale note: every loop here is metadata-plane (catalog-bounded
   * collects, poll-sized batches — the reference's own regime). The
@@ -136,7 +138,6 @@ final class GraftService(
     facade.submissionSink.set { subs =>
       submitAll(subs)
       fault("after-submit")
-      facade.refreshRunning()
     }
     // catalog mutations persist through the MetaStore when configured:
     // the catalog is driver rows, so the store's files serve restart-time
@@ -148,11 +149,7 @@ final class GraftService(
         store.saveEdges(spark.createDataset(c.edges)(Encoders.product[PipelineTrigger]))
       }
     }
-    val open = journal.open
-    if (open.nonEmpty) {
-      submitAll(open)
-      facade.refreshRunning()
-    }
+    submitAll(journal.open)
   }
 
   // ---- the MQ ingress ----------------------------------------------------
@@ -309,7 +306,9 @@ final class GraftService(
   // tail's coverage floor and the uncompacted events, the cron
   // high-water minute, and the outbox, whose still-open runs are
   // submitted once more (an engine whose runs outlive the process
-  // dedups by exec_uuid); an abort closes the runs its token names. A
+  // dedups by exec_uuid); an abort closes the runs its token names. The
+  // open outbox is also the concurrency gate's ledger: every journal
+  // write, and the restore, hands it to the facade. A
   // fresh root costs one existence probe. The culler tick compacts:
   // closed segments' events go to the parquet history under
   // `service-state/events` (one file per segment, so a re-run replaces
@@ -337,19 +336,20 @@ final class GraftService(
   private def commit(c: HttpFacade.Commit): Unit = {
     fault("before-journal")
     journal.commit(c.events, c.rows, c.submissions, c.closed, c.mqOffset)
+    facade.openRuns(journal.open)
     fault("after-journal")
   }
 
-  /** Close the open runs the engines report ended: a run whose job
-    * posts no callback would otherwise be resubmitted by every restart. */
+  /** Close the gate's open runs the engines report ended: a run whose
+    * job posts no callback would otherwise be resubmitted by every
+    * restart, and a single-use run would stay in the ledger. */
   private def settle(): Unit = {
-    val open = journal.open
+    val open = facade.running.rows
     if (open.nonEmpty) {
       val ended = api.engines.allRows(spark)
         .collect { case j if !Dispatcher.Live(j.engine_status) => j.exec_uuid }.toSet
       val closed = open.map(_.exec_uuid).filter(ended)
-      if (closed.nonEmpty)
-        facade.locked(journal.commit(Nil, facade.incubating.rows, Nil, closed))
+      if (closed.nonEmpty) facade.closeRuns(closed)
     }
   }
 
@@ -392,6 +392,7 @@ final class GraftService(
     if (journal.exists) {
       val segments = journal.restore()
       facade.incubating.set(journal.incubating)
+      facade.openRuns(journal.open)
       lastCronMinute = journal.cron
       // the replayed events are the MQ replay probe's, and the whole
       // log's; the history tail holds only this incarnation's events, so
@@ -464,7 +465,7 @@ final class GraftService(
   }
 
   /** The shared ingress: dispatch under the facade's lock; engine
-    * submission + gate refresh ride the installed submissionSink. */
+    * submission rides the installed submissionSink. */
   private[graft] def onEvents(events: Seq[LifecycleEvent], now: Timestamp): Unit = {
     facade.ingest(events, now)
     ()

@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model._
-import graft.orchestration.{Dispatcher, EngineJob, EventHistory, EventTail, LoggedIds}
+import graft.orchestration.{Dispatcher, EngineBackend, EngineJob, EventHistory, EventTail, LoggedIds}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
@@ -45,12 +45,16 @@ import graft.orchestration.Dispatcher.IncubRow
   *  - the incubation rows, replaced by each step:
   *      incubating' = newIncubating ∪ deferred
   *    (newIncubating is the step's complete kept state — see applyStep);
-  *  - the running rows the concurrency gate reads, refreshed from the
-  *    engines after each submission;
+  *  - the concurrency gate's live runs ([[running]]): the journal's
+  *    open runs, set by [[GraftService]] after each journal write, and
+  *    the single-use runs, held in memory. A dispatch step reads no
+  *    engine unless the gate would defer a candidate behind one of
+  *    these runs; then the engines decide (see `gatedStep`);
   *  - the recent end of the event log ([[EventTail]]) and the logged ids
   *    the MQ replay probe reads ([[LoggedIds]]).
-  * `describe`, `list`, `downstream`, `fetch_pipeline_body`, `running`
-  * and a covered `event/history` window read these values; a history
+  * `describe`, `list`, `downstream`, `fetch_pipeline_body` and a
+  * covered `event/history` window read these values (the `running`
+  * route reads the engines, E2); a history
   * window older than the tail falls back to the whole log. One global
   * lock serializes mutating verbs — metadata-plane traffic (catalog-
   * sized, the reference's own regime); read verbs hit immutable
@@ -78,8 +82,16 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private val api = secured.api
   private[graft] val codec = JsonCodec.forSession(spark)
 
-  /** Driver-held state rows; `get()` is their local-Dataset view. */
-  private[graft] val running = new HttpFacade.Rows(spark, Encoders.product[RunningJob])
+  /** Driver-held state rows; `get()` is their local-Dataset view.
+    * `running` is the concurrency gate's ledger: the runs this service
+    * started and has not seen end — the journal's open outbox
+    * ([[openRuns]]) and the single-use runs, which the journal does not
+    * hold and which leave on a terminal event, an abort or an engine
+    * read that reports them ended ([[GraftService]]'s culler tick makes
+    * one). */
+  private[graft] val running = new HttpFacade.Rows(spark, EngineBackend.RunningJobEnc)
+  private var journaled = Vector.empty[RunningJob] // guarded by mutate
+  private var singleUse = Vector.empty[RunningJob] // guarded by mutate
   private[graft] val incubating = new HttpFacade.Rows(spark, Encoders.product[IncubRow])
   /** The whole event log, the history fallback: `get()` builds the
     * compacted parquet ∪ the events held since. Standalone facade: all
@@ -225,7 +237,12 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     "/pipeline/dispatcher/run_single_use" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("runSingleUse")
       val (d, argv, env) = codec.singleUse(r.body)
-      val exec = mutate.synchronized(api.runSingleUse(d, EngineJob.Command(argv, env)))
+      val exec = mutate.synchronized {
+        val exec = api.runSingleUse(d, EngineJob.Command(argv, env))
+        singleUse :+= HttpFacade.ledgerRow(d.pipeline_uuid, exec)
+        running.set(journaled ++ singleUse)
+        exec
+      }
       codec.obj("exec_uuid" -> exec)
     }),
     "/pipeline/dispatcher/running" -> Map[String, Handler]("GET" -> { r =>
@@ -253,7 +270,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
           case j if j.engine_tracking_id == token => j.exec_uuid
         }).distinct
         api.abort(token)
-        commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, closed = named))
+        closeRuns(named)
       }
       ok
     }),
@@ -334,16 +351,16 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private[graft] def ingest(events: Seq[LifecycleEvent], now: Timestamp,
       mqOffset: Option[Long] = None): Seq[Submission] =
     mutate.synchronized {
-      val step = api.dispatchRows(events, running.rows, incubating.rows, now)
+      val (step, ended) = gatedStep(events, now)
       // One commit makes the events, the state they leave and the runs
       // they start durable together, before any of it takes effect: a
       // crash before it loses nothing acknowledged (the replay applies
       // the batch), a crash after it restores all three (the replay's
       // ids are logged, and the open submissions are resubmitted). The
       // sink and the driver-held tail and id index follow the effects,
-      // so they hold only applied events. An MQ batch's end offset
-      // commits in the same record.
-      val subs = applyStep(events, step, mqOffset)
+      // so they hold only applied events. An MQ batch's end offset and
+      // the runs the engines reported ended commit in the same record.
+      val subs = applyStep(events, step, ended, mqOffset)
       if (events.nonEmpty) {
         eventSink.get()(events)
         logged(events)
@@ -395,11 +412,49 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   /** Run `body` under the lock every mutation holds. */
   private[graft] def locked[T](body: => T): T = mutate.synchronized(body)
 
-  /** Refresh the concurrency-gate rows from live engine state — the
-    * service calls this after submitting so the next dispatch gates
-    * against what is actually running. */
-  private[graft] def refreshRunning(): Unit =
-    running.set(api.engines.allRows(spark))
+  /** Set the journal's open runs as the gate's ledger: [[GraftService]]
+    * calls this after each journal write and after a restore. */
+  private[graft] def openRuns(open: Seq[Submission]): Unit = mutate.synchronized {
+    journaled = open.toVector.map(s => HttpFacade.ledgerRow(s.pipeline_uuid, s.exec_uuid))
+    running.set(journaled ++ singleUse)
+  }
+
+  /** Close runs that end without a callback — an abort's, or the ones
+    * the engines report ended: one commit, and the single-use ones leave
+    * the ledger. */
+  private[graft] def closeRuns(execs: Seq[String]): Unit = mutate.synchronized {
+    commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, closed = execs))
+    endSingleUse(execs.toSet)
+  }
+
+  private def endSingleUse(execs: Set[String]): Unit =
+    if (singleUse.exists(j => execs(j.exec_uuid))) {
+      singleUse = singleUse.filterNot(j => execs(j.exec_uuid))
+      running.set(journaled ++ singleUse)
+    }
+
+  /** The step over the ledger. A ledger run can have ended without a
+    * callback (a crashed run, a deleted pod), so where the gate would
+    * defer a candidate behind a ledger run this batch does not end, the
+    * engines decide, as the reference's live check does
+    * (`dispatcher.py:15-68`): one read of their rows, and the step folds
+    * again over the ledger runs they report live. Returns the step and
+    * the ledger runs they report ended, for the step's commit to close.
+    * A run they do not report stays in the ledger but does not gate. */
+  private def gatedStep(events: Seq[LifecycleEvent], now: Timestamp): (Dispatcher.Step, Seq[String]) = {
+    val ledger = running.rows
+    val step = api.dispatchRows(events, ledger, incubating.rows, now)
+    val finished = GraftApi.finished(events)
+    val held = ledger.collect { case j if !finished(j.exec_uuid) => j.pipeline_uuid }.toSet
+    if (!step.deferred.exists(r => held(r.pipeline_uuid))) (step, Nil)
+    else {
+      val reported = api.engines.allRows(spark)
+      val live = reported.collect { case j if Dispatcher.Live(j.engine_status) => j.exec_uuid }.toSet
+      val seen = reported.map(_.exec_uuid).toSet
+      val ended = ledger.collect { case j if seen(j.exec_uuid) && !live(j.exec_uuid) => j.exec_uuid }
+      (api.dispatchRows(events, ledger.filter(j => live(j.exec_uuid)), incubating.rows, now), ended)
+    }
+  }
 
   /** The event-loop state contract (see class doc): `newIncubating`
     * IS the complete post-step state — every old row flows through the
@@ -411,10 +466,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * slot-consumed assertion (r7). The step is committed first; the
     * submissions are returned for the caller's response. */
   private def applyStep(events: Seq[LifecycleEvent], step: Dispatcher.Step,
-      mqOffset: Option[Long]): Seq[Submission] = {
+      ended: Seq[String], mqOffset: Option[Long]): Seq[Submission] = {
     val next = step.newIncubating ++ step.deferred
-    commitHook.get()(HttpFacade.Commit(events, next, step.submissions, mqOffset = mqOffset))
+    commitHook.get()(HttpFacade.Commit(events, next, step.submissions, ended, mqOffset))
     incubating.set(next)
+    endSingleUse(GraftApi.finished(events) ++ ended)
     submissionSink.get()(step.submissions)
     step.submissions
   }
@@ -494,6 +550,11 @@ object HttpFacade {
   final case class Commit(events: Seq[LifecycleEvent], rows: Seq[IncubRow],
                           submissions: Seq[Submission], closed: Seq[String] = Nil,
                           mqOffset: Option[Long] = None)
+
+  /** A gate ledger row: a run started and not yet seen to end. The gate
+    * reads its pipeline and status; it names no engine. */
+  private def ledgerRow(pipeline: String, exec: String): RunningJob =
+    RunningJob(exec, pipeline, null, null, "running", None, None)
 
   /** A driver-held row set. The facade's state lives here as plain
     * values; `get()` is the same rows as a local Dataset (a

@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.concurrent.{ExecutionContext, Future}
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model.{RunningJob, Submission}
 
@@ -41,9 +41,9 @@ trait EngineBackend {
   def abort(execUuid: String): Unit
   /** E7 — live run snapshot. */
   def jobs(spark: SparkSession): Dataset[RunningJob]
-  /** E7 as driver rows — what the concurrency gate and the running
-    * route read. Backends that keep their runs in memory override it so
-    * the read plans no query. */
+  /** E7 as driver rows — what the running route, the service's settle
+    * and the concurrency gate's deferral check read. Backends that keep
+    * their runs in memory override it so the read plans no query. */
   def rows(spark: SparkSession): Seq[RunningJob] = jobs(spark).collect().toSeq
   /** E5 — tail of the run's captured log, byte-capped. */
   def logs(execUuid: String, maxKb: Int = 10): String
@@ -55,6 +55,12 @@ trait EngineBackend {
     * cannot observe aborts (a deleted pod just vanishes) keep the
     * default `false`. */
   def wasAborted(execUuid: String): Boolean = false
+}
+
+object EngineBackend {
+  /** The one `RunningJob` encoder the backends' `jobs` share: deriving
+    * it per call reflects over the case class each time. */
+  val RunningJobEnc: Encoder[RunningJob] = Encoders.product[RunningJob]
 }
 
 /** Shared run-registry mechanics of the in-process backends — ONE
@@ -229,7 +235,7 @@ final class LocalSparkEngine(spark: SparkSession) extends EngineBackend with Run
   }
 
   def jobs(spark: SparkSession): Dataset[RunningJob] =
-    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
+    spark.createDataset(rows(spark))(EngineBackend.RunningJobEnc)
 }
 
 /** E1/E2 — engine registry + pushed-down job filtering across engines. */
@@ -256,9 +262,10 @@ final class EngineManager(engines: Seq[EngineBackend]) {
     * endpoint fans out to every backend the same way). */
   def wasAborted(execUuid: String): Boolean = engines.exists(_.wasAborted(execUuid))
 
-  /** Every engine's live rows — the service's concurrency-gate
-    * refresh. Engine-state-sized (one row per tracked run), no
-    * filter/limit: this is the gate's input, not an API page. */
+  /** Every engine's rows — what the concurrency gate reads when it would
+    * defer a candidate behind a run, and what `settle` closes ended runs
+    * by. Engine-state-sized (one row per tracked run), no filter/limit:
+    * this is the gate's input, not an API page. */
   def allRows(spark: SparkSession): Seq[RunningJob] = engines.flatMap(_.rows(spark))
 
   /** E2 — the running page across engines: status and pipeline filter,

@@ -2,7 +2,7 @@ package graft.orchestration
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{RunningJob, Submission}
 
@@ -288,7 +288,7 @@ final class K8sPodEngine(cfg: K8sPodEngine.K8sConfig, api: PodApi)
       .map(unmarshalPod(name, _))
 
   def jobs(spark: SparkSession): Dataset[RunningJob] =
-    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
+    spark.createDataset(rows(spark))(EngineBackend.RunningJobEnc)
 
   def logs(execUuid: String, maxKb: Int): String = {
     val byExec = api.list(cfg.namespace)

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 
 import scala.concurrent.{ExecutionContext, Future}
 
-import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.model.{RunningJob, Submission}
 
@@ -126,7 +126,7 @@ final class ProcessEngine extends EngineBackend with RunRegistry {
   }
 
   def jobs(spark: SparkSession): Dataset[RunningJob] =
-    spark.createDataset(rows(spark))(Encoders.product[RunningJob])
+    spark.createDataset(rows(spark))(EngineBackend.RunningJobEnc)
 }
 
 object ProcessEngine {

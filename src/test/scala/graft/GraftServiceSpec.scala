@@ -415,10 +415,10 @@ class GraftServiceSpec extends AnyFunSuite {
     val broker = new MQBroker
     val ckpt = SparkSuite.tempDir("svc-mq-resume-ckpt")
     val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def mkService(): GraftService = {
-      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-        Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-        GraftConfig.default)
+    def mkApi() = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+      GraftConfig.default)
+    def mkService(api: GraftApi): GraftService = {
       val policy = new Auth.Policy(
         new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
       new GraftService(new SecuredGraftApi(api, policy), spark,
@@ -426,17 +426,24 @@ class GraftServiceSpec extends AnyFunSuite {
         jobFactory = Some((_, sub) => { fired.add(sub.pipeline_uuid); EngineJob.SparkClosure(_ => ()) }),
         pollInterval = 250.millis)
     }
-    val a = mkService()
+    val apiA = mkApi()
+    val a = mkService(apiA)
     try {
       a.start(0)
       // an origination for a known pipeline submits immediately
       broker.publish(asJson(success(41, "x").copy(
         event_subtype = "origination", pipeline_uuid = "report-weekly")))
       poll("message 1 dispatched in service A")(fired.contains("report-weekly"))
+      // the run ends before the process does: a run still open at
+      // shutdown is resubmitted by the restart, which is not a replay
+      poll("run ended") {
+        val rows = apiA.engines.allRows(spark)
+        rows.nonEmpty && rows.forall(_.engine_status != "running")
+      }
     } finally a.shutdown()
 
     val countAfterA = fired.size
-    val b = mkService()
+    val b = mkService(mkApi())
     try {
       b.start(0)
       broker.publish(asJson(success(42, "x").copy(
@@ -736,10 +743,10 @@ class GraftServiceSpec extends AnyFunSuite {
     // the next incarnation against the ids it read back from the log
     val ckpt = SparkSuite.tempDir("svc-dedup-ckpt")
     val fired = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def mkService(): GraftService = {
-      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
-        Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
-        GraftConfig.default)
+    def mkApi() = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)),
+      Fixtures.edgesDS(spark), new EngineManager(Seq(new LocalSparkEngine(spark))),
+      GraftConfig.default)
+    def mkService(api: GraftApi): GraftService = {
       val policy = new Auth.Policy(
         new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
       new GraftService(new SecuredGraftApi(api, policy), spark,
@@ -749,7 +756,8 @@ class GraftServiceSpec extends AnyFunSuite {
     def cutoff(now: Timestamp) =
       new Timestamp(now.getTime - GraftConfig.default.mqDedupHorizonDays * 86400000L)
     val batch = Seq(success(61, "x").copy(event_subtype = "origination", pipeline_uuid = "report-weekly"))
-    val a = mkService()
+    val apiA = mkApi()
+    val a = mkService(apiA)
     try {
       a.start(0)
       val now = new Timestamp(System.currentTimeMillis())
@@ -757,13 +765,13 @@ class GraftServiceSpec extends AnyFunSuite {
       // the run ends before the process does: a run still open at
       // shutdown is resubmitted by the restart, which is not a replay
       poll("run ended") {
-        a.facade.refreshRunning()
-        a.facade.running.rows.nonEmpty && a.facade.running.rows.forall(_.engine_status != "running")
+        val rows = apiA.engines.allRows(spark)
+        rows.nonEmpty && rows.forall(_.engine_status != "running")
       }
     } finally a.shutdown()
     assert(fired.asScala.toSeq == Seq("report-weekly"))
 
-    val b = mkService()
+    val b = mkService(mkApi())
     try {
       b.start(0)
       val now = new Timestamp(System.currentTimeMillis())

@@ -169,6 +169,7 @@ class JournalSpec extends AnyFunSuite {
     } finally svc.facade.stop()
     assert(engine.rows(spark).map(_.exec_uuid) == Seq(subs(2)))
     assert(svc.journal.open.map(_.exec_uuid) == Seq(subs(2)))
+    assert(svc.facade.running.rows.map(_.exec_uuid) == Seq(subs(2)), "the gate's live set")
     svc.journal.close() // the process is gone
     val restarted = incarnation()
     // only the run nobody aborted is submitted again
@@ -321,6 +322,8 @@ class JournalSpec extends AnyFunSuite {
               assert(svc.journal.mqOffset.getOrElse(0L) == committed,
                 s"seed $seed tick $i: restored offset ${svc.journal.mqOffset} after a crash at " +
                   s"$lastCrash, but the last committed batch ends at $committed")
+              assert(svc.facade.running.rows.map(_.exec_uuid) == svc.journal.open.map(_.exec_uuid),
+                s"seed $seed tick $i: the gate's live set is not the restored open outbox")
           }
         }
         assert(sorted(svc.facade.incubating.rows) == sorted(state),
@@ -331,6 +334,7 @@ class JournalSpec extends AnyFunSuite {
       svc = incarnation()
       assert(sorted(svc.facade.incubating.rows) == sorted(states.last), s"seed $seed: restored rows")
       assert(svc.journal.open.map(_.exec_uuid).toSet == pendingAtEnd, s"seed $seed: open outbox")
+      assert(svc.facade.running.rows.map(_.exec_uuid).toSet == pendingAtEnd, s"seed $seed: the gate's live set")
       val lastEnd = ticks.collect { case b: Batch => b.end }.lastOption
       assert(svc.journal.mqOffset == lastEnd, s"seed $seed: restored offset")
       if (seed % 10 == 0) {

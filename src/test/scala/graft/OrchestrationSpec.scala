@@ -377,6 +377,11 @@ class OrchestrationSpec extends AnyFunSuite {
     local.abort(ljob.engine_tracking_id)
     assert(local.wasAborted("exec-track-2"), "abort by tracking id must stamp the run")
     gate.countDown()
+    // the released body logs its end after the abort: compare the two
+    // reads once the buffer holds that line
+    val logged = System.currentTimeMillis() + 30000
+    while (System.currentTimeMillis() < logged && local.logs("exec-track-2").isEmpty) Thread.sleep(20)
+    assert(local.logs("exec-track-2").startsWith("run exec-track-2 "))
     assert(local.logs(ljob.engine_tracking_id) == local.logs("exec-track-2"),
       "logs by tracking id must read the same buffer")
   }
