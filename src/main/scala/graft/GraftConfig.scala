@@ -6,15 +6,11 @@ package graft
   * `incubating_job_culling_interval`, `concurrency_debounce_seconds`,
   * `incubating_job_age_out_seconds`, engine settings etc. are
   * referenced throughout) that some code here reads. Collected into one
-  * typed object; storage keys map to their Spark-native equivalents.
-  * `GET /sys/config` lists every field.
+  * typed object. Storage has no keys: the service's one durable store
+  * is the journal under its checkpoint root (replacing mongo_db_addr /
+  * db_provider). `GET /sys/config` lists every field.
   */
 final case class GraftConfig(
-    // storage (replaces mongo_db_addr / db_provider)
-    metaProvider: String = "parquet", // see MetaStore.forConfig
-    catalogPath: String = "graft-meta/pipeline_defs",
-    edgesPath: String = "graft-meta/pipeline_triggers",
-
     // dispatcher / culler timing (job_culler.py:12-43)
     cullingIntervalSeconds: Long = 10L,
     concurrencyDebounceSeconds: Long = 300L,

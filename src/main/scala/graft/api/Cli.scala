@@ -273,7 +273,7 @@ object Cli {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.service()
     spark.sparkContext.setLogLevel("ERROR")
-    // demo catalog = the deterministic fixtures; a deployment loads via MetaStore
+    // demo catalog = the deterministic fixtures; the service imports GRAFT_META_DIR
     val api = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
       new EngineManager(Seq(new LocalSparkEngine(spark), new ProcessEngine)))
     val code = run(api, spark, args.toList)

@@ -2,57 +2,12 @@ package graft.api
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
 import graft.GraftConfig
-import graft.functions.Retry
 import graft.model._
 import graft.orchestration._
 import graft.orchestration.Dispatcher.IncubRow
-
-/** Storage backend selection — the reference's `provider_factory`
-  * (D19, `data_provider.py:291-295`): a trait + factory keyed by the
-  * config's provider string. The parquet store is the only shipped
-  * implementation (replacing MongoDB); a Delta/JDBC store would
-  * implement the same trait.
-  */
-trait MetaStore {
-  def loadDefs(spark: SparkSession): Dataset[PipelineDef]
-  def loadEdges(spark: SparkSession): Dataset[PipelineTrigger]
-  def saveDefs(defs: Dataset[PipelineDef]): Unit
-  def saveEdges(edges: Dataset[PipelineTrigger]): Unit
-}
-
-final class ParquetMetaStore(cfg: GraftConfig) extends MetaStore {
-  // FIRST BOOT (r12 review): a fresh GRAFT_META_DIR has no parquet yet,
-  // and an unconditional read crashed startup with PATH_NOT_FOUND
-  // before the HTTP surface could bind — a chicken-and-egg, since the
-  // files are only created by the catalogHook an HTTP upsert drives.
-  // A missing path is an EMPTY catalog (the bootstrap state), while a
-  // present-but-unreadable path still fails loudly via spark.read.
-  private def readOrEmpty[T](spark: SparkSession, path: String,
-                             enc: org.apache.spark.sql.Encoder[T]): Dataset[T] = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (fs.exists(p)) spark.read.parquet(path).as[T](enc)
-    else spark.emptyDataset[T](enc)
-  }
-  def loadDefs(spark: SparkSession): Dataset[PipelineDef] =
-    readOrEmpty(spark, cfg.catalogPath, Encoders.product[PipelineDef])
-  def loadEdges(spark: SparkSession): Dataset[PipelineTrigger] =
-    readOrEmpty(spark, cfg.edgesPath, Encoders.product[PipelineTrigger])
-  def saveDefs(defs: Dataset[PipelineDef]): Unit =
-    Retry(3)(defs.write.mode("overwrite").parquet(cfg.catalogPath))
-  def saveEdges(edges: Dataset[PipelineTrigger]): Unit =
-    Retry(3)(edges.write.mode("overwrite").parquet(cfg.edgesPath))
-}
-
-object MetaStore {
-  def forConfig(cfg: GraftConfig): MetaStore = cfg.metaProvider match {
-    case "parquet" => new ParquetMetaStore(cfg)
-    case other => throw new IllegalArgumentException(s"unknown meta provider: $other")
-  }
-}
 
 /** The engine's verb surface — the reference's 18 FastAPI endpoints
   * (`kalytical/facade.py:30-126`) as library methods over the catalog,
@@ -84,14 +39,19 @@ final class GraftApi(
 
   // --- pipeline CRUD (facade.py:30-68) ---------------------------------
   // the reads (list, describe, downstream, fetch_pipeline_body) are the
-  // catalog's own row functions
+  // catalog's own row functions. A mutation builds the new catalog,
+  // hands it with its change to `commit` (the service's journal write)
+  // and only then swaps it in, so a throw from either leaves the catalog
+  // as it was; external schedules are registered before and
+  // deregistered after.
 
   /** PUT /pipeline (D5) — upsert def + its trigger edges, reconciling
     * the external schedule registration (`data_provider.py:69-70` +
     * `ext_sched.py:21-56`): a schedule registers/re-registers a cron
     * job and stamps its tracking id; removing the schedule deregisters
     * the previous registration. */
-  def upsertPipeline(d: PipelineDef, triggers: Seq[PipelineTrigger]): Unit = {
+  def upsertPipeline(d: PipelineDef, triggers: Seq[PipelineTrigger],
+                     commit: GraftApi.CatalogCommit = GraftApi.NoCommit): Unit = {
     // every trigger row must belong to THIS def: a stray row for
     // another pipeline would silently inject an edge onto it — and be
     // irremovable by re-upserting d, since the upsert only replaces
@@ -111,13 +71,14 @@ final class GraftApi(
         // upsert is rejected (silently-stops-firing hole)
         d.copy(scheduler_tracking_id = None)
     }
-    try catalog = catalog.upsert(reconciled, triggers)
+    try swap(catalog.upsert(reconciled, triggers), Catalog.Change(Seq(reconciled), triggers), commit)
     catch {
       case e: Throwable =>
         // roll the registration back to the previous def's state so a
         // rejected upsert (D5 validation) leaves no stray cron job; the
         // schedule-removal path created nothing, so there is nothing to
-        // undo there and prev's registration survives intact
+        // undo there and prev's registration survives intact; a failed
+        // commit is undone the same way
         reconciled.scheduler_tracking_id.foreach { jobName =>
           prev.flatMap(p => p.schedule.map(s => (s, p))) match {
             case Some((s, p)) => cronProvider.createCronJob(s, p.pipeline_uuid)
@@ -131,9 +92,10 @@ final class GraftApi(
   }
 
   /** DELETE /pipeline (D6) — also deregisters any external schedule. */
-  def deletePipeline(uuid: String, safeDelete: Boolean = true): Unit = {
+  def deletePipeline(uuid: String, safeDelete: Boolean = true,
+                     commit: GraftApi.CatalogCommit = GraftApi.NoCommit): Unit = {
     val tracking = catalog.byUuid.get(uuid).flatMap(_.scheduler_tracking_id)
-    catalog = catalog.delete(uuid, safeDelete)
+    swap(catalog.delete(uuid, safeDelete), Catalog.Change(dropped = Seq(uuid)), commit)
     tracking.foreach(cronProvider.deleteCronJob)
   }
 
@@ -144,10 +106,15 @@ final class GraftApi(
     * callbacks for a nonexistent pipeline forever, and the stale
     * registration was unreachable afterwards because the def carrying
     * its tracking id was gone). */
-  def flushPipelines(prefix: String): Unit = {
+  def flushPipelines(prefix: String, commit: GraftApi.CatalogCommit = GraftApi.NoCommit): Unit = {
     val doomed = catalog.list(Some(prefix))
-    catalog = catalog.flush(prefix)
+    swap(catalog.flush(prefix), Catalog.Change(dropped = doomed.map(_.pipeline_uuid)), commit)
     doomed.foreach(_.scheduler_tracking_id.foreach(cronProvider.deleteCronJob))
+  }
+
+  private def swap(next: Catalog, change: Catalog.Change, commit: GraftApi.CatalogCommit): Unit = {
+    commit(next, change)
+    catalog = next
   }
 
   // --- events & history (facade.py:100-116) ----------------------------
@@ -251,6 +218,11 @@ final class GraftApi(
 }
 
 object GraftApi {
+  /** Makes a catalog mutation durable before it is swapped in: the new
+    * catalog and the change that made it. */
+  type CatalogCommit = (Catalog, Catalog.Change) => Unit
+  val NoCommit: CatalogCommit = (_, _) => ()
+
   /** The exec_uuids whose success or failure report `events` hold: the
     * runs the batch ends. */
   private[graft] def finished(events: Seq[LifecycleEvent]): Set[String] =

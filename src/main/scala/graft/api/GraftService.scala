@@ -9,7 +9,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Encoders, SparkSession}
+import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
 import graft.GraftConfig
@@ -74,11 +74,6 @@ final class GraftService(
     // submission's Spark action. Tests inject their own factories.
     jobFactory: Option[(Option[PipelineDef], Submission) => EngineJob] = None,
     cfg: GraftConfig = GraftConfig.default,
-    // when set, HTTP catalog mutations (upsert/delete/flush) save
-    // defs+edges through this store after each change — without it the
-    // catalog is as ephemeral as the library regime, while the rest of
-    // the service state is durable (r7 review)
-    metaStore: Option[MetaStore] = None,
     // the MQ long-poll's wait (mq_poller.py:20 WaitTimeSeconds=2); a
     // bridge that answers at once is polled this often
     pollInterval: FiniteDuration = 2.seconds,
@@ -138,16 +133,6 @@ final class GraftService(
     facade.submissionSink.set { subs =>
       submitAll(subs)
       fault("after-submit")
-    }
-    // catalog mutations persist through the MetaStore when configured:
-    // the catalog is driver rows, so the store's files serve restart-time
-    // loads only and no reader scans them while a save overwrites them
-    metaStore.foreach { store =>
-      facade.catalogHook.set { () =>
-        val c = api.catalog
-        store.saveDefs(spark.createDataset(c.defs)(Encoders.product[PipelineDef]))
-        store.saveEdges(spark.createDataset(c.edges)(Encoders.product[PipelineTrigger]))
-      }
     }
     submitAll(journal.open)
   }
@@ -292,24 +277,28 @@ final class GraftService(
     }
 
   // ---- durable service state -------------------------------------------
-  // The reference keeps incubating runs + event history in MongoDB, one
-  // document write per change, so its process restarts resume
-  // mid-lifecycle (an incubating child's first satisfied dep survives).
-  // Here the state is the facade's driver values, made durable by ONE
-  // journal under `service-state/journal` ([[Journal]]): each step
-  // commits one hsync'd JSON line — its events, its incubation delta
-  // and its submissions (the outbox) — before any of it takes effect.
-  // An MQ batch is one step, so the batch commits together, with its
-  // end offset. A restart replays the last snapshot and the segments
-  // after it: the
+  // The reference keeps pipeline defs, incubating runs and event history
+  // in MongoDB, one document write per change, so its process restarts
+  // resume mid-lifecycle (an incubating child's first satisfied dep
+  // survives). Here the state is the facade's driver values and the
+  // catalog, made durable by ONE
+  // journal under `service-state/journal` ([[Journal]]), the one durable
+  // store: each step commits one hsync'd JSON line — its events, its
+  // incubation delta and its submissions (the outbox) — before any of it
+  // takes effect. An MQ batch is one step, so the batch commits together,
+  // with its end offset. A catalog mutation commits its change the same
+  // way before its catalog is swapped in. A restart replays the last
+  // snapshot and the segments after it: the catalog (once a record holds
+  // one, it replaces the catalog the service was built with), the
   // incubation rows, the logged ids (the MQ replay probe), the history
   // tail's coverage floor and the uncompacted events, the cron
   // high-water minute, and the outbox, whose still-open runs are
   // submitted once more (an engine whose runs outlive the process
   // dedups by exec_uuid); an abort closes the runs its token names. The
   // open outbox is also the concurrency gate's ledger: every journal
-  // write, and the restore, hands it to the facade. A
-  // fresh root costs one existence probe. The culler tick compacts:
+  // write, and the restore, hands it to the facade. A fresh root costs
+  // one existence probe and reads none of the constructor catalog's
+  // rows. The culler tick compacts:
   // closed segments' events go to the parquet history under
   // `service-state/events` (one file per segment, so a re-run replaces
   // its own file), then a snapshot replaces the segments. On a `file:`
@@ -335,7 +324,7 @@ final class GraftService(
 
   private def commit(c: HttpFacade.Commit): Unit = {
     fault("before-journal")
-    journal.commit(c.events, c.rows, c.submissions, c.closed, c.mqOffset)
+    journal.commit(c.events, c.rows, c.submissions, c.closed, c.mqOffset, c.catalog)
     facade.openRuns(journal.open)
     fault("after-journal")
   }
@@ -391,6 +380,7 @@ final class GraftService(
   private def restoreState(): Unit =
     if (journal.exists) {
       val segments = journal.restore()
+      journal.catalog.foreach(api.catalog = _)
       facade.incubating.set(journal.incubating)
       facade.openRuns(journal.open)
       lastCronMinute = journal.cron
@@ -717,10 +707,25 @@ object GraftService {
       candidates.maxBy(_._2)._1.toString
     }
 
+  /** The catalog under `root`'s `pipeline_defs/` and `pipeline_triggers/`
+    * parquet dirs, collected on its first read. A missing dir is empty,
+    * so a first boot binds instead of failing. */
+  private[graft] def importCatalog(spark: SparkSession, root: String): Catalog = {
+    def readOrEmpty[T](dir: String, enc: Encoder[T]) = {
+      val p = new Path(root, dir)
+      if (p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) spark.read.parquet(p.toString).as(enc)
+      else spark.emptyDataset(enc)
+    }
+    Catalog(readOrEmpty("pipeline_defs", Encoders.product[PipelineDef]))
+      .withEdges(readOrEmpty("pipeline_triggers", Encoders.product[PipelineTrigger]))
+  }
+
   /** Deployable entrypoint. Environment:
     *   GRAFT_HTTP_PORT       listen port (default 8080)
     *   GRAFT_MQ_ENDPOINT     http-mq bridge URL (omit: no MQ ingress)
-    *   GRAFT_META_DIR        parquet metadata root (omit: demo fixtures)
+    *   GRAFT_META_DIR        a first-start import: the catalog until the
+    *                         journal holds one ([[importCatalog]]; never
+    *                         written. omit: the demo fixtures)
     *   GRAFT_CHECKPOINT_DIR  state root: the journal and the event history
     *                         (default ./graft-ckpt)
     *   GRAFT_QUARANTINE_DIR  rejected MQ messages, one file per batch
@@ -731,19 +736,9 @@ object GraftService {
   def main(args: Array[String]): Unit = {
     val spark = graft.GraftSession.service()
 
-    val cfg = sys.env.get("GRAFT_META_DIR") match {
-      case Some(root) => GraftConfig.default.copy(
-        catalogPath = s"$root/pipeline_defs", edgesPath = s"$root/pipeline_triggers")
-      case None => GraftConfig.default
-    }
-    val store = sys.env.get("GRAFT_META_DIR").map(_ => MetaStore.forConfig(cfg))
-    val engines = new EngineManager(Seq(new LocalSparkEngine(spark)))
-    // the store's files are collected once, on the catalog's first read
-    val api = store match {
-      case Some(s) => new GraftApi(spark, Catalog(s.loadDefs(spark)), s.loadEdges(spark), engines, cfg)
-      case None => new GraftApi(spark, Catalog(graft.meta.Fixtures.defs, graft.meta.Fixtures.edges),
-        engines, cfg)
-    }
+    val catalog = sys.env.get("GRAFT_META_DIR").fold(
+      Catalog(graft.meta.Fixtures.defs, graft.meta.Fixtures.edges))(importCatalog(spark, _))
+    val api = new GraftApi(spark, catalog, new EngineManager(Seq(new LocalSparkEngine(spark))))
     // no permissive mode: absent a configured token one is minted and
     // printed to stderr (local demo), so the HTTP surface is never
     // accidentally open
@@ -759,9 +754,7 @@ object GraftService {
       new SecuredGraftApi(api, policy), spark,
       mqEndpoint = sys.env.get("GRAFT_MQ_ENDPOINT"),
       checkpointRoot = sys.env.getOrElse("GRAFT_CHECKPOINT_DIR", "graft-ckpt"),
-      quarantineDir = sys.env.get("GRAFT_QUARANTINE_DIR"),
-      cfg = cfg,
-      metaStore = store)
+      quarantineDir = sys.env.get("GRAFT_QUARANTINE_DIR"))
     val addr = service.start(sys.env.getOrElse("GRAFT_HTTP_PORT", "8080").toInt)
     System.err.println(s"[graft-service] listening on $addr; SIGINT to stop")
     service.awaitTermination()

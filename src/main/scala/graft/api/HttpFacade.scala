@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model._
-import graft.orchestration.{Dispatcher, EngineBackend, EngineJob, EventHistory, EventTail, LoggedIds}
+import graft.orchestration.{Catalog, Dispatcher, EngineBackend, EngineJob, EventHistory, EventTail, LoggedIds}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
@@ -41,7 +41,8 @@ import graft.orchestration.Dispatcher.IncubRow
   * (`dispatcher.py:15-68`). The facade holds the same state between
   * requests as plain driver values:
   *  - the catalog, [[GraftApi.catalog]], a new value per catalog
-  *    mutation;
+  *    mutation, swapped in once [[commitHook]] made the mutation
+  *    durable, as every other mutation;
   *  - the incubation rows, replaced by each step:
   *      incubating' = newIncubating ∪ deferred
   *    (newIncubating is the step's complete kept state — see applyStep);
@@ -114,16 +115,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   /** Makes a mutation durable BEFORE it takes effect: a dispatch step
     * (its events, the incubation rows it leaves and its submissions),
     * an incubation point op (update / delete / flush — without it a
-    * restart would resurrect rows an operator deleted, r7 review #1) and
-    * an abort. Standalone facade: nothing; [[GraftService]] installs its
-    * journal here. A throw leaves the mutation unapplied. */
+    * restart would resurrect rows an operator deleted), an abort and a
+    * catalog mutation (upsert / delete / flush of pipeline defs).
+    * Standalone facade: nothing; [[GraftService]] installs its journal
+    * here. A throw leaves the mutation unapplied. */
   private[graft] val commitHook = new AtomicReference[HttpFacade.Commit => Unit](_ => ())
-
-  /** Fires after any CATALOG mutation (upsert / delete / flush of
-    * pipeline defs) so a durability layer can save defs+edges through
-    * its MetaStore — without this, HTTP catalog changes were lost on
-    * restart while incubation state survived (r7 review). */
-  private[graft] val catalogHook = new AtomicReference[() => Unit](() => ())
 
   /** Fires with each batch of APPLIED lifecycle events (HTTP /event
     * and internal ingest), after the batch's effects: it appends them
@@ -166,6 +162,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     def param(name: String): String = params.getOrElse(name,
       throw new IllegalArgumentException(s"missing required parameter: $name"))
     def opt(name: String): Option[String] = params.get(name)
+    /** An integer parameter in `[0, max]`, else a 400. */
+    def bounded(name: String, default: Int, max: Int): Int =
+      opt(name).fold(default) { v =>
+        val n = v.toInt
+        require(n >= 0 && n <= max, s"$name must be in [0, $max], got $n")
+        n
+      }
   }
 
   /** The 18 reference routes (`facade.py:30-126`), method-checked.
@@ -197,26 +200,17 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     "/pipeline/config/create_or_replace" -> Map[String, Handler]("POST" -> { r =>
       r.session.can("upsert")
       val (d, triggers) = codec.upsert(r.body)
-      mutate.synchronized {
-        api.upsertPipeline(d, triggers)
-        catalogHook.get()()
-      }
+      upsert(d, triggers)
       ok
     }),
     "/pipeline/config/delete" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("delete")
-      mutate.synchronized {
-        api.deletePipeline(r.param("pipeline_uuid"), r.opt("safe_delete").forall(_.toBoolean))
-        catalogHook.get()()
-      }
+      delete(r.param("pipeline_uuid"), r.opt("safe_delete").forall(_.toBoolean))
       ok
     }),
     "/pipeline/config/flush" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("flush")
-      mutate.synchronized {
-        api.flushPipelines(r.param("pipeline_prefix"))
-        catalogHook.get()()
-      }
+      flush(r.param("pipeline_prefix"))
       ok
     }),
     "/pipeline/dispatcher/run_by_pipeline_uuid" -> Map[String, Handler]("POST" -> { r =>
@@ -257,7 +251,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       r.session.can("logs")
       val backend = api.engines.backend(r.opt("engine_name").getOrElse("spark-local"))
       codec.obj("logs" -> api.logs(backend, r.param("engine_tracking_id"),
-        r.opt("max_kb").map(_.toInt).getOrElse(10)))
+        r.bounded("max_kb", 10, Int.MaxValue / 1024)))
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("abort")
@@ -292,7 +286,7 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       r.session.can("history")
       val now = reqNow(r)
       val since = r.opt("since_seconds").map(_.toLong).getOrElse(api.cfg.historySinceSeconds)
-      val max = r.opt("max_records").map(_.toInt).getOrElse(api.cfg.historyMaxRecords)
+      val max = r.bounded("max_records", api.cfg.historyMaxRecords, Int.MaxValue)
       val pipeline = r.opt("pipeline_uuid")
       codec.rows(tail.history(now.getTime - since * 1000L, pipeline, max).getOrElse(
         api.eventHistory(eventLog.get(), now, pipeline, Some(since), Some(max))
@@ -367,6 +361,20 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       }
       subs
     }
+
+  /** The catalog mutations (D5–D7) under the mutate lock, each made
+    * durable through [[commitHook]] before its catalog is swapped in. */
+  private[graft] def upsert(d: PipelineDef, triggers: Seq[PipelineTrigger]): Unit =
+    mutate.synchronized(api.upsertPipeline(d, triggers, commitCatalog))
+
+  private[graft] def delete(uuid: String, safeDelete: Boolean = true): Unit =
+    mutate.synchronized(api.deletePipeline(uuid, safeDelete, commitCatalog))
+
+  private[graft] def flush(prefix: String): Unit =
+    mutate.synchronized(api.flushPipelines(prefix, commitCatalog))
+
+  private def commitCatalog(next: Catalog, change: Catalog.Change): Unit =
+    commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, catalog = Some(next -> change)))
 
   /** Index events the log now holds: the history tail and the MQ
     * replay probe's ids. [[GraftService]] also feeds restored ids here. */
@@ -546,10 +554,12 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
 object HttpFacade {
   /** One mutation for [[HttpFacade.commitHook]]: the events it accepts,
     * the incubation rows it leaves, the runs it submits, the exec_uuids
-    * of the runs it ends (an abort's) and an MQ batch's end offset. */
+    * of the runs it ends (an abort's), an MQ batch's end offset, and a
+    * catalog mutation's new catalog with the change that made it. */
   final case class Commit(events: Seq[LifecycleEvent], rows: Seq[IncubRow],
                           submissions: Seq[Submission], closed: Seq[String] = Nil,
-                          mqOffset: Option[Long] = None)
+                          mqOffset: Option[Long] = None,
+                          catalog: Option[(Catalog, Catalog.Change)] = None)
 
   /** A gate ledger row: a run started and not yet seen to end. The gate
     * reads its pipeline and status; it names no engine. */

@@ -10,7 +10,7 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FSDataOutputStream, FileSystem, Path, StreamCapabilities}
 
 import graft.model.{LifecycleEvent, Submission}
-import graft.orchestration.Cron
+import graft.orchestration.{Catalog, Cron}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The service's durable state: one append-only journal of JSON lines
@@ -23,12 +23,16 @@ import graft.orchestration.Dispatcher.IncubRow
   * incubation delta (rows added, obj_ids removed) and the step's
   * submissions, its outbox; an MQ batch's record also holds the batch's
   * end offset, so the offset commits with the batch's effects in one
-  * write. An outbox entry stays open until a later
+  * write. A catalog mutation (D5–D7) is a record of its own, holding the
+  * [[Catalog.Change]]; the first one a root holds, like every snapshot,
+  * holds the whole catalog, so from then on the journal's catalog is
+  * the service's. An outbox entry stays open until a later
   * record holds a terminal event (`success`/`failure`) for its
   * exec_uuid or closes it (an abort, or a run the engines report ended
   * without a callback). A record that would hold nothing is not written.
   * The journal keeps the state its records add up to: the incubation
-  * rows, the open outbox, the high-water cron minute and the MQ offset.
+  * rows, the open outbox, the high-water cron minute, the MQ offset and
+  * the catalog (none until a record holds one).
   *
   * Each incarnation writes its own segments (`seg-<n>.jsonl`), created
   * on the first write and never appended to after a restart. [[roll]]
@@ -60,6 +64,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
   private val outbox = mutable.LinkedHashMap.empty[String, Submission]
   private var cronMinute = -1L
   private var offset = Option.empty[Long]
+  private var cat = Option.empty[Catalog]
 
   private val segments = mutable.SortedSet.empty[Long] // on disk, not yet snapshotted
   private var snapshots = Seq.empty[Long]
@@ -80,6 +85,9 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
 
   /** The MQ offset the records hold: every message below it is applied. */
   def mqOffset: Option[Long] = synchronized(offset)
+
+  /** The catalog the records add up to; None when none holds one. */
+  def catalog: Option[Catalog] = synchronized(cat)
 
   /** Rebuild the state from the newest snapshot and the segments after
     * it. Returns each replayed segment's events, in order. */
@@ -103,13 +111,17 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
   }
 
   /** Make one step durable: its events, the incubation rows it leaves,
-    * its submissions, the outbox entries it closes and, for an MQ batch,
-    * its end offset. Writes nothing when the record would be empty. */
+    * its submissions, the outbox entries it closes, for an MQ batch its
+    * end offset and, for a catalog mutation, the catalog it leaves and
+    * the change that made it (the whole catalog while the journal holds
+    * none). Writes nothing when the record would be empty. */
   def commit(events: Seq[LifecycleEvent], next: Seq[IncubRow], submissions: Seq[Submission],
-             closed: Seq[String] = Nil, mqOffset: Option[Long] = None): Unit = synchronized {
+             closed: Seq[String] = Nil, mqOffset: Option[Long] = None,
+             catalog: Option[(Catalog, Catalog.Change)] = None): Unit = synchronized {
     val gone = rows.diff(next)
     val r = Record(events, next.diff(rows), gone.map(_.obj_id), submissions,
-      closed.filter(outbox.contains), events.flatMap(Cron.minuteOf).maxOption, mqOffset)
+      closed.filter(outbox.contains), events.flatMap(Cron.minuteOf).maxOption, mqOffset,
+      catalog.map { case (c, change) => if (cat.isEmpty) Catalog.Change.whole(c) else change })
     if (r != Record()) {
       append(codec.line(r))
       apply(r)
@@ -122,7 +134,8 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
     closeSegment()
     if (segments.isEmpty) None
     else Some(Cut(segments.toSeq, Record(added = rows, outbox = outbox.values.toSeq,
-      cron_minute = Some(cronMinute).filter(_ >= 0), mq_offset = offset)))
+      cron_minute = Some(cronMinute).filter(_ >= 0), mq_offset = offset,
+      catalog = cat.map(Catalog.Change.whole))))
   }
 
   /** The events a closed segment holds. */
@@ -175,6 +188,7 @@ final class Journal(root: String, conf: Configuration, codec: JsonCodec,
     r.outbox.foreach(s => outbox(s.exec_uuid) = s)
     r.cron_minute.foreach(m => cronMinute = math.max(cronMinute, m))
     r.mq_offset.foreach(o => offset = Some(offset.fold(o)(math.max(_, o))))
+    r.catalog.foreach(c => cat = Some(cat.getOrElse(Catalog(Nil, Nil)).replay(c)))
   }
 
   private def append(line: String): Unit = {
@@ -232,7 +246,8 @@ object Journal {
       outbox: Seq[Submission] = Nil,
       closed: Seq[String] = Nil,
       cron_minute: Option[Long] = None,
-      mq_offset: Option[Long] = None)
+      mq_offset: Option[Long] = None,
+      catalog: Option[Catalog.Change] = None)
 
   /** Closed segments and the state they add up to. */
   final case class Cut(segments: Seq[Long], state: Record) {

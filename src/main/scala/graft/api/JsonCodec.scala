@@ -16,6 +16,7 @@ import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
+import graft.orchestration.Catalog
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The control plane's one JSON codec: every request body and every row
@@ -149,7 +150,12 @@ final class JsonCodec(zone: ZoneId) {
       outbox = o.array("outbox").map(submission),
       closed = o.array("closed").map(text),
       cron_minute = o.long("cron_minute"),
-      mq_offset = o.long("mq_offset"))
+      mq_offset = o.long("mq_offset"),
+      catalog = o.node("catalog").map { n =>
+        val c = new Obj(n, "catalog change")
+        Catalog.Change(c.array("defs").map(pipelineDef), c.array("edges").map(trigger),
+          c.array("dropped").map(text), c.bool("whole").getOrElse(false))
+      })
   }
 
   private def incubRow(n: JsonNode): IncubRow = {

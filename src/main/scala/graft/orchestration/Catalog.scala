@@ -59,8 +59,7 @@ final class Catalog private (loadDefs: () => Seq[PipelineDef],
     require(d.pipeline_uuid.matches("^[a-z0-9-]+$"), s"invalid pipeline_uuid: ${d.pipeline_uuid}")
     val missing = triggers.map(_.trigger_uuid).filterNot(byUuid.contains)
     require(missing.isEmpty, s"triggers reference unknown pipelines: ${missing.mkString(", ")}")
-    Catalog(defs.filterNot(_.pipeline_uuid == d.pipeline_uuid) :+ d,
-      edges.filterNot(_.pipeline_uuid == d.pipeline_uuid) ++ triggers)
+    put(Seq(d), triggers)
   }
 
   /** D6 — delete with orphan guard: refuses when other pipelines trigger
@@ -70,17 +69,34 @@ final class Catalog private (loadDefs: () => Seq[PipelineDef],
     if (safeDelete)
       require(!edges.exists(_.trigger_uuid == uuid),
         s"cannot delete $uuid: downstream pipelines depend on it")
-    Catalog(defs.filterNot(_.pipeline_uuid == uuid), edges.filterNot(_.pipeline_uuid == uuid))
+    drop(Seq(uuid))
   }
 
   /** D7 — bulk delete of a D2 result set with the flushed defs' own
     * trigger rows. Flush bypasses the D6 orphan guard, so an edge from a
     * survivor onto a flushed def stays (the dispatcher warns on it). */
-  def flush(prefix: String): Catalog = {
-    val doomed = list(Some(prefix)).map(_.pipeline_uuid).toSet
-    Catalog(defs.filterNot(d => doomed(d.pipeline_uuid)),
-      edges.filterNot(e => doomed(e.pipeline_uuid)))
+  def flush(prefix: String): Catalog = drop(list(Some(prefix)).map(_.pipeline_uuid))
+
+  /** `defs` with their trigger rows `edges`, unvalidated: each replaces
+    * any previous def of its uuid and that def's trigger rows, and goes
+    * to the end. */
+  def put(defs: Seq[PipelineDef], edges: Seq[PipelineTrigger]): Catalog = {
+    val gone = defs.map(_.pipeline_uuid).toSet
+    Catalog(this.defs.filterNot(d => gone(d.pipeline_uuid)) ++ defs,
+      this.edges.filterNot(e => gone(e.pipeline_uuid)) ++ edges)
   }
+
+  /** These defs without `uuids` and their trigger rows, unguarded. */
+  def drop(uuids: Seq[String]): Catalog = {
+    val gone = uuids.toSet
+    Catalog(defs.filterNot(d => gone(d.pipeline_uuid)), edges.filterNot(e => gone(e.pipeline_uuid)))
+  }
+
+  /** A journaled mutation replayed over this catalog (a whole one over
+    * the empty catalog) through the row functions the live mutation
+    * used, so the result equals the live catalog, order included. */
+  def replay(c: Catalog.Change): Catalog =
+    (if (c.whole) Catalog(Nil, Nil) else this).drop(c.dropped).put(c.defs, c.edges)
 
   /** These defs with `edges`, collected on first read. */
   def withEdges(edges: Dataset[PipelineTrigger]): Catalog =
@@ -88,6 +104,19 @@ final class Catalog private (loadDefs: () => Seq[PipelineDef],
 }
 
 object Catalog {
+
+  /** One catalog mutation as the service's journal holds it: the
+    * `dropped` defs go with their trigger rows, then `defs` are put with
+    * their trigger rows `edges`. An upsert is one def and its rows, a
+    * delete or a flush the uuids it drops; a `whole` change is a whole
+    * catalog, which replaces the one it is replayed over. */
+  final case class Change(defs: Seq[PipelineDef] = Nil, edges: Seq[PipelineTrigger] = Nil,
+                          dropped: Seq[String] = Nil, whole: Boolean = false)
+
+  object Change {
+    def whole(c: Catalog): Change = Change(c.defs, c.edges, whole = true)
+  }
+
   def apply(defs: Seq[PipelineDef], edges: Seq[PipelineTrigger]): Catalog =
     new Catalog(() => defs, () => edges)
 

@@ -107,7 +107,7 @@ object Cron {
     // line as evidence). A bad expr fires nothing and is logged; the
     // rest of the catalog keeps its cadence. upsert validation rejects
     // bad exprs at the door; this guards defs that arrived around it
-    // (externally written MetaStore parquet, direct construction).
+    // (a GRAFT_META_DIR import, direct construction).
     def dueSafe(uuid: String, expr: String): Boolean =
       try due(expr, now)
       catch {

@@ -3,13 +3,13 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Encoders
 
-import graft.api.{GraftApi, JsonCodec, MetaStore, ParquetMetaStore}
+import graft.api.{GraftApi, GraftService, JsonCodec}
 import graft.meta.Fixtures
 import graft.model._
 import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
 
-/** Facade-verb surface (18 endpoints → GraftApi), MetaStore factory,
-  * ingest parsing, retry semantics. */
+/** Facade-verb surface (18 endpoints → GraftApi), the GRAFT_META_DIR
+  * catalog import, ingest parsing, retry semantics. */
 class ApiSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
   import spark.implicits._
@@ -113,18 +113,6 @@ class ApiSpec extends AnyFunSuite {
     assert(h.count() <= 20)
   }
 
-  test("MetaStore parquet round-trip + factory rejects unknown provider") {
-    val tmp = SparkSuite.tempDir("graft-meta")
-    val cfg = GraftConfig(catalogPath = s"$tmp/defs", edgesPath = s"$tmp/edges")
-    val store = MetaStore.forConfig(cfg)
-    assert(store.isInstanceOf[ParquetMetaStore])
-    store.saveDefs(Fixtures.defsDS(spark))
-    store.saveEdges(Fixtures.edgesDS(spark))
-    assert(store.loadDefs(spark).count() == 40)
-    assert(store.loadEdges(spark).count() == Fixtures.edges.size)
-    intercept[IllegalArgumentException] { MetaStore.forConfig(GraftConfig(metaProvider = "mongo")) }
-  }
-
   test("event ingest parses good lines, quarantines corrupt ones (S1)") {
     val good = """{"event_id": 7, "event_type": "job_exec_update", "event_subtype": "success",
       "pipeline_uuid": "clean-orders", "exec_uuid": "e-7", "event_time": "2024-01-31T23:00:00Z",
@@ -134,16 +122,6 @@ class ApiSpec extends AnyFunSuite {
       .messages(Seq(good, """{"event_id": "not json""", "garbage"))
     assert(evs.length == 1 && evs.head.pipeline_uuid == "clean-orders" && evs.head.event_id == 7)
     assert(corrupt.size == 2)
-  }
-
-  test("retry rethrows after exhausting attempts (deviation §8.21)") {
-    var calls = 0
-    val e = intercept[RuntimeException] {
-      graft.functions.Retry(3, backoffMs = 1) { calls += 1; throw new RuntimeException("boom") }
-    }
-    assert(e.getMessage == "boom" && calls == 3)
-    calls = 0
-    assert(graft.functions.Retry(3, backoffMs = 1) { calls += 1; if (calls < 2) throw new RuntimeException("x"); 42 } == 42)
   }
 
   test("SQL function registration: vec_dot/shingle_hashes/jaccard_sorted from pure SQL") {
@@ -202,7 +180,6 @@ class ApiSpec extends AnyFunSuite {
 
     // sys config surfaces exactly the config's keys
     val cfgMap = a.sysConfig
-    assert(cfgMap("metaProvider") == "parquet")
     assert(cfgMap.keySet == graft.GraftConfig.default.productElementNames.toSet)
   }
 
@@ -268,22 +245,17 @@ class ApiSpec extends AnyFunSuite {
   }
 
   test("meta store first boot: a fresh GRAFT_META_DIR loads as an EMPTY catalog, not a crash (r12 review)") {
-    import graft.api.{MetaStore, ParquetMetaStore}
     val dir = SparkSuite.tempDir("meta-first-boot")
-    val store = new ParquetMetaStore(graft.GraftConfig.default.copy(
-      metaProvider = "parquet",
-      catalogPath = s"$dir/catalog", edgesPath = s"$dir/edges"))
-    // chicken-and-egg pre-fix: loadDefs crashed with PATH_NOT_FOUND
-    // before the HTTP surface could bind, and the files it wanted are
-    // only created by the upsert hook the bind enables
-    assert(store.loadDefs(spark).isEmpty)
-    assert(store.loadEdges(spark).isEmpty)
-    // round-trip: save then load works unchanged
-    import org.apache.spark.sql.Encoders
-    store.saveDefs(spark.createDataset(Fixtures.defs.take(2))(
-      Encoders.product[graft.model.PipelineDef]))
-    assert(store.loadDefs(spark).count() == 2)
-    assert(MetaStore.forConfig(graft.GraftConfig.default).isInstanceOf[ParquetMetaStore])
+    // chicken-and-egg pre-fix: the load crashed with PATH_NOT_FOUND
+    // before the HTTP surface could bind
+    val fresh = GraftService.importCatalog(spark, dir)
+    assert(fresh.defs.isEmpty && fresh.edges.isEmpty)
+    // dirs written by an earlier deployment import as they are
+    Fixtures.defsDS(spark).write.parquet(s"$dir/pipeline_defs")
+    Fixtures.edgesDS(spark).write.parquet(s"$dir/pipeline_triggers")
+    val imported = GraftService.importCatalog(spark, dir)
+    assert(imported.defs.size == 40 && imported.defs.toSet == Fixtures.defs.toSet)
+    assert(imported.edges.toSet == Fixtures.edges.toSet)
   }
 
   test("auth: role gate admits/denies per the facade's verb table (auth.py:13-43)") {

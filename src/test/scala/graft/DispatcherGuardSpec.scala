@@ -24,11 +24,13 @@ import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, Lo
   * ingest is a driver poll loop, so main code starts no streaming query
   * at all. And the control plane runs on the
   * driver, in one representation: the catalog is driver rows, typed as
-  * a Dataset only at the MetaStore and construction boundary; an event
-  * POST, the catalog mutations and the read routes start no Spark job,
-  * and neither does the service's durability on the ack path. The
-  * concurrency gate reads the journal's open runs: a step reads the
-  * engines only when the gate would defer a candidate behind one. */
+  * a Dataset only at the construction boundary; an event POST, the
+  * catalog mutations and the read routes start no Spark job, and
+  * neither does the service's durability, on the ack path or for a
+  * catalog mutation: the journal is its one durable store, so no other
+  * control-plane file writes parquet. The concurrency gate reads the
+  * journal's open runs: a step reads the engines only when the gate
+  * would defer a candidate behind one. */
 class DispatcherGuardSpec extends AnyFunSuite {
   private val root = Paths.get("src", "main", "scala")
 
@@ -59,11 +61,17 @@ class DispatcherGuardSpec extends AnyFunSuite {
     assert(callers("""\.(readStream|writeStream)\b""".r) == Nil)
   }
 
-  test("only the MetaStore, Fixtures and the Catalog/GraftApi construction boundary type the catalog as a Dataset") {
+  test("only Fixtures and the Catalog/GraftApi construction boundary type the catalog as a Dataset") {
     assert(callers("""\bDataset\[Pipeline(Def|Trigger)\]""".r) == Seq(
       Paths.get("graft", "api", "GraftApi.scala").toString,
       Paths.get("graft", "meta", "Fixtures.scala").toString,
       Paths.get("graft", "orchestration", "Catalog.scala").toString))
+  }
+
+  test("under api and orchestration, only GraftService.scala writes parquet through .write.mode (compaction and the data-plane job)") {
+    val scoped = callers("""\.write\.mode\(""".r).filter(f =>
+      Seq("api", "orchestration").exists(d => f.startsWith(Paths.get("graft", d).toString + java.io.File.separator)))
+    assert(scoped == Seq(Paths.get("graft", "api", "GraftService.scala").toString))
   }
 
   test("HttpFacade.scala parses and answers without Spark (no spark.read, no toJSON)") {
@@ -92,6 +100,15 @@ class DispatcherGuardSpec extends AnyFunSuite {
     s"""{"event_id":$id,"event_type":"job_exec_update","event_subtype":"$subtype",""" +
       s""""pipeline_uuid":"ingest-orders","exec_uuid":"exec-ingest-orders-$id",""" +
       """"retry_count":0,"disable_downstream":false}"""
+
+  /** Upsert `i` of a chain: guard-000 triggers on ingest-orders, each
+    * next one on the last. */
+  private def guardUpsert(i: Int): String = {
+    val parent = if (i == 0) "ingest-orders" else f"guard-${i - 1}%03d"
+    f"""{"def":{"pipeline_uuid":"guard-$i%03d","description":"guard","retry_max":0,""" +
+      """"concurrency":false,"engine":"spark-local","engine_args":"{}","triggers_op":"any"},""" +
+      f""""triggers":[{"pipeline_uuid":"guard-$i%03d","trigger_uuid":"$parent","op":"any"}]}"""
+  }
 
   /** The Spark jobs `body` starts. */
   private def jobsOf(body: => Unit): Int = {
@@ -131,15 +148,8 @@ class DispatcherGuardSpec extends AnyFunSuite {
       new EngineManager(Seq(new LocalSparkEngine(spark))))
     val facade = new HttpFacade(secured(api), spark)
     val base = s"http://127.0.0.1:${facade.start(0).getPort}"
-    // a chain: guard-000 triggers on ingest-orders, each next one on the last
-    def upsert(i: Int): String = {
-      val parent = if (i == 0) "ingest-orders" else f"guard-${i - 1}%03d"
-      f"""{"def":{"pipeline_uuid":"guard-$i%03d","description":"guard","retry_max":0,""" +
-        """"concurrency":false,"engine":"spark-local","engine_args":"{}","triggers_op":"any"},""" +
-        f""""triggers":[{"pipeline_uuid":"guard-$i%03d","trigger_uuid":"$parent","op":"any"}]}"""
-    }
     val jobs = try jobsOf {
-      (0 until 50).foreach(i => call(base, "POST", "/pipeline/config/create_or_replace", upsert(i)))
+      (0 until 50).foreach(i => call(base, "POST", "/pipeline/config/create_or_replace", guardUpsert(i)))
       assert(call(base, "GET", "/pipeline/config/describe?pipeline_uuid=guard-049").contains("guard-049"))
       assert(call(base, "POST", "/pipeline/config/list?pipeline_prefix=guard-")
         .split("\"pipeline_uuid\"").length - 1 == 50)
@@ -147,7 +157,7 @@ class DispatcherGuardSpec extends AnyFunSuite {
       call(base, "DELETE", "/pipeline/config/flush?pipeline_prefix=guard-")
       assert(call(base, "POST", "/pipeline/config/list?pipeline_prefix=guard-") == "[]")
     } finally facade.stop()
-    assert(jobs == 0, s"$jobs Spark jobs for catalog mutations without a MetaStore")
+    assert(jobs == 0, s"$jobs Spark jobs for catalog mutations on a standalone facade")
     assert(!api.catalog.edges.exists(_.pipeline_uuid.startsWith("guard-")))
   }
 
@@ -178,6 +188,41 @@ class DispatcherGuardSpec extends AnyFunSuite {
     } finally service.shutdown()
     assert(jobs == 0, s"$jobs Spark jobs on the service's ack path")
     assert(records.size == 2, s"one record per step: $records")
+  }
+
+  test("started service: 50 upserts, a delete and a flush start no Spark job, and each is one journal record") {
+    val spark = SparkSuite.spark
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    api.catalog.metas // the Dataset boundary's collect, outside the count
+    val ckpt = SparkSuite.tempDir("guard-catalog-ckpt")
+    val service = new GraftService(secured(api), spark, mqEndpoint = None, checkpointRoot = ckpt,
+      jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
+      cfg = graft.GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
+      cronCheckInterval = scala.concurrent.duration.DurationInt(1).hour)
+    val base = s"http://127.0.0.1:${service.start(0).getPort}"
+    val jobs = try jobsOf {
+      (0 until 50).foreach(i => call(base, "POST", "/pipeline/config/create_or_replace", guardUpsert(i)))
+      call(base, "DELETE", "/pipeline/config/delete?pipeline_uuid=guard-049")
+      call(base, "DELETE", "/pipeline/config/flush?pipeline_prefix=guard-")
+    } finally service.shutdown()
+    assert(jobs == 0, s"$jobs Spark jobs for catalog mutations on a started service")
+    val records = Files.list(Paths.get(ckpt, "service-state", "journal")).iterator().asScala.toSeq
+      .filter(_.toString.endsWith(".jsonl")).flatMap(f => Files.readAllLines(f).asScala).filter(_.nonEmpty)
+    assert(records.size == 52 && records.forall(_.contains("\"catalog\"")), s"${records.size} records")
+  }
+
+  test("start on a fresh root over a Dataset-built catalog starts no Spark job") {
+    val spark = SparkSuite.spark
+    val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+      new EngineManager(Seq(new LocalSparkEngine(spark))))
+    val service = new GraftService(secured(api), spark, mqEndpoint = None,
+      checkpointRoot = SparkSuite.tempDir("guard-start-ckpt"),
+      jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
+      cfg = graft.GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
+      cronCheckInterval = scala.concurrent.duration.DurationInt(1).hour)
+    val jobs = try jobsOf { service.start(0); () } finally service.shutdown()
+    assert(jobs == 0, s"$jobs Spark jobs to start a service on a fresh root")
   }
 
   /** A backend that implements only the Dataset `jobs` (so `rows` plans

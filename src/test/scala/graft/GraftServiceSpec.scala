@@ -360,25 +360,18 @@ class GraftServiceSpec extends AnyFunSuite {
     } finally service.shutdown()
   }
 
-  test("catalog durability: an HTTP upsert and a delete survive a restart through the MetaStore (r7 review)") {
-    import graft.api.{MetaStore, ParquetMetaStore}
-    val metaRoot = SparkSuite.tempDir("svc-meta")
-    val cfg = GraftConfig.default.copy(
-      catalogPath = s"$metaRoot/defs", edgesPath = s"$metaRoot/edges")
-    val store: MetaStore = new ParquetMetaStore(cfg)
-    // seed the store with the fixtures (the deployable main's load path)
-    store.saveDefs(Fixtures.defsDS(spark))
-    store.saveEdges(Fixtures.edgesDS(spark))
+  test("catalog durability: an HTTP upsert, a delete and a flush survive a restart and a compaction through the journal alone") {
+    val ckpt = SparkSuite.tempDir("svc-catalog-ckpt")
+    // every incarnation is built over the fixtures, not over the catalog
+    // the last one left, so only the journal can carry the changes
     def mkService(): GraftService = {
-      val api = new GraftApi(spark, Catalog(store.loadDefs(spark)),
-        store.loadEdges(spark),
-        new EngineManager(Seq(new LocalSparkEngine(spark))), cfg)
+      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+        new EngineManager(Seq(new LocalSparkEngine(spark))), GraftConfig.default)
       val policy = new Auth.Policy(
         new Auth.StaticTokenVerifier(Map(Admin -> Seq("Data-Admin"))), apiTokens = Set.empty)
       new GraftService(new SecuredGraftApi(api, policy), spark,
-        mqEndpoint = None, checkpointRoot = SparkSuite.tempDir("svc-meta-ckpt"),
-        jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
-        cfg = cfg, metaStore = Some(store))
+        mqEndpoint = None, checkpointRoot = ckpt,
+        jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())))
     }
     val upsert =
       """{"def":{"pipeline_uuid":"durable-new","description":"via http","retry_max":0,
@@ -386,6 +379,18 @@ class GraftServiceSpec extends AnyFunSuite {
         |"triggers_op":"any","tags_team":"t","tags_env":"dev","pipeline_body":"{}"},
         |"triggers":[{"pipeline_uuid":"durable-new","trigger_uuid":"report-daily","op":"any"}]}"""
         .stripMargin
+    def assertChanged(base: String, when: String): Unit = {
+      assert(call(base, "GET",
+        "/pipeline/config/describe?pipeline_uuid=durable-new").body().contains("durable-new"),
+        s"HTTP-created pipeline must survive $when")
+      assert(call(base, "GET", "/pipeline/config/downstream?pipeline_uuid=report-daily").body()
+        .contains("durable-new"), s"its trigger row must survive $when")
+      assert(call(base, "GET",
+        "/pipeline/config/describe?pipeline_uuid=legacy_import_v2").body() == "[]",
+        s"HTTP-deleted pipeline must stay deleted after $when")
+      assert(call(base, "POST", "/pipeline/config/list?pipeline_prefix=adhoc-task-0").body() == "[]",
+        s"HTTP-flushed pipelines must stay flushed after $when")
+    }
     val a = mkService()
     try {
       val base = s"http://127.0.0.1:${a.start(0).getPort}"
@@ -393,18 +398,29 @@ class GraftServiceSpec extends AnyFunSuite {
       assert(call(base, "DELETE",
         "/pipeline/config/delete?pipeline_uuid=legacy_import_v2&safe_delete=false")
         .statusCode() == 200)
+      assert(call(base, "DELETE", "/pipeline/config/flush?pipeline_prefix=adhoc-task-0")
+        .statusCode() == 200)
+      assertChanged(base, "the mutations")
     } finally a.shutdown()
 
-    val b = mkService() // fresh load from the store
+    val b = mkService()
     try {
       val base = s"http://127.0.0.1:${b.start(0).getPort}"
-      assert(call(base, "GET",
-        "/pipeline/config/describe?pipeline_uuid=durable-new").body().contains("durable-new"),
-        "HTTP-created pipeline must survive the restart")
-      assert(call(base, "GET",
-        "/pipeline/config/describe?pipeline_uuid=legacy_import_v2").body() == "[]",
-        "HTTP-deleted pipeline must stay deleted after the restart")
+      assertChanged(base, "a restart")
+      b.cullTick() // the catalog moves from the segments into the snapshot
+      val journal = new java.io.File(ckpt, "service-state/journal").list().toSeq
+      assert(journal.exists(_.startsWith("snapshot-")) && !journal.exists(_.endsWith(".jsonl")),
+        s"compacted: $journal")
     } finally b.shutdown()
+
+    val c = mkService()
+    try {
+      val base = s"http://127.0.0.1:${c.start(0).getPort}"
+      assertChanged(base, "a compaction")
+      // 40 fixtures, one deleted, ten flushed, one added
+      assert(call(base, "POST", "/pipeline/config/list").body()
+        .split("\"pipeline_uuid\"").length - 1 == 30)
+    } finally c.shutdown()
   }
 
   test("MQ resume: a restart re-ingests nothing (checkpointed offsets), new messages still flow") {

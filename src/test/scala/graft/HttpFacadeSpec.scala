@@ -222,6 +222,31 @@ class HttpFacadeSpec extends AnyFunSuite {
     }
   }
 
+  test("out-of-range get_logs max_kb and history max_records are 400, not 500") {
+    withFacade { (_, base) =>
+      // a negative max_kb, or one whose KiB overflow an Int, indexed past
+      // the end of the log and answered 500 for any tracking id
+      Seq("-1", "2097152").foreach { kb =>
+        val r = call(base, "GET",
+          s"/pipeline/dispatcher/get_logs?engine_tracking_id=exec-none&max_kb=$kb", Some(Admin))
+        assert(r.statusCode() == 400 && r.body().contains("max_kb"), s"max_kb=$kb: ${r.body()}")
+      }
+      Seq("0", "2097151").foreach { kb =>
+        assert(call(base, "GET",
+          s"/pipeline/dispatcher/get_logs?engine_tracking_id=exec-none&max_kb=$kb", Some(Admin))
+          .statusCode() == 200, s"max_kb=$kb")
+      }
+      // a negative max_records answered [] from the tail and failed in the
+      // whole-log fallback (a window older than the tail)
+      Seq("", "&since_seconds=999999999").foreach { window =>
+        val r = call(base, "GET", s"/pipeline/dispatcher/event/history?max_records=-1$window", Some(Read))
+        assert(r.statusCode() == 400 && r.body().contains("max_records"), s"$window: ${r.body()}")
+        assert(call(base, "GET", s"/pipeline/dispatcher/event/history?max_records=0$window", Some(Read))
+          .statusCode() == 200)
+      }
+    }
+  }
+
   test("run_by_pipeline_uuid joins the event history like every other ingress (r7 review)") {
     withFacade { (_, base) =>
       val now = Fixtures.NOW.getTime

@@ -8,10 +8,10 @@ import org.apache.hadoop.fs.{LocalFileSystem, Path, StreamCapabilities}
 import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.api.{Auth, GraftApi, GraftService, Journal, SecuredGraftApi}
+import graft.api.{Auth, GraftApi, GraftService, HttpFacade, Journal, SecuredGraftApi}
 import graft.meta.Fixtures
-import graft.model.{LifecycleEvent, RunningJob, Submission}
-import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager}
+import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, RunningJob, Submission}
+import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, RegistryCronProvider}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The service's journal: real fsync, and crash consistency against the
@@ -30,6 +30,9 @@ import graft.orchestration.Dispatcher.IncubRow
   * pure `Dispatcher` fold submits over the same sequence with no crash,
   * and the incubation rows must match the fold's after every tick: no
   * run lost, none duplicated, each incubation released or aged out once.
+  * Catalog mutations of defs outside the DAG ride between the ticks;
+  * each incarnation is built over the base catalog, and the catalog it
+  * restores must be the one the mutations add up to.
   */
 class JournalSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -68,8 +71,14 @@ class JournalSpec extends AnyFunSuite {
       outbox = Seq(Submission("p", "exec-p-2", Map("a" -> "exec-9"), 0)),
       closed = Seq("exec-p-0"),
       cron_minute = Some(29000000L),
-      mq_offset = Some(100042L))
+      mq_offset = Some(100042L),
+      catalog = Some(Catalog.Change(
+        defs = Seq(Fixtures.defs.head, Fixtures.defs.last.copy(description = null, pipeline_body = None)),
+        edges = Seq(PipelineTrigger("p", "q", "all"), PipelineTrigger("p", null, null)),
+        dropped = Seq("gone-1", "gone-2"), whole = true)))
     assert(codec.record(codec.line(r)) == r)
+    val delta = Journal.Record(catalog = Some(Catalog.Change(dropped = Seq("gone-3"))))
+    assert(codec.record(codec.line(delta)) == delta)
     assert(codec.record(codec.line(Journal.Record())) == Journal.Record())
   }
 
@@ -141,7 +150,6 @@ class JournalSpec extends AnyFunSuite {
   test("abort: a restart does not resubmit a run aborted by its exec_uuid or its tracking id, even when the backend deletes it") {
     val engine = new VanishingEngine
     val cfg = GraftConfig.default
-    val policy = new Auth.Policy(new Auth.StaticTokenVerifier(Map("t" -> Seq("Data-Admin"))), apiTokens = Set.empty)
     val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
       new EngineManager(Seq(engine)), cfg)
     val root = SparkSuite.tempDir("journal-abort")
@@ -177,6 +185,114 @@ class JournalSpec extends AnyFunSuite {
     restarted.journal.close()
   }
 
+  private val policy =
+    new Auth.Policy(new Auth.StaticTokenVerifier(Map("t" -> Seq("Data-Admin"))), apiTokens = Set.empty)
+
+  private def rows(c: Catalog): (Seq[PipelineDef], Seq[PipelineTrigger]) = (c.defs, c.edges)
+
+  /** A def outside the fixtures' DAG. */
+  private def extraDef(uuid: String, description: String = "extra") =
+    Fixtures.defs.head.copy(pipeline_uuid = uuid, description = description, schedule = None,
+      scheduler_tracking_id = None)
+
+  /** A recovered service on `root` over `api`, with no loop running. */
+  private def recovered(api: GraftApi, root: String): GraftService = {
+    val s = new GraftService(new SecuredGraftApi(api, policy), spark, mqEndpoint = None,
+      checkpointRoot = root, jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())))
+    s.recover()
+    s
+  }
+
+  private def send(base: String, method: String, path: String, body: String = ""): (Int, String) = {
+    val res = java.net.http.HttpClient.newHttpClient().send(
+      java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + path))
+        .method(method, if (body.isEmpty) java.net.http.HttpRequest.BodyPublishers.noBody()
+          else java.net.http.HttpRequest.BodyPublishers.ofString(body))
+        .header("Authorization", "Bearer t").build(),
+      java.net.http.HttpResponse.BodyHandlers.ofString())
+    (res.statusCode(), res.body())
+  }
+
+  test("catalog routes: a fault before the journal write answers an error, leaves the catalog unchanged and leaves no cron registration behind") {
+    val cron = new RegistryCronProvider
+    val api = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges),
+      new EngineManager(Seq(new PodEngine)), GraftConfig.default, cron)
+    val root = SparkSuite.tempDir("journal-catalog-fault")
+    val svc = recovered(api, root)
+    val base = s"http://127.0.0.1:${svc.facade.start(0).getPort}"
+    def upsert(uuid: String, schedule: Option[String]): String = {
+      val sched = schedule.fold("")(s => s""","schedule":"$s"""")
+      s"""{"def":{"pipeline_uuid":"$uuid","retry_max":0,"concurrency":false,""" +
+        s""""engine":"spark-local","engine_args":"{}"$sched}}"""
+    }
+    try {
+      assert(send(base, "POST", "/pipeline/config/create_or_replace", upsert("cron-a", Some("0 5 * * *")))._1 == 200)
+      val before = rows(api.catalog)
+      val jobs = cron.listCronJobs()
+      assert(jobs == Map("graft-cron-cron-a" -> "0 5 * * *"))
+      svc.fault = point => if (point == "before-journal") throw new RuntimeException(s"crash at $point")
+      Seq(
+        ("POST", "/pipeline/config/create_or_replace", upsert("cron-b", Some("0 6 * * *"))), // registers
+        ("POST", "/pipeline/config/create_or_replace", upsert("cron-a", Some("30 6 * * *"))), // re-registers
+        ("POST", "/pipeline/config/create_or_replace", upsert("cron-a", None)), // would deregister
+        ("DELETE", "/pipeline/config/delete?pipeline_uuid=cron-a", ""),
+        ("DELETE", "/pipeline/config/flush?pipeline_prefix=cron-", "")
+      ).foreach { case (method, path, body) =>
+        val (status, text) = send(base, method, path, body)
+        assert(status == 500 && text.contains("crash at before-journal"), s"$method $path: $status $text")
+        assert(rows(api.catalog) == before, s"$method $path changed the catalog")
+        assert(cron.listCronJobs() == jobs, s"$method $path left the registrations at ${cron.listCronJobs()}")
+      }
+    } finally svc.facade.stop()
+    svc.journal.close()
+    // the journal holds the one committed upsert
+    val restored = new GraftApi(spark, Catalog(Fixtures.defs, Fixtures.edges), new EngineManager(Seq(new PodEngine)))
+    recovered(restored, root).journal.close()
+    assert(rows(restored.catalog) == rows(api.catalog))
+  }
+
+  test("catalog restore: a restart over a different constructor catalog restores the journal's, before and after a compaction") {
+    val root = SparkSuite.tempDir("journal-catalog-restore")
+    def restart(constructor: Catalog): (GraftService, GraftApi) = {
+      val api = new GraftApi(spark, constructor, new EngineManager(Seq(new PodEngine)))
+      (recovered(api, root), api)
+    }
+    val other = Catalog(Fixtures.defs.take(3), Nil)
+    val (a, _) = restart(Catalog(Fixtures.defs, Fixtures.edges))
+    val now = new Timestamp(1767225600000L)
+    a.facade.ingest(Seq(LifecycleEvent(901L, "job_exec_update", "origination", "ingest-orders",
+      "orig-901", now, now, 0, disable_downstream = false)), now)
+    a.journal.close()
+    // a root with no catalog record restores none: the constructor's stands
+    val (b, bApi) = restart(other)
+    assert(b.journal.catalog.isEmpty && rows(bApi.catalog) == rows(other))
+    b.journal.close()
+
+    val (c, cApi) = restart(Catalog(Fixtures.defs, Fixtures.edges))
+    c.facade.upsert(extraDef("extra-1"), Seq(PipelineTrigger("extra-1", "report-daily", "any")))
+    c.facade.delete("legacy_import_v2", safeDelete = false)
+    c.facade.flush("adhoc-task-0")
+    c.facade.upsert(extraDef("extra-2"), Nil)
+    val live = rows(cApi.catalog)
+    assert(live._1.size == 40 - 1 - 10 + 2 && live._1.last.pipeline_uuid == "extra-2")
+    c.journal.close()
+
+    val (d, dApi) = restart(other)
+    assert(rows(dApi.catalog) == live, "restored from the segments")
+    d.cullTick()
+    d.journal.close()
+    val (e, eApi) = restart(other)
+    assert(rows(eApi.catalog) == live, "restored from the snapshot")
+    // a change after the snapshot replays over it
+    e.facade.upsert(extraDef("extra-1", description = "v2"), Nil)
+    val next = rows(eApi.catalog)
+    e.journal.close()
+    val (f, fApi) = restart(Catalog(Nil, Nil))
+    assert(rows(fApi.catalog) == next && next._1.last.description == "v2" &&
+      !next._2.exists(_.pipeline_uuid == "extra-1"))
+    f.journal.close()
+  }
+
   /** An engine whose runs outlive the service: it starts each exec_uuid
     * once (a second submit of a started exec is a no-op, like creating a
     * pod that exists) and reports no live runs. */
@@ -201,15 +317,39 @@ class JournalSpec extends AnyFunSuite {
     def end: Long = from + events.size
   }
   private final case class Cull(now: Timestamp) extends Tick
+  /** A catalog mutation: an upsert of `uuid` (triggering on `parent`), a
+    * delete of `uuid`, or a flush of the prefix `uuid`. */
+  private final case class Mutate(now: Timestamp, kind: String, uuid: String,
+                                  parent: Option[String] = None, version: Int = 0) extends Tick {
+    private def edges = parent.map(PipelineTrigger(uuid, _, "any")).toSeq
+    private def d = extraDef(uuid, description = s"v$version")
+    def on(c: Catalog): Catalog = kind match {
+      case "upsert" => c.upsert(d, edges)
+      case "delete" => c.delete(uuid, safeDelete = false)
+      case "flush" => c.flush(uuid)
+    }
+    def on(f: HttpFacade): Unit = kind match {
+      case "upsert" => f.upsert(d, edges)
+      case "delete" => f.delete(uuid, safeDelete = false)
+      case "flush" => f.flush(uuid)
+    }
+  }
 
   private val pool = Seq("ingest-orders", "ingest-customer", "clean-orders", "clean-customer",
     "report-weekly", "flaky-export", "stream-metrics")
 
   /** A seeded tick sequence and what the pure fold makes of it: the
-    * submissions, the incubation rows after each tick, and the runs
-    * still waiting for their terminal event at the end. */
-  private def model(api: GraftApi, seed: Int): (Seq[Tick], Seq[Submission], Seq[Seq[IncubRow]], Set[String]) = {
+    * submissions, the incubation rows and the catalog after each tick,
+    * and the runs still waiting for their terminal event at the end.
+    * The catalog mutations touch only `extra-` defs, which no event
+    * names and no DAG def triggers on, so they change no run. */
+  private def model(api: GraftApi, seed: Int)
+      : (Seq[Tick], Seq[Submission], Seq[Seq[IncubRow]], Set[String], Seq[Catalog]) = {
     val rnd = new scala.util.Random(seed)
+    val mutations = new scala.util.Random(seed + 1000000)
+    var catalog = api.catalog
+    val catalogs = mutable.ArrayBuffer.empty[Catalog]
+    var extras = 0
     var clock = 1767225600000L + seed * 1000L // 2026-01-01
     var nextId = seed * 1000L + 1
     var rows = Seq.empty[IncubRow]
@@ -242,7 +382,7 @@ class JournalSpec extends AnyFunSuite {
             event("origination", p, s"orig-$p-$nextId", 0, now)
           }
         })
-      val events = tick match { case b: Batch => offset = b.end; b.events; case Cull(_) => Nil }
+      val events = tick match { case b: Batch => offset = b.end; b.events; case _ => Nil }
       if (events.nonEmpty || rows.nonEmpty) {
         val step = api.dispatchRows(events, Nil, rows, now)
         rows = step.newIncubating ++ step.deferred
@@ -251,32 +391,56 @@ class JournalSpec extends AnyFunSuite {
       }
       ticks += tick
       states += rows
+      catalogs += catalog
+      if (mutations.nextInt(3) == 0) {
+        // extra-<group>-<n> triggers only on an older extra, so the extras stay acyclic
+        val existing = catalog.defs.map(_.pipeline_uuid).filter(_.startsWith("extra-"))
+        def older(uuid: String) = existing.filter(_.takeRight(3) < uuid.takeRight(3))
+        val m = mutations.nextInt(6) match {
+          case 0 if existing.nonEmpty => Mutate(now, "delete", existing(mutations.nextInt(existing.size)))
+          case 1 if existing.size > 2 => Mutate(now, "flush", s"extra-${"ab"(mutations.nextInt(2))}-")
+          case k =>
+            val uuid = if (k == 2 && existing.nonEmpty) existing(mutations.nextInt(existing.size))
+              else { extras += 1; f"extra-${"ab"(extras % 2)}-$extras%03d" }
+            val parents = older(uuid)
+            Mutate(now, "upsert", uuid, parent = if (parents.isEmpty || mutations.nextBoolean()) None
+              else Some(parents(mutations.nextInt(parents.size))), version = ticks.size)
+        }
+        catalog = m.on(catalog)
+        ticks += m
+        states += rows
+        catalogs += catalog
+      }
     }
-    (ticks.toSeq, subs.toSeq, states.toSeq, pending.map(_.exec_uuid).toSet)
+    (ticks.toSeq, subs.toSeq, states.toSeq, pending.map(_.exec_uuid).toSet, catalogs.toSeq)
   }
 
   private def sorted(rows: Seq[IncubRow]) = rows.sortBy(_.obj_id)
 
   test("crash consistency: over 200 seeds, crashes at every durable boundary lose and duplicate no run") {
     val cfg = GraftConfig.default
-    val policy = new Auth.Policy(new Auth.StaticTokenVerifier(Map("t" -> Seq("Data-Admin"))), apiTokens = Set.empty)
-    val catalog = Catalog(Fixtures.defsDS(spark))
-    val edges = Fixtures.edgesDS(spark)
+    val base = Catalog(Fixtures.defs, Fixtures.edges)
     val crashesAt = mutable.Map.empty[String, Int].withDefaultValue(0)
     val t0 = System.nanoTime()
     (1 to 200).foreach { seed =>
       val engine = new PodEngine
-      val api = new GraftApi(spark, catalog, edges, new EngineManager(Seq(engine)), cfg)
-      val (ticks, expected, states, pendingAtEnd) = model(api, seed)
+      val (ticks, expected, states, pendingAtEnd, catalogs) =
+        model(new GraftApi(spark, base, new EngineManager(Seq(engine)), cfg), seed)
       val root = SparkSuite.tempDir(s"journal-crash-$seed")
       val faults = new scala.util.Random(-seed)
       val maxCrashes = 1 + faults.nextInt(4)
       var crashes = 0
       var lastCrash = ""
-      // the end of the last batch whose record committed
+      // the end of the last batch whose record committed, and the catalog
+      // the committed records add up to
       var committed = 0L
+      var committedCatalog = base
       var clock = ticks.head.now
+      // each incarnation starts over the base catalog: only the journal
+      // carries the mutations
+      var api: GraftApi = null
       def incarnation(): GraftService = {
+        api = new GraftApi(spark, base, new EngineManager(Seq(engine)), cfg)
         val s = new GraftService(new SecuredGraftApi(api, policy), spark, mqEndpoint = None,
           checkpointRoot = root, jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
           cfg = cfg, nowProvider = () => clock)
@@ -308,6 +472,7 @@ class JournalSpec extends AnyFunSuite {
                     Some(b.end))
                 committed = b.end
               case Cull(_) => svc.cullTick()
+              case m: Mutate => m.on(svc.facade)
             }
             done = true
           } catch {
@@ -315,6 +480,7 @@ class JournalSpec extends AnyFunSuite {
               // the batch's record is on the disk once the journal write returned
               tick match {
                 case b: Batch if point != "before-journal" => committed = b.end
+                case _: Mutate if point != "before-journal" => committedCatalog = catalogs(i)
                 case _ =>
               }
               svc.journal.close() // the process is gone: its descriptors close
@@ -324,15 +490,21 @@ class JournalSpec extends AnyFunSuite {
                   s"$lastCrash, but the last committed batch ends at $committed")
               assert(svc.facade.running.rows.map(_.exec_uuid) == svc.journal.open.map(_.exec_uuid),
                 s"seed $seed tick $i: the gate's live set is not the restored open outbox")
+              // a mutation whose record is on the disk is restored
+              assert(rows(api.catalog) == rows(committedCatalog),
+                s"seed $seed tick $i: restored catalog diverges from the model after a crash at $point")
           }
         }
         assert(sorted(svc.facade.incubating.rows) == sorted(state),
           s"seed $seed tick $i ($tick): incubation rows diverge from the model")
+        committedCatalog = catalogs(i)
+        assert(rows(api.catalog) == rows(committedCatalog), s"seed $seed tick $i ($tick): catalog diverges from the model")
       }
       // a clean restart from disk restores the state and exactly the open runs
       svc.journal.close()
       svc = incarnation()
       assert(sorted(svc.facade.incubating.rows) == sorted(states.last), s"seed $seed: restored rows")
+      assert(rows(api.catalog) == rows(catalogs.last), s"seed $seed: restored catalog")
       assert(svc.journal.open.map(_.exec_uuid).toSet == pendingAtEnd, s"seed $seed: open outbox")
       assert(svc.facade.running.rows.map(_.exec_uuid).toSet == pendingAtEnd, s"seed $seed: the gate's live set")
       val lastEnd = ticks.collect { case b: Batch => b.end }.lastOption
