@@ -5,7 +5,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
 
 import graft.meta.Fixtures
 import graft.model.{PipelineDef, PipelineTrigger}
-import graft.orchestration.{Catalog, Cron, EngineManager, LocalSparkEngine, ProcessEngine}
+import graft.orchestration.{Catalog, Cron, EngineManager, EventLog, LocalSparkEngine, ProcessEngine}
 
 /** `kaly`-style CLI (the reference ships an empty stub with intended
   * usage `kaly create pipeline pipeline.yaml`, `kaly/Readme.md:1-2`).
@@ -224,7 +224,7 @@ object Cli {
         .agg(org.apache.spark.sql.functions.max("received_time"))
         .collect()(0).getTimestamp(0))
         .getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
-      printRows(spark, api.eventHistory(events, now, pipelineUuid = Some(uuid), maxRecords = Some(20))
+      printRows(spark, EventLog.history(events, now, api.cfg.historySinceSeconds, Some(uuid))
         .as(events.encoder).collect().toSeq)
     case "running" :: Nil =>
       printRows(spark, api.engines.filteredRows(spark, Seq("running", "waiting", "pending")))

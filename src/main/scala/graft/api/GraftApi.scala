@@ -2,7 +2,7 @@ package graft.api
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 
 import graft.GraftConfig
 import graft.model._
@@ -164,17 +164,6 @@ final class GraftApi(
     LifecycleEvent(id, "job_exec_update", "origination", uuid,
       s"manual-$uuid-${now.getTime}", now, now, 0, disable_downstream = false)
   }
-
-  /** GET /pipeline/event/history (D10 semantics; stub in reference)
-    * over a whole log; the HTTP route answers recent windows from the
-    * facade's driver-held tail. */
-  def eventHistory(events: Dataset[LifecycleEvent], now: Timestamp,
-                   pipelineUuid: Option[String] = None,
-                   sinceSeconds: Option[Long] = None,
-                   maxRecords: Option[Int] = None): DataFrame =
-    EventLog.history(events, now,
-      sinceSeconds.getOrElse(cfg.historySinceSeconds), pipelineUuid,
-      maxRecords = maxRecords.getOrElse(cfg.historyMaxRecords))
 
   // --- runs (facade.py:80-98) ------------------------------------------
   // the running page is the engines' `filteredRows`

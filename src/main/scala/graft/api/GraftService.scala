@@ -10,7 +10,6 @@ import scala.concurrent.duration._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoder, Encoders, SparkSession}
-import org.apache.spark.sql.functions.{col, lit}
 
 import graft.GraftConfig
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, Submission}
@@ -290,9 +289,9 @@ final class GraftService(
   // way before its catalog is swapped in. A restart replays the last
   // snapshot and the segments after it: the catalog (once a record holds
   // one, it replaces the catalog the service was built with), the
-  // incubation rows, the logged ids (the MQ replay probe), the history
-  // tail's coverage floor and the uncompacted events, the cron
-  // high-water minute, and the outbox, whose still-open runs are
+  // incubation rows, the event log (its uncompacted events, and the
+  // history's ids the MQ replay probe reads), the cron high-water
+  // minute, and the outbox, whose still-open runs are
   // submitted once more (an engine whose runs outlive the process
   // dedups by exec_uuid); an abort closes the runs its token names. The
   // open outbox is also the concurrency gate's ledger: every journal
@@ -346,7 +345,7 @@ final class GraftService(
     * segments' events to the parquet history, snapshot the state they
     * leave, delete them. Each step is safe to re-run after a crash. */
   private[graft] def compact(): Unit =
-    facade.locked(journal.roll().map(_ -> facade.eventLog.heldCount)).foreach { case (cut, held) =>
+    facade.locked(journal.roll().map(_ -> facade.eventLog.mark)).foreach { case (cut, mark) =>
       val fs = hadoopFs(new Path(eventsDir))
       val staged = cut.segments.flatMap { seg =>
         val events = journal.events(seg)
@@ -360,7 +359,7 @@ final class GraftService(
           Some(part -> new Path(eventsDir, s"${Journal.segmentName(seg)}.parquet"))
         }
       }
-      facade.eventLog.compacted(held, eventsDir) {
+      facade.eventLog.compacted(mark, eventsDir) {
         fs.mkdirs(new Path(eventsDir))
         staged.foreach { case (part, target) =>
           fs.delete(target, false)
@@ -384,34 +383,15 @@ final class GraftService(
       facade.incubating.set(journal.incubating)
       facade.openRuns(journal.open)
       lastCronMinute = journal.cron
-      // the replayed events are the MQ replay probe's, and the whole
-      // log's; the history tail holds only this incarnation's events, so
-      // its coverage starts after every restored one
-      val stamped = segments.flatMap(_._2).filter(_.received_time != null)
-      facade.loggedIds.add(stamped.map(e => e.event_id -> e.received_time.getTime))
-      stamped.map(_.received_time.getTime).maxOption.foreach(facade.tail.raiseFloor)
       val history = new Path(eventsDir)
       val fs = hadoopFs(history)
-      if (!fs.exists(history)) facade.eventLog.append(segments.flatMap(_._2))
-      else {
-        // a segment whose file is already in the history was moved there
-        // by a compaction that a crash cut short
-        val moved = fs.listStatus(history).map(_.getPath.getName).toSet
-        facade.eventLog.append(segments.collect {
-          case (n, events) if !moved(s"${Journal.segmentName(n)}.parquet") => events
-        }.flatten)
-        facade.eventLog.compacted(0, eventsDir)(())
-        // one read: the history's ids within the MQ dedup horizon. Every
-        // history row lies at or below the newest of them or below the
-        // cutoff, so the history tail covers only windows after both.
-        val cutoff = nowProvider().getTime - cfg.mqDedupHorizonDays * 86400000L
-        val recent = spark.read.schema(EventEnc.schema).parquet(eventsDir)
-          .where(col("received_time") >= lit(new Timestamp(cutoff)))
-          .select(col("event_id"), col("received_time")).collect()
-          .map(r => r.getLong(0) -> r.getTimestamp(1).getTime).toSeq
-        facade.loggedIds.add(recent)
-        facade.tail.raiseFloor((cutoff +: recent.map(_._2)).max)
-      }
+      val compacted = fs.exists(history)
+      // a segment whose file is already in the history was moved there by
+      // a compaction that a crash cut short
+      val moved = if (compacted) fs.listStatus(history).map(_.getPath.getName).toSet else Set.empty[String]
+      facade.eventLog.restore(segments.collect {
+        case (n, events) if !moved(s"${Journal.segmentName(n)}.parquet") => events
+      }.flatten, Some(eventsDir).filter(_ => compacted), nowProvider().getTime)
     }
 
   /** Tick bodies never kill the scheduler: the reference's loops

@@ -11,7 +11,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 
 import graft.model._
-import graft.orchestration.{Catalog, Dispatcher, EngineBackend, EngineJob, EventHistory, EventTail, LoggedIds}
+import graft.orchestration.{Catalog, Dispatcher, EngineBackend, EngineJob, EventLog}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The network-facing adapter — the reference's FastAPI surface
@@ -34,7 +34,8 @@ import graft.orchestration.Dispatcher.IncubRow
   *    rows go out the way Spark's row serializer wrote them (null
   *    fields omitted, ISO timestamps, maps as objects). Dispatch, the
   *    catalog routes and the read routes plan no Spark query; only a
-  *    history window older than the tail reads the log.
+  *    history window older than the driver-held events reads the
+  *    parquet history.
   *
   * STATE: the reference keeps running/incubating/event-log state in
   * Mongo + K8s and answers each request with a few document lookups
@@ -51,19 +52,18 @@ import graft.orchestration.Dispatcher.IncubRow
   *    the single-use runs, held in memory. A dispatch step reads no
   *    engine unless the gate would defer a candidate behind one of
   *    these runs; then the engines decide (see `gatedStep`);
-  *  - the recent end of the event log ([[EventTail]]) and the logged ids
-  *    the MQ replay probe reads ([[LoggedIds]]).
+  *  - the event log ([[eventLog]]): the events not yet compacted and
+  *    the recent compacted ones, with the ids the MQ replay probe reads.
   * `describe`, `list`, `downstream`, `fetch_pipeline_body` and a
   * covered `event/history` window read these values (the `running`
-  * route reads the engines, E2); a history
-  * window older than the tail falls back to the whole log. One global
-  * lock serializes mutating verbs — metadata-plane traffic (catalog-
-  * sized, the reference's own regime); read verbs hit immutable
-  * values and run unlocked. The data plane never flows through this
-  * surface: dispatch inputs and outputs are bounded by the catalog
-  * (10²–10⁴ pipelines, the reference's regime), the live state and the
-  * batch, and [[graft.orchestration.Dispatcher.step]] folds them on the
-  * driver.
+  * route reads the engines, E2); a history window older than the held
+  * events reads the whole log. One global lock serializes mutating
+  * verbs — metadata-plane traffic (catalog-sized, the reference's own
+  * regime); read verbs hit immutable values and run unlocked. The data
+  * plane never flows through this surface: dispatch inputs and outputs
+  * are bounded by the catalog (10²–10⁴ pipelines, the reference's
+  * regime), the live state and the batch, and
+  * [[graft.orchestration.Dispatcher.step]] folds them on the driver.
   */
 final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
                        nowProvider: () => Timestamp =
@@ -94,12 +94,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private var journaled = Vector.empty[RunningJob] // guarded by mutate
   private var singleUse = Vector.empty[RunningJob] // guarded by mutate
   private[graft] val incubating = new HttpFacade.Rows(spark, Encoders.product[IncubRow])
-  /** The whole event log, the history fallback: `get()` builds the
+  /** The event log: history reads, the MQ replay probe and `get()`, the
     * compacted parquet ∪ the events held since. Standalone facade: all
     * held; [[GraftService]] compacts it on the culler tick. */
-  private[graft] val eventLog = new EventHistory(spark)
-  private[graft] val tail = new EventTail(api.cfg.historySinceSeconds)
-  private[graft] val loggedIds = new LoggedIds(api.cfg.mqDedupHorizonDays * 86400000L)
+  private[graft] val eventLog = new EventLog(spark, api.cfg.historySinceSeconds,
+    api.cfg.mqDedupHorizonDays * 86400000L)
   private val mutate = new Object
 
   /** Where dispatcher submissions GO. Standalone facade: nowhere (the
@@ -121,10 +120,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     * here. A throw leaves the mutation unapplied. */
   private[graft] val commitHook = new AtomicReference[HttpFacade.Commit => Unit](_ => ())
 
-  /** Fires with each batch of APPLIED lifecycle events (HTTP /event
-    * and internal ingest), after the batch's effects: it appends them
-    * to the driver-held end of [[eventLog]]. The batch was made durable
-    * by [[commitHook]] before its effects. */
+  /** Fires once with each batch of APPLIED lifecycle events (HTTP
+    * /event and internal ingest), after the batch's effects: it appends
+    * them to [[eventLog]], the one driver copy of the log, which feeds
+    * the history reads and the MQ replay probe. The batch was made
+    * durable by [[commitHook]] before its effects. */
   private[graft] val eventSink =
     new AtomicReference[Seq[LifecycleEvent] => Unit](eventLog.append)
 
@@ -163,9 +163,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       throw new IllegalArgumentException(s"missing required parameter: $name"))
     def opt(name: String): Option[String] = params.get(name)
     /** An integer parameter in `[0, max]`, else a 400. */
-    def bounded(name: String, default: Int, max: Int): Int =
+    def bounded(name: String, default: Long, max: Long): Long =
       opt(name).fold(default) { v =>
-        val n = v.toInt
+        val n = v.toLong
         require(n >= 0 && n <= max, s"$name must be in [0, $max], got $n")
         n
       }
@@ -245,13 +245,13 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
         statuses = r.opt("statuses").map(_.split(",").toSeq)
           .getOrElse(Seq("running", "waiting", "pending")),
         pipelineUuid = r.opt("pipeline_uuid"),
-        limit = r.opt("limit").map(_.toInt).getOrElse(10)))
+        limit = r.bounded("limit", 10, Int.MaxValue).toInt))
     }),
     "/pipeline/dispatcher/get_logs" -> Map[String, Handler]("GET" -> { r =>
       r.session.can("logs")
       val backend = api.engines.backend(r.opt("engine_name").getOrElse("spark-local"))
       codec.obj("logs" -> api.logs(backend, r.param("engine_tracking_id"),
-        r.bounded("max_kb", 10, Int.MaxValue / 1024)))
+        r.bounded("max_kb", 10, Int.MaxValue / 1024).toInt))
     }),
     "/pipeline/dispatcher/abort_pipeline" -> Map[String, Handler]("DELETE" -> { r =>
       r.session.can("abort")
@@ -285,12 +285,9 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
     "/pipeline/dispatcher/event/history" -> Map[String, Handler]("GET" -> { r =>
       r.session.can("history")
       val now = reqNow(r)
-      val since = r.opt("since_seconds").map(_.toLong).getOrElse(api.cfg.historySinceSeconds)
-      val max = r.bounded("max_records", api.cfg.historyMaxRecords, Int.MaxValue)
-      val pipeline = r.opt("pipeline_uuid")
-      codec.rows(tail.history(now.getTime - since * 1000L, pipeline, max).getOrElse(
-        api.eventHistory(eventLog.get(), now, pipeline, Some(since), Some(max))
-          .as[LifecycleEvent](Encoders.product[LifecycleEvent]).collect().toSeq))
+      codec.rows(eventLog.history(now,
+        r.bounded("since_seconds", api.cfg.historySinceSeconds, Long.MaxValue / 1000L),
+        r.opt("pipeline_uuid"), r.bounded("max_records", api.cfg.historyMaxRecords, Int.MaxValue).toInt))
     }),
     "/pipeline/incubation/update" -> Map[String, Handler]("GET" -> { r =>
       // (sic) the reference gates this mutation behind GET, facade.py:109
@@ -351,14 +348,11 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
       // crash before it loses nothing acknowledged (the replay applies
       // the batch), a crash after it restores all three (the replay's
       // ids are logged, and the open submissions are resubmitted). The
-      // sink and the driver-held tail and id index follow the effects,
-      // so they hold only applied events. An MQ batch's end offset and
-      // the runs the engines reported ended commit in the same record.
+      // sink, and so the driver-held log, follows the effects, so it
+      // holds only applied events. An MQ batch's end offset and the runs
+      // the engines reported ended commit in the same record.
       val subs = applyStep(events, step, ended, mqOffset)
-      if (events.nonEmpty) {
-        eventSink.get()(events)
-        logged(events)
-      }
+      if (events.nonEmpty) eventSink.get()(events)
       subs
     }
 
@@ -376,28 +370,19 @@ final class HttpFacade(secured: SecuredGraftApi, spark: SparkSession,
   private def commitCatalog(next: Catalog, change: Catalog.Change): Unit =
     commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, catalog = Some(next -> change)))
 
-  /** Index events the log now holds: the history tail and the MQ
-    * replay probe's ids. [[GraftService]] also feeds restored ids here. */
-  private[graft] def logged(events: Seq[LifecycleEvent]): Unit = {
-    tail.append(events)
-    loggedIds.add(events.collect {
-      case e if e.received_time != null => e.event_id -> e.received_time.getTime
-    })
-  }
-
   /** Idempotent MQ ingress: drop events whose `event_id` the log holds
     * within the horizon, dispatch the remainder — probe and step under
     * ONE lock acquisition, so no concurrent step can apply (and log) a
     * probed id between the probe and this dispatch — an unlocked probe
     * would let both apply it. Since the log append runs AFTER effects
     * ([[ingest]]), a logged id always means an applied event. The probe
-    * reads the driver-held id index, not the log. `mqOffset`, the
-    * batch's end offset, commits with the step; a batch with nothing
-    * fresh still commits it. Returns the fresh set. */
+    * reads the log's driver-held id index, not the parquet history.
+    * `mqOffset`, the batch's end offset, commits with the step; a batch
+    * with nothing fresh still commits it. Returns the fresh set. */
   private[graft] def ingestDedup(events: Seq[LifecycleEvent], now: Timestamp,
       horizonCutoff: Timestamp, mqOffset: Option[Long] = None): Seq[LifecycleEvent] =
     mutate.synchronized {
-      val fresh = events.filterNot(e => loggedIds.seenSince(e.event_id, horizonCutoff.getTime))
+      val fresh = events.filterNot(e => eventLog.seenSince(e.event_id, horizonCutoff.getTime))
       if (fresh.nonEmpty) ingest(fresh, now, mqOffset)
       else if (mqOffset.nonEmpty)
         commitHook.get()(HttpFacade.Commit(Nil, incubating.rows, Nil, mqOffset = mqOffset))

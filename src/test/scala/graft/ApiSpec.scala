@@ -6,7 +6,7 @@ import org.apache.spark.sql.Encoders
 import graft.api.{GraftApi, GraftService, JsonCodec}
 import graft.meta.Fixtures
 import graft.model._
-import graft.orchestration.{Catalog, EngineManager, LocalSparkEngine}
+import graft.orchestration.{Catalog, EngineManager, EventLog, LocalSparkEngine}
 
 /** Facade-verb surface (18 endpoints → GraftApi), the GRAFT_META_DIR
   * catalog import, ingest parsing, retry semantics. */
@@ -108,8 +108,9 @@ class ApiSpec extends AnyFunSuite {
   test("event history verb applies defaults and filters") {
     val events = Fixtures.lifecycleEventsDF(spark, SparkSuite.sfDir)
       .as[LifecycleEvent]
-    val h = api.eventHistory(events, Fixtures.ts("2024-01-20 00:00:00"),
-      pipelineUuid = Some("ingest-orders"), sinceSeconds = Some(86400L * 30))
+    val h = EventLog.history(events, Fixtures.ts("2024-01-20 00:00:00"),
+      sinceSeconds = 86400L * 30, pipelineUuid = Some("ingest-orders"),
+      maxRecords = api.cfg.historyMaxRecords)
     assert(h.count() <= 20)
   }
 

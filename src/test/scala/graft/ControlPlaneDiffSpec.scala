@@ -250,7 +250,7 @@ class ControlPlaneDiffSpec extends AnyFunSuite {
     }
   }
 
-  // ---- history: the tail, its coverage floor, a restart ---------------------------
+  // ---- history: the held events, the coverage floor, a compaction, a restart -------
 
   private val Admin = "admin-token"
   private val client = HttpClient.newHttpClient()
@@ -286,21 +286,71 @@ class ControlPlaneDiffSpec extends AnyFunSuite {
       s"window now=$nowMs since=$since $pipeline")
   }
 
+  /** A service on `ckpt` whose log keeps 100 s of compacted events, with
+    * no culler or cron tick inside the test. */
+  private def keep100(ckpt: String) = {
+    val cfg = GraftConfig.default.copy(historySinceSeconds = 100L, cullingIntervalSeconds = 3600L)
+    new GraftService(secured(cfg), spark, None, ckpt,
+      jobFactory = Some((_: Option[PipelineDef], _: Submission) => EngineJob.SparkClosure(_ => ())),
+      cfg = cfg, cronCheckInterval = scala.concurrent.duration.DurationInt(1).hour)
+  }
+
+  private val pipes = Seq("ingest-orders", "report-weekly", "stream-metrics")
+
   test("history: windows on both sides of the tail's coverage floor == EventLog.history over the log") {
-    val facade = new HttpFacade(secured(GraftConfig.default.copy(historySinceSeconds = 100L)), spark)
-    val base = s"http://127.0.0.1:${facade.start(0).getPort}"
+    val svc = keep100(SparkSuite.tempDir("diff-floor-ckpt"))
+    val base = s"http://127.0.0.1:${svc.start(0).getPort}"
     try {
-      val pipes = Seq("ingest-orders", "report-weekly", "stream-metrics")
-      // 40 events over 400 s: the tail keeps 100 s, so the oldest 300 s
+      // 40 events over 400 s, then a compaction: the log keeps the
+      // compacted events within 100 s of the newest, so the oldest 300 s
       // are trimmed and the floor sits near T0 + 300 s
       (0 until 40).foreach(i => post(base, 7000L + i, pipes(i % 3), T0 + i * 10000L))
+      svc.cullTick()
       val floor = T0 + 280000L
-      assert(facade.tail.history(floor + 1, None, 1).isDefined && facade.tail.history(floor, None, 1).isEmpty,
+      assert(svc.facade.eventLog.covers(floor + 1) && !svc.facade.eventLog.covers(floor),
         "the coverage floor is the newest trimmed stamp")
       val end = T0 + 400000L
       for (since <- Seq(30L, 100L, 119L, 120L, 121L, 250L, 1000L); p <- Seq(None, Some("report-weekly")))
-        checkWindow(base, facade.eventLog.get(), end, since, p)
-    } finally facade.stop()
+        checkWindow(base, svc.facade.eventLog.get(), end, since, p)
+    } finally svc.shutdown()
+  }
+
+  test("history: events straddling a compaction, before and after a restart == EventLog.history; a compacted id's MQ redelivery is dropped") {
+    // inside the MQ dedup horizon, so the restore reads the compacted ids back
+    val T0 = System.currentTimeMillis() - 3600000L
+    val ckpt = SparkSuite.tempDir("diff-straddle-ckpt")
+    val ids = (9000L until 9030L).toSeq
+    val end = T0 + 300000L
+    def check(svc: GraftService, base: String, what: String): Unit = {
+      assert(svc.facade.eventLog.get().collect().map(_.event_id).sorted.toSeq == ids, s"$what: each event once")
+      for (since <- Seq(50L, 100L, 110L, 111L, 119L, 120L, 121L, 200L, 1000L); p <- Seq(None, Some("report-weekly")))
+        checkWindow(base, svc.facade.eventLog.get(), end, since, p)
+      val now = new Timestamp(end)
+      val redelivered = LifecycleEvent(ids.head, "job_exec_update", "origination", "ingest-orders",
+        s"x-${ids.head}", now, now, 0, disable_downstream = false)
+      assert(svc.facade.ingestDedup(Seq(redelivered), now, new Timestamp(end - 7 * 86400000L)).isEmpty,
+        s"$what: the compacted id's redelivery applies again")
+    }
+    val a = keep100(ckpt)
+    try {
+      val base = s"http://127.0.0.1:${a.start(0).getPort}"
+      // 20 events over 200 s are compacted, then 10 more arrive over the
+      // next 100 s: the compacted ones within 100 s of the newest stay held
+      ids.take(20).zipWithIndex.foreach { case (id, i) => post(base, id, pipes(i % 3), T0 + i * 10000L) }
+      a.cullTick()
+      ids.drop(20).zipWithIndex.foreach { case (id, i) => post(base, id, pipes(i % 3), T0 + (20 + i) * 10000L) }
+      assert(a.facade.eventLog.covers(T0 + 180001L) && !a.facade.eventLog.covers(T0 + 180000L),
+        "the floor is the newest compacted stamp no longer held")
+      check(a, base, "live")
+    } finally a.shutdown()
+    val b = keep100(ckpt)
+    try {
+      val base = s"http://127.0.0.1:${b.start(0).getPort}"
+      // the restart holds the uncompacted events; the history's newest
+      // stamp is the floor
+      assert(b.facade.eventLog.covers(T0 + 190001L) && !b.facade.eventLog.covers(T0 + 190000L))
+      check(b, base, "restarted")
+    } finally b.shutdown()
   }
 
   test("history: after a restart, windows past and before the restored log == EventLog.history") {
@@ -318,10 +368,11 @@ class ControlPlaneDiffSpec extends AnyFunSuite {
     try {
       val base = s"http://127.0.0.1:${b.start(0).getPort}"
       (5 until 10).foreach(i => post(base, 8000L + i, "report-weekly", T0 + 60000L + i * 1000L))
-      // restored rows end at T0 + 4 s: a window from T0 + 10 s is the
-      // tail's, a window from T0 reaches into the restored log
-      assert(b.facade.tail.history(T0 + 10000L, None, 1).isDefined)
-      assert(b.facade.tail.history(T0 + 4000L, None, 1).isEmpty)
+      // nothing was compacted, so the restored events are held: a window
+      // from T0 + 10 s and one that reaches them are both answered from
+      // driver rows
+      assert(b.facade.eventLog.covers(T0 + 10000L))
+      assert(b.facade.eventLog.covers(T0 + 4000L))
       val end = T0 + 80000L
       for (since <- Seq(10L, 70L, 76L, 77L, 80L, 100L); p <- Seq(None, Some("ingest-orders")))
         checkWindow(base, b.facade.eventLog.get(), end, since, p)

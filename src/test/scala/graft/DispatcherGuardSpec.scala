@@ -13,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.api.{Auth, GraftApi, GraftService, HttpFacade, SecuredGraftApi}
 import graft.meta.Fixtures
-import graft.model.{RunningJob, Submission}
-import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, LocalSparkEngine}
+import graft.model.{LifecycleEvent, RunningJob, Submission}
+import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, EventLog, LocalSparkEngine}
 
 /** Drift guard: one dispatcher. Every ingress (HTTP, MQ poll, culler
   * and cron ticks) reaches `GraftApi.dispatchRows` → `Dispatcher.step`,
@@ -307,6 +307,42 @@ class DispatcherGuardSpec extends AnyFunSuite {
       // the listener sees the query a gate read would run
       assert(queriesOf(engine.rows(SparkSuite.spark)) > 0)
     } finally service.shutdown()
+  }
+
+  test("restart over an uncompacted journal: a history window reaching the restored events executes no query") {
+    val spark = SparkSuite.spark
+    val ckpt = SparkSuite.tempDir("guard-history-ckpt")
+    def service() = {
+      val api = new GraftApi(spark, Catalog(Fixtures.defsDS(spark)), Fixtures.edgesDS(spark),
+        new EngineManager(Seq(new LocalSparkEngine(spark))))
+      api.catalog.metas
+      new GraftService(secured(api), spark, mqEndpoint = None, checkpointRoot = ckpt,
+        jobFactory = Some((_, _) => EngineJob.SparkClosure(_ => ())),
+        cfg = graft.GraftConfig.default.copy(cullingIntervalSeconds = 3600L),
+        cronCheckInterval = scala.concurrent.duration.DurationInt(1).hour)
+    }
+    val now = System.currentTimeMillis()
+    val a = service()
+    try {
+      val base = s"http://127.0.0.1:${a.start(0).getPort}"
+      call(base, "POST", s"/pipeline/dispatcher/event?now_epoch_ms=${now - 60000L}", event(9700, "origination"))
+      call(base, "POST", s"/pipeline/dispatcher/event?now_epoch_ms=${now - 30000L}",
+        event(9701, "success").replace("exec-ingest-orders-9701", "exec-ingest-orders-9700"))
+    } finally a.shutdown()
+    val b = service()
+    try {
+      val base = s"http://127.0.0.1:${b.start(0).getPort}"
+      var body = ""
+      val queries = queriesOf {
+        body = call(base, "GET", s"/pipeline/dispatcher/event/history?now_epoch_ms=$now&since_seconds=600")
+      }
+      assert(queries == 0, s"$queries query executions for a history window over restored events")
+      val whole = EventLog.history(b.facade.eventLog.get(), new java.sql.Timestamp(now), 600L,
+        maxRecords = graft.GraftConfig.default.historyMaxRecords)
+        .as[LifecycleEvent](org.apache.spark.sql.Encoders.product[LifecycleEvent]).collect().toSeq
+      assert(whole.map(_.event_id) == Seq(9701L, 9700L))
+      assert(body == b.facade.codec.rows(whole))
+    } finally b.shutdown()
   }
 
   test("concurrency gate: a run the engine reports ended without a callback does not block its pipeline") {

@@ -236,13 +236,20 @@ class HttpFacadeSpec extends AnyFunSuite {
           s"/pipeline/dispatcher/get_logs?engine_tracking_id=exec-none&max_kb=$kb", Some(Admin))
           .statusCode() == 200, s"max_kb=$kb")
       }
-      // a negative max_records answered [] from the tail and failed in the
-      // whole-log fallback (a window older than the tail)
+      // a negative max_records answered [] from the driver rows and failed
+      // in the whole-log fallback (a window older than the held events)
       Seq("", "&since_seconds=999999999").foreach { window =>
         val r = call(base, "GET", s"/pipeline/dispatcher/event/history?max_records=-1$window", Some(Read))
         assert(r.statusCode() == 400 && r.body().contains("max_records"), s"$window: ${r.body()}")
         assert(call(base, "GET", s"/pipeline/dispatcher/event/history?max_records=0$window", Some(Read))
           .statusCode() == 200)
+      }
+      // a negative running limit or history since_seconds answered 200
+      // with []
+      Seq("running?limit=-1" -> "limit", "event/history?since_seconds=-5" -> "since_seconds").foreach {
+        case (route, name) =>
+          val r = call(base, "GET", s"/pipeline/dispatcher/$route", Some(Read))
+          assert(r.statusCode() == 400 && r.body().contains(name), s"$route: ${r.body()}")
       }
     }
   }

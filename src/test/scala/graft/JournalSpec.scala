@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.api.{Auth, GraftApi, GraftService, HttpFacade, Journal, SecuredGraftApi}
 import graft.meta.Fixtures
 import graft.model.{LifecycleEvent, PipelineDef, PipelineTrigger, RunningJob, Submission}
-import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, RegistryCronProvider}
+import graft.orchestration.{Catalog, EngineBackend, EngineJob, EngineManager, EventLog, RegistryCronProvider}
 import graft.orchestration.Dispatcher.IncubRow
 
 /** The service's journal: real fsync, and crash consistency against the
@@ -32,7 +32,9 @@ import graft.orchestration.Dispatcher.IncubRow
   * run lost, none duplicated, each incubation released or aged out once.
   * Catalog mutations of defs outside the DAG ride between the ticks;
   * each incarnation is built over the base catalog, and the catalog it
-  * restores must be the one the mutations add up to.
+  * restores must be the one the mutations add up to. On every tenth
+  * seed, each restart's event log answers one history window as
+  * `EventLog.history` does over the whole log.
   */
 class JournalSpec extends AnyFunSuite {
   private lazy val spark = SparkSuite.spark
@@ -452,6 +454,15 @@ class JournalSpec extends AnyFunSuite {
             throw Crash(point)
           }
         s.recover()
+        if (seed % 10 == 0) {
+          // one window, back to the middle of the seed's timeline, against
+          // EventLog.history over the whole log the restart restored
+          val since = (clock.getTime - ticks.head.now.getTime) / 2000L + 1
+          val whole = EventLog.history(s.facade.eventLog.get(), clock, since, maxRecords = 7)
+            .as[LifecycleEvent](Encoders.product[LifecycleEvent]).collect().toSeq
+          assert(s.facade.eventLog.history(clock, since, None, 7) == whole,
+            s"seed $seed: a history window after a restart diverges from the whole log")
+        }
         s
       }
       var svc = incarnation()
